@@ -1111,44 +1111,12 @@ def _pqf_codebook_np(fp: DataFrame) -> list:
     return [list(r.fpv) for r in rows]
 
 
-def _pqf_encode_op(bC):
-    """Arrow-batched encode kernel over a broadcast codebook (r13
-    optimization, guide §4.2): per subspace, the argmin of exact int64
-    d² against every codebook row. Bit-identical to the HOF form
-    (_pqf_codes): the squares are bounded by SUB_D·(2·PQF_SCALE)² ≈
-    3.2e13 ≪ 2^63 so numpy int64 arithmetic is exact, and np.argmin's
-    first-minimum tie rule IS array_min's lowest-ordinal rule. The HOF
-    form paid ~1 ms/row of interpreted lambda evaluation (HOFs do not
-    take part in whole-stage codegen) plus a ~1 s plan/codegen fixed
-    cost for the 8-subspace expression tree; the kernel is ~12× on the
-    encode stage at sf0.1. Empty codebook degenerates to all-NULL
-    codes, exactly like array_min over an empty array."""
-    import numpy as np
-    import pandas as pd
-
-    def op(batches):
-        C = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            if C is None:
-                C = np.asarray(bC.value, dtype=np.int64)
-            out = pdf.drop(columns=["fpv"])
-            if C.size == 0:
-                out["codes"] = [[None] * PQ_SUBSPACES] * len(pdf)
-                yield out
-                continue
-            X = np.stack([np.asarray(v, dtype=np.int64) for v in pdf["fpv"]])
-            out["codes"] = list(_pqf_codes_np(X, C).astype(np.int32))
-            yield out
-
-    return op
-
-
 def _pqf_codes_np(X, C):
-    """(n, PQ_SUBSPACES) code matrix — the exact-int64 argmin shared by
-    the encode and fused-scoring kernels (np.argmin's first-minimum tie
-    rule == array_min's lowest-ordinal rule)."""
+    """(n, PQ_SUBSPACES) code matrix — the exact-int64 argmin of the
+    fused-scoring kernel, bit-identical to the HOF form (_pqf_codes):
+    the squares are bounded by SUB_D·(2·PQF_SCALE)² ≈ 3.2e13 ≪ 2^63 so
+    numpy int64 arithmetic is exact, and np.argmin's first-minimum tie
+    rule == array_min's lowest-ordinal rule."""
     import numpy as np
 
     codes = np.empty((X.shape[0], PQ_SUBSPACES), dtype=np.int64)
@@ -1157,14 +1125,6 @@ def _pqf_codes_np(X, C):
         d = X[:, None, lo:hi] - C[None, :, lo:hi]
         codes[:, m] = (d * d).sum(axis=2).argmin(axis=1)
     return codes
-
-
-def _pqf_encode(spark: SparkSession, fp: DataFrame, df: DataFrame, schema: str) -> DataFrame:
-    """Encode `df` (any columns + `fpv`; fpv is consumed, the rest pass
-    through) against the bounded codebook collected from `fp`;
-    `schema` is the passthrough schema plus `codes array<int>`."""
-    bC = spark.sparkContext.broadcast(_pqf_codebook_np(fp))
-    return df.mapInPandas(_pqf_encode_op(bC), schema=schema)
 
 
 _PQF_SCORE_SCHEMA = "query_id long, neighbor_id long, neighbor_label int, adc_dist long"
@@ -1410,7 +1370,7 @@ def q_ann_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle — candidates never move; the r13 optimization round
     replaced the per-candidate HOF argmin, whose interpreted lambda
     evaluation cost ~1 ms/row outside whole-stage codegen, with the
-    vectorized kernel at identical bits — see _pqf_encode_op);
+    vectorized kernel at identical bits — see _pqf_codes_np);
     per-query ADC lookup tables stay in-row JVM HOFs over the bounded
     query batch; SCORING is the same static 8-term element_at sum as
     q_ann_pq; the shortlist and exact re-rank reuse the brute-force

@@ -495,9 +495,10 @@ def stored_zone_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.dedup import connected_components
 
     def _src(f) -> str:
-        # stable fallback for source-less deployments (pyc/zipimport) —
-        # same contract as registry._fingerprint; _CC_STORE_VERSION is
-        # the manual invalidation lever in that mode
+        # source-less deployments (pyc/zipimport) fall back to the
+        # stable qualified name — never repr(f), which embeds a memory
+        # address and would miss the store on every run; edits then go
+        # unseen, so _CC_STORE_VERSION is the manual invalidation lever
         try:
             return inspect.getsource(f)
         except (OSError, TypeError):

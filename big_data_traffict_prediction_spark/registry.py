@@ -39,252 +39,16 @@ def register(name: str, oracle: str | None = None):
     return deco
 
 
-_LATEST_ROW_CACHE: dict[str, tuple[int, dict]] | None = None
-
-
-def _driver_latest_rows() -> dict[str, tuple[int, dict]]:
-    """Latest driver CORRECTNESS_r*.json ``(round, row)`` per query name.
-
-    The driver samples ~50 names per round from the registry; ordering
-    the names that still need a (re-)check first steers its sample onto
-    them (harmless if it samples randomly). Reads the artifacts the
-    driver itself writes to the repo root, so the ordering self-updates
-    each round; "latest" = the row from the highest-numbered round file,
-    where the round is parsed *numerically* from the filename (so an
-    unpadded ``_r7`` still supersedes ``_r06``, and ``_r100`` supersedes
-    ``_r99``) and merged across all artifact roots in one pass.
-
-    Cached for the process lifetime so repeated all_queries() calls are
-    O(1) and iteration order is stable within a run. The artifact
-    directory is ``$SPARK_GRAFT_ARTIFACT_DIR`` when set, else the
-    package's parent AND the cwd (covers both an in-repo checkout and an
-    installed package run from the repo root); with no artifacts found
-    anywhere the ordering degrades to plain registration order.
-    """
-    global _LATEST_ROW_CACHE
-    if _LATEST_ROW_CACHE is not None:
-        return _LATEST_ROW_CACHE
-
-    import glob
-    import json
-    import os
-    import re
-
-    env = os.environ.get("SPARK_GRAFT_ARTIFACT_DIR")
-    roots = (
-        [env]
-        if env
-        else [os.path.dirname(os.path.dirname(os.path.abspath(__file__))), os.getcwd()]
-    )
-    numbered: list[tuple[int, str]] = []
-    for root in dict.fromkeys(roots):
-        for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-            m = re.search(r"_r(\d+)\.json$", path)
-            if m:
-                numbered.append((int(m.group(1)), path))
-    latest: dict[str, tuple[int, dict]] = {}
-    # ascending numeric round: a higher round always overwrites a lower
-    # one regardless of which root or zero-padding produced it
-    # tie-break equal rounds by path so e.g. _r07 vs _r7 (or the same
-    # round found under two artifact roots) merge deterministically
-    for rnd, path in sorted(numbered, key=lambda t: (t[0], t[1])):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-            if isinstance(data, dict):
-                for name, row in data.items():
-                    if isinstance(row, dict):
-                        latest[name] = (rnd, row)
-        except (OSError, ValueError):
-            continue
-    _LATEST_ROW_CACHE = latest
-    return latest
-
-
-_FINGERPRINT_FILE = "_fingerprints.json"
-_FP_SNAPSHOT_CACHE: dict[str, dict] | None = None
-_FP_VALUE_CACHE: dict[str, str] = {}  # name -> computed fingerprint
-
-
-def _fingerprint_path() -> str:
-    import os
-
-    return os.path.join(os.path.dirname(os.path.abspath(__file__)), _FINGERPRINT_FILE)
-
-
-def _fingerprint(q: Query) -> str:
-    """Content hash of a query's definition: oracle SQL + function source.
-
-    Used to detect "this query changed since its last driver-green row"
-    — a green row only vouches for the code it actually ran, so a later
-    edit must push the name back into the re-check group even though the
-    stored row still says green.
-
-    Scope is deliberately first-order: the hash covers the registered
-    function's own source + oracle text, NOT helpers it calls. Hashing
-    whole modules (or the import graph) would flood the re-check group
-    on any shared-helper or docstring edit, starving the stalest-green
-    rotation that is this ordering's main job. The gap is covered
-    procedurally instead: every build round runs the full local driver
-    simulation (all queries vs their DuckDB oracles at sf0.01), which
-    validates helper changes transitively regardless of steering.
-    """
-    import hashlib
-    import inspect
-
-    cached = _FP_VALUE_CACHE.get(q.name)
-    if cached is not None:
-        return cached
-    try:
-        src = inspect.getsource(q.fn)
-    except (OSError, TypeError):
-        # stable fallback for source-less deployments (pyc/zipimport):
-        # repr(fn) would embed the process memory address and flood
-        # every name into the re-check group on each run
-        src = f"{q.fn.__module__}.{q.fn.__qualname__}"
-    payload = (q.oracle or "") + "\x00" + src
-    fp = hashlib.sha256(payload.encode()).hexdigest()[:16]
-    _FP_VALUE_CACHE[q.name] = fp
-    return fp
-
-
-def _fingerprint_snapshot() -> dict[str, dict]:
-    """Committed snapshot mapping name -> {"fp", "round"}.
-
-    ``fp`` is the fingerprint the driver last *validated* (witnessed by
-    a settled row at round >= the round the fingerprint appeared);
-    ``round`` is the round of that name's latest settled row at refresh
-    time. Maintained by ``refresh_fingerprints()``, run at the start of
-    each build round before any code changes. Missing file → empty dict,
-    and ``_ordered`` then skips the changed-fingerprint check entirely
-    (degrading to row-status-only steering) rather than flooding the
-    re-check group with all 180+ names.
-    """
-    global _FP_SNAPSHOT_CACHE
-    if _FP_SNAPSHOT_CACHE is not None:
-        return _FP_SNAPSHOT_CACHE
-    import json
-
-    try:
-        with open(_fingerprint_path()) as fh:
-            data = json.load(fh)
-        snap = {k: v for k, v in data.items() if isinstance(v, dict)}
-    except (OSError, ValueError):
-        snap = {}
-    _FP_SNAPSHOT_CACHE = snap
-    return snap
-
-
-def refresh_fingerprints() -> dict[str, dict]:
-    """Re-baseline the fingerprint snapshot against the current code.
-
-    Run at the START of a build round, before editing queries: at that
-    moment the working tree equals the code the previous round's driver
-    draw ran against, so any settled row from that draw vouches for the
-    current fingerprint. The update rule per name:
-
-    - no stored entry → adopt the current fingerprint (round = latest
-      settled round, or 0 if never drawn);
-    - stored fp == current fp → just advance ``round`` to the latest
-      settled row's round;
-    - stored fp != current fp (the query changed during the previous
-      round) → adopt the new fp only if the latest settled row comes
-      from the *most recent* driver round (i.e. the draw that ran after
-      the change); otherwise keep the stale entry so the name stays in
-      the re-check group until a draw witnesses the new code.
-
-    Writes ``_fingerprints.json`` next to this module and returns the
-    snapshot. Invoked via ``scripts/refresh_fingerprints.py``.
-    """
-    import json
-
-    _load_modules()
-    latest = _driver_latest_rows()
-    max_round = max((rnd for rnd, _ in latest.values()), default=0)
-    snap = dict(_fingerprint_snapshot())
-    for name, q in _REGISTRY.items():
-        cur = _fingerprint(q)
-        rnd_row = latest.get(name)
-        settled_round = None
-        if rnd_row is not None and _row_settles(q, rnd_row[1]):
-            settled_round = rnd_row[0]
-        stored = snap.get(name)
-        if stored is None:
-            snap[name] = {"fp": cur, "round": settled_round or 0}
-        elif stored.get("fp") == cur:
-            if settled_round is not None and settled_round > stored.get("round", 0):
-                snap[name] = {"fp": cur, "round": settled_round}
-        elif settled_round is not None and settled_round >= max_round:
-            snap[name] = {"fp": cur, "round": settled_round}
-    # drop entries for queries no longer registered
-    snap = {k: v for k, v in snap.items() if k in _REGISTRY}
-    with open(_fingerprint_path(), "w") as fh:
-        json.dump(snap, fh, indent=1, sort_keys=True)
-    global _FP_SNAPSHOT_CACHE
-    _FP_SNAPSHOT_CACHE = snap
-    return snap
-
-
-def _row_settles(q: Query, row: dict) -> bool:
-    """Whether a driver row means this query needs no re-draw.
-
-    Settled = the latest row is a green hash match, or a clean
-    rows-only row for a query that (still) declares ``oracle=None``.
-    Everything else — a hard error (e.g. a canonicalizer crash), a hash
-    mismatch, or a ``no_oracle`` row recorded before the query gained an
-    oracle — leaves the name in the needs-check group so the driver
-    re-draws it first next round.
-    """
-    err = row.get("err")
-    if err == "no_oracle":
-        return q.oracle is None and row.get("spark_rows") is not None
-    if err:
-        return False
-    return bool(row.get("hash_match")) or q.oracle is None
-
-
-def _ordered() -> list[Query]:
-    """Registry values ordered never-drawn first, then names whose
-    latest driver row is unsettled (hard err / mismatch / retro-oracled
-    ``no_oracle``) or whose definition changed since its last validated
-    fingerprint, then settled names **stalest-green first** (ascending
-    round of their latest settled row) so the driver's ~50-name sample
-    re-verifies the oldest green rows each round instead of re-drawing
-    recent ones — a silent regression in an r1-vintage query can't hide.
-
-    Stable within each (group, round) via sorted()'s stability over
-    registration order, so re-ordering never changes *what* is
-    registered, only the sample-steering priority.
-    """
-    latest = _driver_latest_rows()
-    snap = _fingerprint_snapshot()
-    never: list[Query] = []
-    recheck: list[Query] = []
-    settled: list[tuple[int, Query]] = []
-    for q in _REGISTRY.values():
-        rnd_row = latest.get(q.name)
-        if rnd_row is None:
-            never.append(q)
-            continue
-        rnd, row = rnd_row
-        stored = snap.get(q.name)
-        changed = bool(snap) and (stored is None or stored.get("fp") != _fingerprint(q))
-        if _row_settles(q, row) and not changed:
-            settled.append((rnd, q))
-        else:
-            recheck.append(q)
-    settled.sort(key=lambda t: t[0])  # stable: ties keep registration order
-    return never + recheck + [q for _, q in settled]
-
-
 def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in registration order."""
     _load_modules()
-    return {q.name: q.fn for q in _ordered()}
+    return {q.name: q.fn for q in _REGISTRY.values()}
 
 
 def all_oracles() -> dict[str, str]:
+    """Oracle SQL of every query that has one, in registration order."""
     _load_modules()
-    return {q.name: q.oracle for q in _ordered() if q.oracle is not None}
+    return {q.name: q.oracle for q in _REGISTRY.values() if q.oracle is not None}
 
 
 def get(name: str) -> Query:

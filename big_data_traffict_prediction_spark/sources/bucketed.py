@@ -54,10 +54,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def per_key_totals(spark: SparkSession, table: str, key: str = "camera_id") -> DataFrame:
     """groupBy on the bucket key — plans with NO Exchange before the
     aggregate (the bucket spec already satisfies the distribution

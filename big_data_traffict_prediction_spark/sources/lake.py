@@ -21,11 +21,11 @@ read→write jobs (replace the batched ETLs).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schemas import CAMERAS
 from ..session import pin_session_conf
 
 
@@ -129,10 +129,6 @@ def write_cameras_xml(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").format("xml").option(
         "rootTag", "cameras"
     ).option("rowTag", "camera").save(path)
-
-
-def cameras_schema() -> T.StructType:
-    return CAMERAS
 
 
 def migrate_json_history(spark: SparkSession, json_path: str, parquet_path: str) -> int:
@@ -265,7 +261,11 @@ def upsert_partitioned_lake(
     )
     try:
         existing = spark.read.parquet(path)
-    except Exception:  # first write: nothing to merge
+    except AnalysisException as e:
+        # only a missing lake is a first write; an unreadable one (torn
+        # file, bad footer) must fail, not take the unmerged append below
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         with_parts.drop("_is_update").write.mode("append").partitionBy(
             "year", "month", "day"
         ).parquet(path)

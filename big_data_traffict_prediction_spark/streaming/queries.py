@@ -282,8 +282,8 @@ def q_stream_dedup_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"q_stream_dedup_delivery_{uuid.uuid4().hex[:8]}",
         f"{base}/ckpt",
         output_mode="complete",
-        # the stage is read TWICE and unioned: the drain's input (and
-        # its dedup-state key bound) is 2x the staged rows
+        # the stage is read TWICE and unioned: 2x sizes the drain for
+        # its input volume (distinct dedup keys stay 1x the staged rows)
         state_rows=2 * (simulate.staged_rows(stage) or 0) or None,
     )
     shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
@@ -633,11 +633,8 @@ ORDER BY s.camera_id, episode_start
 def q_stream_congestion_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-camera congestion-episode detection: keyed state holds the
     open episode (start/end/n/peak/total); a below-threshold
-    observation closes and emits it. Registered form uses
-    `applyInPandasWithState`; the Spark 4 arbitrary-state v2 twin
-    (`state.CongestionEpisodes`, transformWithStateInPandas) is
-    equality-tested against it on a RocksDB-backed state store, with a
-    vendored protobuf runtime when the env lacks one (tests/_pb_shim/).
+    observation closes and emits it (`state.congestion_episodes`, one
+    `applyInPandasWithState` operator keyed by camera_id).
 
     Hash-checked: on the time-ordered replay, closed episodes are
     exactly the consecutive-high gap-islands that have a later
@@ -692,8 +689,8 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
         f"q_stream_dedup_ww_{uuid.uuid4().hex[:8]}",
         f"{base}/ckpt",
         output_mode="complete",
-        # the stage is read TWICE and unioned: the drain's input (and
-        # its dedup-state key bound) is 2x the staged rows
+        # the stage is read TWICE and unioned: 2x sizes the drain for
+        # its input volume (distinct dedup keys stay 1x the staged rows)
         state_rows=2 * (simulate.staged_rows(stage) or 0) or None,
     )
     shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed

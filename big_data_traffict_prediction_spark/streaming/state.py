@@ -25,7 +25,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 IOU_THRESHOLD = 0.5
@@ -129,17 +128,9 @@ def stateful_dedup(stream: DataFrame) -> DataFrame:
 # at end-of-stream stays in state — exactly the long-running-job
 # semantics: the next feed file resumes it from the checkpoint.
 #
-# Two implementations of the same semantics:
-# - `congestion_episodes` (registered, oracle-checked): the v1
-#   `applyInPandasWithState` API — works everywhere.
-# - `CongestionEpisodes` / `congestion_episodes_v2`: Spark 4's
-#   arbitrary-state v2 `transformWithStateInPandas` (typed state
-#   variables on a handle). Its state-server protocol needs
-#   `google.protobuf` (tests vendor a pure-Python runtime via
-#   tests/_pb_shim/ when no real install exists) and the RocksDB
-#   state-store provider (column-family state; the default HDFS-backed
-#   provider rejects it). Equality with the v1 form is asserted by
-#   tests/test_streaming.py::test_congestion_episodes_v2_twin_matches_v1.
+# One `applyInPandasWithState` operator keyed by camera_id
+# (`congestion_episodes`, registered as q_stream_congestion_episodes and
+# oracle-checked); state = the open episode, if any.
 
 EPISODE_THRESHOLD = 300
 
@@ -161,16 +152,16 @@ _EPISODE_STATE_SCHEMA = T.StructType(
         T.StructField("n_obs", T.LongType()),
         T.StructField("peak", T.LongType()),
         T.StructField("total", T.LongType()),
+        T.StructField("is_open", T.BooleanType()),
     ]
 )
 
 
 def _fold_episodes(cur, pdfs):
-    """THE episode fold, shared by both state APIs: buffer the whole
-    micro-batch and sort ONCE — Arrow delivers a group as multiple
-    chunks in no guaranteed order, so per-chunk sorting would
-    mis-segment episodes whenever a batch spans chunks. Returns
-    (open_episode_or_None, closed_episode_tuples)."""
+    """The episode fold: buffer the whole micro-batch and sort ONCE —
+    Arrow delivers a group as multiple chunks in no guaranteed order,
+    so per-chunk sorting would mis-segment episodes whenever a batch
+    spans chunks. Returns (open_episode_or_None, closed_episode_tuples)."""
     chunks = list(pdfs)
     if not chunks:  # state fn can fire without rows (e.g. timeout modes)
         return cur, []
@@ -203,43 +194,12 @@ def _closed_frame(camera_id, closed):
     )
 
 
-class CongestionEpisodes(StatefulProcessor):
-    """Per-camera episode tracker: ValueState = the open episode."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._ep = handle.getValueState("episode", _EPISODE_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        (camera_id,) = key
-        cur = tuple(self._ep.get()) if self._ep.exists() else None
-        cur, closed = _fold_episodes(cur, rows)
-        if cur is None:
-            self._ep.clear()
-        else:
-            self._ep.update(cur)
-        if closed:
-            yield _closed_frame(camera_id, closed)
-
-    def close(self) -> None:
-        pass
-
-
-def congestion_episodes_v2(stream: DataFrame) -> DataFrame:
-    """Arbitrary-state v2 wiring (environment-gated; see section
-    comment)."""
-    return stream.groupBy("camera_id").transformWithStateInPandas(
-        statefulProcessor=CongestionEpisodes(),
-        outputStructType=EPISODE_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
 def episodes_fn(
     key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """v1-API twin of CongestionEpisodes.handleInputRows: state =
-    (start_us, end_us, n_obs, peak, total) of the open episode."""
+    """Per-camera state function: state = (start_us, end_us, n_obs,
+    peak, total, is_open) of the open episode; emits the episodes that
+    closed in this micro-batch."""
     (camera_id,) = key
     cur: tuple | None = None
     if state.exists:
@@ -255,16 +215,11 @@ def episodes_fn(
         yield _closed_frame(camera_id, closed)
 
 
-_EPISODE_V1_STATE_SCHEMA = T.StructType(
-    _EPISODE_STATE_SCHEMA.fields + [T.StructField("is_open", T.BooleanType())]
-)
-
-
 def congestion_episodes(stream: DataFrame) -> DataFrame:
     return stream.groupBy("camera_id").applyInPandasWithState(
         episodes_fn,
         outputStructType=EPISODE_OUTPUT_SCHEMA,
-        stateStructType=_EPISODE_V1_STATE_SCHEMA,
+        stateStructType=_EPISODE_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -57,8 +57,8 @@ WATERMARK = "30 minutes"
 # restarted checkpoint of such a stream keeps a stable count.
 # A VALID SPARK_STREAM_STATE_PARTITIONS still overrides everything
 # (clamped by the session value, as before); empty/whitespace or
-# malformed values are treated as unset — derivation engages — never
-# as a silent constant pin and never an import crash.
+# malformed or non-positive values are treated as unset — derivation
+# engages — never as a silent constant pin and never an import crash.
 
 
 def _env_int(name: str) -> int | None:
@@ -66,9 +66,10 @@ def _env_int(name: str) -> int | None:
     if raw is None or not raw.strip():
         return None
     try:
-        return max(1, int(raw))
+        value = int(raw)
     except ValueError:
         return None
+    return value if value >= 1 else None
 
 
 _STREAM_STATE_OVERRIDE = _env_int("SPARK_STREAM_STATE_PARTITIONS")

@@ -60,10 +60,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def traffic_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → the reference's traffic_history shape (SURVEY.md §1.2)."""
     e = load_table(spark, sf_dir, "events")

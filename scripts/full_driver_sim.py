@@ -10,11 +10,9 @@ compares row counts, schemas, and order-insensitive value hashes via
 tests/compare_util.assert_frames_match against DuckDB on the same
 parquet. Rows-only queries are executed for a clean row count.
 
-Run once per build round (takes ~15 min at sf0.01 on local[8]): this
-is the transitive-change safety net the first-order query
-fingerprints (registry._fingerprint) deliberately do not provide —
-a shared-helper edit re-validates here even though steering never
-flags it. Exit code 1 on any failure.
+Run it after any engine change (takes ~15 min at sf0.01 on local[8]):
+a shared-helper edit reaches many queries, and this re-validates all
+of them. Exit code 1 on any failure.
 """
 
 from __future__ import annotations

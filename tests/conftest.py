@@ -7,42 +7,6 @@ import pytest
 SF_SMOKE = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_ORACLE = os.environ.get("TEST_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 
-_PB_SHIM = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_pb_shim")
-
-
-def _enable_vendored_protobuf() -> bool:
-    """Make google.protobuf importable in driver AND Spark workers.
-
-    Driver side: run the shim's _enable() directly. Worker side: put
-    the shim dir on PYTHONPATH so each spawned worker imports its
-    ``sitecustomize`` at startup — must happen at conftest import time,
-    before the session fixture launches the JVM (workers inherit its
-    env). No-op when a real protobuf install exists.
-    """
-    import sys
-
-    if _PB_SHIM not in sys.path:
-        sys.path.insert(0, _PB_SHIM)
-    try:
-        import importlib.util
-
-        spec = importlib.util.spec_from_file_location(
-            "_pb_shim_sitecustomize", os.path.join(_PB_SHIM, "sitecustomize.py")
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        ok = mod._enable()
-    except Exception:
-        ok = False
-    if ok:
-        parts = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
-        if _PB_SHIM not in parts:
-            os.environ["PYTHONPATH"] = os.pathsep.join([_PB_SHIM, *parts])
-    return ok
-
-
-_enable_vendored_protobuf()
-
 
 @pytest.fixture(scope="session")
 def spark():

@@ -8,6 +8,7 @@ rot again. Pure-Python: no SparkSession.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 
@@ -47,12 +48,16 @@ def test_readme_totals_match_registry():
     )
 
 
-def test_fingerprint_snapshot_covers_registry():
-    """The committed _fingerprints.json must track every registered query
-    (refresh_fingerprints drops unregistered names and adds new ones, so
-    a mismatch means the round-start refresh was skipped)."""
+def test_query_order_is_registration_order(tmp_path, monkeypatch):
+    """Query and oracle order is plain registration order: a driver
+    artifact in the working directory must not reorder it."""
     registry._load_modules()
-    snap = registry._fingerprint_snapshot()
-    assert set(snap) == set(registry._REGISTRY), (
-        "run scripts/refresh_fingerprints.py at round start"
+    first = next(iter(registry._REGISTRY))
+    (tmp_path / "CORRECTNESS_r999.json").write_text(
+        json.dumps({first: {"hash_match": True, "spark_rows": 1}})
     )
+    monkeypatch.chdir(tmp_path)
+    assert list(registry.all_queries()) == list(registry._REGISTRY)
+    assert list(registry.all_oracles()) == [
+        n for n, q in registry._REGISTRY.items() if q.oracle is not None
+    ]

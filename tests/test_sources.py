@@ -45,6 +45,28 @@ def test_snapshot_overwrite_is_latest_only(spark, sf_dir, tmp_path):
     assert back.count() == back.select("camera_id").distinct().count()
 
 
+def test_upsert_onto_unreadable_lake_raises_not_appends(spark, tmp_path):
+    """A lake that exists but cannot be read is not a first write: the
+    upsert must fail, never append the updates unmerged beside it."""
+    import datetime
+
+    import pytest
+
+    path = tmp_path / "lake"
+    part = path / "year=2024" / "month=1" / "day=1"
+    part.mkdir(parents=True)
+    (part / "part-00000-torn.parquet").write_bytes(b"not a parquet file" * 8)
+    updates = spark.createDataFrame(
+        [("C1", datetime.datetime(2024, 1, 1, 8), 5)],
+        "camera_id string, ts timestamp, new_count long",
+    )
+    with pytest.raises(Exception):
+        lake.upsert_partitioned_lake(spark, updates, str(path), ["camera_id", "ts"])
+    assert [p.relative_to(path).as_posix() for p in path.rglob("*.parquet")] == [
+        "year=2024/month=1/day=1/part-00000-torn.parquet"
+    ]
+
+
 def test_cameras_json_normalizes_mixed_lat_lng(spark, tmp_path):
     # the reference's shipped config mixes float and string lat/lng
     rows = [

@@ -299,63 +299,6 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
     assert got and got == batch
 
 
-def test_congestion_episodes_v2_twin_matches_v1(spark, sf_dir):
-    """The transformWithStateInPandas (arbitrary-state v2) episode
-    processor emits the same closed episodes as the registered
-    applyInPandasWithState form. The v2 state server speaks protobuf;
-    conftest vendors the google-cloud-sdk pure-Python runtime (see
-    tests/_pb_shim/) when no real install exists, so this runs here
-    too — the skip now only fires with no runtime found at all."""
-    import pytest
-
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("no protobuf runtime found (real or vendored)")
-
-    import tempfile
-    import uuid
-
-    from big_data_traffict_prediction_spark.streaming import (
-        simulate,
-        state,
-        windows,
-    )
-
-    base = tempfile.mkdtemp(prefix="tws_episodes_")
-    stage = simulate.stage_stream_dir(spark, sf_dir, f"{base}/stage", n_chunks=4)
-
-    def drain(builder):
-        return {
-            (r.camera_id, r.episode_start, r.episode_end, r.n_obs, r.peak, r.total)
-            for r in windows.run_to_memory(
-                spark,
-                builder(simulate.read_stream(spark, stage)),
-                f"tws_{uuid.uuid4().hex[:8]}",
-                f"{base}/ckpt_{uuid.uuid4().hex[:8]}",
-            ).collect()
-        }
-
-    v1 = drain(state.congestion_episodes)
-    # transformWithStateInPandas keys state by column family, which the
-    # default HDFSBackedStateStoreProvider rejects — RocksDB (bundled
-    # with Spark 4) is the supported provider for arbitrary state v2
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        v2 = drain(state.congestion_episodes_v2)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    assert v1 and v1 == v2
-
-
 def test_frame_stream_sink_round_trips(spark, sf_dir, tmp_path):
     """S14: the multipart frame-stream sink writes boundary-delimited
     parts in (media_id, frame_idx) order and a consumer-side parse
@@ -417,6 +360,21 @@ def test_stage_cache_stages_once_per_app_and_sf(monkeypatch, tmp_path):
     assert len(calls) == 2, "same (app, sf_dir) must stage once"
     assert s1 == s2 and s1 != s3
     assert b1 != b2, "checkpoint scratch must be fresh per query"
+
+
+def test_env_int_treats_non_positive_as_unset(monkeypatch):
+    """A zero or negative sizing knob falls through to derivation (None),
+    like an empty or malformed one, instead of pinning 1 partition.
+    Spark-free."""
+    from big_data_traffict_prediction_spark.streaming.windows import _env_int
+
+    name = "SPARK_STREAM_STATE_PARTITIONS"
+    for raw, want in [("0", None), ("-3", None), (" ", None), ("x", None),
+                      ("1", 1), ("12", 12)]:
+        monkeypatch.setenv(name, raw)
+        assert _env_int(name) == want, raw
+    monkeypatch.delenv(name)
+    assert _env_int(name) is None
 
 
 def test_tumbling_counts_chunking_invariant(spark, sf_dir):
