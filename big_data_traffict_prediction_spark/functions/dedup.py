@@ -22,8 +22,6 @@ model-based). Everything here is pure DataFrame ops — no UDFs.
 
 from __future__ import annotations
 
-import os as _os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -990,19 +988,11 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 CLUSTER_MAX_ITERS = 20
 
 # Target edges per shuffle partition inside the CC rounds — the
-# input-size-adaptive partitioning knob (see connected_components
+# input-size-adaptive partitioning rule (see connected_components
 # docstring). 500k × ~16 B/edge ≈ 8 MB of shuffle per partition; on a
 # production session the cap is bounded above by the session's own
 # shuffle-partition setting.
-# Validated at import: a malformed value falls back to the default
-# (never crashes module import) and the floor of 1 keeps the ceil
-# division below well-defined (r13 ADVICE).
-try:
-    CC_EDGES_PER_PARTITION = max(
-        1, int(_os.environ.get("SPARK_CC_EDGES_PER_PARTITION") or "500000")
-    )
-except ValueError:
-    CC_EDGES_PER_PARTITION = 500000
+CC_EDGES_PER_PARTITION = 500000
 
 
 def connected_components(sym: DataFrame) -> DataFrame:
@@ -1037,11 +1027,10 @@ def connected_components(sym: DataFrame) -> DataFrame:
     size-the-partitions-to-the-data rule as the streaming state
     stores. Callers pass a checkpointed ``sym`` (all three call sites
     do), so the sizing count() is a cheap in-memory scan; the target
-    rows/partition is env-tunable (``SPARK_CC_EDGES_PER_PARTITION``)
-    and the cap never EXCEEDS the session value, so a cluster session
-    sized for petabyte shuffles keeps its parallelism. Labels are
-    bounded by edges (only endpoint vertices are labeled), so one knob
-    serves both frames.
+    rows/partition is ``CC_EDGES_PER_PARTITION`` and the cap never
+    EXCEEDS the session value, so a cluster session sized for petabyte
+    shuffles keeps its parallelism. Labels are bounded by edges (only
+    endpoint vertices are labeled), so one target serves both frames.
 
     The conf set/restore is session-global for the loop's duration —
     the same sequential-driver assumption as the streaming

@@ -586,9 +586,6 @@ def q_multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- perceptual-hash dedup
 
-PHASH_BITS = 56  # 8 rows × 7 adjacent-pixel comparisons (dHash)
-
-
 def _phash_col() -> F.Column:
     """56-bit dHash from the 64-d thumbnail/envelope feature: bit
     r*7+c = feature[r*8+c+1] > feature[r*8+c]. Pure JVM expression —

@@ -22,9 +22,7 @@ from pyspark.sql import functions as F
 
 from ..compat import constant_key, dow0
 from ..registry import register
-from ..tables import load_table, traffic_history
-
-_ML_MEMO: dict[tuple[str, str, str], DataFrame] = {}
+from ..tables import load_table, memo_on_input, traffic_history
 
 
 def _memoized(fn):
@@ -33,16 +31,15 @@ def _memoized(fn):
     plan). Registry-wide sweeps (tests/test_plans.py calls every
     registered query twice) would otherwise retrain the model — and
     leak one cached train frame — per call. Memoize the returned
-    DataFrame per (Spark application, sf_dir): DataFrames are
-    immutable, so reuse is sound, and the train-frame cache entry is
-    shared by all consumers instead of accumulating."""
+    DataFrame per Spark application on the events files it trains on
+    (tables.memo_on_input): DataFrames are immutable, so reuse is sound
+    while those files are unchanged, and an append refits."""
 
     @functools.wraps(fn)
     def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (fn.__name__, spark.sparkContext.applicationId, sf_dir)
-        if key not in _ML_MEMO:
-            _ML_MEMO[key] = fn(spark, sf_dir)
-        return _ML_MEMO[key]
+        return memo_on_input(
+            fn.__name__, spark, sf_dir, ("events",), lambda: fn(spark, sf_dir)
+        )
 
     return wrapper
 

@@ -7,9 +7,11 @@ The reference's schema lives in three inconsistent places (SQLite DDL
 Two families:
 
 1. the driver-generated TPC-H-ish testdata tables (TESTDATA.md),
-2. the reference-shaped domain tables (``traffic_history``,
-   ``cameras``, ``thresholds``, ``detections``) that our operators are
-   defined over; at test time these are *views* derived from testdata.
+2. the domain tables our operators add on top of them. The
+   reference-shaped ones (``traffic_history``, cameras, detections) are
+   *views* derived from testdata, their shape defined where they are
+   built (``tables.traffic_history``, ``sources.lake``); only the
+   multimodal ``MEDIA`` payload schema lives here.
 """
 
 from __future__ import annotations
@@ -117,68 +119,8 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
 TABLE_NAMES = list(TESTDATA_SCHEMAS)
 
 # --------------------------------------------------------------------------
-# Reference-shaped domain schemas (SURVEY.md §1.2).
+# Domain schemas.
 # --------------------------------------------------------------------------
-
-# traffic_history: reference app/database.py:18-30. Counts widened to
-# LongType (100 TB design: int32 overflows), REAL epoch replaced by a
-# proper TimestampType with `id` retained for deterministic tie-breaks.
-TRAFFIC_HISTORY = T.StructType(
-    [
-        T.StructField("id", T.LongType(), False),
-        T.StructField("camera_id", T.StringType(), False),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("total_count", T.LongType()),
-        T.StructField("car_count", T.LongType()),
-        T.StructField("motorcycle_count", T.LongType()),
-        T.StructField("new_count", T.LongType()),
-        T.StructField("new_cars", T.LongType()),
-        T.StructField("new_motors", T.LongType()),
-    ]
-)
-
-# cameras: reference data/cctv_config.json via app/utils.py:386-394.
-# lat/lng ship as BOTH float and string in the reference's JSON —
-# normalized to DoubleType at the edge (SURVEY.md §7 watch-list 6).
-CAMERAS = T.StructType(
-    [
-        T.StructField("id", T.StringType(), False),
-        T.StructField("name", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("active", T.BooleanType()),
-        T.StructField("lat", T.DoubleType()),
-        T.StructField("lng", T.DoubleType()),
-        T.StructField("mirror_id", T.StringType()),
-    ]
-)
-
-# thresholds: reference scripts/analyze_thresholds.py:55-60.
-THRESHOLDS = T.StructType(
-    [
-        T.StructField("camera_id", T.StringType(), False),
-        T.StructField("p50", T.DoubleType()),
-        T.StructField("p75", T.DoubleType()),
-        T.StructField("p90", T.DoubleType()),
-        T.StructField("max", T.LongType()),
-    ]
-)
-
-# detections: normalized data-lake row (reference
-# app/services/camera.py:73-84; bbox is a native array here, not the
-# reference's stringified "[x1, y1, x2, y2]").
-DETECTIONS = T.StructType(
-    [
-        T.StructField("timestamp", T.DoubleType(), False),
-        T.StructField("source_id", T.StringType(), False),
-        T.StructField("source_name", T.StringType()),
-        T.StructField("class_id", T.StringType()),
-        T.StructField("confidence", T.DoubleType()),
-        T.StructField("bbox", T.ArrayType(T.IntegerType())),
-        T.StructField("year", T.IntegerType()),
-        T.StructField("month", T.IntegerType()),
-        T.StructField("day", T.IntegerType()),
-    ]
-)
 
 # multimodal: opaque binary payload + typed metadata (north-star
 # extension; no analog in the reference).

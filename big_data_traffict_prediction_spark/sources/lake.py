@@ -186,8 +186,6 @@ _DETECTIONS_CSV_RAW = T.StructType(
     ]
 )
 
-_CLASS_LABELS = {"0": "car", "1": "motorcycle"}
-
 
 def read_detections_csv(spark: SparkSession, path: str) -> DataFrame:
     """Read the reference's CSV detection log, normalizing both row

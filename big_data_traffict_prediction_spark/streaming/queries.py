@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from ..compat import NOW_EPOCH
 from ..operators.prediction import _THRESHOLDS_CTE
 from ..registry import register
-from ..tables import with_traffic
+from ..tables import memo_on_input, with_traffic
 from . import simulate, state, windows
 
 # Final-watermark predicate used by every event-time oracle: emitted
@@ -47,41 +47,35 @@ from . import simulate, state, windows
 _WM_CTE = "wm AS (SELECT MAX(ts) - INTERVAL '30 minutes' AS w FROM traffic)"
 
 
-# Staged input is a pure function of (Spark application, sf_dir): the
-# same deterministic detection frame cut into the same time-ordered
-# chunks (count set below). Staging it once and replaying the SAME
-# files for all streaming queries saves a count + global sort + the
-# chunk parquet writes per query (the input is read-only; every query
-# still gets a FRESH checkpoint + sink scratch in `base`, which is
-# what must not be shared). Replay order is modification-time order,
-# fixed at staging.
-_STAGE_CACHE: dict[tuple[str, str], str] = {}
-
-
-@atexit.register
-def _cleanup_stage_cache() -> None:
-    for root in _STAGE_CACHE.values():
-        shutil.rmtree(root, ignore_errors=True)
-    _STAGE_CACHE.clear()
+# Staged input is a pure function of the events files: the same
+# deterministic detection frame cut into the same time-ordered chunks
+# (count set below). Staging it once per (Spark application, events
+# stamp) and replaying the SAME files for all streaming queries saves a
+# count + global sort + the chunk parquet writes per query; an append
+# to events changes the stamp and restages (tables.memo_on_input). The
+# staged input is read-only; every query still gets a FRESH checkpoint
+# + sink scratch in `base`, which is what must not be shared. Replay
+# order is modification-time order, fixed at staging.
+def _stage(spark: SparkSession, sf_dir: str) -> str:
+    root = tempfile.mkdtemp(prefix="traffic_stage_")
+    atexit.register(shutil.rmtree, root, True)
+    # 2 chunks = one real cross-batch state handoff per drain at
+    # the minimum micro-batch count: each batch costs ~1.1-1.2 s
+    # FIXED (measured r11: 4 chunks 5.1 s, 2 chunks 2.7-3.2 s, 1
+    # chunk 1.6 s for the same drained output) and the drained
+    # result is chunking-invariant by construction (pinned by
+    # tests/test_streaming.py::test_tumbling_counts_chunking_invariant
+    # and per-query invariance tests, which stage their own chunk
+    # counts — multi-batch state transitions stay covered there).
+    simulate.stage_stream_dir(spark, sf_dir, f"{root}/stage", n_chunks=2)
+    return f"{root}/stage"
 
 
 def _staged(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    base = tempfile.mkdtemp(prefix="traffic_stream_")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    root = _STAGE_CACHE.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="traffic_stage_")
-        # 2 chunks = one real cross-batch state handoff per drain at
-        # the minimum micro-batch count: each batch costs ~1.1-1.2 s
-        # FIXED (measured r11: 4 chunks 5.1 s, 2 chunks 2.7-3.2 s, 1
-        # chunk 1.6 s for the same drained output) and the drained
-        # result is chunking-invariant by construction (pinned by
-        # tests/test_streaming.py::test_tumbling_counts_chunking_invariant
-        # and per-query invariance tests, which stage their own chunk
-        # counts — multi-batch state transitions stay covered there).
-        simulate.stage_stream_dir(spark, sf_dir, f"{root}/stage", n_chunks=2)
-        _STAGE_CACHE[key] = root
-    return f"{root}/stage", base
+    stage = memo_on_input(
+        "stream_stage", spark, sf_dir, ("events",), lambda: _stage(spark, sf_dir)
+    )
+    return stage, tempfile.mkdtemp(prefix="traffic_stream_")
 
 
 # Serving parquets must outlive the lazy reader a query returns, so

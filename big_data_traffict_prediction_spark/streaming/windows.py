@@ -48,33 +48,15 @@ WATERMARK = "30 minutes"
 #   partitions = ceil(input_rows / STREAM_ROWS_PER_PARTITION)
 # clamped to [1, session parallelism]. STREAM_ROWS_PER_PARTITION is
 # the rows-per-key × keys-per-partition product for KB-scale state —
-# on a real cluster set it to executor_memory_per_partition /
-# state_bytes_per_key × keys_per_row (env below). Results are
+# on a real cluster it would be executor_memory_per_partition /
+# state_bytes_per_key × keys_per_row. Results are
 # partitioning-invariant — pinned by the chunking-invariance test and
 # every q_stream_* oracle. The count is fixed at the FIRST micro-batch
 # for the checkpoint's lifetime; drains whose input volume is unknown
-# (no ``n_rows`` passed) fall back to the legacy constant below, so a
+# (no ``n_rows`` passed) fall back to the constant cap below, so a
 # restarted checkpoint of such a stream keeps a stable count.
-# A VALID SPARK_STREAM_STATE_PARTITIONS still overrides everything
-# (clamped by the session value, as before); empty/whitespace or
-# malformed or non-positive values are treated as unset — derivation
-# engages — never as a silent constant pin and never an import crash.
-
-
-def _env_int(name: str) -> int | None:
-    raw = os.environ.get(name)
-    if raw is None or not raw.strip():
-        return None
-    try:
-        value = int(raw)
-    except ValueError:
-        return None
-    return value if value >= 1 else None
-
-
-_STREAM_STATE_OVERRIDE = _env_int("SPARK_STREAM_STATE_PARTITIONS")
-STREAM_MAX_STATE_PARTITIONS = _STREAM_STATE_OVERRIDE or 8
-STREAM_ROWS_PER_PARTITION = _env_int("SPARK_STREAM_ROWS_PER_PARTITION") or 50000
+STREAM_MAX_STATE_PARTITIONS = 8
+STREAM_ROWS_PER_PARTITION = 50000
 
 
 @contextmanager
@@ -84,11 +66,9 @@ def stream_state_partitions(spark: SparkSession, n_rows: int | None = None):
 
     ``n_rows`` is the drain's total input row count, passed explicitly
     by the call site (queries look their staged dir up via
-    ``simulate.staged_rows``). None → the legacy constant cap."""
+    ``simulate.staged_rows``). None → the constant cap."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    if _STREAM_STATE_OVERRIDE is not None:
-        target = _STREAM_STATE_OVERRIDE
-    elif n_rows is None:
+    if n_rows is None:
         target = STREAM_MAX_STATE_PARTITIONS
     else:
         target = -(-int(n_rows) // STREAM_ROWS_PER_PARTITION)

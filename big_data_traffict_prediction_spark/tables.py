@@ -13,9 +13,15 @@ expressed as deterministic views over testdata:
 
 The SQL twin of every view lives right next to it (``*_SQL``) so the
 Spark plan and the DuckDB oracle can never drift apart silently.
+
+Engine caches over these tables go through ``memo_on_input``, keyed on
+the files they read (``input_stamp``), never on the path alone.
 """
 
 from __future__ import annotations
+
+import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +32,66 @@ from .schemas import TABLE_NAMES, TESTDATA_SCHEMAS
 from .session import pin_session_conf
 
 CAR_EVENT_TYPES = ("click", "view")
+
+V = TypeVar("V")
+
+
+def input_stamp(sf_dir: str, *tables: str) -> tuple[tuple[str, int, int], ...]:
+    """(path, size, mtime_ns) of every data file Spark would read for
+    ``tables`` under ``sf_dir``, in listing order. Names starting with
+    ``.`` or ``_`` are skipped, as Spark's own listing skips them: an
+    in-flight hidden write or a ``_SUCCESS`` marker changes nothing a
+    query reads, so it must not change the stamp either. Empty when no
+    table has a local file (e.g. a non-local URI)."""
+    stamp: list[tuple[str, int, int]] = []
+    for name in tables:
+        root = os.path.join(sf_dir, f"{name}.parquet")
+        if os.path.isfile(root):
+            st = os.stat(root)
+            stamp.append((root, st.st_size, st.st_mtime_ns))
+        for dirpath, dirnames, files in os.walk(root):
+            dirnames[:] = sorted(d for d in dirnames if not d.startswith((".", "_")))
+            for f in sorted(files):
+                if not f.startswith((".", "_")):
+                    path = os.path.join(dirpath, f)
+                    st = os.stat(path)
+                    stamp.append((path, st.st_size, st.st_mtime_ns))
+    return tuple(stamp)
+
+
+_INPUT_MEMO: dict[tuple[str, str, str], tuple[tuple, object]] = {}
+
+
+def memo_on_input(
+    tag: str,
+    spark: SparkSession,
+    sf_dir: str,
+    tables: tuple[str, ...],
+    build: Callable[[], V],
+) -> V:
+    """``build()``, reused per (tag, Spark application, ``sf_dir``) for
+    as long as the ``input_stamp`` of ``tables`` is unchanged: an
+    append, rewrite or compaction of those files rebuilds. ``build``
+    must read its input before it returns; the stamp is taken first,
+    so a change racing the build costs one rebuild, never a stale
+    hit. Concurrent misses may each build; the last one stored wins,
+    and it is never staler than its own stamp. Inputs with no local
+    files are never cached: there is nothing to stamp."""
+    stamp = input_stamp(sf_dir, *tables)
+    if not stamp:
+        return build()
+    key = (tag, spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    hit = _INPUT_MEMO.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    # Spark's CacheManager matches a cached plan by its root path, not
+    # by its files: refresh what it holds over these tables, or a build
+    # that calls .cache() is served the rows cached before the change.
+    for name in tables:
+        spark.catalog.refreshByPath(os.path.join(sf_dir, f"{name}.parquet"))
+    value = build()
+    _INPUT_MEMO[key] = (stamp, value)
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

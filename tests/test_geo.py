@@ -109,22 +109,15 @@ def test_cc_delta_runs_cc_only_on_quotient(spark, sf_dir):
     """The round-12 incremental contract: with the stored zone table in
     place, q_cc_delta must invoke connected_components exactly ONCE —
     the delta-bounded quotient CC — and take the base labels from the
-    persisted parquet store (a scan, not hooking rounds)."""
+    stored table, which a repeat read serves from the memo."""
     from big_data_traffict_prediction_spark.functions import dedup as D
     from big_data_traffict_prediction_spark.operators import geo as G
 
     stored = G.stored_zone_labels(spark, sf_dir)  # builds at most once
-    assert stored.inputFiles(), "stored zone labels must be a parquet scan"
+    assert G.stored_zone_labels(spark, sf_dir) is stored, "memo miss"
     calls: list[int] = []
     orig = D.connected_components
 
-    # wraps() sets __wrapped__, which inspect.getsource follows — the
-    # store's semantic cache key (it hashes connected_components'
-    # source) must see the ORIGINAL function, or the patch itself
-    # would invalidate the store and force a rebuild mid-count
-    import functools
-
-    @functools.wraps(orig)
     def counting(edges):
         calls.append(1)
         return orig(edges)

@@ -285,3 +285,79 @@ def test_media_drop_with_corrupt_files_survives_in_mark_mode(spark, tmp_path):
     assert all((r.width, r.height) == (16, 24) for r in ok)
     assert all(r.level_mean is None and r.feature is None for r in bad)
     assert all(r.payload_bytes > 0 for r in bad)  # metadata still flows
+
+
+def test_input_stamp_tracks_data_files_only(tmp_path):
+    """input_stamp changes with a data file's size or mtime, and not
+    with the hidden or ``_``-prefixed names Spark's listing skips (an
+    in-flight ``.part.tmp`` write, a ``_SUCCESS`` marker). Spark-free."""
+    import os
+
+    from big_data_traffict_prediction_spark.tables import input_stamp
+
+    table = tmp_path / "events.parquet"
+    table.mkdir()
+    part = table / "part-00000.parquet"
+    part.write_bytes(b"PAR1")
+    base = input_stamp(str(tmp_path), "events")
+    assert [os.path.basename(p) for p, _, _ in base] == ["part-00000.parquet"]
+
+    (table / ".part-00001.parquet.tmp").write_bytes(b"half-written")
+    (table / "_SUCCESS").write_bytes(b"")
+    (table / "_temporary").mkdir()
+    (table / "_temporary" / "part-x.parquet").write_bytes(b"PAR1")
+    assert input_stamp(str(tmp_path), "events") == base
+
+    part.write_bytes(b"PAR1PAR1")
+    grown = input_stamp(str(tmp_path), "events")
+    assert grown != base, "a size change must change the stamp"
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert input_stamp(str(tmp_path), "events") != grown, "an mtime change must too"
+    assert input_stamp(str(tmp_path), "customer") == ()
+
+
+def test_memoized_queries_see_appended_events(spark, sf_dir, tmp_path):
+    """The staged stream input and the MLlib memo are keyed on the
+    events FILES, not the path: after a part file is appended (written
+    under a hidden name, then renamed), both queries reflect the new
+    rows instead of serving the pre-append result."""
+    import os
+    import shutil
+
+    from big_data_traffict_prediction_spark.ml.forecast import q_ml_forecast
+    from big_data_traffict_prediction_spark.streaming.queries import (
+        q_stream_tumbling_counts,
+    )
+
+    src = os.path.join(sf_dir, "events.parquet")
+    events = tmp_path / "events.parquet"
+    events.mkdir()
+    shutil.copyfile(src, events / "part-00000.parquet")
+    sf = str(tmp_path)
+
+    def samples() -> int:
+        return q_stream_tumbling_counts(spark, sf).agg(
+            F.sum("n_samples")
+        ).first()[0]
+
+    def slots() -> dict:
+        return {
+            (r.camera_id, r.dow, r.hour_of_day): r.avg_hourly_volume
+            for r in q_ml_forecast(spark, sf).collect()
+        }
+
+    n_before, ml_before = samples(), slots()
+    assert samples() == n_before  # unchanged input: same result
+
+    hidden = events / ".part-00001.parquet.tmp"
+    shutil.copyfile(src, hidden)
+    assert samples() == n_before, "a hidden in-flight file is not input"
+    os.rename(hidden, events / "part-00001.parquet")  # every row, twice
+
+    assert samples() == 2 * n_before
+    ml_after = slots()
+    assert ml_after.keys() == ml_before.keys()
+    assert all(
+        abs(ml_after[k] - 2 * v) <= 1e-5 for k, v in ml_before.items()
+    ), "q_ml_forecast must retrain on the appended rows"

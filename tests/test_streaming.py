@@ -337,44 +337,42 @@ def test_frame_stream_sink_round_trips(spark, sf_dir, tmp_path):
 
 def test_stage_cache_stages_once_per_app_and_sf(monkeypatch, tmp_path):
     """The staged replay input is a pure function of (application,
-    sf_dir): _staged must stage it exactly once and hand every query a
-    FRESH checkpoint scratch (`base`) — sharing a checkpoint would
-    corrupt state; re-staging wastes a count + global sort + 4 writes
-    per query. Spark-free: the stager is stubbed out."""
+    events files): _staged must stage it exactly once per input and
+    hand every query a FRESH checkpoint scratch (`base`) — sharing a
+    checkpoint would corrupt state; re-staging wastes a count + global
+    sort + chunk writes per query. Spark-free: the stager is stubbed
+    out."""
     from big_data_traffict_prediction_spark.streaming import queries as q
 
     calls = []
     monkeypatch.setattr(q.simulate, "stage_stream_dir",
                         lambda spark, sf, d, n_chunks: calls.append(d) or d)
-    monkeypatch.setattr(q, "_STAGE_CACHE", {})
 
     class _Ctx:
-        applicationId = "app-test-1"
+        applicationId = "app-test-stage-cache"
+
+    class _Catalog:
+        def refreshByPath(self, path):
+            pass
 
     class _Spark:
         sparkContext = _Ctx()
+        catalog = _Catalog()
 
-    s1, b1 = q._staged(_Spark(), "/fake/sf1")
-    s2, b2 = q._staged(_Spark(), "/fake/sf1")
-    s3, _ = q._staged(_Spark(), "/fake/sf2")
-    assert len(calls) == 2, "same (app, sf_dir) must stage once"
+    sf1, sf2 = tmp_path / "sf1", tmp_path / "sf2"
+    for sf in (sf1, sf2):
+        sf.mkdir()
+        (sf / "events.parquet").write_bytes(b"PAR1")
+    s1, b1 = q._staged(_Spark(), str(sf1))
+    s2, b2 = q._staged(_Spark(), str(sf1))
+    s3, _ = q._staged(_Spark(), str(sf2))
+    assert len(calls) == 2, "same (app, events files) must stage once"
     assert s1 == s2 and s1 != s3
     assert b1 != b2, "checkpoint scratch must be fresh per query"
 
-
-def test_env_int_treats_non_positive_as_unset(monkeypatch):
-    """A zero or negative sizing knob falls through to derivation (None),
-    like an empty or malformed one, instead of pinning 1 partition.
-    Spark-free."""
-    from big_data_traffict_prediction_spark.streaming.windows import _env_int
-
-    name = "SPARK_STREAM_STATE_PARTITIONS"
-    for raw, want in [("0", None), ("-3", None), (" ", None), ("x", None),
-                      ("1", 1), ("12", 12)]:
-        monkeypatch.setenv(name, raw)
-        assert _env_int(name) == want, raw
-    monkeypatch.delenv(name)
-    assert _env_int(name) is None
+    (sf1 / "events.parquet").write_bytes(b"PAR1PAR1")  # rewritten input
+    s4, _ = q._staged(_Spark(), str(sf1))
+    assert len(calls) == 3 and s4 != s1, "a changed input must restage"
 
 
 def test_tumbling_counts_chunking_invariant(spark, sf_dir):
