@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..compat import exact_ppm, global_rank, let
 from ..registry import register
+from ..session import shuffle_partitions_at_most
 from ..tables import load_table
 from .text import NORM_SQL, hash60, hash60_sql, norm_col
 
@@ -1027,29 +1028,18 @@ def connected_components(sym: DataFrame) -> DataFrame:
     size-the-partitions-to-the-data rule as the streaming state
     stores. Callers pass a checkpointed ``sym`` (all three call sites
     do), so the sizing count() is a cheap in-memory scan; the target
-    rows/partition is ``CC_EDGES_PER_PARTITION`` and the cap never
-    EXCEEDS the session value, so a cluster session sized for petabyte
-    shuffles keeps its parallelism. Labels are bounded by edges (only
-    endpoint vertices are labeled), so one target serves both frames.
-
-    The conf set/restore is session-global for the loop's duration —
-    the same sequential-driver assumption as the streaming
-    ``stream_state_partitions`` helper; a driver that plans OTHER
-    data-sized queries concurrently on this session would see the
-    reduced partition count."""
-    spark = sym.sparkSession
+    rows/partition is ``CC_EDGES_PER_PARTITION`` and, through
+    ``session.shuffle_partitions_at_most``, the cap never EXCEEDS the
+    session value, so a cluster session sized for petabyte shuffles
+    keeps its parallelism. Labels are bounded by edges (only endpoint
+    vertices are labeled), so one target serves both frames. The cap
+    is session-global for the loop's duration: a query planned
+    concurrently on this session sees the reduced partition count."""
     n_edges = sym.count()
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        session_parts = int(old_parts)
-    except (TypeError, ValueError):  # e.g. "auto" on some builds
-        session_parts = sym.rdd.getNumPartitions() or 1
-    loop_parts = max(1, min(session_parts, -(-n_edges // CC_EDGES_PER_PARTITION)))
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with shuffle_partitions_at_most(
+        sym.sparkSession, -(-n_edges // CC_EDGES_PER_PARTITION)
+    ):
         return _cc_loop(sym)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def _cc_loop(sym: DataFrame) -> DataFrame:
@@ -1103,92 +1093,6 @@ def _cc_loop(sym: DataFrame) -> DataFrame:
             "corpus should reach (see SCALE.md)"
         )
     return labels
-
-
-def connected_components_star(sym: DataFrame) -> DataFrame:
-    """Alternating large-star/small-star contraction (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14) — same
-    (doc_id, label) contract as ``connected_components``, provided as
-    the documented upgrade for graphs whose intermediate DEGREE
-    explodes (see SCALE.md §dedup-clustering).
-
-    Why a second algorithm: pointer-doubling keeps one label per
-    vertex, so its per-round shuffle is O(V) — but the hooking join
-    must route every EDGE through its endpoint's partition, and a hub
-    vertex with 10^8 neighbors concentrates that adjacency in one
-    task every round. The star operations instead rewrite the edge
-    set itself: each round every vertex points its strictly-larger
-    (large-star) / not-larger (small-star) neighbors at its minimum
-    neighbor, which provably contracts components in O(log² n) rounds
-    while edges only ever move toward smaller ids — the per-round
-    output never exceeds the input edge count, and a hub's adjacency
-    shrinks geometrically instead of being re-shuffled intact.
-
-    Rounds are capped at CLUSTER_MAX_ITERS with the same
-    raise-don't-return-partial contract; convergence = the canonical
-    (bigger, smaller) edge set reaching a fixed point, checked by a
-    two-sided anti-join (exact, not a count heuristic)."""
-    nodes = sym.select(F.col("d1").alias("doc_id")).distinct()
-    edges = (
-        sym.filter(F.col("d1") != F.col("d2"))
-        .select(
-            F.greatest("d1", "d2").alias("u"), F.least("d1", "d2").alias("v")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(CLUSTER_MAX_ITERS):
-        # large-star: for each u, connect every strictly-larger
-        # neighbor to m = min(N(u) ∪ {u})
-        adj = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        mins = adj.groupBy("u").agg(
-            F.least(F.min("v"), F.first("u")).alias("m")
-        )
-        large = (
-            adj.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .distinct()
-        )
-        # small-star on the large-star output: orient u ≥ v, connect
-        # every not-larger neighbor (and u itself) to the minimum
-        or_adj = large.select(
-            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-        )
-        smins = or_adj.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
-            or_adj.join(smins, "u")
-            .select(
-                F.explode(F.array(F.col("u"), F.col("v"))).alias("n"), F.col("m")
-            )
-            .filter(F.col("n") != F.col("m"))
-            .select(F.col("n").alias("u"), F.col("m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # fixed point: the canonical edge set stopped changing — one
-        # job for the symmetric difference (union of both anti-joins),
-        # not two separate count() actions per round
-        converged = (
-            small.join(edges, ["u", "v"], "left_anti")
-            .select("u", "v")
-            .unionAll(edges.join(small, ["u", "v"], "left_anti").select("u", "v"))
-            .isEmpty()
-        )
-        edges = small
-        if converged:
-            break
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in "
-            f"{CLUSTER_MAX_ITERS} rounds (see SCALE.md)"
-        )
-    # final star forest: every node's label = min(self, neighbors)
-    adj = edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    labels = adj.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("label"))
-    return nodes.join(
-        labels, nodes.doc_id == labels.u, "left"
-    ).select("doc_id", F.coalesce("label", "doc_id").alias("label"))
 
 
 @register(

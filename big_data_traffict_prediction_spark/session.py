@@ -20,6 +20,7 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -105,6 +106,22 @@ def ship_package(spark: SparkSession) -> None:
         return
     spark.sparkContext.addPyFile(_package_zip())
     _SHIPPED_APPS.add(app)
+
+
+@contextmanager
+def shuffle_partitions_at_most(spark: SparkSession, target: int):
+    """Run the body with ``spark.sql.shuffle.partitions`` lowered to
+    ``target`` (never raised above the session value, never below 1),
+    restoring the session value after.
+
+    The conf is session-global: a query planned concurrently on the
+    same session sees the lowered count for the body's duration."""
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(max(1, min(int(old), target))))
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
 def pin_session_conf(spark: SparkSession) -> SparkSession:

@@ -21,10 +21,13 @@ pure function of the input set, and therefore SQL-expressible:
   is inside the 30 min watermark), so the drained join equals the
   batch theta join.
 
-Those six queries carry exact DuckDB oracles (verified at sf0.001 and
-sf0.01). Only the custom-stateful applyInPandasWithState dedup stays
-rows-only — its suppression order is genuinely procedural; its
-batch-equivalence is pinned in tests/test_streaming.py instead.
+18 of the 21 registered streaming queries carry exact DuckDB oracles
+(verified at sf0.001 and sf0.01). Three stay rows-only: the
+custom-stateful applyInPandasWithState IoU dedup — its suppression
+order is genuinely procedural; its batch-equivalence is pinned in
+tests/test_streaming.py instead — and the LEFT / FULL OUTER
+stream-stream joins, whose null-extended rows depend on the replay
+chunking.
 """
 
 from __future__ import annotations
@@ -33,8 +36,10 @@ import atexit
 import shutil
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..compat import NOW_EPOCH
 from ..operators.prediction import _THRESHOLDS_CTE
@@ -53,8 +58,8 @@ _WM_CTE = "wm AS (SELECT MAX(ts) - INTERVAL '30 minutes' AS w FROM traffic)"
 # stamp) and replaying the SAME files for all streaming queries saves a
 # count + global sort + the chunk parquet writes per query; an append
 # to events changes the stamp and restages (tables.memo_on_input). The
-# staged input is read-only; every query still gets a FRESH checkpoint
-# + sink scratch in `base`, which is what must not be shared. Replay
+# staged input is read-only; every drain still gets a FRESH checkpoint
+# scratch (see _drain), which is what must not be shared. Replay
 # order is modification-time order, fixed at staging.
 def _stage(spark: SparkSession, sf_dir: str) -> str:
     root = tempfile.mkdtemp(prefix="traffic_stage_")
@@ -71,37 +76,49 @@ def _stage(spark: SparkSession, sf_dir: str) -> str:
     return f"{root}/stage"
 
 
-def _staged(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+def _drain(
+    spark: SparkSession,
+    sf_dir: str,
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+    output_mode: str = "append",
+    state_scale: int | None = 1,
+    sink: Callable[[DataFrame, str, int | None], DataFrame] | None = None,
+) -> DataFrame:
+    """Drain one bounded replay of the staged detection stream — the
+    one drain path of every registered streaming query.
+
+    ``build(read)`` returns the streaming plan; each ``read()`` opens a
+    fresh reader over the shared staged input. The plan drains into a
+    uniquely named memory sink (or through ``sink(plan, scratch,
+    state_rows)``, which must return a frame that no longer reads
+    ``scratch``) with its checkpoint in a per-call scratch dir, removed
+    when the drain returns or raises. The returned frame owns its rows,
+    so an earlier result stays readable after later calls.
+
+    ``state_scale`` sizes the state-store partitions
+    (windows.stream_state_partitions) for staged rows × scale; None
+    keeps the constant cap — the per-row Python-state drains, whose
+    partition count is their Python parallelism, not state size."""
     stage = memo_on_input(
         "stream_stage", spark, sf_dir, ("events",), lambda: _stage(spark, sf_dir)
     )
-    return stage, tempfile.mkdtemp(prefix="traffic_stream_")
-
-
-# Serving parquets must outlive the lazy reader a query returns, so
-# they cannot be removed in-query like the staging dirs. Each new call
-# eagerly reclaims the previous serve dir of the same prefix (the old
-# reader is superseded — single-active-reader semantics per query), so
-# a long-lived process holds at most one dir per query and a killed
-# process leaks at most one; atexit clears the remainder on a clean
-# shutdown.
-_SERVE_DIRS: dict[str, str] = {}  # prefix -> live dir: reclaim is exact
-
-
-def _serve_dir(prefix: str) -> str:
-    old = _SERVE_DIRS.pop(prefix, None)
-    if old is not None:
-        shutil.rmtree(old, ignore_errors=True)
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SERVE_DIRS[prefix] = d
-    return d
-
-
-@atexit.register
-def _cleanup_serve_dirs() -> None:
-    for d in _SERVE_DIRS.values():
-        shutil.rmtree(d, ignore_errors=True)
-    _SERVE_DIRS.clear()
+    staged = simulate.staged_rows(stage)
+    state_rows = None if state_scale is None or staged is None else staged * state_scale
+    scratch = tempfile.mkdtemp(prefix="traffic_stream_")
+    try:
+        plan = build(lambda: simulate.read_stream(spark, stage))
+        if sink is not None:
+            return sink(plan, scratch, state_rows)
+        return windows.run_to_memory(
+            spark,
+            plan,
+            f"q_stream_{uuid.uuid4().hex}",
+            f"{scratch}/ckpt",
+            output_mode=output_mode,
+            state_rows=state_rows,
+        )
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
 @register("q_stream_iou_dedup", oracle=None)
@@ -109,18 +126,13 @@ def q_stream_iou_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """St2-St3: per-camera stateful IoU dedup + accumulators over the
     simulated stream (applyInPandasWithState). Equals the batch
     operator q_iou_dedup on the suppressed-set (tested)."""
-    stage, base = _staged(spark, sf_dir)
-    out = windows.run_to_memory(
-        spark,
-        state.stateful_dedup(simulate.read_stream(spark, stage)),
-        f"q_stream_dedup_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        # NO state_rows: applyInPandasWithState runs a per-row PYTHON
-        # kernel, so the partition count is a Python-parallelism knob,
-        # not a state-sizing knob — the sized cap (2 at sf0.1) measured
-        # the congestion twin ~3x slower than the constant (r14 A/B)
+    # NO state sizing: applyInPandasWithState runs a per-row PYTHON
+    # kernel, so the partition count is a Python-parallelism knob, not
+    # a state-sizing knob — the sized cap (2 at sf0.1) measured the
+    # congestion twin ~3x slower than the constant (r14 A/B)
+    out = _drain(
+        spark, sf_dir, lambda read: state.stateful_dedup(read()), state_scale=None
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return out.orderBy("camera_id", "id")
 
 
@@ -147,15 +159,7 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     simulated stream. Hash-checked: the drained append-mode output is
     exactly the batch hourly aggregate restricted to windows closed by
     the final watermark (module docstring)."""
-    stage, base = _staged(spark, sf_dir)
-    out = windows.run_to_memory(
-        spark,
-        windows.tumbling_counts(simulate.read_stream(spark, stage), "1 hour"),
-        f"q_stream_tumbling_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
+    out = _drain(spark, sf_dir, lambda read: windows.tumbling_counts(read(), "1 hour"))
     return out.orderBy("window_start", "camera_id")
 
 @register(
@@ -183,15 +187,7 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (app/utils.py:523-565). Hash-checked: each row lands in 4 slides
     (the generate_series fan-out in the oracle), windows closed by the
     final watermark emit."""
-    stage, base = _staged(spark, sf_dir)
-    out = windows.run_to_memory(
-        spark,
-        windows.sliding_counts(simulate.read_stream(spark, stage)),
-        f"q_stream_sliding_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
+    out = _drain(spark, sf_dir, lambda read: windows.sliding_counts(read()))
     return out.orderBy("window_start")
 
 
@@ -230,28 +226,41 @@ def q_stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle: a row ≥ gap after its predecessor opens a new session
     (half-open merge), session_end = last ts + gap, and only sessions
     closed by the final watermark emit."""
-    stage, base = _staged(spark, sf_dir)
-    out = windows.run_to_memory(
-        spark,
-        windows.session_counts(simulate.read_stream(spark, stage)),
-        f"q_stream_session_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
+    out = _drain(spark, sf_dir, lambda read: windows.session_counts(read()))
     return out.orderBy("session_start", "camera_id")
 
 
-@register(
-    "q_stream_dedup_delivery",
-    oracle=with_traffic(
-        """
+# Both exactly-once dedup queries answer with the single-delivery
+# per-camera counts: the oracle IS the exactly-once contract.
+_DELIVERY_ORACLE = with_traffic(
+    """
 SELECT camera_id, CAST(COUNT(*) AS BIGINT) AS n_events,
        CAST(SUM(new_count) AS BIGINT) AS total_new_count
 FROM traffic GROUP BY camera_id ORDER BY camera_id
 """
-    ),
 )
+
+
+def _twice_delivered_counts(
+    spark: SparkSession, sf_dir: str, dedup: Callable[[DataFrame], DataFrame]
+) -> DataFrame:
+    """Per-camera counts over the staged stream delivered TWICE (read
+    twice and unioned, watermarked) and deduplicated by ``dedup``."""
+
+    def build(read):
+        twice = read().unionByName(read()).withWatermark("ts", "30 minutes")
+        return dedup(twice).groupBy("camera_id").agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum("new_count").alias("total_new_count"),
+        )
+
+    # the stage is read TWICE and unioned: 2x sizes the drain for its
+    # input volume (distinct dedup keys stay 1x the staged rows)
+    out = _drain(spark, sf_dir, build, output_mode="complete", state_scale=2)
+    return out.orderBy("camera_id")
+
+
+@register("q_stream_dedup_delivery", oracle=_DELIVERY_ORACLE)
 def q_stream_dedup_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once event delivery from an at-least-once transport:
     the staged stream is read TWICE and unioned (every record delivered
@@ -260,28 +269,9 @@ def q_stream_dedup_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hash-checked: per-camera counts over the deduped stream must equal
     the single-delivery batch counts exactly — the oracle IS the
     exactly-once contract."""
-    from pyspark.sql import functions as F
-
-    stage, base = _staged(spark, sf_dir)
-    once = simulate.read_stream(spark, stage)
-    twice = once.unionByName(simulate.read_stream(spark, stage))
-    deduped = twice.withWatermark("ts", "30 minutes").dropDuplicates(["id", "ts"])
-    counts = deduped.groupBy("camera_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("new_count").alias("total_new_count"),
+    return _twice_delivered_counts(
+        spark, sf_dir, lambda s: s.dropDuplicates(["id", "ts"])
     )
-    out = windows.run_to_memory(
-        spark,
-        counts,
-        f"q_stream_dedup_delivery_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        output_mode="complete",
-        # the stage is read TWICE and unioned: 2x sizes the drain for
-        # its input volume (distinct dedup keys stay 1x the staged rows)
-        state_rows=2 * (simulate.staged_rows(stage) or 0) or None,
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
-    return out.orderBy("camera_id")
 
 
 from ..operators.joins import ALERT_LOOKBACK_MIN  # noqa: E402
@@ -289,11 +279,12 @@ from ..operators.joins import ALERT_LOOKBACK_MIN  # noqa: E402
 ALERT_THRESHOLD = 300
 ALERT_LOOKBACK = f"{ALERT_LOOKBACK_MIN} minutes"
 
+_MATCH_COLS = ["camera_id", "alert_id", "alert_ts", "alert_count", "id", "ts", "new_count"]
 
-@register(
-    "q_stream_stream_join",
-    oracle=with_traffic(
-        f"""
+# The batch theta join that the inner stream-stream join (plain and
+# bin-blocked) must reproduce row for row.
+_ALERT_JOIN_ORACLE = with_traffic(
+    f"""
 SELECT t.camera_id, a.alert_id, a.alert_ts, a.alert_count, t.id, t.ts, t.new_count
 FROM traffic t
 JOIN (SELECT camera_id AS a_camera, ts AS alert_ts, id AS alert_id,
@@ -304,8 +295,35 @@ JOIN (SELECT camera_id AS a_camera, ts AS alert_ts, id AS alert_id,
  AND t.ts <= a.alert_ts
 ORDER BY t.camera_id, a.alert_id, t.id
 """
-    ),
 )
+
+
+def _alert_join(read: Callable[[], DataFrame], how: str) -> DataFrame:
+    """Watermarked stream-stream interval join of raw detections to the
+    derived congestion-alert stream of the same feed: per camera,
+    observation time within [alert - lookback, alert]."""
+    obs = read().withWatermark("ts", "30 minutes")
+    alerts = (
+        read()
+        .filter(F.col("new_count") >= ALERT_THRESHOLD)
+        .select(
+            F.col("camera_id").alias("a_camera"),
+            F.col("ts").alias("alert_ts"),
+            F.col("id").alias("alert_id"),
+            F.col("new_count").alias("alert_count"),
+        )
+        .withWatermark("alert_ts", "30 minutes")
+    )
+    return obs.join(
+        alerts,
+        (F.col("camera_id") == F.col("a_camera"))
+        & (F.col("ts") >= F.col("alert_ts") - F.expr(f"INTERVAL {ALERT_LOOKBACK}"))
+        & (F.col("ts") <= F.col("alert_ts")),
+        how,
+    )
+
+
+@register("q_stream_stream_join", oracle=_ALERT_JOIN_ORACLE)
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join (the one streaming operator class the
     other registered streams don't cover): raw detections joined to a
@@ -317,35 +335,9 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     lockstep and the 15 min lookback sits inside the 30 min watermark,
     so no row is evicted before its partner arrives and the drained
     join equals the batch theta join."""
-    from pyspark.sql import functions as F
-
-    stage, base = _staged(spark, sf_dir)
-    obs = simulate.read_stream(spark, stage).withWatermark("ts", "30 minutes")
-    alerts = (
-        simulate.read_stream(spark, stage)
-        .filter(F.col("new_count") >= ALERT_THRESHOLD)
-        .select(
-            F.col("camera_id").alias("a_camera"),
-            F.col("ts").alias("alert_ts"),
-            F.col("id").alias("alert_id"),
-            F.col("new_count").alias("alert_count"),
-        )
-        .withWatermark("alert_ts", "30 minutes")
+    out = _drain(
+        spark, sf_dir, lambda read: _alert_join(read, "inner").select(*_MATCH_COLS)
     )
-    joined = obs.join(
-        alerts,
-        (F.col("camera_id") == F.col("a_camera"))
-        & (F.col("ts") >= F.col("alert_ts") - F.expr(f"INTERVAL {ALERT_LOOKBACK}"))
-        & (F.col("ts") <= F.col("alert_ts")),
-    ).select("camera_id", "alert_id", "alert_ts", "alert_count", "id", "ts", "new_count")
-    out = windows.run_to_memory(
-        spark,
-        joined,
-        f"q_stream_stream_join_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return out.orderBy("camera_id", "alert_id", "id")
 
 
@@ -356,22 +348,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SJ_BIN_S = ALERT_LOOKBACK_MIN * 60
 
 
-@register(
-    "q_stream_interval_join_binned",
-    oracle=with_traffic(
-        f"""
-SELECT t.camera_id, a.alert_id, a.alert_ts, a.alert_count, t.id, t.ts, t.new_count
-FROM traffic t
-JOIN (SELECT camera_id AS a_camera, ts AS alert_ts, id AS alert_id,
-             new_count AS alert_count
-      FROM traffic WHERE new_count >= {ALERT_THRESHOLD}) a
-  ON t.camera_id = a.a_camera
- AND t.ts >= a.alert_ts - INTERVAL {ALERT_LOOKBACK}
- AND t.ts <= a.alert_ts
-ORDER BY t.camera_id, a.alert_id, t.id
-"""
-    ),
-)
+@register("q_stream_interval_join_binned", oracle=_ALERT_JOIN_ORACLE)
 def q_stream_interval_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bin-blocked stream-stream interval join — the streaming twin of
     q_interval_join_binned (operators/joins.py): the alert side
@@ -393,55 +370,42 @@ def q_stream_interval_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame
     not by the camera's full window. Both sides stay watermarked and
     both event times stay bounded in the condition, so state eviction
     works unchanged."""
-    from pyspark.sql import functions as F
-
     from ..compat import epoch_s
 
-    stage, base = _staged(spark, sf_dir)
-    obs = (
-        simulate.read_stream(spark, stage)
-        .select(
+    def build(read):
+        obs = read().select(
             "camera_id",
             "id",
             "ts",
             "new_count",
             F.call_function("div", epoch_s("ts"), F.lit(_SJ_BIN_S)).alias("bin"),
+        ).withWatermark("ts", "30 minutes")
+        alerts = (
+            read()
+            .filter(F.col("new_count") >= ALERT_THRESHOLD)
+            .select(
+                F.col("camera_id").alias("a_camera"),
+                F.col("ts").alias("alert_ts"),
+                F.col("id").alias("alert_id"),
+                F.col("new_count").alias("alert_count"),
+                F.explode(
+                    F.array(
+                        F.call_function("div", epoch_s("ts"), F.lit(_SJ_BIN_S)) - 1,
+                        F.call_function("div", epoch_s("ts"), F.lit(_SJ_BIN_S)),
+                    )
+                ).alias("a_bin"),
+            )
+            .withWatermark("alert_ts", "30 minutes")
         )
-        .withWatermark("ts", "30 minutes")
-    )
-    alerts = (
-        simulate.read_stream(spark, stage)
-        .filter(F.col("new_count") >= ALERT_THRESHOLD)
-        .select(
-            F.col("camera_id").alias("a_camera"),
-            F.col("ts").alias("alert_ts"),
-            F.col("id").alias("alert_id"),
-            F.col("new_count").alias("alert_count"),
-            F.explode(
-                F.array(
-                    F.call_function("div", epoch_s("ts"), F.lit(_SJ_BIN_S)) - 1,
-                    F.call_function("div", epoch_s("ts"), F.lit(_SJ_BIN_S)),
-                )
-            ).alias("a_bin"),
-        )
-        .withWatermark("alert_ts", "30 minutes")
-    )
-    joined = obs.join(
-        alerts,
-        (F.col("camera_id") == F.col("a_camera"))
-        & (F.col("bin") == F.col("a_bin"))
-        & (F.col("ts") >= F.col("alert_ts") - F.expr(f"INTERVAL {ALERT_LOOKBACK}"))
-        & (F.col("ts") <= F.col("alert_ts")),
-    ).select("camera_id", "alert_id", "alert_ts", "alert_count", "id", "ts", "new_count")
-    out = windows.run_to_memory(
-        spark,
-        joined,
-        f"q_stream_interval_binned_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
-    return out.orderBy("camera_id", "alert_id", "id")
+        return obs.join(
+            alerts,
+            (F.col("camera_id") == F.col("a_camera"))
+            & (F.col("bin") == F.col("a_bin"))
+            & (F.col("ts") >= F.col("alert_ts") - F.expr(f"INTERVAL {ALERT_LOOKBACK}"))
+            & (F.col("ts") <= F.col("alert_ts")),
+        ).select(*_MATCH_COLS)
+
+    return _drain(spark, sf_dir, build).orderBy("camera_id", "alert_id", "id")
 
 
 def _outer_join_rows(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
@@ -451,40 +415,13 @@ def _outer_join_rows(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
     watermark evicts their join state, so the null SET depends on the
     replay chunking (see the registered queries for why that makes
     row-level output unsuitable as a driver signal)."""
-    from pyspark.sql import functions as F
-
-    stage, base = _staged(spark, sf_dir)
-    obs = simulate.read_stream(spark, stage).withWatermark("ts", "30 minutes")
-    alerts = (
-        simulate.read_stream(spark, stage)
-        .filter(F.col("new_count") >= ALERT_THRESHOLD)
-        .select(
-            F.col("camera_id").alias("a_camera"),
-            F.col("ts").alias("alert_ts"),
-            F.col("id").alias("alert_id"),
-            F.col("new_count").alias("alert_count"),
-        )
-        .withWatermark("alert_ts", "30 minutes")
-    )
-    joined = obs.join(
-        alerts,
-        (F.col("camera_id") == F.col("a_camera"))
-        & (F.col("ts") >= F.col("alert_ts") - F.expr(f"INTERVAL {ALERT_LOOKBACK}"))
-        & (F.col("ts") <= F.col("alert_ts")),
-        how,
-    ).select(
-        "camera_id", "a_camera", "alert_id", "alert_ts", "alert_count",
-        "id", "ts", "new_count",
-    )
-    out = windows.run_to_memory(
+    return _drain(
         spark,
-        joined,
-        f"q_stream_stream_{how}_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
+        sf_dir,
+        lambda read: _alert_join(read, how).select(
+            "camera_id", "a_camera", *_MATCH_COLS[1:]
+        ),
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
-    return out
 
 
 # Checksum formula shared by the streaming summaries and their batch
@@ -492,13 +429,8 @@ def _outer_join_rows(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
 # any realistic pair count stays far from long overflow (Spark 4 runs
 # ANSI mode — a wrapped sum would throw, not wrap).
 def pair_checksum(cols: list[str], when=None):
-    from pyspark.sql import functions as F
-
     h = F.pmod(F.xxhash64(*cols), F.lit(2**31))
     return F.sum(h if when is None else F.when(when, h))
-
-
-_MATCH_COLS = ["camera_id", "alert_id", "alert_ts", "alert_count", "id", "ts", "new_count"]
 
 
 def stream_stream_left_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -531,8 +463,6 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_stream_stream_join — both sides watermarked, both event times
     bounded, state ∝ (watermark window × arrival rate), never
     history."""
-    from pyspark.sql import functions as F
-
     rows = stream_stream_left_rows(spark, sf_dir)
     matched = F.col("alert_id").isNotNull()
     return (
@@ -572,26 +502,17 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores a live feed against nightly-built baselines. Stateless →
     rows-only driver check; equality with the batch filter is pinned
     in tests/test_streaming.py."""
-    from pyspark.sql import functions as F
-
     from ..operators.prediction import camera_thresholds
 
-    stage, base = _staged(spark, sf_dir)
     static = camera_thresholds(spark, sf_dir).select("camera_id", "p90")
-    flagged = (
-        simulate.read_stream(spark, stage)
+    out = _drain(
+        spark,
+        sf_dir,
+        lambda read: read()
         .join(F.broadcast(static), "camera_id")
         .filter(F.col("new_count").cast("double") > F.col("p90"))
-        .select("camera_id", "id", "ts", "new_count", "p90")
+        .select("camera_id", "id", "ts", "new_count", "p90"),
     )
-    out = windows.run_to_memory(
-        spark,
-        flagged,
-        f"q_stream_static_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return out.orderBy("camera_id", "id")
 
 
@@ -635,28 +556,14 @@ def q_stream_congestion_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     below-threshold row on the same camera (island index < per-camera
     low-row count) — the oracle's HAVING clause; the still-open tail
     episode stays in state and is correctly absent from both sides."""
-    stage, base = _staged(spark, sf_dir)
-    out = windows.run_to_memory(
-        spark,
-        state.congestion_episodes(simulate.read_stream(spark, stage)),
-        f"q_stream_episodes_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        # NO state_rows: per-row Python kernel — see q_stream_iou_dedup
+    # NO state sizing: per-row Python kernel — see q_stream_iou_dedup
+    out = _drain(
+        spark, sf_dir, lambda read: state.congestion_episodes(read()), state_scale=None
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return out.orderBy("camera_id", "episode_start")
 
 
-@register(
-    "q_stream_dedup_within_watermark",
-    oracle=with_traffic(
-        """
-SELECT camera_id, CAST(COUNT(*) AS BIGINT) AS n_events,
-       CAST(SUM(new_count) AS BIGINT) AS total_new_count
-FROM traffic GROUP BY camera_id ORDER BY camera_id
-"""
-    ),
-)
+@register("q_stream_dedup_within_watermark", oracle=_DELIVERY_ORACLE)
 def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`dropDuplicatesWithinWatermark` twin of q_stream_dedup_delivery —
     the recommended modern form: state for a key is dropped once the
@@ -665,30 +572,9 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
     land in the same window (the classic dropDuplicates-with-watermark
     pitfall). Identical exactly-once contract, hash-checked against
     the single-delivery batch counts."""
-    from pyspark.sql import functions as F
-
-    stage, base = _staged(spark, sf_dir)
-    once = simulate.read_stream(spark, stage)
-    twice = once.unionByName(simulate.read_stream(spark, stage))
-    deduped = twice.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
-        ["id"]
+    return _twice_delivered_counts(
+        spark, sf_dir, lambda s: s.dropDuplicatesWithinWatermark(["id"])
     )
-    counts = deduped.groupBy("camera_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum("new_count").alias("total_new_count"),
-    )
-    out = windows.run_to_memory(
-        spark,
-        counts,
-        f"q_stream_dedup_ww_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        output_mode="complete",
-        # the stage is read TWICE and unioned: 2x sizes the drain for
-        # its input volume (distinct dedup keys stay 1x the staged rows)
-        state_rows=2 * (simulate.staged_rows(stage) or 0) or None,
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
-    return out.orderBy("camera_id")
 
 
 @register(
@@ -711,30 +597,25 @@ def q_stream_continuous_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant, so the streaming path must reproduce the batch answer
     exactly. This is the maintenance loop behind q_hybrid_rollup's
     cold tier."""
-    from pyspark.sql import functions as F
 
-    stage, base = _staged(spark, sf_dir)
-    part_dir = windows.run_rollup_partials(
-        simulate.read_stream(spark, stage),
-        base,
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    rollup = (
-        spark.read.parquet(part_dir)
-        .groupBy("camera_id", "d")
-        .agg(
-            F.sum("partial_total").cast("long").alias("total_new_count"),
-            F.sum("partial_n").cast("long").alias("n_events"),
+    def serve(plan: DataFrame, scratch: str, state_rows: int | None) -> DataFrame:
+        part_dir = windows.run_rollup_partials(
+            plan, scratch, f"{scratch}/ckpt", state_rows=state_rows
         )
-    )
-    # Executor-side materialization: land the serving aggregate as a
-    # second scratch parquet (outside the staging dir we tear down) and
-    # hand back a reader — the rollup never funnels through the driver.
-    serve_dir = _serve_dir("traffic_rollup_serve_")
-    rollup.write.mode("overwrite").parquet(serve_dir)
-    shutil.rmtree(base, ignore_errors=True)
-    return spark.read.parquet(serve_dir).orderBy("camera_id", "d")
+        rollup = (
+            spark.read.parquet(part_dir)
+            .groupBy("camera_id", "d")
+            .agg(
+                F.sum("partial_total").cast("long").alias("total_new_count"),
+                F.sum("partial_n").cast("long").alias("n_events"),
+            )
+        )
+        # executor-side materialization: the serving aggregate lives in
+        # the block manager, outlives the partials' scratch and never
+        # funnels through the driver
+        return rollup.localCheckpoint(eager=True)
+
+    return _drain(spark, sf_dir, lambda read: read(), sink=serve).orderBy("camera_id", "d")
 
 
 def stream_stream_full_outer_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,8 +640,6 @@ def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     are pinned in tests via stream_stream_full_outer_rows. State stays
     bounded on both sides: both inputs watermarked and both event
     times constrained, so state ∝ (watermark window × arrival rate)."""
-    from pyspark.sql import functions as F
-
     rows = stream_stream_full_outer_rows(spark, sf_dir)
     matched = F.col("alert_id").isNotNull() & F.col("id").isNotNull()
     null_obs = F.col("alert_id").isNull()
@@ -839,18 +718,7 @@ def q_stream_hll_cameras(spark: SparkSession, sf_dir: str) -> DataFrame:
     The estimate itself (same integer floor estimator + LC dispatch
     as q_hll_distinct) runs POST-DRAIN on the register table — 64
     rows per closed window, never the stream."""
-    stage, base = _staged(spark, sf_dir)
-    regs = windows.hll_register_windows(simulate.read_stream(spark, stage))
-    out = windows.run_to_memory(
-        spark,
-        regs,
-        f"q_stream_hll_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
-    from pyspark.sql import functions as F
-
+    out = _drain(spark, sf_dir, lambda read: windows.hll_register_windows(read()))
     denom = F.sum(
         F.expr(f"shiftleft(cast(1 as bigint), {HLL_MAX_RANK} - reg)")
     ) + (F.lit(HLL_M) - F.count(F.lit(1))) * F.lit(1 << HLL_MAX_RANK)
@@ -928,28 +796,19 @@ def q_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-sized join. This is the foreachBatch-upsert pattern every
     lakehouse streaming ingest uses, with the state compaction kept
     INSIDE Structured Streaming where it is exactly-once."""
-    from pyspark.sql import functions as F
-
     from ..tables import traffic_history
 
     t1 = F.timestamp_seconds(F.lit(STREAM_CDC_T1_EPOCH))
     t2 = F.timestamp_seconds(F.lit(STREAM_CDC_T2_EPOCH))
-    stage, base = _staged(spark, sf_dir)
-    feed_latest = (
-        simulate.read_stream(spark, stage)
+    drained = _drain(
+        spark,
+        sf_dir,
+        lambda read: read()
         .filter((F.col("ts") >= t1) & (F.col("ts") < t2))
         .groupBy("camera_id")
-        .agg(F.max(F.struct("ts", "id", "new_count")).alias("f"))
-    )
-    drained = windows.run_to_memory(
-        spark,
-        feed_latest,
-        f"q_stream_cdc_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
+        .agg(F.max(F.struct("ts", "id", "new_count")).alias("f")),
         output_mode="complete",
-        state_rows=simulate.staged_rows(stage),
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     tgt = (
         traffic_history(spark, sf_dir)
         .filter(F.col("ts") < t1)
@@ -1016,10 +875,6 @@ def q_stream_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is |zones| rows of five scalars — partition
     grain, never row grain; at 100 TB the same query reads Kafka/file
     drops and the index lands via foreachBatch upsert."""
-    from pyspark.sql import functions as F
-
-    stage, base = _staged(spark, sf_dir)
-    rows = simulate.read_stream(spark, stage)
     bit = F.pmod(
         F.conv(
             F.substring(
@@ -1030,8 +885,11 @@ def q_stream_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long"),
         F.lit(ZM_BLOOM_BITS),
     ).cast("int")
-    zm = (
-        rows.select(
+    out = _drain(
+        spark,
+        sf_dir,
+        lambda read: read()
+        .select(
             F.date_format("ts", "yyyy-MM-dd").alias("d"),
             F.hour("ts").cast("long").alias("hr"),
             "new_count",
@@ -1047,17 +905,9 @@ def q_stream_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .cast("long")
             .alias("bloom_fp"),
-        )
-    )
-    out = windows.run_to_memory(
-        spark,
-        zm,
-        f"q_stream_zone_map_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
+        ),
         output_mode="complete",
-        state_rows=simulate.staged_rows(stage),
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return out.orderBy("d", "hr")
 
 
@@ -1084,28 +934,18 @@ def q_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted-sketch pattern; at 100 TB the drain lands per-window
     sketches via foreachBatch and readers merge by bucket-wise SUM."""
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ..operators.pipeline import DDS_QS, dds_bucket, dds_upper
 
-    stage, base = _staged(spark, sf_dir)
-    rows = simulate.read_stream(spark, stage)
-    bc = (
-        rows.select(
-            "camera_id", dds_bucket(F.col("new_count")).alias("bucket")
-        )
-        .groupBy("camera_id", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    drained = windows.run_to_memory(
+    drained = _drain(
         spark,
-        bc,
-        f"q_stream_ddsketch_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
+        sf_dir,
+        lambda read: read()
+        .select("camera_id", dds_bucket(F.col("new_count")).alias("bucket"))
+        .groupBy("camera_id", "bucket")
+        .agg(F.count(F.lit(1)).alias("c")),
         output_mode="complete",
-        state_rows=simulate.staged_rows(stage),
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     wcum = (
         Window.partitionBy("camera_id")
         .orderBy("bucket")
@@ -1170,19 +1010,11 @@ def q_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     of hist_buckets_from_vf, value-domain-sized at any fact scale."""
     from ..operators.scans import hist_buckets_from_vf, hist_value_freq
 
-    stage, base = _staged(spark, sf_dir)
     # the SAME vf statistic as the batch/merge queries — reusing the
     # helper keeps the streaming twin in lock-step with its oracle
-    vf = hist_value_freq(simulate.read_stream(spark, stage))
-    out = windows.run_to_memory(
-        spark,
-        vf,
-        f"q_stream_histogram_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
-        output_mode="complete",
-        state_rows=simulate.staged_rows(stage),
+    out = _drain(
+        spark, sf_dir, lambda read: hist_value_freq(read()), output_mode="complete"
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return hist_buckets_from_vf(spark, out).orderBy("bucket")
 
 
@@ -1218,17 +1050,12 @@ def q_stream_join_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         cm_sketch_vs_exact,
     )
 
-    stage, base = _staged(spark, sf_dir)
-    grid = cm_join_grid(am_pm_from(simulate.read_stream(spark, stage)))
-    out = windows.run_to_memory(
+    out = _drain(
         spark,
-        grid,
-        f"q_stream_join_size_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
+        sf_dir,
+        lambda read: cm_join_grid(am_pm_from(read())),
         output_mode="complete",
-        state_rows=simulate.staged_rows(stage),
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return cm_sketch_vs_exact(
         am_pm_sides(spark, sf_dir), cm_estimate_from_grid(out)
     )
@@ -1276,8 +1103,6 @@ def q_stream_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is |columns| × 64 register-bucket rows + their
     fold cells — fixed-size whatever the event rate; the post-drain
     rollup touches only that frame."""
-    from pyspark.sql import functions as F
-
     from ..operators.pipeline import (
         _HLL_WMOD,
         _hll_estimate,
@@ -1296,38 +1121,31 @@ def q_stream_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
             "new_cars": canon_int_col(df["new_cars"]),
         }
 
-    stage, base_dir = _staged(spark, sf_dir)
-    rows = simulate.read_stream(spark, stage)
-    stack = analyze_stack(rows, canon(rows)).select(
-        "col", "val", analyze_hash_col()
-    )
-    state = (
-        stack.select(
-            "col",
-            "val",
-            F.coalesce(
-                F.call_function("div", F.col("h"), F.lit(_HLL_WMOD)), F.lit(-1)
-            ).alias("bucket"),
-            hll_rank_col(F.col("h")).cast("int").alias("rank"),
+    def build(read):
+        rows = read()
+        stack = analyze_stack(rows, canon(rows)).select(
+            "col", "val", analyze_hash_col()
         )
-        .groupBy("col", "bucket")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("cnt"),
-            F.sum(F.col("val").isNull().cast("long")).cast("long").alias("nnull"),
-            F.min("val").alias("mn"),
-            F.max("val").alias("mx"),
-            F.max("rank").alias("reg"),
+        return (
+            stack.select(
+                "col",
+                "val",
+                F.coalesce(
+                    F.call_function("div", F.col("h"), F.lit(_HLL_WMOD)), F.lit(-1)
+                ).alias("bucket"),
+                hll_rank_col(F.col("h")).cast("int").alias("rank"),
+            )
+            .groupBy("col", "bucket")
+            .agg(
+                F.count(F.lit(1)).cast("long").alias("cnt"),
+                F.sum(F.col("val").isNull().cast("long")).cast("long").alias("nnull"),
+                F.min("val").alias("mn"),
+                F.max("val").alias("mx"),
+                F.max("rank").alias("reg"),
+            )
         )
-    )
-    out = windows.run_to_memory(
-        spark,
-        state,
-        f"q_stream_analyze_{uuid.uuid4().hex[:8]}",
-        f"{base_dir}/ckpt",
-        output_mode="complete",
-        state_rows=simulate.staged_rows(stage),
-    )
-    shutil.rmtree(base_dir, ignore_errors=True)  # drained; scratch not needed
+
+    out = _drain(spark, sf_dir, build, output_mode="complete")
     prof = out.groupBy("col").agg(
         F.sum("cnt").cast("long").alias("n_rows"),
         F.sum("nnull").cast("long").alias("n_null"),
@@ -1390,23 +1208,14 @@ def q_stream_mcv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sized, the same artifact ANALYZE persists); the post-drain
     profile is a top-K plus one broadcast-marked pass over that
     frame — the fact never re-scans."""
-    from pyspark.sql import functions as F
-
     from ..operators.scans import equality_selectivity_profile
 
-    stage, base = _staged(spark, sf_dir)
-    per_key = (
-        simulate.read_stream(spark, stage)
-        .groupBy("camera_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    out = windows.run_to_memory(
+    out = _drain(
         spark,
-        per_key,
-        f"q_stream_mcv_{uuid.uuid4().hex[:8]}",
-        f"{base}/ckpt",
+        sf_dir,
+        lambda read: read()
+        .groupBy("camera_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
         output_mode="complete",
-        state_rows=simulate.staged_rows(stage),
     )
-    shutil.rmtree(base, ignore_errors=True)  # drained; scratch not needed
     return equality_selectivity_profile(out)

@@ -21,45 +21,41 @@ St4-St8).
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
+
+from ..session import shuffle_partitions_at_most
 
 WATERMARK = "30 minutes"
 
 # Structured Streaming fixes the state-store partition count from
 # spark.sql.shuffle.partitions at the FIRST micro-batch and keeps it
 # for the checkpoint's lifetime — it is a state-sizing knob, not a
-# batch-parallelism knob. A batch-oriented session default (Spark's
-# 200, or input-sized on a cluster) multiplies per-micro-batch task
-# scheduling + state-store open/commit overhead with no benefit on the
-# bounded replays here (measured r11: the stream-stream joins run
-# 3-5× faster at 32 than at 200 on the same input; measured r13-opt:
-# the fixed per-drain cost keeps scaling DOWN with the partition
-# count — tumbling-counts drain 3.2-3.9 s at 32 vs 1.76-1.85 s at 8
-# vs 1.79 s at 4 on the same staged input, and every heavier stream
-# query moves the same direction — because each micro-batch pays one
-# state-store open/commit + task per partition regardless of data).
-# Since r14 the partition count is DERIVED from the drain's input
-# volume (the comment's own production formula, implemented): input
-# rows upper-bound the distinct state keys, and each of these drains
-# keeps O(bytes-per-key) window/sketch state, so
+# batch-parallelism knob. Each micro-batch pays one state-store
+# open/commit + task per partition regardless of data, so a
+# batch-oriented session default (Spark's 200, or input-sized on a
+# cluster) only adds fixed cost on the bounded replays here (measured
+# r11: the stream-stream joins run 3-5× faster at 32 than at 200;
+# r13: the tumbling drain takes 3.2-3.9 s at 32, 1.8 s at 8, 1.8 s at
+# 4 on the same staged input). The count is therefore DERIVED from the
+# drain's input volume: input rows upper-bound the distinct state
+# keys, and each drain keeps O(bytes-per-key) window/sketch state, so
 #   partitions = ceil(input_rows / STREAM_ROWS_PER_PARTITION)
-# clamped to [1, session parallelism]. STREAM_ROWS_PER_PARTITION is
-# the rows-per-key × keys-per-partition product for KB-scale state —
-# on a real cluster it would be executor_memory_per_partition /
-# state_bytes_per_key × keys_per_row. Results are
-# partitioning-invariant — pinned by the chunking-invariance test and
-# every q_stream_* oracle. The count is fixed at the FIRST micro-batch
-# for the checkpoint's lifetime; drains whose input volume is unknown
-# (no ``n_rows`` passed) fall back to the constant cap below, so a
-# restarted checkpoint of such a stream keeps a stable count.
+# capped by the session value (session.shuffle_partitions_at_most).
+# STREAM_ROWS_PER_PARTITION is the rows-per-key × keys-per-partition
+# product for KB-scale state — on a real cluster it would be
+# executor_memory_per_partition / state_bytes_per_key × keys_per_row.
+# Drains with no row count (the per-row Python-state kernels, whose
+# partition count is their parallelism) use the constant
+# STREAM_MAX_STATE_PARTITIONS, so a restarted checkpoint of such a
+# stream keeps a stable count. Results are partitioning-invariant —
+# pinned by the chunking-invariance test and every q_stream_* oracle.
 STREAM_MAX_STATE_PARTITIONS = 8
 STREAM_ROWS_PER_PARTITION = 50000
 
 
-@contextmanager
 def stream_state_partitions(spark: SparkSession, n_rows: int | None = None):
     """Cap shuffle partitions for the duration of one stream
     start→drain, restoring the session value after.
@@ -67,20 +63,28 @@ def stream_state_partitions(spark: SparkSession, n_rows: int | None = None):
     ``n_rows`` is the drain's total input row count, passed explicitly
     by the call site (queries look their staged dir up via
     ``simulate.staged_rows``). None → the constant cap."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
     if n_rows is None:
         target = STREAM_MAX_STATE_PARTITIONS
     else:
         target = -(-int(n_rows) // STREAM_ROWS_PER_PARTITION)
-    try:
-        cap = max(1, min(int(old), target))
-    except (TypeError, ValueError):  # e.g. "auto" on some builds
-        cap = max(1, target)
-    spark.conf.set("spark.sql.shuffle.partitions", str(cap))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    return shuffle_partitions_at_most(spark, target)
+
+
+def _run_available_now(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    checkpoint_dir: str,
+    state_rows: int | None,
+) -> None:
+    """Start ``writer`` as a bounded availableNow query under the
+    state-partition cap and block until it has drained."""
+    with stream_state_partitions(spark, n_rows=state_rows):
+        (
+            writer.option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def tumbling_counts(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
@@ -177,32 +181,33 @@ def run_dual_sink(
         finally:
             batch.unpersist()
 
-    with stream_state_partitions(stream.sparkSession, n_rows=state_rows):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        stream.sparkSession,
+        stream.writeStream.outputMode("append").foreachBatch(sink),
+        checkpoint_dir,
+        state_rows,
+    )
 
 
 def run_to_memory(spark: SparkSession, df: DataFrame, name: str, checkpoint_dir: str, output_mode: str = "append", state_rows: int | None = None) -> DataFrame:
     """Drain a bounded stream into an in-memory table and return it.
     ``state_rows`` = the stream's total input rows (state-sizing hint,
-    see stream_state_partitions)."""
-    with stream_state_partitions(spark, n_rows=state_rows):
-        q = (
-            df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
+    see stream_state_partitions).
+
+    The memory sink registers a temp view ``name``; it is dropped
+    before returning, drain failed or not. The returned frame's
+    analyzed plan holds the sink itself, so it stays readable and
+    its rows are freed with the frame, not at session end."""
+    try:
+        _run_available_now(
+            spark,
+            df.writeStream.outputMode(output_mode).format("memory").queryName(name),
+            checkpoint_dir,
+            state_rows,
         )
-        q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def land_rollup_partial(batch: DataFrame, epoch_id: int, part_dir: str) -> None:
@@ -241,15 +246,12 @@ def run_rollup_partials(stream: DataFrame, out_dir: str, checkpoint_dir: str, st
             return
         land_rollup_partial(batch, epoch_id, part_dir)
 
-    with stream_state_partitions(stream.sparkSession, n_rows=state_rows):
-        q = (
-            stream.writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        stream.sparkSession,
+        stream.writeStream.outputMode("append").foreachBatch(sink),
+        checkpoint_dir,
+        state_rows,
+    )
     return part_dir
 
 

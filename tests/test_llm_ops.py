@@ -404,23 +404,17 @@ def test_holt_forecast_matches_numpy_reference(spark, sf_dir):
         assert got[cam] == ref(ys), f"camera {cam} diverges"
 
 
-def _cc_algorithms():
-    from big_data_traffict_prediction_spark.functions.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    return [connected_components, connected_components_star]
-
-
 def test_connected_components_converges_on_deep_path_graph(spark):
     """Adversarial-diameter bound: a 200-node path graph (diameter 199)
     would NOT converge under plain min-label propagation's 20-round cap
-    — both the pointer-doubling shortcut and the large-star/small-star
-    contraction must label the whole path with its min id in
-    O(log diameter) rounds. Also pins a multi-component case (the path
-    + a disjoint triangle + an isolated edge)."""
+    — the pointer-doubling shortcut must label the whole path with its
+    min id in O(log diameter) rounds. Also pins a multi-component case
+    (the path + a disjoint triangle + an isolated edge)."""
     from pyspark.sql import functions as F
+
+    from big_data_traffict_prediction_spark.functions.dedup import (
+        connected_components,
+    )
 
     n = 200
     path = [(i, i + 1) for i in range(n - 1)]
@@ -429,25 +423,23 @@ def test_connected_components_converges_on_deep_path_graph(spark):
     edges = spark.createDataFrame(path + triangle + lone, "d1 long, d2 long")
     sym = edges.union(edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
 
-    for cc in _cc_algorithms():
-        got = {r.doc_id: r.label for r in cc(sym).collect()}
-        assert {k: v for k, v in got.items() if k < 1000} == {
-            i: 0 for i in range(n)
-        }, cc.__name__
-        assert {k: v for k, v in got.items() if 1000 <= k < 2000} == {
-            1000: 1000, 1001: 1000, 1002: 1000
-        }, cc.__name__
-        assert {k: v for k, v in got.items() if k >= 2000} == {
-            2000: 2000, 2001: 2000
-        }, cc.__name__
+    got = {r.doc_id: r.label for r in connected_components(sym).collect()}
+    assert {k: v for k, v in got.items() if k < 1000} == {i: 0 for i in range(n)}
+    assert {k: v for k, v in got.items() if 1000 <= k < 2000} == {
+        1000: 1000, 1001: 1000, 1002: 1000
+    }
+    assert {k: v for k, v in got.items() if k >= 2000} == {2000: 2000, 2001: 2000}
 
 
-def test_connected_components_star_on_adversarial_hub_graphs(spark):
-    """The degree-explosion fixture the star contraction exists for: a
-    max-id hub fanned out to many leaves (the component min must flow
-    THROUGH the hub), plus a chain of such stars (high degree AND
-    diameter), checked against the pointer-doubling labels."""
+def test_connected_components_on_adversarial_hub_graphs(spark):
+    """Degree-explosion fixtures: a max-id hub fanned out to many
+    leaves (the component min must flow THROUGH the hub), plus a chain
+    of such stars (high degree AND diameter)."""
     from pyspark.sql import functions as F
+
+    from big_data_traffict_prediction_spark.functions.dedup import (
+        connected_components,
+    )
 
     # star: hub 10_000 with leaves 0..199 → everything labels to 0
     star = [(10_000, i) for i in range(200)]
@@ -461,13 +453,9 @@ def test_connected_components_star_on_adversarial_hub_graphs(spark):
     edges = spark.createDataFrame(star + broom, "d1 long, d2 long")
     sym = edges.union(edges.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
 
-    results = []
-    for cc in _cc_algorithms():
-        got = {r.doc_id: r.label for r in cc(sym).collect()}
-        assert all(v == 0 for k, v in got.items() if k <= 10_000), cc.__name__
-        assert all(v == 15_000 for k, v in got.items() if k > 10_000), cc.__name__
-        results.append(got)
-    assert results[0] == results[1], "algorithms disagree"
+    got = {r.doc_id: r.label for r in connected_components(sym).collect()}
+    assert all(v == 0 for k, v in got.items() if k <= 10_000)
+    assert all(v == 15_000 for k, v in got.items() if k > 10_000)
 
 
 def test_decode_features_on_error_mark_survives_corrupt_blobs(spark):
@@ -515,14 +503,17 @@ def test_decode_features_on_error_mark_survives_corrupt_blobs(spark):
 
 
 def test_connected_components_matches_union_find_on_random_graphs(spark):
-    """Property: on seeded random graphs BOTH distributed CC algorithms
-    (pointer-doubling and large-star/small-star) equal an independent
-    driver-side union-find (path compression). Covers mixtures of
-    chains, cliques, stars, and isolated edges that the fixed
-    path-graph test does not."""
+    """Property: on seeded random graphs the distributed pointer-doubling
+    CC equals an independent driver-side union-find (path compression).
+    Covers mixtures of chains, cliques, stars, and isolated edges that
+    the fixed path-graph test does not."""
     import random
 
     from pyspark.sql import functions as F
+
+    from big_data_traffict_prediction_spark.functions.dedup import (
+        connected_components,
+    )
 
     def union_find_labels(edges):
         parent = {}
@@ -561,9 +552,8 @@ def test_connected_components_matches_union_find_on_random_graphs(spark):
         e = spark.createDataFrame(edges, "d1 long, d2 long")
         sym = e.union(e.select(F.col("d2").alias("d1"), F.col("d1").alias("d2")))
         expect = union_find_labels(edges)
-        for cc in _cc_algorithms():
-            got = {r.doc_id: r.label for r in cc(sym).collect()}
-            assert got == expect, f"trial {trial} diverged ({cc.__name__})"
+        got = {r.doc_id: r.label for r in connected_components(sym).collect()}
+        assert got == expect, f"trial {trial} diverged"
 
 
 def test_sorted_neighborhood_pairs_are_true_near_dups(spark, sf_dir):

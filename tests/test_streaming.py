@@ -337,16 +337,27 @@ def test_frame_stream_sink_round_trips(spark, sf_dir, tmp_path):
 
 def test_stage_cache_stages_once_per_app_and_sf(monkeypatch, tmp_path):
     """The staged replay input is a pure function of (application,
-    events files): _staged must stage it exactly once per input and
-    hand every query a FRESH checkpoint scratch (`base`) — sharing a
-    checkpoint would corrupt state; re-staging wastes a count + global
-    sort + chunk writes per query. Spark-free: the stager is stubbed
-    out."""
+    events files): _drain must stage it exactly once per input and
+    give every drain a FRESH checkpoint scratch, removed once the
+    drain returns — sharing a checkpoint would corrupt state;
+    re-staging wastes a count + global sort + chunk writes per query.
+    Spark-free: the stager, reader and memory sink are stubbed out."""
+    import os
+
     from big_data_traffict_prediction_spark.streaming import queries as q
 
     calls = []
     monkeypatch.setattr(q.simulate, "stage_stream_dir",
                         lambda spark, sf, d, n_chunks: calls.append(d) or d)
+    monkeypatch.setattr(q.simulate, "read_stream", lambda spark, stage: stage)
+    ckpts = []
+
+    def run_to_memory(spark, plan, name, ckpt, **kw):
+        assert os.path.isdir(os.path.dirname(ckpt))
+        ckpts.append(ckpt)
+        return plan
+
+    monkeypatch.setattr(q.windows, "run_to_memory", run_to_memory)
 
     class _Ctx:
         applicationId = "app-test-stage-cache"
@@ -363,16 +374,74 @@ def test_stage_cache_stages_once_per_app_and_sf(monkeypatch, tmp_path):
     for sf in (sf1, sf2):
         sf.mkdir()
         (sf / "events.parquet").write_bytes(b"PAR1")
-    s1, b1 = q._staged(_Spark(), str(sf1))
-    s2, b2 = q._staged(_Spark(), str(sf1))
-    s3, _ = q._staged(_Spark(), str(sf2))
+    s1 = q._drain(_Spark(), str(sf1), lambda read: read())
+    s2 = q._drain(_Spark(), str(sf1), lambda read: read())
+    s3 = q._drain(_Spark(), str(sf2), lambda read: read())
     assert len(calls) == 2, "same (app, events files) must stage once"
     assert s1 == s2 and s1 != s3
-    assert b1 != b2, "checkpoint scratch must be fresh per query"
+    scratch = {os.path.dirname(c) for c in ckpts}
+    assert len(scratch) == 3, "checkpoint scratch must be fresh per drain"
+    assert not any(os.path.exists(d) for d in scratch), "scratch must go"
 
     (sf1 / "events.parquet").write_bytes(b"PAR1PAR1")  # rewritten input
-    s4, _ = q._staged(_Spark(), str(sf1))
+    s4 = q._drain(_Spark(), str(sf1), lambda read: read())
     assert len(calls) == 3 and s4 != s1, "a changed input must restage"
+
+
+def test_registered_drains_leave_no_temp_views(spark, sf_dir):
+    """A registered drain's memory-sink view must not outlive the call:
+    each leaked view pins its drained rows in the driver for the life
+    of the session. The returned frames still own their rows."""
+    from big_data_traffict_prediction_spark.streaming.queries import (
+        q_stream_tumbling_counts,
+    )
+
+    def n_temp_views():
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    before = n_temp_views()
+    first = q_stream_tumbling_counts(spark, sf_dir)
+    second = q_stream_tumbling_counts(spark, sf_dir)
+    assert n_temp_views() == before
+    assert first.count() == second.count() > 0
+
+
+def test_continuous_rollup_result_survives_a_later_call(spark, sf_dir):
+    """A result handed out by q_stream_continuous_rollup must stay
+    readable after the next call of the same query — results own their
+    data instead of reading a scratch dir that a later call reclaims."""
+    from big_data_traffict_prediction_spark.streaming.queries import (
+        q_stream_continuous_rollup,
+    )
+
+    first = q_stream_continuous_rollup(spark, sf_dir)
+    second = q_stream_continuous_rollup(spark, sf_dir)
+    assert first.count() == second.count() > 0
+    assert sorted(first.collect()) == sorted(second.collect())
+
+
+def test_failed_drain_leaves_no_scratch(spark, sf_dir, tmp_path, monkeypatch):
+    """A drain whose plan raises mid-stream must still remove its
+    per-call checkpoint scratch and its memory-sink view."""
+    import tempfile
+
+    from pyspark.errors import StreamingQueryException
+
+    from big_data_traffict_prediction_spark.streaming import queries as q
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(
+        q.windows,
+        "tumbling_counts",
+        lambda stream, duration: stream.select(
+            "camera_id", F.raise_error(F.lit("planted drain failure")).alias("x")
+        ),
+    )
+    n_views = sum(t.isTemporary for t in spark.catalog.listTables())
+    with pytest.raises(StreamingQueryException, match="planted drain failure"):
+        q.q_stream_tumbling_counts(spark, sf_dir)
+    assert not list(tmp_path.glob("traffic_stream_*"))
+    assert sum(t.isTemporary for t in spark.catalog.listTables()) == n_views
 
 
 def test_tumbling_counts_chunking_invariant(spark, sf_dir):
