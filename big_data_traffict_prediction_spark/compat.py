@@ -62,13 +62,6 @@ def fixed_point(x: Column | str, scale: int = 10_000) -> Column:
     return F.floor(col * scale).cast("long")
 
 
-def trunc_long(x: Column | str) -> Column:
-    """Python ``int()`` truncation of a non-negative double → BIGINT
-    (reference scales counts with ``int()``, never ``round``)."""
-    col = F.col(x) if isinstance(x, str) else x
-    return F.floor(col).cast("long")
-
-
 def iou(b1: tuple[Column, Column, Column, Column], b2: tuple[Column, Column, Column, Column]) -> Column:
     """Intersection-over-union of two [x1,y1,x2,y2] boxes as pure
     column arithmetic — no UDF (reference hand-codes this in Python,

@@ -1034,7 +1034,9 @@ def connected_components(sym: DataFrame) -> DataFrame:
     keeps its parallelism. Labels are bounded by edges (only endpoint
     vertices are labeled), so one target serves both frames. The cap
     is session-global for the loop's duration: a query planned
-    concurrently on this session sees the reduced partition count."""
+    concurrently on this session sees the reduced partition count, and
+    every other capped section (a stream start, another CC loop)
+    waits for the loop to end."""
     n_edges = sym.count()
     with shuffle_partitions_at_most(
         sym.sparkSession, -(-n_edges // CC_EDGES_PER_PARTITION)

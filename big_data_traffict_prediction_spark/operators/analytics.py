@@ -591,9 +591,9 @@ def q_data_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     COUNT inside the table's ONE partial-aggregated scan (all
     lineitem-local rules share a single pass, same for events); the
     referential checks count via left-join-null over the natural join
-    key — at scale the same check co-locates for free on bucketed
-    tables (sources/bucketed.py) or falls to one SMJ keyed on the fact
-    key. Nothing collects; the report is 7 rows."""
+    key — at scale one SMJ keyed on the fact key (``bucketBy`` tables
+    on that key would co-locate it; the engine reads plain parquet).
+    Nothing collects; the report is 7 rows."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")

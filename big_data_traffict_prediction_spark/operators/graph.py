@@ -539,7 +539,7 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     checks argmax-with-tie-break). Communities = basket niches; the
     corpus-curation use is sampling-weight pools and topic balance.
 
-    Scale shape: see ``_lpa_from_adj`` — dense part ids take the
+    Scale shape: see ``_lpa_labels_lazy`` — dense part ids take the
     indexed path (per round: one broadcast label ARRAY + a zero-join,
     zero-shuffle HOF scan of the node-sized adjacency; the per-node
     argmax is an in-row run-length fold over the sorted neighbor
@@ -603,7 +603,7 @@ def lpa_labels(raw_edges: DataFrame, iters: int) -> DataFrame:
 
     Builds the per-node neighbor arrays (one shuffle — collect_set
     dedups and groups in a single hash aggregation) and hands off to
-    ``_lpa_from_adj``; the final labels are materialized eagerly so
+    ``_lpa_labels_lazy``; the final labels are materialized eagerly so
     the adjacency cache can be released before returning (a long
     driver session otherwise leaks one cached frame per call)."""
     edges = raw_edges.localCheckpoint(eager=True)
@@ -613,15 +613,9 @@ def lpa_labels(raw_edges: DataFrame, iters: int) -> DataFrame:
         .agg(F.collect_set("v").alias("nbrs"))
         .cache()
     )
-    lab = _lpa_from_adj(adj, iters)
+    lab = _lpa_labels_lazy(adj, iters).localCheckpoint(eager=True)
     adj.unpersist()
     return lab
-
-
-def _lpa_from_adj(adj: DataFrame, iters: int) -> DataFrame:
-    """Eager (node, lab) labels — `_lpa_labels_lazy` materialized so
-    callers can drop the adjacency cache immediately."""
-    return _lpa_labels_lazy(adj, iters).localCheckpoint(eager=True)
 
 
 def _lpa_labels_lazy(adj: DataFrame, iters: int) -> DataFrame:

@@ -306,34 +306,6 @@ ASOF_EPOCH = "2024-01-01 00:00:00"
 ASOF_STEP_DAYS = 10
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    n_salts: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-mitigating equi-join: when one join key carries a large
-    fraction of the left side (the reference's EXTREME camera), a plain
-    shuffle join lands that key's entire volume on one reducer. Salting
-    splits it: the (big, skewed) left side gets a uniform salt in
-    [0, n_salts); the (smaller) right side is replicated once per salt
-    value; the join key becomes (key, salt) so the hot key spreads over
-    n_salts reducers. Result is row-identical to the plain join —
-    pinned by tests/test_scale_utils.py on synthetic skew.
-
-    AQE's skew-join split handles most cases automatically (and first-
-    class in session.py); explicit salting remains the tool for the
-    cases AQE can't rebalance — e.g. a skewed AGGREGATION feeding the
-    join, or deterministic partition sizing for a downstream stage."""
-    salt = (F.rand(42) * n_salts).cast("int")
-    l_salted = left.withColumn("_salt", salt)
-    r_salted = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
-    )
-    return l_salted.join(r_salted, [on, "_salt"], how).drop("_salt")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,

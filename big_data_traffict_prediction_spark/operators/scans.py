@@ -325,11 +325,10 @@ def q_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 ZM_DELTA_MOD = 20
 ZM_DELTA_SLOT = 7
 
-def zone_stat_frame(side: DataFrame, tag: str = "") -> DataFrame:
+def zone_stat_frame(side: DataFrame) -> DataFrame:
     """Per-(d, hr) MERGEABLE zone stats of one ingest slice — count,
-    min, max and the bloom-bit fingerprint; column names optionally
-    ``{tag}_``-prefixed for merge joins. This is the mergeable algebra
-    itself: counts ADD, min/max FOLD, fingerprints OR — the law
+    min, max and the bloom-bit fingerprint. This is the mergeable
+    algebra itself: counts ADD, min/max FOLD, fingerprints OR — the law
     merge(a ⊕ b) == rebuild(a ∪ b) for arbitrary slices is pinned by
     tests/test_analytics.py::test_zone_map_merge_law_arbitrary_splits."""
     bit = F.pmod(
@@ -341,7 +340,6 @@ def zone_stat_frame(side: DataFrame, tag: str = "") -> DataFrame:
         F.lit(ZM_BLOOM_BITS),
     ).cast("int")
     one = F.lit(1).cast("long")
-    p = f"{tag}_" if tag else ""
     return (
         side.select(
             F.date_format("ts", "yyyy-MM-dd").alias("d"),
@@ -351,20 +349,21 @@ def zone_stat_frame(side: DataFrame, tag: str = "") -> DataFrame:
         )
         .groupBy("d", "hr")
         .agg(
-            F.count(F.lit(1)).cast("long").alias(f"{p}n"),
-            F.min("new_count").cast("long").alias(f"{p}mn"),
-            F.max("new_count").cast("long").alias(f"{p}mx"),
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.min("new_count").cast("long").alias("mn"),
+            F.max("new_count").cast("long").alias("mx"),
             F.bit_or(F.call_function("shiftleft", one, F.col("bit")))
             .cast("long")
-            .alias(f"{p}fp"),
+            .alias("fp"),
         )
     )
 
 
 def merge_zone_stats(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Fold two untagged zone_stat_frame outputs into one — the ⊕ of
-    the mergeable algebra (full-outer on the zone key; counts add,
-    min/max fold, fingerprints OR)."""
+    """Fold two zone_stat_frame outputs into one — the ⊕ of the
+    mergeable algebra (full-outer on the zone key; counts add, min/max
+    fold, fingerprints OR). ``a_n`` / ``b_n`` keep each side's count,
+    NULL where the zone is absent on that side."""
     at = a.select(
         "d", "hr",
         F.col("n").alias("a_n"), F.col("mn").alias("a_mn"),
@@ -384,6 +383,8 @@ def merge_zone_stats(a: DataFrame, b: DataFrame) -> DataFrame:
         F.coalesce("a_fp", F.lit(0))
         .bitwiseOR(F.coalesce("b_fp", F.lit(0)))
         .alias("fp"),
+        "a_n",
+        "b_n",
     )
 
 
@@ -443,20 +444,18 @@ def q_zone_map_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     stands in for that read."""
     h = traffic_history(spark, sf_dir)
     is_delta = F.pmod(F.col("id"), F.lit(ZM_DELTA_MOD)) == ZM_DELTA_SLOT
-    base = zone_stat_frame(h.filter(~is_delta), "b")
-    delta = zone_stat_frame(h.filter(is_delta), "dl")
-    merged = base.join(delta, ["d", "hr"], "full_outer")
+    merged = merge_zone_stats(
+        zone_stat_frame(h.filter(~is_delta)), zone_stat_frame(h.filter(is_delta))
+    )
     return merged.select(
         "d",
         "hr",
-        (F.coalesce("b_n", F.lit(0)) + F.coalesce("dl_n", F.lit(0))).alias("n_rows"),
-        F.least("b_mn", "dl_mn").alias("min_count"),
-        F.greatest("b_mx", "dl_mx").alias("max_count"),
-        F.coalesce("b_fp", F.lit(0))
-        .bitwiseOR(F.coalesce("dl_fp", F.lit(0)))
-        .alias("bloom_fp"),
-        F.when(F.col("b_n").isNull(), "insert")
-        .when(F.col("dl_n").isNull(), "keep")
+        F.col("n").alias("n_rows"),
+        F.col("mn").alias("min_count"),
+        F.col("mx").alias("max_count"),
+        F.col("fp").alias("bloom_fp"),
+        F.when(F.col("a_n").isNull(), "insert")
+        .when(F.col("b_n").isNull(), "keep")
         .otherwise("update")
         .alias("action"),
     ).orderBy("d", "hr")

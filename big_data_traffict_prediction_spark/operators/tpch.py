@@ -1337,9 +1337,9 @@ def q_fulfillment_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry's one true FACT-to-FACT join — lineitem and orders are
     both data-sized, so neither broadcasts at scale: the join keys on
     l_orderkey/o_orderkey, the family every TPC-H operator here
-    already partitions by, and the bucketed layout
-    (sources/bucketed.py pattern) makes it co-located with ZERO
-    exchanges when both sides are bucketed on the order key.
+    already partitions by. Spark ``bucketBy`` tables bucketed on the
+    order key on both sides would make it co-located with ZERO
+    exchanges; the engine reads plain parquet, so it plans one SMJ.
 
     100 TB plan: ``lag_days`` has a tiny bounded domain (ship − order
     date is ~0–120 days), so the exact rank-picked percentile never

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import threading
 import zipfile
 from contextlib import contextmanager
 
@@ -108,26 +109,49 @@ def ship_package(spark: SparkSession) -> None:
     _SHIPPED_APPS.add(app)
 
 
+# Serializes the capped sections: each one saves, lowers and restores
+# the session-global conf, so two that overlapped would restore out of
+# order and leave the lower value behind for good. Reentrant so a
+# capped section may nest inside another on the same thread.
+_SHUFFLE_CAP_LOCK = threading.RLock()
+
+
 @contextmanager
 def shuffle_partitions_at_most(spark: SparkSession, target: int):
     """Run the body with ``spark.sql.shuffle.partitions`` lowered to
     ``target`` (never raised above the session value, never below 1),
     restoring the session value after.
 
-    The conf is session-global: a query planned concurrently on the
-    same session sees the lowered count for the body's duration."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(max(1, min(int(old), target))))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+    Capped sections run one at a time (``_SHUFFLE_CAP_LOCK``), so
+    keep the body short. The conf is still session-global: a query
+    planned concurrently on the same session, outside any capped
+    section, sees the lowered count for the body's duration."""
+    with _SHUFFLE_CAP_LOCK:
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(max(1, min(int(old), target)))
+        )
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+_PINNED_SESSIONS: set[str] = set()
 
 
 def pin_session_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable invariants to a session we did not
-    create (the driver harness hands us one). Only touches confs that
-    can change after JVM start."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ship_package(spark)
+    create (a caller of ``__spark_entry__`` passes its own), once per
+    JVM session: the UTC time zone, ``nanosAsLong`` for the testdata's
+    TIMESTAMP(NANOS) parquet (see ``tables.load_table``) and the
+    shipped package. Keyed on the JVM session's UUID, so a
+    ``spark.newSession()`` child, whose SQL conf starts from the
+    defaults, is pinned on its first use."""
+    key = spark._jsparkSession.sessionUUID()
+    if key not in _PINNED_SESSIONS:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        ship_package(spark)
+        _PINNED_SESSIONS.add(key)
     return spark

@@ -14,9 +14,20 @@ The reference's storage surface:
 
 Engine equivalents: partitioned *parquet* with ``partitionBy(year,
 month,day)`` (partition pruning replaces the directory-walk), Spark's
-output-commit protocol (replaces tmp+rename), schema'd JSON readers
-with explicit casts (replaces drift handling), and one-shot
-read→write jobs (replace the batched ETLs).
+output-commit protocol, schema'd JSON readers with explicit casts
+(replaces drift handling), and one-shot read→write jobs (replace the
+batched ETLs).
+
+The commit protocol does NOT replace the reference's tmp+rename swap.
+It keeps a failed task's files out of the output, but every overwrite
+here deletes the old files before the new ones are in place, so a
+concurrent reader can see a missing or half-replaced file set: a
+reader thread looping ``read.parquet(lake).count()`` beside 6 upserts
+at sf0.01 saw 4-6 of ~45 reads fail with ``FILE_NOT_EXIST``. Nothing
+may read a path while it is being written.
+
+``year``/``month``/``day`` come from the session time zone, which
+``tables.load_table`` pins to UTC on the session that read the rows.
 """
 
 from __future__ import annotations
@@ -25,8 +36,6 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from ..session import pin_session_conf
 
 
 def write_partitioned_lake(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -48,18 +57,17 @@ def read_lake_day(spark: SparkSession, path: str, year: int, month: int, day: in
     """S6 scan side: the partition predicate prunes to one directory —
     the engine-grade version of the reference's os.listdir loop
     (app/utils.py:329-384)."""
-    pin_session_conf(spark)
-    df = spark.read.parquet(path)
-    return df.filter(
+    return spark.read.parquet(path).filter(
         (F.col("year") == year) & (F.col("month") == month) & (F.col("day") == day)
     )
 
 
 def write_snapshot(df: DataFrame, path: str) -> None:
     """S9: latest-stats snapshot materialization. ``mode("overwrite")``
-    rides Spark's commit protocol — readers never observe a partial
-    snapshot, which is exactly what the reference's tmp+bak+rename
-    dance hand-rolls (app/utils.py:493-508)."""
+    deletes the old snapshot before the job writes the new one: a
+    reader in between finds no snapshot or a partial one, and a failed
+    write leaves none. The reference's tmp+bak+rename
+    (app/utils.py:493-508) swaps atomically; this does not."""
     df.write.mode("overwrite").parquet(path)
 
 
@@ -84,7 +92,6 @@ _CAMERAS_RAW = T.StructType(
 def read_cameras_json(spark: SparkSession, path: str) -> DataFrame:
     """S7: schema'd JSON read + one-place normalization of the mixed
     lat/lng types (SURVEY.md §7 watch-list 6)."""
-    pin_session_conf(spark)
     raw = spark.read.schema(_CAMERAS_RAW).json(path)
     return raw.select(
         "id",
@@ -97,46 +104,11 @@ def read_cameras_json(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_cameras_xml(spark: SparkSession, path: str) -> DataFrame:
-    """S7 twin over Spark 4's NATIVE XML datasource: the same
-    camera-config payload as an XML feed (`<cameras><camera>...`), with
-    the identical edge normalization — lat/lng read as string (XML
-    attributes/elements are inherently text, so the mixed-type drift
-    the JSON config exhibits is the XML default) and cast once here.
-    Same output schema as ``read_cameras_json``, so downstream
-    operators are source-agnostic."""
-    pin_session_conf(spark)
-    raw = (
-        spark.read.format("xml")
-        .option("rowTag", "camera")
-        .schema(_CAMERAS_RAW)
-        .load(path)
-    )
-    return raw.select(
-        "id",
-        "name",
-        "url",
-        "active",
-        F.col("lat").cast("double").alias("lat"),
-        F.col("lng").cast("double").alias("lng"),
-        "mirror_id",
-    )
-
-
-def write_cameras_xml(df: DataFrame, path: str) -> None:
-    """Config export leg of the XML twin (rootTag/rowTag mirroring the
-    reader; one file — configs are driver-scale, not data-scale)."""
-    df.coalesce(1).write.mode("overwrite").format("xml").option(
-        "rootTag", "cameras"
-    ).option("rowTag", "camera").save(path)
-
-
 def migrate_json_history(spark: SparkSession, json_path: str, parquet_path: str) -> int:
     """S11: JSON history → parquet fact table in one declarative job —
     the reference streams dicts into 1000-row INSERT batches
     (scripts/migrate_to_sqlite.py:57-63); Spark's writer batches and
     parallelizes on its own. Returns rows migrated."""
-    pin_session_conf(spark)
     schema = T.StructType(
         [
             T.StructField("camera_id", T.StringType()),
@@ -197,7 +169,6 @@ def read_detections_csv(spark: SparkSession, path: str) -> DataFrame:
     The stringified bbox becomes a real array (regexp strip + split +
     transform — all JVM-side); the int-vs-label class drift collapses
     to both forms."""
-    pin_session_conf(spark)
     raw = spark.read.schema(_DETECTIONS_CSV_RAW).option("header", True).csv(path)
     cls = F.lower(F.trim("class_id"))
     class_id = (
@@ -243,14 +214,15 @@ def upsert_partitioned_lake(
        pruning; the rest of the 100 TB table is never scanned),
     3. union existing + updates, keep the newest row per key
        (row_number over ``order_col`` DESC, updates win ties),
-    4. dynamic-partition-overwrite exactly the touched partitions —
-       Spark's commit protocol keeps concurrent readers consistent.
+    4. dynamic-partition-overwrite exactly the touched partitions. The
+       commit deletes each touched day directory, then renames the
+       staged one into its place, so a concurrent reader of that day
+       can fail (module docstring).
 
     Shuffle cost ∝ touched partitions + update volume, never table
     size."""
     from pyspark.sql import Window
 
-    pin_session_conf(spark)
     with_parts = (
         updates.withColumn("year", F.year(order_col))
         .withColumn("month", F.month(order_col))
@@ -312,7 +284,6 @@ def compact_lake_day(
     import math
     import os
 
-    pin_session_conf(spark)
     part_dir = os.path.join(path, f"year={year}", f"month={month}", f"day={day}")
     size = sum(
         os.path.getsize(os.path.join(part_dir, f))
@@ -320,112 +291,12 @@ def compact_lake_day(
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(size / target_bytes))
-    df = spark.read.parquet(path).filter(
-        (F.col("year") == year) & (F.col("month") == month) & (F.col("day") == day)
-    )
     (
-        df.repartition(n_files)
+        read_lake_day(spark, path, year, month, day)
+        .repartition(n_files)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("year", "month", "day")
         .parquet(path)
     )
     return len([f for f in os.listdir(part_dir) if f.endswith(".parquet")])
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    max_records_per_shard: int = 10_000,
-    partition_cols: tuple[str, ...] = (),
-) -> list[tuple[str, int]]:
-    """Shard a training-ready frame into size-bounded parquet files and
-    return the shard manifest [(relative_path, rows)].
-
-    The dataloader contract of a training run: no shard exceeds
-    ``max_records_per_shard`` (Spark's ``maxRecordsPerFile`` rolls
-    files at the bound — enforced per writer task, so it holds at any
-    parallelism), shards list deterministically, and the manifest is
-    derived from the written footers (row counts read back from
-    parquet metadata, not trusted from the writer)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    writer = df.write.option("maxRecordsPerFile", max_records_per_shard).mode(
-        "overwrite"
-    )
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(path)
-
-    manifest: list[tuple[str, int]] = []
-    for root, _dirs, files in os.walk(path):
-        for f in sorted(files):
-            if f.endswith(".parquet"):
-                full = os.path.join(root, f)
-                rows = pq.read_metadata(full).num_rows
-                manifest.append((os.path.relpath(full, path), rows))
-    return sorted(manifest)
-
-
-def write_orc_lake(df: DataFrame, path: str, mode: str = "append") -> None:
-    """ORC variant of the partitioned lake sink — same (year, month,
-    day) layout, for estates standardized on ORC instead of parquet
-    (both are Spark built-ins with the same predicate-pushdown and
-    column-pruning machinery; the engine's query surface is
-    format-agnostic because every reader goes through a DataFrame)."""
-    (
-        df.withColumn("year", F.year("ts"))
-        .withColumn("month", F.month("ts"))
-        .withColumn("day", F.dayofmonth("ts"))
-        .write.mode(mode)
-        .partitionBy("year", "month", "day")
-        .orc(path)
-    )
-
-
-def read_orc_lake_day(
-    spark: SparkSession, path: str, year: int, month: int, day: int
-) -> DataFrame:
-    """Partition-pruned ORC day read (the S6 scan shape over ORC)."""
-    return (
-        spark.read.orc(path)
-        .filter(
-            (F.col("year") == year) & (F.col("month") == month) & (F.col("day") == day)
-        )
-        .drop("year", "month", "day")
-    )
-
-
-def read_media_files(
-    spark: SparkSession, path: str, glob: str | None = None
-) -> DataFrame:
-    """Raw media ingestion via Spark's built-in ``binaryFile`` source:
-    one row per file with (path, modificationTime, length, content) —
-    the scan-side of a crawl/camera-drop directory. The content column
-    is the same opaque ``binary`` payload `functions/multimodal.py`
-    decodes (JPEG/PNG/PGM/WAV/RAWV), and kind is inferred from the
-    magic bytes JVM-side, so files flow straight into
-    ``decode_features`` with zero driver involvement. At 100 TB the
-    source parallelizes by file and supports partition-pruned layouts
-    the same way the parquet lake does."""
-    reader = spark.read.format("binaryFile")
-    if glob is not None:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    magic = F.substring("content", 1, 8)
-    kind = (
-        F.when(F.substring("content", 1, 2) == F.lit(b"\xff\xd8"), "image")
-        .when(magic == F.lit(b"\x89PNG\r\n\x1a\n"), "image")
-        .when(F.substring("content", 1, 2) == F.lit(b"P5"), "image")
-        .when(F.substring("content", 1, 4) == F.lit(b"RIFF"), "audio")
-        .when(F.substring("content", 1, 4) == F.lit(b"RAWV"), "video")
-        .otherwise("unknown")
-    )
-    return raw.select(
-        F.col("path"),
-        F.col("length").cast("long").alias("payload_bytes"),
-        kind.alias("kind"),
-        F.col("content").alias("payload"),
-    )

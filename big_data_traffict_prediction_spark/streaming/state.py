@@ -65,7 +65,9 @@ def _iou(a: tuple[int, int, int, int], b: tuple[int, int, int, int]) -> float:
 def dedup_fn(
     key: tuple[str], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Per-camera state function (vectorized per micro-batch)."""
+    """Per-camera state function: the micro-batch arrives as Arrow
+    chunks, but the IoU suppression runs row by row in Python over the
+    sorted batch (each row compares with the previous row's box)."""
     (camera_id,) = key
     if state.exists:
         x1, y1, x2, y2, accumulated, has_prev = state.get

@@ -57,8 +57,8 @@ STREAM_ROWS_PER_PARTITION = 50000
 
 
 def stream_state_partitions(spark: SparkSession, n_rows: int | None = None):
-    """Cap shuffle partitions for the duration of one stream
-    start→drain, restoring the session value after.
+    """Cap shuffle partitions while one stream starts, restoring the
+    session value after.
 
     ``n_rows`` is the drain's total input row count, passed explicitly
     by the call site (queries look their staged dir up via
@@ -77,14 +77,19 @@ def _run_available_now(
     state_rows: int | None,
 ) -> None:
     """Start ``writer`` as a bounded availableNow query under the
-    state-partition cap and block until it has drained."""
+    state-partition cap and block until it has drained.
+
+    The cap is held across ``start()`` only: the query clones the
+    session conf before ``start()`` returns, and its first batch
+    records the capped count in ``offsets/0`` and sizes its state from
+    it. So the drain itself runs without holding the cap's lock."""
     with stream_state_partitions(spark, n_rows=state_rows):
-        (
+        query = (
             writer.option("checkpointLocation", checkpoint_dir)
             .trigger(availableNow=True)
             .start()
-            .awaitTermination()
         )
+    query.awaitTermination()
 
 
 def tumbling_counts(stream: DataFrame, duration: str = "1 hour") -> DataFrame:

@@ -105,7 +105,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     pin_session_conf(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     for field in TESTDATA_SCHEMAS[name].fields:
         if not isinstance(field.dataType, T.TimestampType):

@@ -32,14 +32,6 @@ def test_dow0_sunday_is_zero_thursday_is_four(spark):
     assert (sun, thu) == (0, 4), "SQLite %w semantics: 0=Sunday"
 
 
-def test_trunc_long_truncates_not_rounds(spark):
-    # documented domain: non-negative counts (reference scales vehicle
-    # counts with int(); int() == floor() for non-negatives)
-    df = spark.createDataFrame([Row(x=2.99), Row(x=2.01), Row(x=0.999)])
-    got = sorted(r.t for r in df.select(compat.trunc_long("x").alias("t")).collect())
-    assert got == [0, 2, 2], "int() semantics, never round()"
-
-
 def test_bucket_epoch_floors_to_interval(spark):
     # 2024-01-01T00:59:59 in a 3600s bucket → 2024-01-01T00:00:00
     df = _one_ts(spark, "2024-01-01T00:59:59")

@@ -3,7 +3,9 @@
 COVERAGE.md and README.md both state the query / oracle counts; r6's
 judge caught them drifting (181/170 vs the real 182/172). Derive the
 expected numbers from the registry itself so the docs can't silently
-rot again. Pure-Python: no SparkSession.
+rot again. Also two source checks over the engine's files: no public
+function only tests reach, and one module that writes session conf.
+Pure-Python: no SparkSession.
 """
 
 from __future__ import annotations
@@ -61,3 +63,76 @@ def test_query_order_is_registration_order(tmp_path, monkeypatch):
     assert list(registry.all_oracles()) == [
         n for n, q in registry._REGISTRY.items() if q.oracle is not None
     ]
+
+
+PKG = os.path.join(REPO, "big_data_traffict_prediction_spark")
+
+# Public engine functions that only tests call, each with why it stays.
+TEST_ONLY_KEEP = {
+    "broadcast_join_count": "plans/explain.py is the plan inspector the plan tests use",
+    "shuffle_count": "plans/explain.py is the plan inspector the plan tests use",
+    "nested_loop_join_count": "plans/explain.py is the plan inspector the plan tests use",
+    "has_take_ordered": "plans/explain.py is the plan inspector the plan tests use",
+    "read_cameras_json": "S7 camera config (reference app/utils.py:386-394); nothing else reads it",
+    "migrate_json_history": "S11 history migration (reference scripts/migrate_to_sqlite.py:11-66); nothing else runs it",
+    "read_detections_csv": "S5b CSV detection log (reference app/services/camera.py:73-84); nothing else reads it",
+    "cdc_post_state": "merge-law test harness over cdc_joined, which q_cdc_merge runs",
+    "lpa_labels": "hand-graph test harness over _lpa_labels_lazy, which q_lpa_communities runs",
+}
+
+
+def _read(path: str) -> str:
+    with open(path) as fh:
+        return fh.read()
+
+
+def _py_files(root: str):
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if x not in ("__pycache__", "tests")]
+        yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
+
+
+def test_no_public_engine_function_is_reached_only_by_tests():
+    """Every public top-level engine function is @register-ed, named
+    in non-test code other than its own def, or kept on purpose
+    (TEST_ONLY_KEEP). Code only tests reach is a twin or dead surface."""
+    import ast
+
+    sources = [
+        *_py_files(PKG),
+        *_py_files(os.path.join(REPO, "perfbench")),
+        *_py_files(os.path.join(REPO, "scripts")),
+        os.path.join(REPO, "bench.py"),
+        os.path.join(REPO, "__spark_entry__.py"),
+    ]
+    text = "\n".join(_read(p) for p in sources)
+    unreferenced = set()
+    for path in _py_files(PKG):
+        for node in ast.parse(_read(path)).body:
+            if not isinstance(node, ast.FunctionDef) or node.name.startswith("_"):
+                continue
+            registered = any(
+                isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+                for d in node.decorator_list
+            )
+            n_named = len(re.findall(rf"\b{re.escape(node.name)}\b", text))
+            if not registered and n_named <= 1:
+                unreferenced.add(node.name)
+    assert not unreferenced - TEST_ONLY_KEEP.keys(), sorted(
+        unreferenced - TEST_ONLY_KEEP.keys()
+    )
+    # a keep entry whose function is gone or now used elsewhere is stale
+    assert not TEST_ONLY_KEEP.keys() - unreferenced, sorted(
+        TEST_ONLY_KEEP.keys() - unreferenced
+    )
+
+
+def test_only_session_py_writes_session_conf():
+    """Session conf is written in one place: session.py pins the
+    invariants once per session and owns the shuffle-partition cap."""
+    hits = [
+        os.path.relpath(p, REPO)
+        for p in _py_files(PKG)
+        if re.search(r"\bconf\.set\(", _read(p))
+    ]
+    assert hits == ["big_data_traffict_prediction_spark/session.py"], hits

@@ -134,41 +134,6 @@ def test_spark_pipeline_decodes_jpeg_images(spark, sf_dir):
         assert abs(jr.level_mean - pr.level_mean) < 8.0
 
 
-def test_frame_stream_serves_real_jpeg(spark, sf_dir, tmp_path):
-    """S14 end-to-end with the real codec: JPEG-encode frames, stream
-    them through the multipart sink, re-decode every served part."""
-    from big_data_traffict_prediction_spark.functions.multimodal import media_table
-    from big_data_traffict_prediction_spark.streaming.framesink import (
-        read_frame_stream,
-        write_frame_stream,
-    )
-    import pandas as pd
-
-    m = media_table(spark, sf_dir).filter("kind = 'image'").limit(12)
-
-    def to_jpeg(batches):
-        for pdf in batches:
-            out = []
-            for raw, w, h in zip(pdf["payload"], pdf["width"], pdf["height"], strict=True):
-                a = np.resize(np.frombuffer(bytes(raw) or b"\0", np.uint8), (int(h), int(w)))
-                out.append(encode_gray(a, 85))
-            yield pd.DataFrame(
-                {"media_id": pdf["media_id"], "frame_idx": 0, "frame_payload": out}
-            )
-
-    frames = m.select("media_id", "payload", "width", "height").mapInPandas(
-        to_jpeg, schema="media_id long, frame_idx int, frame_payload binary"
-    )
-    out = str(tmp_path / "stream.mjpeg")
-    n = write_frame_stream(frames, out, mime="image/jpeg")
-    parts = read_frame_stream(out)
-    assert n == len(parts) == 12
-    for part in parts:
-        assert part[:2] == b"\xff\xd8"
-        img = decode_gray(part)
-        assert img.ndim == 2 and img.size > 0
-
-
 def test_round_trip_property_random_images():
     """Property: decode(encode(img)) preserves shape/dtype and stays
     within the quantization error envelope for arbitrary images. The

@@ -1,13 +1,11 @@
-"""Scale-infrastructure utilities: MERGE-style upsert, small-file
-compaction, salted skew joins. These are the maintenance/resilience
-ops a 100 TB lake needs around the query surface."""
+"""Scale-infrastructure utilities: MERGE-style upsert and small-file
+compaction, the maintenance ops a 100 TB lake needs around the query
+surface."""
 
 from __future__ import annotations
 
 import datetime as dt
 import glob
-
-from pyspark.sql import functions as F
 
 from big_data_traffict_prediction_spark.sources import lake
 
@@ -64,74 +62,3 @@ def test_compact_lake_day_shrinks_file_count(spark, tmp_path):
     assert n_files == 1, f"expected 1 compacted file, got {n_files}"
     assert len(glob.glob(part_glob)) == 1
     assert spark.read.parquet(path).count() == before
-
-
-def test_salted_join_equals_plain_join_on_skew(spark):
-    from big_data_traffict_prediction_spark.operators.joins import salted_join
-
-    # one hot key with 5k rows + a uniform tail
-    left = spark.range(5000).select(
-        F.lit("HOT").alias("k"), F.col("id").alias("v")
-    ).unionByName(
-        spark.range(500).select(
-            F.concat(F.lit("k"), (F.col("id") % 50).cast("string")).alias("k"),
-            F.col("id").alias("v"),
-        )
-    )
-    right = spark.createDataFrame(
-        [("HOT", 1)] + [(f"k{i}", i) for i in range(40)], "k string, w long"
-    )
-    plain = (
-        left.join(right, "k")
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw"))
-    )
-    salted = (
-        salted_join(left, right, "k", n_salts=8)
-        .groupBy("k")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv"), F.sum("w").alias("sw"))
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    # left rows with unmatched keys survive a left salted join exactly once
-    plain_left = left.join(right, "k", "left").count()
-    salted_left = salted_join(left, right, "k", n_salts=8, how="left").count()
-    assert plain_left == salted_left
-
-
-def test_training_shards_bounded_and_complete(spark, sf_dir, tmp_path):
-    """Every shard ≤ the record bound; manifest row counts (read back
-    from parquet footers) sum to the input row count."""
-    from big_data_traffict_prediction_spark.operators.pipeline import (
-        q_training_manifest,
-    )
-    from big_data_traffict_prediction_spark.sources.lake import (
-        write_training_shards,
-    )
-
-    df = q_training_manifest(spark, sf_dir)
-    total = df.count()
-    bound = max(1, total // 7)
-    manifest = write_training_shards(df, str(tmp_path / "shards"), bound)
-    assert manifest and all(rows <= bound for _, rows in manifest)
-    assert sum(rows for _, rows in manifest) == total
-    assert len(manifest) >= 7
-
-
-def test_training_shards_partitioned_layout(spark, sf_dir, tmp_path):
-    """partition_cols produces hive-style shard directories and the
-    manifest still accounts for every row."""
-    from big_data_traffict_prediction_spark.operators.pipeline import (
-        q_training_manifest,
-    )
-    from big_data_traffict_prediction_spark.sources.lake import (
-        write_training_shards,
-    )
-
-    df = q_training_manifest(spark, sf_dir)
-    total = df.count()
-    manifest = write_training_shards(
-        df, str(tmp_path / "shards"), 10_000, partition_cols=("source",)
-    )
-    assert sum(rows for _, rows in manifest) == total
-    assert all(rel.startswith("source=") for rel, _ in manifest), manifest[:3]

@@ -85,44 +85,6 @@ def test_cameras_json_normalizes_mixed_lat_lng(spark, tmp_path):
     assert abs(got["b"] + 6.954) < 1e-9
 
 
-def test_cameras_xml_round_trip_matches_json_source(spark, tmp_path):
-    """S7 XML twin (Spark 4 native XML datasource): a hand-written XML
-    config parses with the same normalization as the JSON source, and
-    the write→read round trip is lossless — downstream operators are
-    source-agnostic."""
-    xml = """<?xml version="1.0"?>
-<cameras>
-  <camera><id>a</id><name>Cam A</name><url>u</url><active>true</active>
-    <lat>-6.9667</lat><lng>107.6073</lng></camera>
-  <camera><id>b</id><name>Cam B</name><url>u</url><active>false</active>
-    <lat>-6.954</lat><lng>107.61</lng><mirror_id>a</mirror_id></camera>
-</cameras>"""
-    p = tmp_path / "cfg.xml"
-    p.write_text(xml)
-    df = lake.read_cameras_xml(spark, str(p))
-    assert dict(df.dtypes)["lat"] == "double"
-    got = {r["id"]: (r["lat"], r["active"], r["mirror_id"]) for r in df.collect()}
-    assert abs(got["a"][0] + 6.9667) < 1e-9 and got["a"][1] is True
-    assert got["b"] == (-6.954, False, "a")
-
-    out = str(tmp_path / "export")
-    lake.write_cameras_xml(df, out)
-    back = lake.read_cameras_xml(spark, out)
-    assert {tuple(r) for r in back.collect()} == {tuple(r) for r in df.collect()}
-
-    # parity with the JSON source on identical content
-    rows = [
-        {"id": "a", "name": "Cam A", "url": "u", "active": True,
-         "lat": -6.9667, "lng": 107.6073, "mirror_id": None},
-        {"id": "b", "name": "Cam B", "url": "u", "active": False,
-         "lat": "-6.954", "lng": "107.61", "mirror_id": "a"},
-    ]
-    j = tmp_path / "cfg.json"
-    j.write_text("\n".join(json.dumps(r) for r in rows))
-    jdf = lake.read_cameras_json(spark, str(j))
-    assert {tuple(r) for r in jdf.collect()} == {tuple(r) for r in df.collect()}
-
-
 def test_migrate_json_history(spark, tmp_path):
     rows = [
         {"camera_id": "1", "ts": 1706659200.5, "count": 5, "cars": 3,
@@ -169,82 +131,6 @@ def test_detections_csv_normalizes_both_encodings(spark, tmp_path):
     assert (agg["car"], agg["motorcycle"]) == (2, 2)
 
 
-def test_orc_lake_round_trip_prunes_partitions(spark, sf_dir, tmp_path):
-    """S5/S6 over ORC: same partition layout, same pruned scan — the
-    lake is format-agnostic."""
-    from big_data_traffict_prediction_spark.plans import explain
-    from big_data_traffict_prediction_spark.sources.lake import (
-        read_orc_lake_day,
-        write_orc_lake,
-    )
-    from big_data_traffict_prediction_spark.tables import traffic_history
-
-    h = traffic_history(spark, sf_dir).select("id", "camera_id", "ts", "new_count")
-    path = str(tmp_path / "orc_lake")
-    write_orc_lake(h, path, mode="overwrite")
-
-    day = h.selectExpr("min(ts) AS m").collect()[0].m
-    back = read_orc_lake_day(spark, path, day.year, day.month, day.day)
-    expected = h.filter(
-        (F.year("ts") == day.year)
-        & (F.month("ts") == day.month)
-        & (F.dayofmonth("ts") == day.day)
-    )
-    assert back.count() == expected.count() > 0
-    assert sorted(back.columns) == sorted(expected.columns)
-    plan = explain.formatted_plan(back)
-    assert "PartitionFilters" in plan and "year" in plan, "day read must partition-prune"
-
-
-def test_binaryfile_media_ingest_to_features(spark, tmp_path):
-    """Crawl-directory ingestion: real JPEG/PNG/PGM/WAV files on disk →
-    binaryFile source → magic-sniffed kind → decode_features, end to
-    end with zero driver-side payload handling."""
-    import numpy as np
-
-    from big_data_traffict_prediction_spark.functions import jpeg, png
-    from big_data_traffict_prediction_spark.functions.multimodal import (
-        _encode_pgm,
-        _encode_wav,
-        decode_features,
-    )
-    from big_data_traffict_prediction_spark.sources.lake import read_media_files
-    from pyspark.sql import functions as F
-
-    d = tmp_path / "mediadrop"
-    d.mkdir()
-    img = ((np.arange(24 * 16) * 7) % 256).astype(np.uint8).reshape(24, 16)
-    (d / "a.jpg").write_bytes(jpeg.encode_gray(img, 85))
-    (d / "b.png").write_bytes(png.encode_gray(img))
-    (d / "c.pgm").write_bytes(_encode_pgm(img.tobytes(), 16, 24))
-    (d / "d.wav").write_bytes(_encode_wav(bytes(range(200))))
-    (d / "junk.bin").write_bytes(b"\x00\x01\x02")
-
-    m = read_media_files(spark, str(d))
-    kinds = {r.path.rsplit("/", 1)[-1]: r.kind for r in m.collect()}
-    assert kinds == {
-        "a.jpg": "image",
-        "b.png": "image",
-        "c.pgm": "image",
-        "d.wav": "audio",
-        "junk.bin": "unknown",
-    }
-
-    feats = decode_features(
-        m.filter(F.col("kind") != "unknown").select(
-            F.monotonically_increasing_id().alias("media_id"), "kind", "payload"
-        )
-    )
-    rows = {r.kind: r for r in feats.collect() if r.kind == "audio"}
-    img_rows = [r for r in feats.collect() if r.kind == "image"]
-    assert len(img_rows) == 3 and all(r.decoded_ok for r in img_rows)
-    assert all((r.width, r.height) == (16, 24) for r in img_rows)
-    # png/pgm are lossless → identical mean; jpeg within lossy bound
-    means = sorted(r.level_mean for r in img_rows)
-    assert abs(means[-1] - means[0]) < 8.0
-    assert rows["audio"].decoded_ok
-
-
 def test_media_drop_with_corrupt_files_survives_in_mark_mode(spark, tmp_path):
     """Crawl-scale ingestion contract end to end: a drop directory with
     truncated / codec-gated files flows binaryFile → decode_features
@@ -257,7 +143,6 @@ def test_media_drop_with_corrupt_files_survives_in_mark_mode(spark, tmp_path):
     from big_data_traffict_prediction_spark.functions.multimodal import (
         decode_features,
     )
-    from big_data_traffict_prediction_spark.sources.lake import read_media_files
     from pyspark.sql import functions as F
 
     d = tmp_path / "crawl"
@@ -274,8 +159,12 @@ def test_media_drop_with_corrupt_files_survives_in_mark_mode(spark, tmp_path):
     )
 
     out = decode_features(
-        read_media_files(spark, str(d)).select(
-            F.monotonically_increasing_id().alias("media_id"), "kind", "payload"
+        spark.read.format("binaryFile")
+        .load(str(d))
+        .select(
+            F.monotonically_increasing_id().alias("media_id"),
+            F.lit("image").alias("kind"),
+            F.col("content").alias("payload"),
         ),
         on_error="mark",
     ).collect()
@@ -285,6 +174,20 @@ def test_media_drop_with_corrupt_files_survives_in_mark_mode(spark, tmp_path):
     assert all((r.width, r.height) == (16, 24) for r in ok)
     assert all(r.level_mean is None and r.feature is None for r in bad)
     assert all(r.payload_bytes > 0 for r in bad)  # metadata still flows
+
+
+def test_load_table_pins_a_fresh_child_session(spark, sf_dir):
+    """Session invariants are set once per JVM session: a child from
+    ``newSession()`` starts without ``nanosAsLong`` and must be pinned
+    on its first ``load_table``, reading the same rows."""
+    from big_data_traffict_prediction_spark.tables import load_table
+
+    child = spark.newSession()
+    assert child.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false"
+    want = {r.event_id: r for r in load_table(spark, sf_dir, "events").collect()}
+    got = {r.event_id: r for r in load_table(child, sf_dir, "events").collect()}
+    assert want and got == want
+    assert child.conf.get("spark.sql.session.timeZone") == "UTC"
 
 
 def test_input_stamp_tracks_data_files_only(tmp_path):

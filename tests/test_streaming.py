@@ -299,42 +299,6 @@ def test_stream_static_join_matches_batch(spark, sf_dir):
     assert got and got == batch
 
 
-def test_frame_stream_sink_round_trips(spark, sf_dir, tmp_path):
-    """S14: the multipart frame-stream sink writes boundary-delimited
-    parts in (media_id, frame_idx) order and a consumer-side parse
-    recovers every payload byte-exactly."""
-    from pyspark.sql import functions as F
-
-    from big_data_traffict_prediction_spark.functions.multimodal import (
-        encode_media,
-        media_table,
-    )
-    from big_data_traffict_prediction_spark.streaming.framesink import (
-        read_frame_stream,
-        write_frame_stream,
-    )
-
-    frames = (
-        encode_media(media_table(spark, sf_dir))
-        .filter(F.col("kind") == "image")
-        .select(
-            "media_id",
-            F.lit(0).alias("frame_idx"),
-            F.col("payload").alias("frame_payload"),
-        )
-    )
-    out = str(tmp_path / "stream.mjpeg")
-    n = write_frame_stream(frames, out)
-    parts = read_frame_stream(out)
-    expected = [
-        bytes(r.frame_payload)
-        for r in frames.orderBy("media_id", "frame_idx").collect()
-    ]
-    assert n == len(expected) == len(parts) and n > 0
-    assert parts == expected
-    assert all(p[:2] == b"P5" for p in parts), "parts must be the PGM frames"
-
-
 def test_stage_cache_stages_once_per_app_and_sf(monkeypatch, tmp_path):
     """The staged replay input is a pure function of (application,
     events files): _drain must stage it exactly once per input and
@@ -386,6 +350,105 @@ def test_stage_cache_stages_once_per_app_and_sf(monkeypatch, tmp_path):
     (sf1 / "events.parquet").write_bytes(b"PAR1PAR1")  # rewritten input
     s4 = q._drain(_Spark(), str(sf1), lambda read: read())
     assert len(calls) == 3 and s4 != s1, "a changed input must restage"
+
+
+def test_overlapping_shuffle_caps_restore_the_session_value():
+    """Two capped sections on one session, A (cap 2) entered first and
+    exited first while B (cap 1) is pending: the session must end at
+    its base value. Unserialized, B saves A's lowered 2 and restores
+    it after A has put back 4, so the session keeps 2 for good."""
+    import sys
+    import threading
+
+    from big_data_traffict_prediction_spark.session import shuffle_partitions_at_most
+
+    class _Conf:
+        def __init__(self):
+            self.v = {"spark.sql.shuffle.partitions": "4"}
+
+        def get(self, k):
+            return self.v[k]
+
+        def set(self, k, val):
+            self.v[k] = val
+
+    class _Spark:
+        conf = _Conf()
+
+    spark = _Spark()
+    a_in, a_release = threading.Event(), threading.Event()
+    b_in, b_release = threading.Event(), threading.Event()
+
+    def capped(target, entered, release):
+        with shuffle_partitions_at_most(spark, target):
+            entered.set()
+            release.wait(timeout=10)
+
+    a = threading.Thread(target=capped, args=(2, a_in, a_release))
+    b = threading.Thread(target=capped, args=(1, b_in, b_release))
+    a.start()
+    assert a_in.wait(timeout=10)
+    b.start()
+    b_in.wait(timeout=0.5)  # unserialized, B is inside by now
+    a_release.set()
+    a.join(timeout=10)
+    b_release.set()
+    b.join(timeout=10)
+    assert not a.is_alive() and not b.is_alive()
+    assert b_in.is_set()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+    # stress: more threads than cores, frequent switches; every body
+    # must see its own cap and the session must end at its base value
+    seen_wrong = []
+
+    def hammer(seed):
+        for i in range(200):
+            target = 1 + (seed + i) % 3
+            with shuffle_partitions_at_most(spark, target):
+                if spark.conf.get("spark.sql.shuffle.partitions") != str(target):
+                    seen_wrong.append((seed, i))
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=hammer, args=(s,)) for s in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not seen_wrong
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+
+
+def test_stream_keeps_its_start_time_cap(spark, sf_dir, tmp_path):
+    """The state-partition cap is held only across start(): the query
+    clones the session conf at start, so its first batch still records
+    the capped count in offsets/0, and the session is back at its base
+    value once the drain returns."""
+    import json
+    import uuid
+
+    from big_data_traffict_prediction_spark.streaming import simulate, windows
+
+    base = spark.conf.get("spark.sql.shuffle.partitions")
+    stage = simulate.stage_stream_dir(spark, sf_dir, str(tmp_path / "stage"), n_chunks=2)
+    ckpt = tmp_path / "ckpt"
+    out = windows.run_to_memory(
+        spark,
+        windows.tumbling_counts(simulate.read_stream(spark, stage), "1 hour"),
+        f"cap_{uuid.uuid4().hex[:8]}",
+        str(ckpt),
+        state_rows=10,
+    )
+    assert out.count() > 0
+    offsets0 = (ckpt / "offsets" / "0").read_text().splitlines()
+    conf = json.loads(offsets0[1])["conf"]
+    assert conf["spark.sql.shuffle.partitions"] == "1"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == base
 
 
 def test_registered_drains_leave_no_temp_views(spark, sf_dir):
@@ -444,18 +507,17 @@ def test_failed_drain_leaves_no_scratch(spark, sf_dir, tmp_path, monkeypatch):
     assert sum(t.isTemporary for t in spark.catalog.listTables()) == n_views
 
 
-def test_tumbling_counts_chunking_invariant(spark, sf_dir):
+def test_tumbling_counts_chunking_invariant(spark, sf_dir, tmp_path):
     """The oracle claim for the hash-checked streaming queries is that
     the drained output is a pure function of the INPUT SET, not the
     micro-batch boundaries. Replay the same data as 2 and as 7 chunks:
     identical result sets."""
-    import tempfile
     import uuid
 
     from big_data_traffict_prediction_spark.streaming import simulate, windows
 
     def drained(n_chunks):
-        base = tempfile.mkdtemp(prefix=f"chunkinv_{n_chunks}_")
+        base = tmp_path / f"chunkinv_{n_chunks}"
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
@@ -527,11 +589,10 @@ def test_checkpoint_restart_resumes_exactly_once(spark, sf_dir, tmp_path):
     assert set(got) == full
 
 
-def test_query_listener_observes_progress(spark, sf_dir):
+def test_query_listener_observes_progress(spark, sf_dir, tmp_path):
     """Observability: a StreamingQueryListener attached to the session
     sees the drained query's progress events with real row counts —
     the monitoring hook a production deployment wires to metrics."""
-    import tempfile
     import uuid
 
     from pyspark.sql.streaming import StreamingQueryListener
@@ -556,7 +617,7 @@ def test_query_listener_observes_progress(spark, sf_dir):
     listener = Capture()
     spark.streams.addListener(listener)
     try:
-        base = tempfile.mkdtemp(prefix="listener_")
+        base = tmp_path
         stage = simulate.stage_stream_dir(spark, sf_dir, f"{base}/stage", n_chunks=3)
         out = windows.run_to_memory(
             spark,
@@ -781,19 +842,18 @@ def test_stream_hll_calibrated_vs_batch_exact(spark, sf_dir):
         assert abs(e - x) * 1_000_000 // x <= 520_000, (w, e, x)
 
 
-def test_stream_hll_registers_chunking_invariant(spark, sf_dir):
+def test_stream_hll_registers_chunking_invariant(spark, sf_dir, tmp_path):
     """The streaming HLL's oracle claim rests on max-merge being
     commutative/idempotent across micro-batch boundaries. Replay the
     same data as 2 and as 7 chunks: identical REGISTER sets (stronger
     than comparing estimates — a register that differed but rounded
     to the same estimate would hide a merge bug)."""
-    import tempfile
     import uuid
 
     from big_data_traffict_prediction_spark.streaming import simulate, windows
 
     def drained(n_chunks):
-        base = tempfile.mkdtemp(prefix=f"hllinv_{n_chunks}_")
+        base = tmp_path / f"hllinv_{n_chunks}"
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
@@ -811,12 +871,11 @@ def test_stream_hll_registers_chunking_invariant(spark, sf_dir):
     assert a and a == b
 
 
-def test_stream_cdc_feed_compaction_chunking_invariant(spark, sf_dir):
+def test_stream_cdc_feed_compaction_chunking_invariant(spark, sf_dir, tmp_path):
     """q_stream_cdc_merge's oracle claim rests on max(struct) state
     merge being commutative/idempotent across micro-batch boundaries.
     Replay the same feed window as 2 and as 7 chunks: identical
     compacted (camera, latest-row) sets."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
@@ -831,7 +890,7 @@ def test_stream_cdc_feed_compaction_chunking_invariant(spark, sf_dir):
     t2 = F.timestamp_seconds(F.lit(STREAM_CDC_T2_EPOCH))
 
     def drained(n_chunks):
-        base = tempfile.mkdtemp(prefix=f"cdcinv_{n_chunks}_")
+        base = tmp_path / f"cdcinv_{n_chunks}"
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
@@ -932,12 +991,10 @@ def test_streaming_restart_recovers_exactly_once(spark, sf_dir, tmp_path):
     assert 0 < n_first < len(recovered)
 
 
-def test_stream_zone_map_chunking_invariant(spark, sf_dir):
+def test_stream_zone_map_chunking_invariant(spark, sf_dir, tmp_path):
     """Zone stats are commutative+associative folds, so the drained
     streaming index must be identical at any micro-batch chunking —
     the property that licenses its batch-SQL oracle."""
-    import shutil
-    import tempfile
     import uuid
 
     import pyspark.sql.functions as F
@@ -945,7 +1002,7 @@ def test_stream_zone_map_chunking_invariant(spark, sf_dir):
     from big_data_traffict_prediction_spark.streaming import simulate, windows
 
     def drained(n_chunks):
-        base = tempfile.mkdtemp(prefix=f"zminv_{n_chunks}_")
+        base = tmp_path / f"zminv_{n_chunks}"
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
@@ -993,7 +1050,6 @@ def test_stream_zone_map_chunking_invariant(spark, sf_dir):
             (r.d, r.hr, r.n_rows, r.min_count, r.max_count, r.bloom_fp)
             for r in out.collect()
         }
-        shutil.rmtree(base, ignore_errors=True)
         return got
 
     a, b = drained(2), drained(5)
@@ -1038,13 +1094,11 @@ def test_stream_interval_join_binned_matches_batch(spark, sf_dir):
     assert got and got == batch
 
 
-def test_stream_histogram_chunking_invariant(spark, sf_dir):
+def test_stream_histogram_chunking_invariant(spark, sf_dir, tmp_path):
     """Value-frequency counts are additive, so the drained streaming
     vf — and hence the histogram derived from it — must be identical
     at any micro-batch chunking (the property licensing the batch-SQL
     oracle of q_stream_histogram)."""
-    import shutil
-    import tempfile
     import uuid
 
     import pyspark.sql.functions as F
@@ -1052,7 +1106,7 @@ def test_stream_histogram_chunking_invariant(spark, sf_dir):
     from big_data_traffict_prediction_spark.streaming import simulate, windows
 
     def drained(n_chunks):
-        base = tempfile.mkdtemp(prefix=f"hginv_{n_chunks}_")
+        base = tmp_path / f"hginv_{n_chunks}"
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
@@ -1070,20 +1124,17 @@ def test_stream_histogram_chunking_invariant(spark, sf_dir):
             output_mode="complete",
         )
         got = {(r.v, r.f) for r in out.collect()}
-        shutil.rmtree(base, ignore_errors=True)
         return got
 
     one, three = drained(1), drained(3)
     assert one and one == three
 
 
-def test_stream_join_size_grid_chunking_invariant_and_matches_batch(spark, sf_dir):
+def test_stream_join_size_grid_chunking_invariant_and_matches_batch(spark, sf_dir, tmp_path):
     """The CM join grid's cells are plain sums, so the drained streaming
     grid must equal the batch-built grid cell for cell at ANY chunking —
     the property licensing q_stream_join_size_sketch's reuse of the
     batch estimator's oracle text."""
-    import shutil
-    import tempfile
     import uuid
 
     from big_data_traffict_prediction_spark.operators.tsdb import (
@@ -1094,7 +1145,7 @@ def test_stream_join_size_grid_chunking_invariant_and_matches_batch(spark, sf_di
     from big_data_traffict_prediction_spark.streaming import simulate, windows
 
     def drained(n_chunks):
-        base = tempfile.mkdtemp(prefix=f"cminv_{n_chunks}_")
+        base = tmp_path / f"cminv_{n_chunks}"
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
@@ -1107,7 +1158,6 @@ def test_stream_join_size_grid_chunking_invariant_and_matches_batch(spark, sf_di
             output_mode="complete",
         )
         got = {(r.d, r.bucket, r.ca, r.cb) for r in out.collect()}
-        shutil.rmtree(base, ignore_errors=True)
         return got
 
     batch = {
@@ -1118,14 +1168,12 @@ def test_stream_join_size_grid_chunking_invariant_and_matches_batch(spark, sf_di
     assert batch and one == batch and three == batch
 
 
-def test_stream_analyze_state_chunking_invariant(spark, sf_dir):
+def test_stream_analyze_state_chunking_invariant(spark, sf_dir, tmp_path):
     """Every statistic in the (col, bucket)-grain ANALYZE state is a
     commutative fold (counts add, canonical min/max fold, register
     ranks max), so the drained state must be identical at any
     micro-batch chunking — the property licensing q_stream_analyze's
     reuse of the batch oracle tail."""
-    import shutil
-    import tempfile
     import uuid
 
     import pyspark.sql.functions as F
@@ -1164,7 +1212,7 @@ def test_stream_analyze_state_chunking_invariant(spark, sf_dir):
         )
 
     def drained(n_chunks):
-        base = tempfile.mkdtemp(prefix=f"aninv_{n_chunks}_")
+        base = tmp_path / f"aninv_{n_chunks}"
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
@@ -1176,7 +1224,6 @@ def test_stream_analyze_state_chunking_invariant(spark, sf_dir):
             output_mode="complete",
         )
         got = {(r.col, r.bucket, r.cnt, r.mn, r.mx, r.reg) for r in out.collect()}
-        shutil.rmtree(base, ignore_errors=True)
         return got
 
     one, three = drained(1), drained(3)
