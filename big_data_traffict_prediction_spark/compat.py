@@ -20,6 +20,13 @@ Cross-engine reproducibility rules used throughout the operators:
   seconds (``unix_micros // 1_000_000``), never a double epoch, so
   ``floor(epoch/interval)`` can't flip at bucket boundaries from a
   1-ULP error.
+- **salted md5 hash**: every hash that must match across engines is
+  the first ``d`` hex digits of ``md5(salt || key)`` read as a BIGINT
+  — ``md5_hash`` on the Spark side, ``md5_hash_sql`` in the oracles.
+  ``d`` is 15 (60-bit hash) or 10 (40-bit, which keeps the double-hash
+  sum ``h1 + s·h2`` inside int64); both are nonnegative in both
+  engines, so ``%`` agrees too. The salt prefix (``'zm#'``,
+  ``'hll#'``, ...) decorrelates one query's hash from another's.
 """
 
 from __future__ import annotations
@@ -45,11 +52,6 @@ def bucket_epoch(ts: Column | str, interval_s: int) -> Column:
     """Tumbling-bucket start as integer epoch seconds:
     ``int(ts // interval) * interval`` (reference ``app/routes.py:112``)."""
     return (F.floor(epoch_s(ts) / interval_s) * interval_s).cast("long")
-
-
-def bucket_ts(ts: Column | str, interval_s: int) -> Column:
-    """Tumbling-bucket start as a timestamp."""
-    return F.timestamp_seconds(bucket_epoch(ts, interval_s))
 
 
 def fixed_point(x: Column | str, scale: int = 10_000) -> Column:
@@ -212,6 +214,26 @@ def global_rank(df, order_cols, partitions: int = 16, sum_col: str | None = None
             + F.col("_soff"),
         ).drop("_soff")
     return out.drop("_pid", "_off")
+
+
+MD5_HASH_DIGITS = (10, 15)  # 40-bit and 60-bit hashes
+
+
+def _hash_digits(digits: int) -> int:
+    if digits not in MD5_HASH_DIGITS:
+        raise ValueError(f"md5 hash width must be one of {MD5_HASH_DIGITS}, got {digits}")
+    return digits
+
+
+def md5_hash(c: Column, digits: int) -> Column:
+    """First ``digits`` hex digits of ``md5(c)`` as a BIGINT; NULL in,
+    NULL out. The Spark rendition of ``md5_hash_sql``."""
+    return F.conv(F.substring(F.md5(c), 1, _hash_digits(digits)), 16, 10).cast("long")
+
+
+def md5_hash_sql(expr: str, digits: int) -> str:
+    """DuckDB rendition of ``md5_hash`` over the SQL expression ``expr``."""
+    return f"CAST(('0x' || substr(md5({expr}), 1, {_hash_digits(digits)})) AS BIGINT)"
 
 
 def idiv(a: Column, b: Column) -> Column:

@@ -30,10 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import let
+from ..compat import let, md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import load_table
-from .text import NORM_SQL, hash60, hash60_sql, norm_col
+from .text import NORM_SQL, norm_col
 
 # --- repetition ---------------------------------------------------------
 
@@ -168,7 +168,7 @@ def _gram_rows(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
         F.size(toks).cast("long").alias("n_toks"),
         F.explode(grams).alias("gram"),
     ).filter(F.col("n_toks") >= n).select(
-        "doc_id", "source", hash60(F.col("gram")).alias("gram_h")
+        "doc_id", "source", md5_hash(F.col("gram"), 15).alias("gram_h")
     )
 
 
@@ -179,7 +179,7 @@ WITH t AS (
   SELECT doc_id, source, string_split({NORM_SQL}, ' ') AS toks FROM documents
 ), g AS (
   SELECT doc_id, source,
-         {hash60_sql("gram")} AS gram_h
+         {md5_hash_sql("gram", 15)} AS gram_h
   FROM (SELECT doc_id, source, unnest({_grams_sql(CONTAM_N)}) AS gram
         FROM t WHERE len(toks) >= {CONTAM_N})
 ), bench AS (
@@ -510,7 +510,7 @@ def mixture_rates(src: DataFrame) -> DataFrame:
 
 def mixture_key() -> F.Column:
     """Deterministic per-document selection key (md5-based, no RNG)."""
-    return hash60(F.concat(F.lit("mix#"), F.col("doc_id").cast("string")))
+    return md5_hash(F.concat(F.lit("mix#"), F.col("doc_id").cast("string")), 15)
 
 
 # SQL twin of mixture_rates(): CTEs g + r over a source-tokens CTE
@@ -533,7 +533,7 @@ MIX_RATES_SQL = f"""gfp AS (
   FROM gfp, g
 )"""
 
-MIX_KEY_SQL = hash60_sql("'mix#' || CAST({D}.doc_id AS VARCHAR)")
+MIX_KEY_SQL = md5_hash_sql("'mix#' || CAST({D}.doc_id AS VARCHAR)", 15)
 
 
 def pack_positions(df: DataFrame) -> DataFrame:

@@ -11,8 +11,8 @@ Four tiers, each the standard shape for its scale:
 - **MinHash + LSH**: 16 minhashes → 4 bands × 4 rows → candidates are
   only pairs sharing a band signature; THE scale path (candidates
   ∝ near-dups, not n²). Fully oracle-checked because both engines
-  share the same 40-bit md5-derived hash (``_hash40`` below; 40 bits
-  keeps the h1 + seed·h2 double-hash inside int64).
+  share the same 40-bit md5-derived hash (``compat.md5_hash`` with 10
+  hex digits; 40 bits keeps the h1 + seed·h2 double-hash inside int64).
 - **SimHash**: 32-bit signatures + top-16-bit banding + hamming≤k —
   the other classic near-dup family.
 
@@ -25,11 +25,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..compat import exact_ppm, global_rank, let
+from ..compat import exact_ppm, global_rank, let, md5_hash, md5_hash_sql
 from ..registry import register
 from ..session import shuffle_partitions_at_most
 from ..tables import load_table
-from .text import NORM_SQL, hash60, hash60_sql, norm_col
+from .text import NORM_SQL, norm_col
 
 JACCARD_THRESHOLD = 0.5
 NUM_HASHES = 16
@@ -492,12 +492,6 @@ def q_dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 MINHASH_P = 1_099_511_627_791
 
 
-def _hash40(c):
-    """40-bit md5-derived hash, identical in Spark and DuckDB.
-    40 bits keeps h1 + seed*h2 inside int64 (≤ 2^44)."""
-    return F.conv(F.substring(F.md5(c), 1, 10), 16, 10).cast("long")
-
-
 def minhash_signatures(
     spark: SparkSession, sf_dir: str, sh: DataFrame | None = None
 ) -> DataFrame:
@@ -520,8 +514,8 @@ def minhash_signatures(
     hpairs = F.transform(
         "shingles",
         lambda x: F.struct(
-            _hash40(x).alias("h1"),
-            _hash40(F.concat(F.lit("#"), x)).alias("h2"),
+            md5_hash(x, 10).alias("h1"),
+            md5_hash(F.concat(F.lit("#"), x), 10).alias("h2"),
         ),
     )
     mh = let(
@@ -574,8 +568,8 @@ seeds AS (
 ),
 shh AS (
   SELECT doc_id,
-         CAST(('0x' || substr(md5(shingle), 1, 10)) AS BIGINT) AS h1,
-         CAST(('0x' || substr(md5('#' || shingle), 1, 10)) AS BIGINT) AS h2
+         {md5_hash_sql("shingle", 10)} AS h1,
+         {md5_hash_sql("'#' || shingle", 10)} AS h2
   FROM sh
 ),
 mh AS (
@@ -835,7 +829,7 @@ tok2 AS (
   FROM documents
 ),
 hw AS (
-  SELECT doc_id, {hash60_sql("w")} AS h FROM tok2
+  SELECT doc_id, {md5_hash_sql("w", 15)} AS h FROM tok2
 ),
 bits AS (
   SELECT doc_id, b.bit,
@@ -865,7 +859,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across cores regardless of the source's split count.
     d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     hashes = F.transform(
-        F.array_distinct(F.split(norm_col(), " ")), lambda w: hash60(w)
+        F.array_distinct(F.split(norm_col(), " ")), lambda w: md5_hash(w, 15)
     )
 
     # Single-pass bit-vote: ONE aggregate folds the hash array into a

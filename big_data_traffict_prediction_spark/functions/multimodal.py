@@ -31,8 +31,9 @@ gate stays honest instead of faking them.
 
 The media table is derived deterministically from ``documents`` so
 every scale factor has a multimodal fixture without writing anywhere;
-``encode_media`` is the ingest-side twin (what a camera/ripper would
-produce), ``decode_features`` the engine-side operator.
+``encoded_features`` wraps each payload in its container (what a
+camera/ripper would produce) and decodes it in the same batch loop;
+``decode_features`` decodes containers read from storage.
 """
 
 from __future__ import annotations
@@ -63,7 +64,7 @@ def media_table(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataF
 
     ``spread=True`` repartitions across cores up front — required by
     consumers that feed the payloads through Python codec kernels
-    (encode_media / decode_features mapInPandas), which a single
+    (encoded_features / decode_features mapInPandas), which a single
     parquet split would serialize onto ONE Arrow worker (measured 5×
     at sf0.1 — the dedup._tokenized idiom; at real scale the file
     count makes this shuffle a no-op cost). Pure-JVM consumers
@@ -194,9 +195,11 @@ def _encode_jpeg_progressive(raw: bytes, w: int, h: int) -> bytes:
 
 
 def _encoder_for(image_codec: str):
-    """Per-row container-encode closure shared by ``encode_media`` and
-    the fused ``encoded_features`` — ONE definition so the codec mix /
-    sizing semantics cannot drift between the two shapes. Validates on
+    """Per-row container-encode closure of ``encoded_features``: wraps
+    each raw payload in a real PGM/JPEG/PNG / WAV / RAWV container per
+    its kind, sized by the metadata columns. ``image_codec`` picks the
+    image container; ``"mixed"`` cycles every codec deterministically
+    by media_id so one fixture exercises every decoder. Validates on
     the DRIVER: a typo'd codec must fail before the job launches, not
     as a KeyError from an executor mid-scan."""
     codecs = {
@@ -227,52 +230,6 @@ def _encoder_for(image_codec: str):
         return _encode_rawv(raw, int(w), int(h))
 
     return encode_one
-
-
-def encode_media(df: DataFrame, image_codec: str = "pgm") -> DataFrame:
-    """Ingest-side container encode (Arrow-batched): wraps each raw
-    payload in a real PGM/JPEG / WAV / RAWV container per its kind,
-    sized by the metadata columns. At 100 TB this is the `mapInPandas`
-    shape of any transcode stage: binary in, binary out, zero driver
-    data. ``image_codec="jpeg"`` routes images through the from-spec
-    baseline JPEG encoder (lossy — feature invariants, not byte
-    equality, are what survives the round trip); ``"png"`` through the
-    lossless zlib-backed PNG writer; ``"png_palette"`` through the
-    palette (PLTE-lookup) PNG writer; ``"jpeg_color"`` through the
-    color (YCbCr 4:2:0) encoder; ``"jpeg_progressive"`` through the
-    multi-scan SOF2 encoder; ``"mixed"`` cycles
-    pgm/jpeg/png/jpeg_color/png_palette/jpeg_progressive
-    deterministically by media_id so one fixture exercises every
-    decoder, including the color→luma, palette-lookup, and
-    progressive-scan paths."""
-    encode_one = _encoder_for(image_codec)
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            enc = [
-                encode_one(mid, bytes(raw), kind, w, h)
-                for mid, raw, kind, w, h in zip(
-                    pdf["media_id"],
-                    pdf["payload"],
-                    pdf["kind"],
-                    pdf["width"],
-                    pdf["height"],
-                    strict=True,
-                )
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "width": pdf["width"],
-                    "height": pdf["height"],
-                    "payload": enc,
-                }
-            )
-
-    return df.mapInPandas(
-        op, schema="media_id long, kind string, width int, height int, payload binary"
-    )
 
 
 # --------------------------------------------------------------- decode
@@ -399,10 +356,9 @@ _DECODE_ERROR_ROW = {
 
 
 def _decoder_for(on_error: str):
-    """Per-row decode closure shared by ``decode_features`` and the
-    fused ``encoded_features`` — one definition of the on_error
-    validation and the absorbed-exception set, so the two shapes
-    cannot drift (the ``_encoder_for`` rule applied to the decoder)."""
+    """Per-row decode closure shared by ``decode_features`` and
+    ``encoded_features`` — one definition of the on_error validation
+    and the absorbed-exception set, so the two cannot drift."""
     if on_error not in ("raise", "mark"):
         raise ValueError(f"on_error must be 'raise' or 'mark', got {on_error!r}")
 
@@ -471,19 +427,17 @@ def decode_features(df: DataFrame, on_error: str = "raise") -> DataFrame:
 def encoded_features(
     df: DataFrame, image_codec: str = "pgm", on_error: str = "raise"
 ) -> DataFrame:
-    """Fused ``decode_features(encode_media(df))`` in ONE mapInPandas
-    stage (r14, guide §4 — every chained Python operator pays a full
+    """Container encode (``_encoder_for``) then decode + feature
+    extract (``_decoder_for``, as in ``decode_features``) in ONE
+    mapInPandas stage: every chained Python operator pays a full
     JVM→Python→JVM Arrow crossing of the payload bytes plus a worker
-    stage; the container bytes here exist only BETWEEN the two
-    kernels, so encoding and decoding in the same batch loop removes
-    one round trip of the whole binary corpus). Row-for-row identical
-    to the two-stage composition — both shapes call the same
-    ``_encoder_for`` closure and ``_decode_payload`` kernel — pinned
-    by tests/test_llm_ops.py::test_encoded_features_matches_two_stage.
-
-    The two-stage operators remain the public transcode/decode API
-    (and the shape a real pipeline with PERSISTED containers uses);
-    this fusion is for ephemeral encode→decode chains."""
+    stage, and the container bytes here exist only BETWEEN the two
+    kernels, so encoding and decoding in the same batch loop saves
+    one round trip of the whole binary corpus. ``image_codec="jpeg"``
+    is lossy (feature invariants, not byte equality, survive the
+    round trip); the PNG and PGM containers are lossless. A pipeline
+    with PERSISTED containers reads them back through
+    ``decode_features``."""
     encode_one = _encoder_for(image_codec)
     decode_one = _decoder_for(on_error)
 

@@ -34,10 +34,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import let
+from ..compat import let, md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import load_table
-from .text import NORM_SQL, hash60, hash60_sql, norm_col
+from .text import NORM_SQL, norm_col
 
 # --- shared span machinery ---------------------------------------------
 
@@ -70,7 +70,7 @@ def _per_hash_doc_counts(spans: DataFrame) -> DataFrame:
 WITH t AS (
   SELECT doc_id, {NORM_SQL} AS norm FROM documents
 ), s AS (
-  SELECT doc_id, {hash60_sql(f"substr(norm, CAST(i AS INT), {SPAN_W})")} AS h
+  SELECT doc_id, {md5_hash_sql(f"substr(norm, CAST(i AS INT), {SPAN_W})", 15)} AS h
   FROM t, unnest(generate_series(1, greatest(length(norm) - {SPAN_W - 1}, 1), {SPAN_STRIDE})) AS u(i)
 ), hd AS (
   SELECT h, doc_id, count(*) AS cnt FROM s GROUP BY h, doc_id
@@ -117,7 +117,7 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "norm",
     ).select(
         "doc_id",
-        hash60(F.substring(F.col("norm"), F.col("pos"), SPAN_W)).alias("h"),
+        md5_hash(F.substring(F.col("norm"), F.col("pos"), SPAN_W), 15).alias("h"),
     )
     hd = _per_hash_doc_counts(spans)
     dup_cnt = F.sum(F.when(F.col("docs_with") > 1, F.col("cnt")).otherwise(F.lit(0)))
@@ -145,7 +145,7 @@ WITH t AS (
   SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
 ), g AS (
   SELECT doc_id,
-         {hash60_sql("toks[CAST(i AS INT)] || ' ' || toks[CAST(i AS INT) + 1]")} AS h
+         {md5_hash_sql("toks[CAST(i AS INT)] || ' ' || toks[CAST(i AS INT) + 1]", 15)} AS h
   FROM t, unnest(generate_series(1, len(toks) - 1)) AS u(i)
   WHERE len(toks) >= 2
 ), hd AS (
@@ -191,10 +191,11 @@ def q_bigram_familiarity(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("toks"),
                     lambda t: F.transform(
                         F.sequence(F.lit(1), F.size(t) - 1),
-                        lambda i: hash60(
+                        lambda i: md5_hash(
                             F.concat_ws(
                                 " ", F.element_at(t, i), F.element_at(t, i + 1)
-                            )
+                            ),
+                            15,
                         ),
                     ),
                 ),

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import exact_ppm, global_rank, let
+from ..compat import exact_ppm, global_rank, let, md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import load_table
 
@@ -26,17 +26,6 @@ NORM_SQL = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
 
 def norm_col(c: str = "text") -> Column:
     return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
-
-
-# 60-bit hash available identically in both engines:
-# Spark  conv(substr(md5(x),1,15), 16, 10) :: long
-# DuckDB CAST('0x' || substr(md5(x),1,15) AS BIGINT)
-def hash60(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
-
-
-def hash60_sql(expr: str) -> str:
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
 EN_MARKERS = ("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
@@ -210,7 +199,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
 SELECT doc_id,
        md5({NORM_SQL}) AS fingerprint,
-       {hash60_sql(NORM_SQL)} AS fingerprint60
+       {md5_hash_sql(NORM_SQL, 15)} AS fingerprint60
 FROM documents
 ORDER BY doc_id
 """,
@@ -222,7 +211,7 @@ def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select(
         "doc_id",
         F.md5(norm_col()).alias("fingerprint"),
-        hash60(norm_col()).alias("fingerprint60"),
+        md5_hash(norm_col(), 15).alias("fingerprint60"),
     ).orderBy("doc_id")
 
 
@@ -240,7 +229,7 @@ WITH t AS (
          length(norm) - {WINNOW_K - 1} AS n_grams,
          list_transform(
            generate_series(1, greatest(length(norm) - {WINNOW_K - 1}, 0)),
-           i -> {hash60_sql(f"substring(norm, i, {WINNOW_K})")}
+           i -> {md5_hash_sql(f"substring(norm, i, {WINNOW_K})", 15)}
          ) AS hs
   FROM t
 ), w AS (
@@ -275,7 +264,7 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     xor fold) — ZERO shuffles except the presentation sort, so it
     scans at I/O speed on any corpus. The emitted row is the compact
     per-doc summary (set size, min, xor checksum), exact in both
-    engines via the shared 60-bit md5 hash (hash60/hash60_sql — the
+    engines via the shared 60-bit md5 hash (compat.md5_hash — the
     same definition the dedup family shuffles on).
     """
     d = load_table(spark, sf_dir, "documents")
@@ -289,10 +278,9 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_grams", (F.length("norm") - (WINNOW_K - 1)).cast("int"))
         .filter(F.col("n_grams") >= 1)
     )
-    hs = F.expr(
-        f"transform(sequence(1, n_grams), i -> "
-        f"CAST(conv(substring(md5(substring(norm, i, {WINNOW_K})), 1, 15), 16, 10)"
-        f" AS BIGINT))"
+    hs = F.transform(
+        F.sequence(F.lit(1), F.col("n_grams")),
+        lambda i: md5_hash(F.substring("norm", i, WINNOW_K), 15),
     )
 
     # Both array expressions go through compat.let: an expression inside

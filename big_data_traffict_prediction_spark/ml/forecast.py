@@ -20,7 +20,7 @@ import functools
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..compat import constant_key, dow0
+from ..compat import constant_key, dow0, md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import load_table, memo_on_input, traffic_history
 
@@ -59,20 +59,18 @@ def training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_ml_forecast", oracle=None)
-@_memoized
-def q_ml_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train the pipeline and score every (camera, dow, hour) slot;
-    returns slot-level predicted volume next to the replay baseline
-    (avg_hourly_volume) for comparison."""
+def _pipeline():
+    """The forecaster: one-hot camera/dow/hour → LinearRegression. Both
+    q_ml_forecast and q_ml_forecast_eval (which sweeps regParam) fit it."""
     from pyspark.ml import Pipeline
     from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
     from pyspark.ml.regression import LinearRegression
 
-    train = training_frame(spark, sf_dir).cache()
-    pipeline = Pipeline(
+    return Pipeline(
         stages=[
-            StringIndexer(inputCol="camera_id", outputCol="camera_idx", handleInvalid="keep"),
+            StringIndexer(
+                inputCol="camera_id", outputCol="camera_idx", handleInvalid="keep"
+            ),
             OneHotEncoder(
                 inputCols=["camera_idx", "dow", "hour_of_day"],
                 outputCols=["camera_oh", "dow_oh", "hour_oh"],
@@ -90,7 +88,16 @@ def q_ml_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ]
     )
-    model = pipeline.fit(train)
+
+
+@register("q_ml_forecast", oracle=None)
+@_memoized
+def q_ml_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train the pipeline and score every (camera, dow, hour) slot;
+    returns slot-level predicted volume next to the replay baseline
+    (avg_hourly_volume) for comparison."""
+    train = training_frame(spark, sf_dir).cache()
+    model = _pipeline().fit(train)
 
     slots = (
         train.groupBy("camera_id", "dow", "hour_of_day")
@@ -116,35 +123,6 @@ def q_ml_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 CV_REG_GRID = [0.01, 0.1, 1.0]
 CV_FOLDS = 3
 CV_SEED = 42
-
-
-def _pipeline(reg_param: float = 0.01):
-    from pyspark.ml import Pipeline
-    from pyspark.ml.feature import OneHotEncoder, StringIndexer, VectorAssembler
-    from pyspark.ml.regression import LinearRegression
-
-    return Pipeline(
-        stages=[
-            StringIndexer(
-                inputCol="camera_id", outputCol="camera_idx", handleInvalid="keep"
-            ),
-            OneHotEncoder(
-                inputCols=["camera_idx", "dow", "hour_of_day"],
-                outputCols=["camera_oh", "dow_oh", "hour_oh"],
-                handleInvalid="keep",
-            ),
-            VectorAssembler(
-                inputCols=["camera_oh", "dow_oh", "hour_oh"], outputCol="features"
-            ),
-            LinearRegression(
-                featuresCol="features",
-                labelCol="hourly_total",
-                predictionCol="predicted_volume",
-                regParam=reg_param,
-                elasticNetParam=0.0,
-            ),
-        ]
-    )
 
 
 @register("q_ml_forecast_eval", oracle=None)
@@ -235,7 +213,7 @@ KFOLDS = 5
     oracle=f"""
 WITH a AS (
   SELECT event_id,
-         CAST(CAST(('0x' || substr(md5('fold#' || CAST(event_id AS VARCHAR)), 1, 15)) AS BIGINT)
+         CAST({md5_hash_sql("'fold#' || CAST(event_id AS VARCHAR)", 15)}
               % {KFOLDS} AS INT) AS fold
   FROM events
 )
@@ -256,17 +234,9 @@ def q_kfold_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     i.i.d. evaluation, time-split for leakage-free forecasting.
     """
     e = load_table(spark, sf_dir, "events")
-    fold = (
-        F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("fold#"), F.col("event_id").cast("string"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(KFOLDS),
-        )
+    fold = F.pmod(
+        md5_hash(F.concat(F.lit("fold#"), F.col("event_id").cast("string")), 15),
+        F.lit(KFOLDS),
     ).cast("int")
     return (
         e.select("event_id", fold.alias("fold"))

@@ -30,7 +30,14 @@ import datetime as _dt
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import constant_key, exact_ppm, global_prefix_min, global_rank
+from ..compat import (
+    constant_key,
+    exact_ppm,
+    global_prefix_min,
+    global_rank,
+    md5_hash,
+    md5_hash_sql,
+)
 from ..registry import register
 from ..tables import load_table, traffic_history, with_traffic
 
@@ -1519,6 +1526,10 @@ def q_order_cohort_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- bloom-filter semi-join
 
+# Registry order is import order: the text queries have always been
+# registered just before q_bloom_semi_join, so keep importing them here.
+from ..functions import text as _text  # noqa: E402,F401
+
 BLOOM_M = 16_384  # filter bits (256 packed int64 words)
 BLOOM_K = 4  # hash functions per key
 BLOOM_WORDS = BLOOM_M // 64
@@ -1526,13 +1537,11 @@ BLOOM_WORDS = BLOOM_M // 64
 
 def _bloom_positions(key_str):
     """BLOOM_K bit positions for a key via double hashing
-    (h1 + i·h2) mod M, both md5-derived (functions.text.hash60) so
+    (h1 + i·h2) mod M, both md5-derived (compat.md5_hash) so
     Spark and DuckDB build bit-identical filters; h2 is folded into
     1..M-1 so the probe sequence never degenerates."""
-    from ..functions.text import hash60
-
-    h1 = hash60(key_str) % F.lit(BLOOM_M)
-    h2 = hash60(F.concat(F.lit("#"), key_str)) % F.lit(BLOOM_M - 1) + 1
+    h1 = md5_hash(key_str, 15) % F.lit(BLOOM_M)
+    h2 = md5_hash(F.concat(F.lit("#"), key_str), 15) % F.lit(BLOOM_M - 1) + 1
     return F.transform(
         F.sequence(F.lit(0), F.lit(BLOOM_K - 1)),
         lambda i: (h1 + i.cast("long") * h2) % F.lit(BLOOM_M),
@@ -1540,15 +1549,13 @@ def _bloom_positions(key_str):
 
 
 def _bloom_oracle() -> str:
-    from ..functions.text import hash60_sql
-
     def pos_cte(src: str, name: str) -> str:
         return f"""{name} AS (
   SELECT k, (h1m + i * h2m) % {BLOOM_M} AS p
   FROM (
     SELECT k,
-           {hash60_sql("CAST(k AS VARCHAR)")} % {BLOOM_M} AS h1m,
-           {hash60_sql("'#' || CAST(k AS VARCHAR)")} % {BLOOM_M - 1} + 1 AS h2m
+           {md5_hash_sql("CAST(k AS VARCHAR)", 15)} % {BLOOM_M} AS h1m,
+           {md5_hash_sql("'#' || CAST(k AS VARCHAR)", 15)} % {BLOOM_M - 1} + 1 AS h2m
     FROM {src}
   )
   CROSS JOIN (SELECT CAST(unnest(range(0, {BLOOM_K})) AS BIGINT) AS i)
@@ -1849,6 +1856,11 @@ def q_rolling_origin_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 NEG_K = 4  # negative candidates drawn per positive pair
+_NEG_H_SQL = md5_hash_sql(
+    "'neg#' || CAST(p.custkey AS VARCHAR) || '#'"
+    " || CAST(p.partkey AS VARCHAR) || '#' || CAST(g.j AS VARCHAR)",
+    10,
+)
 
 
 @register(
@@ -1861,9 +1873,7 @@ WITH pos AS (
 np AS (SELECT MAX(l_partkey) AS n_parts FROM lineitem),
 cand AS (
   SELECT p.custkey, g.j AS slot,
-         (CAST(('0x' || substr(md5('neg#' || CAST(p.custkey AS VARCHAR) || '#'
-             || CAST(p.partkey AS VARCHAR) || '#' || CAST(g.j AS VARCHAR)), 1, 10))
-           AS BIGINT) % np.n_parts) + 1 AS neg_part
+         ({_NEG_H_SQL} % np.n_parts) + 1 AS neg_part
   FROM pos p
   CROSS JOIN (SELECT unnest(generate_series(0, {NEG_K - 1})) AS j) g
   CROSS JOIN np
@@ -1921,23 +1931,16 @@ def q_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     np_row = li.agg(F.max("l_partkey").alias("n_parts"))
 
     def hit(slot: int) -> Column:
-        h = F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("neg#"),
-                        F.col("custkey").cast("string"),
-                        F.lit("#"),
-                        F.col("partkey").cast("string"),
-                        F.lit(f"#{slot}"),
-                    )
-                ),
-                1,
-                10,
+        h = md5_hash(
+            F.concat(
+                F.lit("neg#"),
+                F.col("custkey").cast("string"),
+                F.lit("#"),
+                F.col("partkey").cast("string"),
+                F.lit(f"#{slot}"),
             ),
-            16,
             10,
-        ).cast("long")
+        )
         return F.array_contains(
             F.col("pks"), h % F.col("n_parts") + 1
         ).cast("long")

@@ -9,8 +9,9 @@ via ``lag()`` in one window pass and the IoU is pure column arithmetic —
 greatest/least/multiply — entirely inside whole-stage codegen; no UDF.
 
 Testdata has no bboxes, so deterministic synthetic boxes are derived
-from each event's (value, props.k, id) — the same formula on both
-engines, integer-only so cross-engine exact.
+from each event's (value, props.k, id): ``simulate.detections_frame``
+on the Spark side (the same frame the detection stream replays),
+``_BBOX_SQL`` in the oracle — integer-only so cross-engine exact.
 """
 
 from __future__ import annotations
@@ -20,7 +21,8 @@ from pyspark.sql import functions as F
 
 from ..compat import iou
 from ..registry import register
-from ..tables import traffic_history, with_traffic
+from ..streaming.simulate import detections_frame
+from ..tables import with_traffic
 
 IOU_THRESHOLD = 0.5
 
@@ -32,21 +34,6 @@ SELECT camera_id, ts, id,
        CAST(json_extract_string(props, '$.k') AS BIGINT) % 80 + 15 + id % 7 AS y2
 FROM traffic
 """.strip()
-
-
-def _bboxes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    h = traffic_history(spark, sf_dir)
-    x1 = F.col("new_count") % 80
-    y1 = F.get_json_object("props", "$.k").cast("long") % 80
-    return h.select(
-        "camera_id",
-        "ts",
-        "id",
-        x1.alias("x1"),
-        y1.alias("y1"),
-        (x1 + 15 + F.col("id") % 10).alias("x2"),
-        (y1 + 15 + F.col("id") % 7).alias("y2"),
-    )
 
 
 @register(
@@ -85,7 +72,7 @@ def q_iou_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass over the per-camera sort — no rank+self-join, half the work of
     the two-branch form, a single (camera_id) shuffle total, and the
     IoU itself never leaves codegen."""
-    boxes = _bboxes(spark, sf_dir)
+    boxes = detections_frame(spark, sf_dir)
     w = Window.partitionBy("camera_id").orderBy("ts", "id")
     prev = boxes.select(
         "camera_id",

@@ -19,10 +19,10 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..compat import constant_key, dow0, global_rank
+from ..compat import constant_key, dow0, global_rank, md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import load_table
 from ..functions.text import EN_MARKERS, NORM_SQL, _in_list_sql, norm_col
@@ -271,39 +271,51 @@ def _hll_final_sql(raw: str, v: str) -> str:
     )
 
 
+def hll_bucket_col(h: Column) -> Column:
+    """HLL register bucket of a hash column: its top HLL_P bits."""
+    return F.call_function("div", h, F.lit(_HLL_WMOD))
+
+
+def hll_rank_col(h: Column) -> Column:
+    """HLL register rank of a hash column (NULL-safe: NULL hash →
+    NULL rank, which max() then ignores)."""
+    w = h % F.lit(_HLL_WMOD)
+    return (
+        F.when(w == 0, F.lit(HLL_MAX_RANK))
+        .otherwise(F.lit(1) + F.bit_count(w.bitwiseAND(-w) - 1))
+        .cast("int")
+    )
+
+
+# The SQL rendition of hll_bucket_col and hll_rank_col over a hash
+# column `h`, and of _hll_estimate's raw estimate and empty-register
+# count over one group of (bucket, reg) rows.
+_HLL_CELL_SQL = f"""h // {_HLL_WMOD} AS bucket,
+         CASE WHEN h % {_HLL_WMOD} = 0 THEN {HLL_MAX_RANK}
+              ELSE 1 + bit_count(((h % {_HLL_WMOD}) & (-(h % {_HLL_WMOD}))) - 1)
+         END AS rank"""
+_HLL_RAW_SQL = f"""{HLL_NUMER} // (1000 * (CAST(SUM(1::BIGINT << ({HLL_MAX_RANK} - reg)) AS BIGINT)
+             + ({HLL_M} - COUNT(*)) * {1 << HLL_MAX_RANK}))"""
+_HLL_V_SQL = f"{HLL_M} - COUNT(*)"
+
+
 def _hll_registers(e: DataFrame, grp: F.Column) -> DataFrame:
     """(grp, bucket, reg): max rank per (group, register bucket).
 
     One groupBy with map-side partial max — at 100 TB the register
     build is a pure scan + combine down to |groups|·HLL_M tiny rows;
     every downstream step (estimate, merge) runs on registers only."""
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("hll#"), F.col("user_id").cast("string"))),
-                1,
-                10,
-            ),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h")
-    )
+    h = md5_hash(F.concat(F.lit("hll#"), F.col("user_id").cast("string")), 10)
     hb = e.filter(F.col("user_id").isNotNull()).select(
         grp.alias("grp"),
         "user_id",
-        h,
-    )
-    w = F.col("h") % F.lit(_HLL_WMOD)
-    rank = F.when(w == 0, F.lit(HLL_MAX_RANK)).otherwise(
-        F.lit(1) + F.bit_count(w.bitwiseAND(-w) - 1)
+        h.alias("h"),
     )
     return (
         hb.select(
             "grp",
-            F.call_function("div", F.col("h"), F.lit(_HLL_WMOD)).alias("bucket"),
-            rank.cast("int").alias("rank"),
+            hll_bucket_col(F.col("h")).alias("bucket"),
+            hll_rank_col(F.col("h")).alias("rank"),
         )
         .groupBy("grp", "bucket")
         .agg(F.max("rank").alias("reg"))
@@ -334,9 +346,7 @@ def _hll_estimate(regs: DataFrame) -> DataFrame:
     )
 
 
-_HLL_H_SQL = (
-    "CAST(('0x' || substr(md5('hll#' || CAST(user_id AS VARCHAR)), 1, 10)) AS BIGINT)"
-)
+_HLL_H_SQL = md5_hash_sql("'hll#' || CAST(user_id AS VARCHAR)", 10)
 
 
 @register(
@@ -347,10 +357,7 @@ WITH base AS (
   FROM events WHERE user_id IS NOT NULL
 ),
 hb AS (
-  SELECT event_type AS grp, h // {_HLL_WMOD} AS bucket,
-         CASE WHEN h % {_HLL_WMOD} = 0 THEN {HLL_MAX_RANK}
-              ELSE 1 + bit_count(((h % {_HLL_WMOD}) & (-(h % {_HLL_WMOD}))) - 1)
-         END AS rank
+  SELECT event_type AS grp, {_HLL_CELL_SQL}
   FROM base
 ),
 regs AS (
@@ -363,9 +370,8 @@ allregs AS (
 ),
 est0 AS (
   SELECT grp,
-         {HLL_NUMER} // (1000 * (CAST(SUM(1::BIGINT << ({HLL_MAX_RANK} - reg)) AS BIGINT)
-             + ({HLL_M} - COUNT(*)) * {1 << HLL_MAX_RANK})) AS raw,
-         {HLL_M} - COUNT(*) AS v
+         {_HLL_RAW_SQL} AS raw,
+         {_HLL_V_SQL} AS v
   FROM allregs GROUP BY 1
 ),
 est AS (
@@ -892,7 +898,7 @@ RESERVOIR_K = 100
     oracle=f"""
 WITH h AS (
   SELECT doc_id, source, n_chars,
-         CAST(('0x' || substr(md5('rsv#' || CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT)
+         {md5_hash_sql("'rsv#' || CAST(doc_id AS VARCHAR)", 15)}
            AS sort_key
   FROM documents
 ),
@@ -919,13 +925,9 @@ def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         "n_chars",
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("rsv#"), F.col("doc_id").cast("string"))), 1, 15),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("sort_key"),
+        md5_hash(F.concat(F.lit("rsv#"), F.col("doc_id").cast("string")), 15).alias(
+            "sort_key"
+        ),
     )
     return h.orderBy("sort_key", "doc_id").limit(RESERVOIR_K)
 
@@ -955,16 +957,7 @@ def _priority_top(spark: SparkSession, sf_dir: str):
         F.call_function(
             "div",
             F.col("n_chars") * F.lit(PRIORITY_SCALE),
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("ws#"), F.col("doc_id").cast("string"))),
-                    1,
-                    10,
-                ),
-                16,
-                10,
-            ).cast("long")
-            + 1,
+            md5_hash(F.concat(F.lit("ws#"), F.col("doc_id").cast("string")), 10) + 1,
         ).alias("priority"),
     )
     return (
@@ -989,7 +982,7 @@ def _priority_top(spark: SparkSession, sf_dir: str):
 WITH keyed AS (
   SELECT doc_id, n_chars AS weight,
          (n_chars * {PRIORITY_SCALE})
-           // (CAST(('0x' || substr(md5('ws#' || CAST(doc_id AS VARCHAR)), 1, 10)) AS BIGINT) + 1)
+           // ({md5_hash_sql("'ws#' || CAST(doc_id AS VARCHAR)", 10)} + 1)
            AS priority
   FROM documents
 ),
@@ -1264,10 +1257,7 @@ WITH base AS (
   FROM events WHERE user_id IS NOT NULL
 ),
 hb AS (
-  SELECT d AS grp, h // {_HLL_WMOD} AS bucket,
-         CASE WHEN h % {_HLL_WMOD} = 0 THEN {HLL_MAX_RANK}
-              ELSE 1 + bit_count(((h % {_HLL_WMOD}) & (-(h % {_HLL_WMOD}))) - 1)
-         END AS rank
+  SELECT d AS grp, {_HLL_CELL_SQL}
   FROM base
 ),
 regs AS (
@@ -1281,9 +1271,8 @@ win AS (
 ),
 est0 AS (
   SELECT day,
-         {HLL_NUMER} // (1000 * (CAST(SUM(1::BIGINT << ({HLL_MAX_RANK} - reg)) AS BIGINT)
-             + ({HLL_M} - COUNT(*)) * {1 << HLL_MAX_RANK})) AS raw,
-         {HLL_M} - COUNT(*) AS v
+         {_HLL_RAW_SQL} AS raw,
+         {_HLL_V_SQL} AS v
   FROM win GROUP BY 1
 ),
 est AS (SELECT day, {_hll_final_sql("raw", "v")} AS hll_users_7d FROM est0),
@@ -1532,12 +1521,12 @@ _ANALYZE_COLS_SQL = {
     "props": "props",
 }
 
-_ANALYZE_H_SQL = "CAST(('0x' || substr(md5('ant#' || val), 1, 10)) AS BIGINT)"
+_ANALYZE_H_SQL = md5_hash_sql("'ant#' || val", 10)
 
 
 def _analyze_stack_sql(cols: dict[str, str], source: str) -> str:
     """The UNION-ALL column stack of an ANALYZE oracle: one (col, val)
-    arm per profiled column. Shared with the streaming twin, which
+    arm per profiled column. Shared with q_stream_analyze, which
     stacks traffic columns instead of events."""
     return "\n  UNION ALL\n".join(
         f"  SELECT '{c}' AS col, {expr} AS val FROM {source}"
@@ -1564,10 +1553,7 @@ prof AS (
   FROM base GROUP BY 1
 ),
 hb AS (
-  SELECT col AS grp, h // {_HLL_WMOD} AS bucket,
-         CASE WHEN h % {_HLL_WMOD} = 0 THEN {HLL_MAX_RANK}
-              ELSE 1 + bit_count(((h % {_HLL_WMOD}) & (-(h % {_HLL_WMOD}))) - 1)
-         END AS rank
+  SELECT col AS grp, {_HLL_CELL_SQL}
   FROM (SELECT col, {_ANALYZE_H_SQL} AS h FROM base WHERE val IS NOT NULL)
 ),
 regs AS (
@@ -1575,9 +1561,8 @@ regs AS (
 ),
 est AS (
   SELECT grp,
-         {HLL_NUMER} // (1000 * (CAST(SUM(1::BIGINT << ({HLL_MAX_RANK} - reg)) AS BIGINT)
-             + ({HLL_M} - COUNT(*)) * {1 << HLL_MAX_RANK})) AS _raw,
-         {HLL_M} - COUNT(*) AS _v
+         {_HLL_RAW_SQL} AS _raw,
+         {_HLL_V_SQL} AS _v
   FROM regs GROUP BY 1
 )
 SELECT p.col AS col_name, CAST(p.n_rows AS BIGINT) AS n_rows,
@@ -1622,25 +1607,9 @@ def analyze_stack(df: DataFrame, canon: dict[str, Column]) -> DataFrame:
 
 
 def analyze_hash_col() -> Column:
-    """Spark twin of _ANALYZE_H_SQL over the stacked `val` column."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("ant#"), F.col("val"))), 1, 10),
-            16,
-            10,
-        )
-        .cast("long")
-        .alias("h")
-    )
-
-
-def hll_rank_col(h: Column) -> Column:
-    """HLL register rank of a hash column (NULL-safe: NULL hash →
-    NULL rank, which max() then ignores)."""
-    w = h % F.lit(_HLL_WMOD)
-    return F.when(w == 0, F.lit(HLL_MAX_RANK)).otherwise(
-        F.lit(1) + F.bit_count(w.bitwiseAND(-w) - 1)
-    )
+    """The salted 40-bit hash `h` of the stacked `val` column;
+    _ANALYZE_H_SQL is the same compat.md5_hash pair's SQL side."""
+    return md5_hash(F.concat(F.lit("ant#"), F.col("val")), 10).alias("h")
 
 
 @register("q_analyze_table", oracle=_analyze_oracle())
@@ -1686,10 +1655,8 @@ def q_analyze_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         "col",
         "val",
         "c",
-        F.coalesce(
-            F.call_function("div", F.col("h"), F.lit(_HLL_WMOD)), F.lit(-1)
-        ).alias("bucket"),
-        hll_rank_col(F.col("h")).cast("int").alias("rank"),
+        F.coalesce(hll_bucket_col(F.col("h")), F.lit(-1)).alias("bucket"),
+        hll_rank_col(F.col("h")).alias("rank"),
     )
     g2 = (
         hashed.groupBy("col", "bucket")
@@ -1876,10 +1843,7 @@ def q_constraint_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 SMP_MOD = 1000
 SMP_PERMILLE = 100  # rows with hash % SMP_MOD < 100 → 10% sample
 
-_SMP_H_SQL = (
-    f"CAST(('0x' || substr(md5('smp#' || CAST(event_id AS VARCHAR)), 1, 15))"
-    f" AS BIGINT) % {SMP_MOD}"
-)
+_SMP_H_SQL = md5_hash_sql("'smp#' || CAST(event_id AS VARCHAR)", 15) + f" % {SMP_MOD}"
 
 
 @register(
@@ -1961,15 +1925,7 @@ def q_analyze_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events")
     cents = F.floor(F.col("value") * 10000).cast("long")
     smp_hash = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("smp#"), F.col("event_id").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
+        md5_hash(F.concat(F.lit("smp#"), F.col("event_id").cast("string")), 15),
         F.lit(SMP_MOD),
     )
     pu = (

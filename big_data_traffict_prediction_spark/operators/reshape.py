@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..compat import md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import load_table
 
@@ -482,14 +483,12 @@ def _bloom_skip_oracle() -> str:
     from .scans import ZM_BLOOM_BITS
 
     n = CLUSTER_FILES
-    bit = (
-        "CAST(CAST(('0x' || substr(md5('zm#' || CAST(cam AS VARCHAR)), 1, 15))"
-        f" AS BIGINT) % {ZM_BLOOM_BITS} AS INT)"
-    )
+    h = md5_hash_sql("'zm#' || CAST(cam AS VARCHAR)", 15)
+    bit = f"CAST({h} % {ZM_BLOOM_BITS} AS INT)"
     return with_traffic(f"""
 , base AS (
   SELECT CAST(camera_id AS BIGINT) AS cam, id,
-         CAST(('0x' || substr(md5('f#' || camera_id), 1, 15)) AS BIGINT)
+         {md5_hash_sql("'f#' || camera_id", 15)}
            % {n} AS bf
   FROM traffic
 ),
@@ -574,9 +573,8 @@ def q_bloom_skipping_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded non-equi join by construction); range-layout file
     assignment uses compat.global_rank, never a data-sized window."""
     from ..compat import global_rank
-    from ..functions.text import hash60
     from ..tables import traffic_history
-    from .scans import ZM_BLOOM_BITS
+    from .scans import zm_bloom_bit
 
     n = CLUSTER_FILES
     h = traffic_history(spark, sf_dir)
@@ -584,7 +582,7 @@ def q_bloom_skipping_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("camera_id").cast("long").alias("cam"),
         "id",
         F.pmod(
-            hash60(F.concat(F.lit("f#"), F.col("camera_id"))), F.lit(n)
+            md5_hash(F.concat(F.lit("f#"), F.col("camera_id")), 15), F.lit(n)
         ).alias("bf"),
     )
     rg = global_rank(base, ["cam", "id"]).select(
@@ -604,10 +602,7 @@ def q_bloom_skipping_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sufficient statistic. The previous plan scanned `lay` three
     # times (files agg, true-pairs distinct, cams distinct).
     g = lay.distinct().localCheckpoint(eager=False)  # feeds files AND cams
-    bloom_bit = F.pmod(
-        hash60(F.concat(F.lit("zm#"), F.col("cam").cast("string"))),
-        F.lit(ZM_BLOOM_BITS),
-    ).cast("int")
+    bloom_bit = zm_bloom_bit(F.col("cam").cast("string"))
     files = g.groupBy("layout", "f").agg(
         F.min("cam").alias("mn"),
         F.max("cam").alias("mx"),
@@ -626,15 +621,11 @@ def q_bloom_skipping_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = cams.sparkSession.createDataFrame(
         [("minmax",), ("bloom",)], ["idx"]
     )
-    probe_bit = F.pmod(
-        hash60(F.concat(F.lit("zm#"), F.col("cam").cast("string"))),
-        F.lit(ZM_BLOOM_BITS),
-    ).cast("int")
     hit = F.when(
         F.col("idx") == "minmax",
         (F.col("cam") >= F.col("mn")) & (F.col("cam") <= F.col("mx")),
     ).otherwise(
-        F.call_function("shiftright", F.col("bloom"), probe_bit).bitwiseAND(
+        F.call_function("shiftright", F.col("bloom"), bloom_bit).bitwiseAND(
             F.lit(1)
         )
         == 1

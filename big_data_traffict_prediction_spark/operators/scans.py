@@ -15,9 +15,10 @@ filters instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..compat import md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import traffic_history, with_traffic
 
@@ -226,6 +227,21 @@ ZM_PROBE_CAMERA = "7"  # point-lookup probe for the bloom column
 ZM_PROBE_COUNT = 450  # range probe for the min/max columns
 
 
+def zm_bloom_bit(camera: Column) -> Column:
+    """Bloom bit of a camera id in a zone fingerprint: its salted
+    60-bit hash mod ZM_BLOOM_BITS. The bit inside _ZM_BLOOM_SQL."""
+    return F.pmod(
+        md5_hash(F.concat(F.lit("zm#"), camera), 15), F.lit(ZM_BLOOM_BITS)
+    ).cast("int")
+
+
+# One zone's fingerprint: the OR of 1 << bit over its rows.
+_ZM_BLOOM_SQL = f"""CAST(BIT_OR(1::BIGINT << CAST(
+             {md5_hash_sql("'zm#' || camera_id", 15)}
+               % {ZM_BLOOM_BITS} AS INT)) AS BIGINT)"""
+_ZM_PROBE_SQL = md5_hash_sql(f"'zm#{ZM_PROBE_CAMERA}'", 15)
+
+
 @register(
     "q_zone_map_stats",
     oracle=with_traffic(f"""
@@ -236,14 +252,12 @@ ZM_PROBE_COUNT = 450  # range probe for the min/max columns
          CAST(COUNT(DISTINCT camera_id) AS BIGINT) AS n_cameras,
          CAST(MIN(new_count) AS BIGINT) AS min_count,
          CAST(MAX(new_count) AS BIGINT) AS max_count,
-         CAST(BIT_OR(1::BIGINT << CAST(
-             CAST(('0x' || substr(md5('zm#' || camera_id), 1, 15)) AS BIGINT)
-               % {ZM_BLOOM_BITS} AS INT)) AS BIGINT) AS bloom_fp
+         {_ZM_BLOOM_SQL} AS bloom_fp
   FROM traffic GROUP BY 1, 2
 )
 SELECT d, hr, n_rows, n_cameras, min_count, max_count, bloom_fp,
        ((bloom_fp >> CAST(
-           CAST(('0x' || substr(md5('zm#{ZM_PROBE_CAMERA}'), 1, 15)) AS BIGINT)
+           {_ZM_PROBE_SQL}
              % {ZM_BLOOM_BITS} AS INT)) & 1) = 0 AS skip_for_camera,
        NOT ({ZM_PROBE_COUNT} BETWEEN min_count AND max_count) AS skip_for_range
 FROM zm
@@ -256,8 +270,8 @@ def q_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions without opening them (Delta/Iceberg column stats,
     parquet row-group min/max, at engine level): per (day, hour) zone —
     the file grain of a partitioned lake layout — the row count, distinct cameras, min/max of the measure, and a 62-bit
-    bloom fingerprint of the camera ids (bit = md5-hash mod 62, OR-
-    folded — deterministic, so the DuckDB twin matches bit for bit).
+    bloom fingerprint of the camera ids (bit = zm_bloom_bit, OR-folded;
+    _ZM_BLOOM_SQL is the oracle's form, so DuckDB matches bit for bit).
     Two probe columns demonstrate the pruning decision itself:
     ``skip_for_camera`` (bloom bit for a fixed probe camera unset →
     the whole zone cannot contain it) and ``skip_for_range`` (probe
@@ -271,14 +285,6 @@ def q_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly what Spark's own PartitionFilters + parquet row-group
     stats do with this same metadata."""
     h = traffic_history(spark, sf_dir)
-    bit = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("zm#"), F.col("camera_id"))), 1, 15),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(ZM_BLOOM_BITS),
-    ).cast("int")
     one = F.lit(1).cast("long")
     zm = (
         h.select(
@@ -286,7 +292,7 @@ def q_zone_map_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.hour("ts").cast("long").alias("hr"),
             "camera_id",
             "new_count",
-            bit.alias("bit"),
+            zm_bloom_bit(F.col("camera_id")).alias("bit"),
         )
         .groupBy("d", "hr")
         .agg(
@@ -331,21 +337,13 @@ def zone_stat_frame(side: DataFrame) -> DataFrame:
     algebra itself: counts ADD, min/max FOLD, fingerprints OR — the law
     merge(a ⊕ b) == rebuild(a ∪ b) for arbitrary slices is pinned by
     tests/test_analytics.py::test_zone_map_merge_law_arbitrary_splits."""
-    bit = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("zm#"), F.col("camera_id"))), 1, 15),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(ZM_BLOOM_BITS),
-    ).cast("int")
     one = F.lit(1).cast("long")
     return (
         side.select(
             F.date_format("ts", "yyyy-MM-dd").alias("d"),
             F.hour("ts").cast("long").alias("hr"),
             "new_count",
-            bit.alias("bit"),
+            zm_bloom_bit(F.col("camera_id")).alias("bit"),
         )
         .groupBy("d", "hr")
         .agg(
@@ -386,11 +384,6 @@ def merge_zone_stats(a: DataFrame, b: DataFrame) -> DataFrame:
         "a_n",
         "b_n",
     )
-
-
-_ZM_BLOOM_SQL = f"""CAST(BIT_OR(1::BIGINT << CAST(
-             CAST(('0x' || substr(md5('zm#' || camera_id), 1, 15)) AS BIGINT)
-               % {ZM_BLOOM_BITS} AS INT)) AS BIGINT)"""
 
 
 @register(
@@ -1050,10 +1043,8 @@ def q_selectivity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 SH_MOD = 1000
 SH_PERMILLE = 100
 
-_SH_PRED_SQL = (
-    f" AND CAST(('0x' || substr(md5('shs#' || CAST(id AS VARCHAR)), 1, 15))"
-    f" AS BIGINT) % {SH_MOD} < {SH_PERMILLE}"
-)
+_SH_H_SQL = md5_hash_sql("'shs#' || CAST(id AS VARCHAR)", 15)
+_SH_PRED_SQL = f" AND {_SH_H_SQL} % {SH_MOD} < {SH_PERMILLE}"
 
 
 @register(
@@ -1138,12 +1129,11 @@ def q_sample_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("exact_rows"),
     )
     from ..compat import idiv as div
-    from ..functions.text import hash60
 
     h = traffic_history(spark, sf_dir)
     sample = h.filter(
         F.pmod(
-            hash60(F.concat(F.lit("shs#"), F.col("id").cast("string"))),
+            md5_hash(F.concat(F.lit("shs#"), F.col("id").cast("string")), 15),
             F.lit(SH_MOD),
         )
         < SH_PERMILLE

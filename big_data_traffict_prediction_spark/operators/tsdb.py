@@ -16,10 +16,10 @@ All operate on the trailing windows ending at the pinned NOW
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import NOW_EPOCH, bucket_epoch, epoch_s, fixed_point
+from ..compat import NOW_EPOCH, bucket_epoch, epoch_s, fixed_point, md5_hash, md5_hash_sql
 from ..registry import register
 from ..tables import traffic_history, with_traffic
 
@@ -537,6 +537,14 @@ CM_DEPTH = 4  # independent hash rows
 CM_WIDTH = 512  # buckets per row
 
 
+def _cm_bucket() -> Column:
+    """Count-min cell of the (d, camera_id) row: salted by the depth row."""
+    return F.pmod(
+        md5_hash(F.concat(F.col("d").cast("string"), F.lit("#"), F.col("camera_id")), 15),
+        F.lit(CM_WIDTH),
+    )
+
+
 @register(
     "q_heavy_hitters_sketch",
     oracle=with_traffic(f"""
@@ -546,7 +554,7 @@ CM_WIDTH = 512  # buckets per row
 ),
 sk AS (
   SELECT d,
-         CAST(('0x' || substr(md5(CAST(d AS VARCHAR) || '#' || camera_id), 1, 15)) AS BIGINT)
+         {md5_hash_sql("CAST(d AS VARCHAR) || '#' || camera_id", 15)}
            % {CM_WIDTH} AS bucket,
          CAST(SUM(new_count) AS BIGINT) AS cell
   FROM ex GROUP BY 1, 2
@@ -557,7 +565,7 @@ cams AS (
 ),
 probe AS (
   SELECT c.camera_id, c.exact_total, g.d,
-         CAST(('0x' || substr(md5(CAST(g.d AS VARCHAR) || '#' || c.camera_id), 1, 15)) AS BIGINT)
+         {md5_hash_sql("CAST(g.d AS VARCHAR) || '#' || c.camera_id", 15)}
            % {CM_WIDTH} AS bucket
   FROM cams c, (SELECT unnest(generate_series(0, {CM_DEPTH - 1})) AS d) g
 )
@@ -585,16 +593,9 @@ def q_heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = traffic_history(spark, sf_dir)
     d_col = F.explode(F.array(*[F.lit(d) for d in range(CM_DEPTH)])).alias("d")
 
-    def bucket(d, cam):
-        from ..functions.text import hash60
-
-        return F.pmod(
-            hash60(F.concat(d.cast("string"), F.lit("#"), cam)), F.lit(CM_WIDTH)
-        )
-
     ex = h.select("camera_id", "new_count", d_col)
     sk = (
-        ex.withColumn("bucket", bucket(F.col("d"), F.col("camera_id")))
+        ex.withColumn("bucket", _cm_bucket())
         .groupBy("d", "bucket")
         .agg(F.sum("new_count").cast("long").alias("cell"))
     )
@@ -602,7 +603,7 @@ def q_heavy_hitters_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("new_count").cast("long").alias("exact_total")
     )
     probe = cams.select("camera_id", "exact_total", d_col).withColumn(
-        "bucket", bucket(F.col("d"), F.col("camera_id"))
+        "bucket", _cm_bucket()
     )
     return (
         probe.join(F.broadcast(sk), ["d", "bucket"])
@@ -633,7 +634,7 @@ sides AS (
 _CM_JOIN_CTES = f"""
 grid AS (
   SELECT d,
-         CAST(('0x' || substr(md5(CAST(d AS VARCHAR) || '#' || camera_id), 1, 15)) AS BIGINT)
+         {md5_hash_sql("CAST(d AS VARCHAR) || '#' || camera_id", 15)}
            % {CM_WIDTH} AS bucket,
          CAST(SUM(am) AS BIGINT) AS ca,
          CAST(SUM(pm) AS BIGINT) AS cb
@@ -673,20 +674,10 @@ def cm_join_grid(h: DataFrame) -> DataFrame:
     streaming state — q_stream_join_size_sketch reuses this builder on
     the stream). Works on batch and streaming frames alike: one
     map-side-combined aggregation to 2·CM_DEPTH·CM_WIDTH cells."""
-    from ..functions.text import hash60
-
     d_col = F.explode(F.array(*[F.lit(d) for d in range(CM_DEPTH)])).alias("d")
     return (
         h.select("camera_id", "am", "pm", d_col)
-        .withColumn(
-            "bucket",
-            F.pmod(
-                hash60(
-                    F.concat(F.col("d").cast("string"), F.lit("#"), F.col("camera_id"))
-                ),
-                F.lit(CM_WIDTH),
-            ),
-        )
+        .withColumn("bucket", _cm_bucket())
         .groupBy("d", "bucket")
         .agg(
             F.sum("am").cast("long").alias("ca"),

@@ -41,7 +41,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..compat import NOW_EPOCH
+from ..compat import NOW_EPOCH, md5_hash_sql
 from ..operators.prediction import _THRESHOLDS_CTE
 from ..registry import register
 from ..tables import memo_on_input, with_traffic
@@ -662,16 +662,14 @@ def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 from ..operators.pipeline import (  # noqa: E402  (shared sketch pieces)
-    HLL_M,
-    HLL_MAX_RANK,
-    HLL_NUMER,
+    _HLL_CELL_SQL,
+    _HLL_RAW_SQL,
+    _HLL_V_SQL,
+    _hll_estimate,
     _hll_final_sql,
-    _HLL_WMOD,
 )
 
-_SHLL_H_SQL = (
-    "CAST(('0x' || substr(md5('shll#' || camera_id), 1, 10)) AS BIGINT)"
-)
+_SHLL_H_SQL = md5_hash_sql("'shll#' || camera_id", 10)
 
 
 @register(
@@ -680,10 +678,7 @@ _SHLL_H_SQL = (
         f"""
 , hb AS (
   SELECT time_bucket(INTERVAL '1 hour', ts) AS window_start,
-         h // {_HLL_WMOD} AS bucket,
-         CASE WHEN h % {_HLL_WMOD} = 0 THEN {HLL_MAX_RANK}
-              ELSE 1 + bit_count(((h % {_HLL_WMOD}) & (-(h % {_HLL_WMOD}))) - 1)
-         END AS rank
+         {_HLL_CELL_SQL}
   FROM (SELECT ts, {_SHLL_H_SQL} AS h FROM traffic)
 ),
 regs AS (
@@ -691,9 +686,8 @@ regs AS (
 ),
 est0 AS (
   SELECT window_start,
-         {HLL_NUMER} // (1000 * (CAST(SUM(1::BIGINT << ({HLL_MAX_RANK} - reg)) AS BIGINT)
-             + ({HLL_M} - COUNT(*)) * {1 << HLL_MAX_RANK})) AS raw,
-         {HLL_M} - COUNT(*) AS v
+         {_HLL_RAW_SQL} AS raw,
+         {_HLL_V_SQL} AS v
   FROM regs GROUP BY 1
 )
 SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
@@ -715,30 +709,23 @@ def q_stream_hll_cameras(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the drained append-mode output is invariant to chunking and
     replay order and the whole pipeline hash-checks against the
     batch-twin oracle (the rare fully-verified streaming sketch).
-    The estimate itself (same integer floor estimator + LC dispatch
-    as q_hll_distinct) runs POST-DRAIN on the register table — 64
-    rows per closed window, never the stream."""
+    The estimate itself (pipeline._hll_estimate, the estimator
+    q_hll_distinct calls; the oracle uses its SQL forms) runs
+    POST-DRAIN on the register table — 64 rows per closed window,
+    never the stream."""
     out = _drain(spark, sf_dir, lambda read: windows.hll_register_windows(read()))
-    denom = F.sum(
-        F.expr(f"shiftleft(cast(1 as bigint), {HLL_MAX_RANK} - reg)")
-    ) + (F.lit(HLL_M) - F.count(F.lit(1))) * F.lit(1 << HLL_MAX_RANK)
-    est0 = (
-        out.groupBy("window_start", "window_end")
-        .agg(denom.alias("_d"), (F.lit(HLL_M) - F.count(F.lit(1))).alias("_v"))
-        .select(
-            "window_start",
-            "window_end",
-            F.call_function(
-                "div", F.lit(HLL_NUMER), F.lit(1000) * F.col("_d")
-            ).alias("_raw"),
-            "_v",
-        )
+    regs = out.select(
+        F.struct("window_start", "window_end").alias("grp"), "bucket", "reg"
     )
-    return est0.select(
-        "window_start",
-        "window_end",
-        F.expr(_hll_final_sql("_raw", "_v")).alias("hll_cameras"),
-    ).orderBy("window_start")
+    return (
+        _hll_estimate(regs)
+        .select(
+            "grp.window_start",
+            "grp.window_end",
+            F.col("hll_users").alias("hll_cameras"),
+        )
+        .orderBy("window_start")
+    )
 
 
 # Streaming CDC upsert window: target state as of T1 (batch side), one
@@ -838,11 +825,7 @@ def q_stream_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-from ..operators.scans import ZM_BLOOM_BITS  # noqa: E402  (shared width)
-
-_SZM_BLOOM_SQL = f"""CAST(BIT_OR(1::BIGINT << CAST(
-             CAST(('0x' || substr(md5('zm#' || camera_id), 1, 15)) AS BIGINT)
-               % {ZM_BLOOM_BITS} AS INT)) AS BIGINT)"""
+from ..operators.scans import _ZM_BLOOM_SQL, zm_bloom_bit  # noqa: E402
 
 
 @register(
@@ -853,7 +836,7 @@ SELECT strftime(ts, '%Y-%m-%d') AS d,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
        CAST(MIN(new_count) AS BIGINT) AS min_count,
        CAST(MAX(new_count) AS BIGINT) AS max_count,
-       {_SZM_BLOOM_SQL} AS bloom_fp
+       {_ZM_BLOOM_SQL} AS bloom_fp
 FROM traffic GROUP BY 1, 2
 ORDER BY d, hr
 """),
@@ -867,7 +850,9 @@ def q_stream_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit_or) — each input row is absorbed exactly once into per-zone
     state, so the drained output is invariant to chunking and replay
     order and the whole index hash-checks against the batch SQL (the
-    same discipline as the streaming HLL and CDC twins). The
+    same discipline as the streaming HLL and CDC twins). The bloom
+    bit is scans.zm_bloom_bit and the oracle's fingerprint is
+    scans._ZM_BLOOM_SQL, both shared with the batch index. The
     non-mergeable COUNT(DISTINCT) is absent here for the same reason
     it is absent from q_zone_map_merge: streaming state must be
     mergeable, which is exactly the lakehouse stats restriction.
@@ -875,16 +860,6 @@ def q_stream_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: state is |zones| rows of five scalars — partition
     grain, never row grain; at 100 TB the same query reads Kafka/file
     drops and the index lands via foreachBatch upsert."""
-    bit = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("zm#"), F.col("camera_id"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(ZM_BLOOM_BITS),
-    ).cast("int")
     out = _drain(
         spark,
         sf_dir,
@@ -893,7 +868,7 @@ def q_stream_zone_map(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_format("ts", "yyyy-MM-dd").alias("d"),
             F.hour("ts").cast("long").alias("hr"),
             "new_count",
-            bit.alias("bit"),
+            zm_bloom_bit(F.col("camera_id")).alias("bit"),
         )
         .groupBy("d", "hr")
         .agg(
@@ -1104,11 +1079,10 @@ def q_stream_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold cells — fixed-size whatever the event rate; the post-drain
     rollup touches only that frame."""
     from ..operators.pipeline import (
-        _HLL_WMOD,
-        _hll_estimate,
         analyze_hash_col,
         analyze_stack,
         canon_int_col,
+        hll_bucket_col,
         hll_rank_col,
     )
     from ..tables import traffic_history
@@ -1130,10 +1104,8 @@ def q_stream_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
             stack.select(
                 "col",
                 "val",
-                F.coalesce(
-                    F.call_function("div", F.col("h"), F.lit(_HLL_WMOD)), F.lit(-1)
-                ).alias("bucket"),
-                hll_rank_col(F.col("h")).cast("int").alias("rank"),
+                F.coalesce(hll_bucket_col(F.col("h")), F.lit(-1)).alias("bucket"),
+                hll_rank_col(F.col("h")).alias("rank"),
             )
             .groupBy("col", "bucket")
             .agg(

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from ..tables import traffic_history
 
-# traffic_history shape + synthetic bbox (same formula as operators/iou.py)
+# traffic_history shape + synthetic bbox (see detections_frame)
 STREAM_SCHEMA = T.StructType(
     [
         T.StructField("id", T.LongType()),
@@ -38,7 +38,9 @@ STREAM_SCHEMA = T.StructType(
 
 
 def detections_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream: traffic_history + synthetic bboxes."""
+    """Batch twin of the stream: traffic_history + synthetic bboxes.
+    The one Spark definition of the boxes; q_iou_dedup reads them from
+    here and its oracle from operators/iou._BBOX_SQL."""
     h = traffic_history(spark, sf_dir)
     x1 = F.col("new_count") % 80
     y1 = F.get_json_object("props", "$.k").cast("long") % 80

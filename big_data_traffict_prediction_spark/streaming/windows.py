@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
+from ..compat import md5_hash
 from ..session import shuffle_partitions_at_most
 
 WATERMARK = "30 minutes"
@@ -267,30 +268,18 @@ def hll_register_windows(stream: DataFrame, duration: str = "1 hour") -> DataFra
     open window; registers hold 64 small ints whatever the
     cardinality). ``max`` is commutative/idempotent, so the drained
     output is chunking- and order-invariant — fully hash-checkable
-    like the other event-time window queries. Same hash/rank
-    construction as the batch q_hll_distinct (operators/pipeline)."""
-    from ..operators.pipeline import HLL_MAX_RANK, _HLL_WMOD
+    like the other event-time window queries. Bucket and rank come
+    from pipeline.hll_bucket_col / hll_rank_col, the kernels of the
+    batch q_hll_distinct."""
+    from ..operators.pipeline import hll_bucket_col, hll_rank_col
 
-    h = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("shll#"), F.col("camera_id"))), 1, 10),
-            16,
-            10,
-        )
-        .cast("long")
-    )
-    w = h % F.lit(_HLL_WMOD)
-    rank = (
-        F.when(w == 0, F.lit(HLL_MAX_RANK))
-        .otherwise(F.lit(1) + F.bit_count(w.bitwiseAND(-w) - 1))
-        .cast("int")
-    )
+    h = md5_hash(F.concat(F.lit("shll#"), F.col("camera_id")), 10)
     return (
         stream.withWatermark("ts", WATERMARK)
         .select(
             "ts",
-            F.call_function("div", h, F.lit(_HLL_WMOD)).alias("bucket"),
-            rank.alias("rank"),
+            hll_bucket_col(h).alias("bucket"),
+            hll_rank_col(h).alias("rank"),
         )
         .groupBy(F.window("ts", duration).alias("w"), "bucket")
         .agg(F.max("rank").alias("reg"))

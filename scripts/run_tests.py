@@ -5,7 +5,10 @@ fits a 10-minute sandbox window without pytest-xdist (not installed,
 and installs are off-limits in this container).
 
 Sharding is greedy bin-packing by per-FILE durations measured from
-each run's junitxml (scripts/test_durations.json — self-tuning).
+each passing run's junitxml. A run writes them to the git-ignored
+scripts/.test_durations.local.json and the next run reads that file
+first, falling back to the tracked seed scripts/test_durations.json,
+so running the tests leaves the tree clean.
 Files heavier than SPLIT_ABOVE are split into chunks of collected
 node ids so one big parametrized file (test_oracle_parity.py) cannot
 bound the wall clock. Each worker gets SPARK_GRAFT_CPUS =
@@ -28,7 +31,8 @@ import time
 import xml.etree.ElementTree as ET
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-DURATIONS = os.path.join(REPO, "scripts", "test_durations.json")
+DURATIONS = os.path.join(REPO, "scripts", "test_durations.json")  # tracked seed
+MEASURED = os.path.join(REPO, "scripts", ".test_durations.local.json")  # git-ignored
 DEFAULT_WEIGHT = 60.0  # unknown files: assume mid-weight
 SPLIT_ABOVE = 180.0  # node-split files heavier than this (seconds)
 SPLIT_TARGET = 120.0  # aim for chunks of about this weight
@@ -36,12 +40,15 @@ JVM_OVERHEAD = 20.0  # per-chunk session startup, charged when packing
 
 
 def _load_durations() -> dict[str, float]:
-    try:
-        with open(DURATIONS) as fh:
-            data = json.load(fh)
-        return {k: float(v) for k, v in data.items()} if isinstance(data, dict) else {}
-    except (OSError, ValueError):
-        return {}
+    for path in (MEASURED, DURATIONS):
+        try:
+            with open(path) as fh:
+                data = json.load(fh)
+            if isinstance(data, dict):
+                return {k: float(v) for k, v in data.items()}
+        except (OSError, ValueError):
+            continue
+    return {}
 
 
 def _split_heavy(files: list[str], weights: dict[str, float]) -> list[tuple[list[str], float]]:
@@ -164,7 +171,7 @@ def main() -> int:
         new_weights = {k: v for k, v in weights.items() if k not in set(files)}
         new_weights.update({f: round(t, 2) for f, t in measured.items()})
         try:
-            with open(DURATIONS, "w") as fh:
+            with open(MEASURED, "w") as fh:
                 json.dump(dict(sorted(new_weights.items())), fh, indent=1)
         except OSError:
             pass

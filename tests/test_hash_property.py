@@ -8,6 +8,10 @@ twin folds every remainder back into [0, M); these tests pin that
 equivalence against a plain-Python pmod model over the FULL int64
 domain — including the negative ids the testdata never produces.
 Spark-free: DuckDB + Python only, so the property runs in milliseconds.
+
+The salted md5 hash (compat.md5_hash / md5_hash_sql) and the HLL
+register cell built on it get the same treatment: each rendition
+against a Python model, with one small Spark test for the Column side.
 """
 
 from __future__ import annotations
@@ -110,3 +114,79 @@ def test_hll_rank_bounds_and_determinism(ids):
     assert all(0 <= b < HLL_M for b in regs)
     assert all(1 <= r <= HLL_MAX_RANK for r in regs.values())
     assert regs == _hll_registers_py(ids)  # pure function of the set
+
+
+# ---- salted md5 hash (compat.md5_hash / md5_hash_sql) ----
+
+md5_keys = st.text(alphabet=st.characters(blacklist_categories=("Cs",)), max_size=40)
+
+
+def _py_md5_hash(s: str, digits: int) -> int:
+    import hashlib
+
+    return int(hashlib.md5(s.encode()).hexdigest()[:digits], 16)
+
+
+@settings(max_examples=200, deadline=None)
+@given(s=md5_keys, digits=st.sampled_from([10, 15]))
+def test_md5_hash_sql_matches_python_model(s, digits):
+    from big_data_traffict_prediction_spark.compat import md5_hash_sql
+
+    got = duckdb.connect().execute(f"SELECT {md5_hash_sql('?', digits)}", [s]).fetchone()[0]
+    assert got == _py_md5_hash(s, digits)
+    assert 0 <= got < 16**digits
+
+
+def test_md5_hash_takes_only_the_two_widths():
+    import pytest
+
+    from big_data_traffict_prediction_spark.compat import md5_hash_sql
+
+    for digits in (9, 16):  # 16 hex digits no longer fit a BIGINT
+        with pytest.raises(ValueError):
+            md5_hash_sql("x", digits)
+
+
+@settings(max_examples=200, deadline=None)
+@given(h=st.integers(min_value=0, max_value=2**40 - 1))
+def test_hll_cell_sql_matches_python_model(h):
+    from big_data_traffict_prediction_spark.operators.pipeline import _HLL_CELL_SQL
+
+    got = duckdb.connect().execute(
+        f"SELECT {_HLL_CELL_SQL} FROM (SELECT CAST(? AS BIGINT) AS h)", [h]
+    ).fetchone()
+    assert got == _hll_rank(h)
+
+
+def test_md5_hash_column_matches_python_model(spark):
+    """The Spark rendition on a small frame: equal to the model at both
+    widths, and NULL in gives NULL out."""
+    from pyspark.sql import functions as F
+
+    from big_data_traffict_prediction_spark.compat import md5_hash
+    from big_data_traffict_prediction_spark.operators.pipeline import (
+        hll_bucket_col,
+        hll_rank_col,
+    )
+
+    keys = ["", "7", "zm#7", "hll#12345", "naïve ünïcode", None]
+    h10 = md5_hash(F.col("k"), 10)
+    rows = (
+        spark.createDataFrame([(k,) for k in keys], "k string")
+        .select(
+            "k",
+            h10.alias("h10"),
+            md5_hash(F.col("k"), 15).alias("h15"),
+            hll_bucket_col(h10).alias("bucket"),
+            hll_rank_col(h10).alias("rank"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(keys)
+    for r in rows:
+        if r.k is None:
+            assert (r.h10, r.h15, r.bucket, r.rank) == (None, None, None, None)
+            continue
+        assert r.h10 == _py_md5_hash(r.k, 10)
+        assert r.h15 == _py_md5_hash(r.k, 15)
+        assert (r.bucket, r.rank) == _hll_rank(r.h10)

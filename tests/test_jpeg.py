@@ -109,18 +109,17 @@ def test_unsupported_streams_gated_not_faked():
 
 
 def test_spark_pipeline_decodes_jpeg_images(spark, sf_dir):
-    """encode_media(image_codec='jpeg') → decode_features: every image
-    decodes ok with the metadata dimensions, and the lossy thumbnail
-    stays close to the lossless PGM path's."""
+    """encoded_features(image_codec='jpeg'): every image decodes ok
+    with the metadata dimensions, and the lossy thumbnail stays close
+    to the lossless PGM path's."""
     from big_data_traffict_prediction_spark.functions.multimodal import (
-        decode_features,
-        encode_media,
+        encoded_features,
         media_table,
     )
 
     m = media_table(spark, sf_dir).limit(120)
-    jp = decode_features(encode_media(m, image_codec="jpeg"))
-    pg = decode_features(encode_media(m, image_codec="pgm"))
+    jp = encoded_features(m, image_codec="jpeg")
+    pg = encoded_features(m, image_codec="pgm")
     jrows = {r.media_id: r for r in jp.filter("kind = 'image'").collect()}
     prows = {r.media_id: r for r in pg.filter("kind = 'image'").collect()}
     assert jrows and set(jrows) == set(prows)

@@ -955,51 +955,3 @@ def test_pqf_score_kernel_matches_hof_twin(spark, sf_dir):
     a, b = canon(hof_ivf), canon(kernel_ivf)
     assert len(a) > 0
     assert a.equals(b), "probe-filtered ADC kernel diverged from HOF spec"
-
-
-def test_encoded_features_matches_two_stage(spark, sf_dir):
-    """The fused encoded_features (one mapInPandas) must be row-for-row
-    identical to decode_features(encode_media(df)) — both the default
-    single-codec shape and the mixed-codec cycle (r14 fusion)."""
-    import pandas as pd
-
-    from big_data_traffict_prediction_spark.functions.multimodal import (
-        decode_features,
-        encode_media,
-        encoded_features,
-        media_table,
-    )
-
-    for codec, on_error in (("pgm", "raise"), ("mixed", "raise"), ("pgm", "mark")):
-        df = media_table(spark, sf_dir, spread=True)
-        two = (
-            decode_features(encode_media(df, image_codec=codec), on_error=on_error)
-            .toPandas()
-            .sort_values("media_id")
-            .reset_index(drop=True)
-        )
-        fused = (
-            encoded_features(df, image_codec=codec, on_error=on_error)
-            .toPandas()
-            .sort_values("media_id")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(two, fused)
-
-    # the error-absorption closure is ONE shared definition
-    # (_decoder_for) — pin its mark/raise behavior directly, which
-    # covers both the two-stage and fused shapes (from-spec encoders
-    # never emit an undecodable container, so a fused error row cannot
-    # be produced organically)
-    import pytest
-
-    from big_data_traffict_prediction_spark.functions.multimodal import (
-        _DECODE_ERROR_ROW,
-        _decoder_for,
-    )
-
-    assert _decoder_for("mark")(b"\x00not-a-container", "image") is _DECODE_ERROR_ROW
-    with pytest.raises((ValueError, NotImplementedError)):
-        _decoder_for("raise")(b"\x00not-a-container", "image")
-    with pytest.raises(ValueError):
-        _decoder_for("typo")

@@ -344,26 +344,25 @@ def test_palette_error_cases():
 
 @pytest.mark.parametrize("codec", ["png", "png_palette"])
 def test_spark_pipeline_decodes_png_images(spark, sf_dir, codec):
-    """encode_media(image_codec='png'/'png_palette') → decode_features
-    must equal the lossless PGM path bit-for-bit (all are lossless
-    containers; the palette variant proves the PLTE-lookup decode path
-    end-to-end through q_multimodal_features' mapInPandas kernel)."""
+    """encoded_features(image_codec='png'/'png_palette') must equal the
+    lossless PGM path bit-for-bit (all are lossless containers; the
+    palette variant proves the PLTE-lookup decode path end-to-end
+    through q_multimodal_features' mapInPandas kernel)."""
     from big_data_traffict_prediction_spark.functions.multimodal import (
-        decode_features,
-        encode_media,
+        encoded_features,
         media_table,
     )
 
     m = media_table(spark, sf_dir).limit(90)
     png_rows = {
         r.media_id: r
-        for r in decode_features(encode_media(m, image_codec=codec))
+        for r in encoded_features(m, image_codec=codec)
         .filter("kind = 'image'")
         .collect()
     }
     pgm_rows = {
         r.media_id: r
-        for r in decode_features(encode_media(m, image_codec="pgm"))
+        for r in encoded_features(m, image_codec="pgm")
         .filter("kind = 'image'")
         .collect()
     }

@@ -1006,21 +1006,10 @@ def test_stream_zone_map_chunking_invariant(spark, sf_dir, tmp_path):
         stage = simulate.stage_stream_dir(
             spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
         )
-        from big_data_traffict_prediction_spark.operators.scans import (
-            ZM_BLOOM_BITS,
-        )
+        from big_data_traffict_prediction_spark.operators.scans import zm_bloom_bit
 
         rows = simulate.read_stream(spark, stage)
-        bit = F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("zm#"), F.col("camera_id"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("long"),
-            F.lit(ZM_BLOOM_BITS),
-        ).cast("int")
+        bit = zm_bloom_bit(F.col("camera_id"))
         zm = (
             rows.select(
                 F.date_format("ts", "yyyy-MM-dd").alias("d"),
@@ -1179,10 +1168,10 @@ def test_stream_analyze_state_chunking_invariant(spark, sf_dir, tmp_path):
     import pyspark.sql.functions as F
 
     from big_data_traffict_prediction_spark.operators.pipeline import (
-        _HLL_WMOD,
         analyze_hash_col,
         analyze_stack,
         canon_int_col,
+        hll_bucket_col,
         hll_rank_col,
     )
     from big_data_traffict_prediction_spark.streaming import simulate, windows
@@ -1197,10 +1186,8 @@ def test_stream_analyze_state_chunking_invariant(spark, sf_dir, tmp_path):
             stack.select(
                 "col",
                 "val",
-                F.coalesce(
-                    F.call_function("div", F.col("h"), F.lit(_HLL_WMOD)), F.lit(-1)
-                ).alias("bucket"),
-                hll_rank_col(F.col("h")).cast("int").alias("rank"),
+                F.coalesce(hll_bucket_col(F.col("h")), F.lit(-1)).alias("bucket"),
+                hll_rank_col(F.col("h")).alias("rank"),
             )
             .groupBy("col", "bucket")
             .agg(
