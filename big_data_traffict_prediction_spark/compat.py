@@ -109,7 +109,7 @@ def constant_key(col: Column) -> Column:
     return F.coalesce(col % F.lit(1), F.lit(0))
 
 
-def global_prefix_min(df, order_cols, value_col: str, partitions: int = 16):
+def global_prefix_min(df, order_cols, value_col: str):
     """Distributed EXCLUSIVE global prefix-min: adds ``_pre`` — the
     minimum of ``value_col`` over all rows STRICTLY before the current
     row under ``order_cols`` (NULL for the global first row) — without
@@ -126,7 +126,7 @@ def global_prefix_min(df, order_cols, value_col: str, partitions: int = 16):
     from pyspark.sql import Window
 
     d = (
-        df.repartitionByRange(partitions, *order_cols)
+        df.repartitionByRange(16, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
         .localCheckpoint(eager=False)
     )

@@ -233,7 +233,7 @@ ORDER BY d.doc_id
     )
 
 
-@register("q_bpe_merges", oracle=_bpe_oracle())
+@register(oracle=_bpe_oracle())
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first BPE_MERGES byte-pair merge rules learned from the
     corpus: (step, left_token, right_token, pair_count). Later rules
@@ -246,7 +246,7 @@ def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("step")
 
 
-@register("q_bpe_token_counts", oracle=_bpe_tokenize_oracle())
+@register(oracle=_bpe_tokenize_oracle())
 def q_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize the corpus under the learned BPE rules: per document
     the word, character, and BPE-token counts — the budget numbers a

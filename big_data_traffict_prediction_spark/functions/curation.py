@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from ..compat import let, md5_hash, md5_hash_sql
 from ..registry import register
-from ..tables import load_table
+from ..tables import load_table, spread_documents
 from .text import NORM_SQL, norm_col
 
 # --- repetition ---------------------------------------------------------
@@ -41,7 +41,6 @@ TRI = 3  # word n-gram order for the duplicate-n-gram signal
 
 
 @register(
-    "q_repetition_score",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, source, string_split({NORM_SQL}, ' ') AS toks FROM documents
@@ -82,9 +81,7 @@ def q_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     is built by an in-row higher-order ``transform`` over a 1-based
     index sequence — guarded to the empty array below {TRI} tokens
     because Spark's ``sequence(1, n)`` DESCENDS when n < 1."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = spread_documents(spark, sf_dir)
 
     def stats(toks):
         n = F.size(toks)
@@ -146,11 +143,7 @@ def _gram_rows(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
     The generator child is the full gram EXPRESSION — see
     ``dedup.shingles`` for why handing ``explode`` a projected
     attribute of this pipeline would serialize it below the shuffle."""
-    d = load_table(spark, sf_dir, "documents")
-    # One md5 per gram is CPU-bound: spread the scan across cores even
-    # when the source is a single parquet split (dedup._tokenized has
-    # the same trade; the shuffle moves raw doc rows, never grams).
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread_documents(spark, sf_dir)  # one md5 per gram
     toks = F.split(norm_col(), " ")
     grams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1))),
@@ -173,7 +166,6 @@ def _gram_rows(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
 
 
 @register(
-    "q_contamination_check",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, source, string_split({NORM_SQL}, ' ') AS toks FROM documents
@@ -253,7 +245,6 @@ CHUNK_STRIDE = 24  # 8-token overlap between consecutive chunks
 
 
 @register(
-    "q_doc_chunks",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
@@ -282,9 +273,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     generator position, so there is no window function and no shuffle
     except the final sort. Chunks are emitted as md5 fingerprints to
     keep the result narrow; the text itself never leaves the row."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = spread_documents(spark, sf_dir)
 
     def chunks(toks):
         return F.transform(
@@ -310,7 +299,6 @@ TOP_NGRAMS = 20
 
 
 @register(
-    "q_top_ngrams",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
@@ -338,9 +326,7 @@ def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final top-k is ``TakeOrderedAndProject`` (per-partition heap +
     driver merge of {TOP_NGRAMS} rows), never a global sort.
     Deterministic tie-break on the bigram text."""
-    d = load_table(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
+    d = spread_documents(spark, sf_dir)
     toks = F.split(norm_col(), " ")
     bigrams = F.transform(
         F.sequence(F.lit(1), F.greatest(F.size(toks) - 1, F.lit(1))),
@@ -363,7 +349,6 @@ def q_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_dup_rate_by_source",
     oracle=f"""
 WITH fp AS (
   SELECT doc_id, source, md5({NORM_SQL}) AS fingerprint FROM documents
@@ -413,7 +398,6 @@ PACK_BUDGET = 128  # tokens per packed training sequence
 
 
 @register(
-    "q_pack_sequences",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, source,
@@ -557,7 +541,6 @@ def pack_positions(df: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_mixture_sample",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, source,

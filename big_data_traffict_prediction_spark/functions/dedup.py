@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..compat import exact_ppm, global_rank, let, md5_hash, md5_hash_sql
 from ..registry import register
 from ..session import shuffle_partitions_at_most
-from ..tables import load_table
+from ..tables import load_table, spread_documents
 from .text import NORM_SQL, norm_col
 
 JACCARD_THRESHOLD = 0.5
@@ -129,12 +129,7 @@ def _shingle_expr():
 
 
 def _tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, sf_dir, "documents")
-    # Hash compute downstream is CPU-bound at ~16 md5s per shingle:
-    # spread the scan across cores even when the source is a single
-    # parquet split (at real scale the file count makes this shuffle a
-    # no-op cost).
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread_documents(spark, sf_dir)  # ~16 md5s per shingle downstream
     toks = F.split(norm_col(), " ")
     return d.select("doc_id", toks.alias("toks")).filter(F.size("toks") >= 3)
 
@@ -196,10 +191,8 @@ def _pair_jaccard(sh: DataFrame) -> DataFrame:
     )
 
 
-def threshold_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, threshold: float = JACCARD_THRESHOLD
-) -> DataFrame:
-    """All pairs with Jaccard ≥ threshold — EXACT, via frequency-ordered
+def threshold_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """All pairs with Jaccard ≥ JACCARD_THRESHOLD — EXACT, via frequency-ordered
     prefix filtering (SSJoin / PPJoin, Chaudhuri 2006 / Bayardo 2007).
 
     The naive shingle equi-join (`_pair_jaccard`) explodes on hot
@@ -252,7 +245,7 @@ def threshold_jaccard_pairs(
     )
     freq = sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     by_doc = Window.partitionBy("doc_id")
-    prefix_len = F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
+    prefix_len = F.col("n") - F.ceil(F.lit(JACCARD_THRESHOLD) * F.col("n")) + 1
     # The prefix index feeds both sides of the candidate self-join and
     # is recomputed per branch — deliberately: a localCheckpoint here
     # pins the AQE-coalesced (tiny) partitioning and strangles the
@@ -272,8 +265,8 @@ def threshold_jaccard_pairs(
         a.join(b, "h")
         .filter(
             (F.col("d1") < F.col("d2"))
-            & (F.col("na") >= threshold * F.col("nb"))
-            & (F.col("nb") >= threshold * F.col("na"))
+            & (F.col("na") >= JACCARD_THRESHOLD * F.col("nb"))
+            & (F.col("nb") >= JACCARD_THRESHOLD * F.col("na"))
         )
         .select("d1", "d2")
         .distinct()
@@ -296,7 +289,7 @@ def threshold_jaccard_pairs(
             F.col("n_common").cast("double")
             / (F.col("n1") + F.col("n2") - F.col("n_common")).cast("double"),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
     )
     return verified
 
@@ -305,7 +298,6 @@ def threshold_jaccard_pairs(
 
 
 @register(
-    "q_dedup_exact",
     oracle=f"""
 SELECT fingerprint, COUNT(*) AS n_docs, CAST(MIN(doc_id) AS BIGINT) AS keep_doc_id,
        COUNT(*) > 1 AS has_duplicates
@@ -334,7 +326,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_dedup_ngram_jaccard",
     oracle=f"""
 WITH {_SHINGLE_CTE},
 pairs AS (
@@ -375,7 +366,6 @@ SND_WINDOW = 4  # compare each doc with the next SND_WINDOW-1 by key order
 
 
 @register(
-    "q_dedup_sorted_neighborhood",
     oracle=f"""
 WITH tokarr AS (
   SELECT doc_id,
@@ -592,7 +582,6 @@ cand AS (
 
 
 @register(
-    "q_dedup_minhash_lsh",
     oracle=f"""
 WITH {_SHINGLE_CTE},
 {_MINHASH_CTE},
@@ -668,7 +657,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_minhash_estimate",
     oracle=f"""
 WITH {_SHINGLE_CTE},
 {_MINHASH_CTE},
@@ -750,7 +738,6 @@ def q_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_dedup_incremental",
     oracle=f"""
 WITH {_SHINGLE_CTE},
 {_MINHASH_CTE.replace("cand AS (", "cand0 AS (")},
@@ -854,10 +841,7 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash array into a 32-slot majority-vote count array in one pass.
     No word explode, no bit cross-join, ZERO shuffles — a pure map
     over the documents scan at any scale."""
-    d = load_table(spark, sf_dir, "documents")
-    # One md5 per distinct word, per-row: parallelize the CPU work
-    # across cores regardless of the source's split count.
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread_documents(spark, sf_dir)  # one md5 per distinct word
     hashes = F.transform(
         F.array_distinct(F.split(norm_col(), " ")), lambda w: md5_hash(w, 15)
     )
@@ -907,7 +891,6 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_simhash_signatures",
     oracle=f"""
 WITH {_SIMHASH_CTE}
 SELECT doc_id, simhash, simhash >> {SIMHASH_BUCKET_SHIFT} AS bucket
@@ -929,7 +912,6 @@ def q_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_dedup_simhash",
     oracle=f"""
 WITH {_SIMHASH_CTE}
 SELECT a.doc_id AS d1, b.doc_id AS d2,
@@ -1092,7 +1074,6 @@ def _cc_loop(sym: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_dedup_clusters",
     oracle=f"""
 WITH RECURSIVE {_SHINGLE_CTE},
 pairs AS (
@@ -1161,7 +1142,6 @@ LEV_RATIO_MAX = 0.3  # pairs within 30% relative edit distance are dups
 
 
 @register(
-    "q_dedup_levenshtein",
     oracle=f"""
 WITH {_SIMHASH_CTE},
 cand AS (
@@ -1217,7 +1197,6 @@ def q_dedup_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_cross_source_dup",
     oracle=f"""
 WITH fp AS (
   SELECT doc_id, source, md5({NORM_SQL}) AS fingerprint FROM documents
@@ -1300,7 +1279,7 @@ SELECT CAST((SELECT COUNT(*) FROM truth) AS BIGINT) AS n_true,
 """
 
 
-@register("q_dedup_recall_eval", oracle=None)  # bound below
+@register(oracle=None)  # bound below
 def q_dedup_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup QUALITY EVAL — the eval leg of the dedup family (exact
     truth: q_dedup_ngram_jaccard; scale path: q_dedup_minhash_lsh):

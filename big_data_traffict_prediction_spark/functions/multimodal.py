@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import load_table
+from ..tables import load_table, spread_documents
 
 KINDS = ["image", "audio", "video"]
 MIMES = {"image": "image/x-portable-graymap", "audio": "audio/wav", "video": "video/x-rawv"}
@@ -62,17 +62,16 @@ def media_table(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataF
     kind cycles by doc_id, container dimensions derived from n_chars
     (kept small so sf0.1 stays MB-scale).
 
-    ``spread=True`` repartitions across cores up front — required by
+    ``spread=True`` reads ``tables.spread_documents`` — required by
     consumers that feed the payloads through Python codec kernels
     (encoded_features / decode_features mapInPandas), which a single
-    parquet split would serialize onto ONE Arrow worker (measured 5×
-    at sf0.1 — the dedup._tokenized idiom; at real scale the file
-    count makes this shuffle a no-op cost). Pure-JVM consumers
-    (q_multimodal_meta's scan) keep the default: no shuffle of the
-    binary payloads at all."""
-    d = load_table(spark, sf_dir, "documents")
+    parquet split would serialize onto ONE Arrow worker. Pure-JVM
+    consumers (q_multimodal_meta's scan) keep the default: no shuffle
+    of the binary payloads at all."""
     if spread:
-        d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+        d = spread_documents(spark, sf_dir)
+    else:
+        d = load_table(spark, sf_dir, "documents")
     kind = F.element_at(
         F.array(*[F.lit(k) for k in KINDS]), (F.col("doc_id") % 3 + 1).cast("int")
     )
@@ -90,7 +89,6 @@ def media_table(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataF
 
 
 @register(
-    "q_multimodal_meta",
     oracle="""
 SELECT doc_id AS media_id,
        CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
@@ -355,24 +353,6 @@ _DECODE_ERROR_ROW = {
 }
 
 
-def _decoder_for(on_error: str):
-    """Per-row decode closure shared by ``decode_features`` and
-    ``encoded_features`` — one definition of the on_error validation
-    and the absorbed-exception set, so the two cannot drift."""
-    if on_error not in ("raise", "mark"):
-        raise ValueError(f"on_error must be 'raise' or 'mark', got {on_error!r}")
-
-    def decode_one(payload: bytes, kind: str) -> dict:
-        if on_error == "raise":
-            return _decode_payload(payload, kind)
-        try:
-            return _decode_payload(payload, kind)
-        except (ValueError, NotImplementedError):
-            return _DECODE_ERROR_ROW
-
-    return decode_one
-
-
 def decode_features(df: DataFrame, on_error: str = "raise") -> DataFrame:
     """mapInPandas decode/feature-extract: Arrow batches in, one
     feature row per media out. This is the one legitimately-Python
@@ -387,7 +367,16 @@ def decode_features(df: DataFrame, on_error: str = "raise") -> DataFrame:
     scale corrupt and exotic blobs are data, not exceptions. Only
     classifiable decode errors are absorbed; genuine bugs still
     propagate."""
-    decode_one = _decoder_for(on_error)
+    if on_error not in ("raise", "mark"):
+        raise ValueError(f"on_error must be 'raise' or 'mark', got {on_error!r}")
+
+    def decode_one(payload: bytes, kind: str) -> dict:
+        if on_error == "raise":
+            return _decode_payload(payload, kind)
+        try:
+            return _decode_payload(payload, kind)
+        except (ValueError, NotImplementedError):
+            return _DECODE_ERROR_ROW
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -424,11 +413,9 @@ def decode_features(df: DataFrame, on_error: str = "raise") -> DataFrame:
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
-def encoded_features(
-    df: DataFrame, image_codec: str = "pgm", on_error: str = "raise"
-) -> DataFrame:
+def encoded_features(df: DataFrame, image_codec: str = "pgm") -> DataFrame:
     """Container encode (``_encoder_for``) then decode + feature
-    extract (``_decoder_for``, as in ``decode_features``) in ONE
+    extract (``_decode_payload``, as in ``decode_features``) in ONE
     mapInPandas stage: every chained Python operator pays a full
     JVM→Python→JVM Arrow crossing of the payload bytes plus a worker
     stage, and the container bytes here exist only BETWEEN the two
@@ -437,9 +424,9 @@ def encoded_features(
     is lossy (feature invariants, not byte equality, survive the
     round trip); the PNG and PGM containers are lossless. A pipeline
     with PERSISTED containers reads them back through
-    ``decode_features``."""
+    ``decode_features``. A payload that fails to decode fails the job:
+    it was encoded in the same batch, so a failure is a bug."""
     encode_one = _encoder_for(image_codec)
-    decode_one = _decoder_for(on_error)
 
     def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -454,7 +441,7 @@ def encoded_features(
             ):
                 enc = encode_one(mid, bytes(raw), kind, w, h)
                 pbytes.append(len(enc))
-                metas.append(decode_one(enc, kind))
+                metas.append(_decode_payload(enc, kind))
             out = pd.DataFrame(
                 {
                     "media_id": pdf["media_id"],
@@ -478,7 +465,7 @@ def encoded_features(
     return df.mapInPandas(op, schema=FEATURE_SCHEMA)
 
 
-@register("q_multimodal_features", oracle=None)
+@register(oracle=None)
 def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Container encode → REAL decode + feature extract over binary
     payloads via ONE fused mapInPandas stage (``encoded_features``;
@@ -500,7 +487,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_multimodal_frame_sample",
     oracle="""
 SELECT media_id, n_frames,
        CAST(unnest(generate_series(0, greatest(n_frames - 1, 0), 8)) AS BIGINT)
@@ -577,7 +563,7 @@ def media_with_replicas(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.unionByName(replicas)
 
 
-@register("q_multimodal_phash_dedup", oracle=None)
+@register(oracle=None)
 def q_multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual-hash near-duplicate detection over decoded media:
     dHash (adjacent-pixel gradient sign) of each payload's 8×8

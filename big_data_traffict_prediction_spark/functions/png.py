@@ -49,7 +49,7 @@ def _chunk(tag: bytes, payload: bytes) -> bytes:
     )
 
 
-def encode_gray(arr: np.ndarray, compress_level: int = 6) -> bytes:
+def encode_gray(arr: np.ndarray) -> bytes:
     """Encode a 2-D uint8 array as an 8-bit grayscale PNG."""
     a = np.asarray(arr, dtype=np.uint8)
     if a.ndim != 2 or a.size == 0:
@@ -59,11 +59,11 @@ def encode_gray(arr: np.ndarray, compress_level: int = 6) -> bytes:
     raw = np.empty((h, w + 1), dtype=np.uint8)
     raw[:, 0] = 0  # filter type None per scanline
     raw[:, 1:] = a
-    idat = zlib.compress(raw.tobytes(), compress_level)
+    idat = zlib.compress(raw.tobytes())
     return _SIG + _chunk(b"IHDR", ihdr) + _chunk(b"IDAT", idat) + _chunk(b"IEND", b"")
 
 
-def encode_palette(arr: np.ndarray, compress_level: int = 6) -> bytes:
+def encode_palette(arr: np.ndarray) -> bytes:
     """Encode a 2-D uint8 array as an 8-bit PALETTE PNG (color type 3).
 
     The PLTE maps index i -> (i, i, i), so the image renders — and
@@ -81,7 +81,7 @@ def encode_palette(arr: np.ndarray, compress_level: int = 6) -> bytes:
     raw = np.empty((h, w + 1), dtype=np.uint8)
     raw[:, 0] = 0  # filter type None per scanline
     raw[:, 1:] = a
-    idat = zlib.compress(raw.tobytes(), compress_level)
+    idat = zlib.compress(raw.tobytes())
     return (
         _SIG
         + _chunk(b"IHDR", ihdr)

@@ -65,7 +65,6 @@ def _per_hash_doc_counts(spans: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_substring_dedup",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, {NORM_SQL} AS norm FROM documents
@@ -139,7 +138,6 @@ def q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_bigram_familiarity",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, string_split({NORM_SQL}, ' ') AS toks FROM documents
@@ -232,7 +230,6 @@ DOMAIN_CAP = 10  # keep at most this many docs per source
 
 
 @register(
-    "q_domain_cap",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, source, string_split({NORM_SQL}, ' ') AS toks FROM documents

@@ -70,7 +70,6 @@ def _augmented_col() -> F.Column:
 
 
 @register(
-    "q_pii_redact",
     oracle=f"""
 WITH aug AS (
   SELECT doc_id, {_augmented_sql()} AS t FROM documents

@@ -170,7 +170,6 @@ def _bruteforce_block_kernel(queries, cands):
 
 
 @register(
-    "q_ann_bruteforce",
     oracle=f"""
 WITH {_VECS_CTE},
 pairs AS (
@@ -301,7 +300,6 @@ def _neardup_cell_kernel(left, right):
 
 
 @register(
-    "q_embedding_neardup",
     oracle=f"""
 WITH {_VECS_CTE},
 pairs AS (
@@ -374,7 +372,6 @@ def _neardup_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_semantic_dedup",
     oracle=f"""
 WITH {_VECS_CTE},
 pairs AS (
@@ -480,7 +477,6 @@ def _ivf_probe_cells() -> Column:
 
 
 @register(
-    "q_ann_ivf",
     oracle=f"""
 WITH {_VECS_CTE},
 params AS (
@@ -593,7 +589,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_ann_ivf_delta",
     oracle=f"""
 WITH {_VECS_CTE},
 bounds AS (
@@ -744,7 +739,7 @@ def q_ann_ivf_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_dedup_minhash_mllib", oracle=None)
+@register(oracle=None)
 def q_dedup_minhash_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MLlib MinHashLSH twin of q_dedup_minhash_lsh: HashingTF over
     shingles → MinHashLSH.approxSimilarityJoin at Jaccard ≥ 0.5.
@@ -784,7 +779,6 @@ QUANT_LEVELS = 255
 
 
 @register(
-    "q_embedding_quantize",
     oracle=f"""
 WITH m AS (
   SELECT vec_id,
@@ -868,7 +862,7 @@ def _pq_codebooks(vecs_np):
     return books
 
 
-@register("q_ann_pq", oracle=None)
+@register(oracle=None)
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN — the 100 TB STORAGE answer for vector
     search (faiss's PQ): each 64-d float vector compresses to 8
@@ -1286,7 +1280,6 @@ def _pqf_adc() -> Column:
 
 
 @register(
-    "q_ann_pq_fixed",
     oracle=f"""
 WITH {_VECS_CTE},
 fp AS (
@@ -1457,7 +1450,6 @@ def _pqf_shortlist_rerank(scored: DataFrame, fp: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_ann_ivf_pq_fixed",
     oracle=f"""
 WITH {_VECS_CTE},
 fp AS (
@@ -1611,7 +1603,6 @@ CENTROID_SCALE = 1_000_000
 
 
 @register(
-    "q_embedding_centroids",
     oracle=f"""
 WITH ex AS (
   SELECT label,
@@ -1694,7 +1685,6 @@ OUTLIER_TOP_K = 3
 
 
 @register(
-    "q_embedding_outliers",
     oracle=f"""
 WITH ex AS (
   SELECT label,
@@ -1897,7 +1887,7 @@ ORDER BY query_id, rank
 """
 
 
-@register("q_ann_srp_lsh", oracle=_srp_oracle())
+@register(oracle=_srp_oracle())
 def q_ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN by signed-random-projection LSH (cosine LSH, Charikar
     2002): SRP_NBITS fixed Rademacher hyperplanes → per-vector sign
@@ -2090,7 +2080,7 @@ ORDER BY vec_a
 """
 
 
-@register("q_embedding_jl_project", oracle=_jl_oracle())
+@register(oracle=_jl_oracle())
 def q_embedding_jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss random projection with its distortion
     audit — the embedding-compression step a 100 TB ANN pipeline runs
@@ -2191,7 +2181,7 @@ ORDER BY b.query_id
 """
 
 
-@register("q_ann_recall_eval", oracle=None)  # oracle bound after both deps
+@register(oracle=None)  # oracle bound after both deps
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN QUALITY EVAL — the third leg of the ANN family (build:
     q_ann_ivf, maintain: q_ann_ivf_delta, evaluate: this): per query,
@@ -2327,7 +2317,6 @@ def _km_update_centers(assigned: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_embedding_kmeans",
     oracle=f"""
 WITH {_VECS_CTE},
 fp AS (

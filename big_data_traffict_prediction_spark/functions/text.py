@@ -17,15 +17,15 @@ from pyspark.sql import functions as F
 
 from ..compat import exact_ppm, global_rank, let, md5_hash, md5_hash_sql
 from ..registry import register
-from ..tables import load_table
+from ..tables import load_table, spread_documents
 
 # --- shared expressions (Spark + DuckDB twins side by side) -------------
 
 NORM_SQL = r"lower(trim(regexp_replace(text, '\s+', ' ', 'g')))"
 
 
-def norm_col(c: str = "text") -> Column:
-    return F.lower(F.trim(F.regexp_replace(c, r"\s+", " ")))
+def norm_col() -> Column:
+    return F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))
 
 
 EN_MARKERS = ("the", "a", "an", "and", "of", "to", "in", "is", "on", "for")
@@ -44,7 +44,6 @@ def _marker_count(tokens: Column, markers: tuple[str, ...]) -> Column:
 
 
 @register(
-    "q_text_quality",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, lang, {NORM_SQL} AS norm FROM documents
@@ -105,7 +104,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_lang_id",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, lang, string_split({NORM_SQL}, ' ') AS toks FROM documents
@@ -164,7 +162,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_token_count",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, {NORM_SQL} AS norm, n_chars FROM documents
@@ -195,7 +192,6 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_doc_fingerprint",
     oracle=f"""
 SELECT doc_id,
        md5({NORM_SQL}) AS fingerprint,
@@ -220,7 +216,6 @@ WINNOW_W = 4  # winnowing window over consecutive k-gram hashes
 
 
 @register(
-    "q_doc_winnow",
     oracle=f"""
 WITH t AS (
   SELECT doc_id, {NORM_SQL} AS norm FROM documents
@@ -267,12 +262,7 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines via the shared 60-bit md5 hash (compat.md5_hash — the
     same definition the dedup family shuffles on).
     """
-    d = load_table(spark, sf_dir, "documents")
-    # One md5 per character of corpus text is CPU-bound: spread the
-    # scan across cores even when the source is a single parquet split
-    # (same idiom as dedup._tokenized; at real scale the file count
-    # makes this shuffle a no-op cost).
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread_documents(spark, sf_dir)  # one md5 per character of text
     base = (
         d.select("doc_id", norm_col().alias("norm"))
         .withColumn("n_grams", (F.length("norm") - (WINNOW_K - 1)).cast("int"))
@@ -321,7 +311,6 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # name keywords → EXTREME/HEAVY/ARTERIAL/RESIDENTIAL/DEFAULT); part
 # names carry the keyword vocabulary in testdata.
 @register(
-    "q_part_keyword_class",
     oracle="""
 SELECT p_partkey,
        p_name,
@@ -357,7 +346,6 @@ TFIDF_TOP = 3
 
 
 @register(
-    "q_tfidf_top_terms",
     oracle=f"""
 WITH tok AS (
   SELECT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS term FROM documents
@@ -447,7 +435,6 @@ POSTINGS_CAP = 10
 
 
 @register(
-    "q_inverted_index",
     oracle=f"""
 WITH tok AS (
   SELECT DISTINCT doc_id, unnest(string_split({NORM_SQL}, ' ')) AS term
@@ -534,7 +521,7 @@ LIMIT {BM25_TOP}
 """
 
 
-@register("q_bm25_search", oracle=_bm25_oracle())
+@register(oracle=_bm25_oracle())
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-{BM25_TOP} retrieval for a fixed {BM25_TERMS} query —
     the ranked-search primitive over the corpus, composed shuffle-free:
@@ -621,7 +608,6 @@ VOCAB_COVERAGE_PCT = 90
 
 
 @register(
-    "q_vocab_coverage",
     oracle=f"""
 WITH t AS (
   SELECT string_split({NORM_SQL}, ' ') AS toks FROM documents
@@ -690,7 +676,6 @@ PMI_TOP_K = 20
 
 
 @register(
-    "q_pmi_collocations",
     oracle=f"""
 WITH t AS (
   SELECT string_split({NORM_SQL}, ' ') AS toks FROM documents

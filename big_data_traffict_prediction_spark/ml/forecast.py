@@ -90,7 +90,7 @@ def _pipeline():
     )
 
 
-@register("q_ml_forecast", oracle=None)
+@register(oracle=None)
 @_memoized
 def q_ml_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Train the pipeline and score every (camera, dow, hour) slot;
@@ -125,7 +125,7 @@ CV_FOLDS = 3
 CV_SEED = 42
 
 
-@register("q_ml_forecast_eval", oracle=None)
+@register(oracle=None)
 @_memoized
 def q_ml_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free evaluation of the MLlib forecaster: train on the
@@ -209,7 +209,6 @@ KFOLDS = 5
 
 
 @register(
-    "q_kfold_assign",
     oracle=f"""
 WITH a AS (
   SELECT event_id,

@@ -37,10 +37,7 @@ def _sum_aggs():
     ]
 
 
-@register(
-    "q_lifetime_totals",
-    oracle=with_traffic(f"SELECT {_SUMS} FROM traffic"),
-)
+@register(oracle=with_traffic(f"SELECT {_SUMS} FROM traffic"))
 def q_lifetime_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: global lifetime totals with COALESCE-0 defaults
     (reference app/database.py:147-167)."""
@@ -51,7 +48,6 @@ TRAILING_DAYS = 7
 
 
 @register(
-    "q_trailing_totals",
     oracle=with_traffic(f"""
 SELECT {_SUMS}
 FROM traffic
@@ -66,7 +62,6 @@ def q_trailing_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_per_camera_totals",
     oracle=with_traffic(f"""
 SELECT camera_id, {_SUMS}
 FROM traffic GROUP BY camera_id ORDER BY camera_id
@@ -82,7 +77,6 @@ def q_per_camera_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_rollup_totals",
     oracle=with_traffic(f"""
 SELECT camera_id, CAST(GROUPING(camera_id) AS INT) AS is_total_row, {_SUMS}
 FROM traffic GROUP BY ROLLUP(camera_id) ORDER BY is_total_row, camera_id
@@ -108,10 +102,7 @@ def q_rollup_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_distinct_cameras",
-    oracle=with_traffic("SELECT DISTINCT camera_id FROM traffic ORDER BY camera_id"),
-)
+@register(oracle=with_traffic("SELECT DISTINCT camera_id FROM traffic ORDER BY camera_id"))
 def q_distinct_cameras(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: DISTINCT camera ids (reference scripts/analyze_thresholds.py:25).
     Partial-aggregate dedup per partition before the shuffle."""
@@ -119,7 +110,6 @@ def q_distinct_cameras(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_hourly_sums",
     oracle=with_traffic("""
 SELECT camera_id, date_trunc('hour', ts) AS hour_ts,
        CAST(SUM(new_count) AS BIGINT) AS hourly_total,
@@ -147,7 +137,6 @@ WINDOWS_S = {"1h": 3600, "6h": 21600, "24h": 86400, "7d": 604800, "30d": 2592000
 
 
 @register(
-    "q_window_stats",
     oracle=with_traffic(
         "SELECT\n"
         + ",\n".join(
@@ -187,7 +176,6 @@ LAKE_DAY = "2024-01-15"
 
 
 @register(
-    "q_datalake_daily_agg",
     oracle=with_traffic(f"""
 SELECT camera_id AS source_name,
        CAST(COALESCE(SUM(CASE WHEN new_cars > 0 THEN 1 END), 0) AS BIGINT) AS car,
@@ -221,7 +209,6 @@ def q_datalake_daily_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_bucket_share",
     oracle=with_traffic("""
 SELECT event_type,
        CAST(SUM(new_count) AS BIGINT) AS type_total,
@@ -260,7 +247,6 @@ def q_bucket_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_stats_snapshot",
     oracle=with_traffic("""
 SELECT CAST(COUNT(DISTINCT camera_id) AS BIGINT) AS n_sources,
        CAST(COALESCE(SUM(new_count), 0) AS BIGINT) AS accumulated_count,
@@ -287,7 +273,6 @@ def q_stats_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_cube_totals",
     oracle=with_traffic("""
 SELECT event_type,
        dayofweek(ts) AS dow,
@@ -322,7 +307,6 @@ def q_cube_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_retention_cohorts",
     oracle="""
 WITH first_seen AS (
   SELECT user_id, MIN(date_trunc('week', ts)) AS cohort_week
@@ -369,7 +353,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_grouping_sets_totals",
     oracle=with_traffic(f"""
 SELECT camera_id, event_type,
        CAST(GROUPING(camera_id) AS INT) AS g_camera,
@@ -412,7 +395,6 @@ SALT_BUCKETS = 8
 
 
 @register(
-    "q_salted_totals",
     oracle=with_traffic("""
 SELECT camera_id,
        CAST(SUM(new_count) AS BIGINT) AS total_new_count,
@@ -456,7 +438,6 @@ SNAP_T2_EPOCH = NOW_EPOCH  # NOW
 
 
 @register(
-    "q_snapshot_diff",
     oracle=with_traffic(f"""
 , states AS (
   SELECT camera_id,
@@ -505,7 +486,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_engagement_stickiness",
     oracle=with_traffic("""
 , daily AS (
   SELECT CAST(ts AS DATE) AS d, COUNT(DISTINCT camera_id) AS dau
@@ -565,7 +545,6 @@ MV_T2_EPOCH = NOW_EPOCH - 1 * 86400
 
 
 @register(
-    "q_mv_refresh",
     oracle=with_traffic(f"""
 SELECT camera_id, strftime(ts, '%Y-%m-%d') AS d,
        CAST(COUNT(*) AS BIGINT) AS n_rows,

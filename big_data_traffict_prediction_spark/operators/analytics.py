@@ -51,7 +51,6 @@ _VAR_SQL = "(CAST(ss AS DOUBLE) * n - CAST(s AS DOUBLE) * s) / (CAST(n AS DOUBLE
 
 
 @register(
-    "q_anomaly_zscore",
     oracle=with_traffic(f"""
 , hourly AS (
   SELECT camera_id, date_trunc('day', ts) AS day_ts,
@@ -136,7 +135,6 @@ TOP_PROFILE_CAMERAS = 20
 
 
 @register(
-    "q_profile_correlation",
     oracle=with_traffic(f"""
 , hourly AS (
   SELECT camera_id, EXTRACT(hour FROM ts) AS hour,
@@ -244,7 +242,6 @@ HIST_BUCKETS = 10
 
 
 @register(
-    "q_count_histogram",
     oracle=with_traffic(f"""
 , b AS (
   SELECT LEAST(new_count // {HIST_BUCKET_W}, {HIST_BUCKETS - 1}) AS bucket_id,
@@ -307,7 +304,6 @@ QUANTILE_PCTS = [("p50", 50), ("p90", 90), ("p99", 99)]
 
 
 @register(
-    "q_approx_quantile",
     oracle=with_traffic("""
 , freq AS (
   -- NULL counts carry no quantile information; dropping them here also
@@ -386,7 +382,6 @@ AFFINITY_MAX_BASKET = 1024
 
 
 @register(
-    "q_part_affinity",
     oracle=f"""
 WITH li AS (
   -- mirror the Spark side's basket cap exactly: each order keeps its
@@ -506,7 +501,6 @@ N_QUARTILES = 4
 
 
 @register(
-    "q_camera_quartiles",
     oracle=with_traffic(f"""
 , totals AS (
   SELECT camera_id, CAST(SUM(new_count) AS BIGINT) AS total
@@ -547,7 +541,6 @@ DQ_DISCOUNT_MAX = 0.1  # lineitem discounts above this violate the contract
 
 
 @register(
-    "q_data_quality_report",
     oracle=f"""
 SELECT * FROM (
   SELECT 'lineitem' AS tbl, 'orphan_orderkey' AS rule,
@@ -692,7 +685,6 @@ VAL_PCT10 = 9  # val = next 10%; test = the rest
 
 
 @register(
-    "q_time_split",
     oracle=with_traffic(
         """
 , p AS (
@@ -775,7 +767,6 @@ def q_time_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_peak_hours",
     oracle=with_traffic("""
 , hourly AS (
   SELECT camera_id, CAST(ts AS DATE) AS d,
@@ -842,7 +833,6 @@ def q_peak_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_skyline_pareto",
     oracle=with_traffic("""
 , agg AS (
   SELECT camera_id,
@@ -910,7 +900,6 @@ STREAK_MIN_LEN = 3
 
 
 @register(
-    "q_rising_streaks",
     oracle=with_traffic(f"""
 , seq AS (
   SELECT camera_id, ts, id, new_count,
@@ -989,7 +978,6 @@ def q_rising_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_volume_percentile_rank",
     oracle=with_traffic("""
 , agg AS (
   SELECT camera_id, CAST(SUM(new_count) AS BIGINT) AS total
@@ -1044,7 +1032,6 @@ SIMILAR_TOP_K = 10
 
 
 @register(
-    "q_similar_days",
     oracle=with_traffic(f"""
 , hourly AS (
   SELECT camera_id, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS d,
@@ -1134,7 +1121,6 @@ def q_similar_days(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_arrival_order_audit",
     oracle=with_traffic("""
 , seq AS (
   SELECT camera_id, id, ts,
@@ -1239,7 +1225,6 @@ def _ntile_expr(n: int):
 
 
 @register(
-    "q_rfm_segments",
     oracle=f"""
 WITH rfm AS (
   SELECT o_custkey,
@@ -1317,7 +1302,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_audience_overlap",
     oracle=with_traffic("""
 , dc AS (
   SELECT DISTINCT CAST(ts AS DATE) AS d, camera_id FROM traffic
@@ -1394,7 +1378,6 @@ def q_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_fano_dispersion",
     oracle=with_traffic("""
 , hourly AS (
   SELECT camera_id, date_trunc('hour', ts) AS h,
@@ -1452,7 +1435,6 @@ def q_fano_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_order_cohort_repeat",
     oracle="""
 WITH firsts AS (
   SELECT o_custkey,
@@ -1525,10 +1507,6 @@ def q_order_cohort_repeat(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------- bloom-filter semi-join
-
-# Registry order is import order: the text queries have always been
-# registered just before q_bloom_semi_join, so keep importing them here.
-from ..functions import text as _text  # noqa: E402,F401
 
 BLOOM_M = 16_384  # filter bits (256 packed int64 words)
 BLOOM_K = 4  # hash functions per key
@@ -1604,7 +1582,7 @@ FROM verdicts
 """
 
 
-@register("q_bloom_semi_join", oracle=_bloom_oracle())
+@register(oracle=_bloom_oracle())
 def q_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Bloom-filter build + probe — the join-pruning
     sketch behind runtime row-filter pushdown: build a BLOOM_M-bit
@@ -1695,7 +1673,6 @@ BACKTEST_TRAIN_W = 28  # trailing observed days in each train window
 
 
 @register(
-    "q_rolling_origin_eval",
     oracle=with_traffic(f"""
 , daily AS (
   SELECT CAST(ts AS DATE) AS d, camera_id,
@@ -1864,7 +1841,6 @@ _NEG_H_SQL = md5_hash_sql(
 
 
 @register(
-    "q_negative_samples",
     oracle=f"""
 WITH pos AS (
   SELECT DISTINCT o.o_custkey AS custkey, l.l_partkey AS partkey
@@ -1996,7 +1972,6 @@ DRIFT_TOP = 50
 
 
 @register(
-    "q_drift_tvd",
     oracle=with_traffic(f"""
 , ev AS (
   SELECT camera_id, CAST(new_count // {DRIFT_BUCKET} AS BIGINT) AS bucket,

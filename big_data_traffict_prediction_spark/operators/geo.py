@@ -75,7 +75,6 @@ def _neighbor_points(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_camera_neighbors",
     oracle=f"""
 WITH {_COORD_CTE},
 pairs AS (
@@ -196,7 +195,6 @@ def q_camera_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_geo_cell_density",
     oracle=with_traffic(f"""
 , totals AS (
   SELECT CAST(camera_id AS BIGINT) AS cam_key,
@@ -457,7 +455,7 @@ def stored_zone_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_cc_delta", oracle=_cc_delta_oracle())
+@register(oracle=_cc_delta_oracle())
 def q_cc_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental CONNECTED COMPONENTS — graph maintenance in the same
     family as q_scd2_apply / q_mv_refresh / q_ann_ivf_delta: the stored

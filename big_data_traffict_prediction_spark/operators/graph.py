@@ -105,7 +105,6 @@ def _sym(edges: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_graph_triangles",
     oracle=f"""
 WITH {_GRAPH_CTE},
 tri AS (
@@ -245,7 +244,7 @@ LIMIT 20
 """
 
 
-@register("q_pagerank_parts", oracle=_pagerank_oracle())
+@register(oracle=_pagerank_oracle())
 def q_pagerank_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 parts by fixed-point PageRank (d = 0.85,
     PAGERANK_ITERS power-iteration rounds) over the co-purchase
@@ -273,7 +272,7 @@ KCORE_MAX_ITERS = 20  # peel-round cap; raises rather than return partial
 KCORE_COLLECT_CAP = 10_000  # max removed-set size shipped as an InSet
 
 
-def kcore_edges(edges: DataFrame, k: int, max_iters: int = KCORE_MAX_ITERS) -> DataFrame:
+def kcore_edges(edges: DataFrame, k: int) -> DataFrame:
     """Iterative degree-prune to the k-core of a (u, v) u<v edge
     frame: each synchronous round drops every node whose CURRENT
     degree < k until a fixed point — the standard peeling algorithm,
@@ -292,7 +291,7 @@ def kcore_edges(edges: DataFrame, k: int, max_iters: int = KCORE_MAX_ITERS) -> D
     unrolled CTE). The driver holds one scalar per round (the removed
     count — the convergence check); the degree frame localCheckpoints
     each round (same discipline as connected_components / pagerank,
-    SCALE.md). Exhausting ``max_iters`` rounds RAISES instead of
+    SCALE.md). Exhausting ``KCORE_MAX_ITERS`` rounds RAISES instead of
     emitting a partially-peeled graph; the cap is in lockstep with
     the oracle's unroll depth."""
     e = edges.localCheckpoint(eager=True)
@@ -304,7 +303,7 @@ def kcore_edges(edges: DataFrame, k: int, max_iters: int = KCORE_MAX_ITERS) -> D
     )
     # +1: convergence on the last allowed round still needs one
     # (no-removal) round to be observed
-    for _ in range(max_iters + 1):
+    for _ in range(KCORE_MAX_ITERS + 1):
         removed = alive.filter(F.col("d") < k)
         n_removed = removed.count()
         if n_removed == 0:
@@ -339,7 +338,7 @@ def kcore_edges(edges: DataFrame, k: int, max_iters: int = KCORE_MAX_ITERS) -> D
             .localCheckpoint(eager=True)
         )
     raise RuntimeError(
-        f"k-core peel did not converge in {max_iters} rounds — "
+        f"k-core peel did not converge in {KCORE_MAX_ITERS} rounds — "
         "unprecedented for the co-purchase graph (≤10 observed at "
         "bench SFs); raise KCORE_MAX_ITERS in lockstep with the "
         "oracle's unroll depth"
@@ -390,7 +389,7 @@ LIMIT 20
 """
 
 
-@register("q_kcore_parts", oracle=_kcore_oracle())
+@register(oracle=_kcore_oracle())
 def q_kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 members of the K-core of the co-purchase graph (K = the
     5th-percentile initial degree, an exact rank pick so the threshold
@@ -528,7 +527,7 @@ LIMIT 20
 """
 
 
-@register("q_lpa_communities", oracle=_lpa_oracle())
+@register(oracle=_lpa_oracle())
 def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation (LPA,
     Raghavan et al. 2007) over the co-purchase graph: every node

@@ -37,7 +37,6 @@ FROM traffic
 
 
 @register(
-    "q_iou_dedup",
     oracle=with_traffic(f"""
 , boxes AS (
   {_BBOX_SQL}

@@ -43,7 +43,6 @@ def camera_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_topn_export",
     oracle=with_traffic(
         f"""
 SELECT t.id, t.ts, t.camera_id,
@@ -87,7 +86,6 @@ def q_topn_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_zombie_cameras",
     oracle=with_traffic(
         """
 SELECT DISTINCT t.camera_id
@@ -112,7 +110,6 @@ def q_zombie_cameras(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_configured_cameras",
     oracle=with_traffic(
         """
 SELECT DISTINCT t.camera_id
@@ -135,7 +132,6 @@ def q_configured_cameras(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_mirror_stats",
     oracle=with_traffic("""
 , latest AS (
   SELECT camera_id, ts, new_count
@@ -193,7 +189,6 @@ REPLAY_DAYS = 7
 
 
 @register(
-    "q_backfill_replay",
     oracle=with_traffic(f"""
 , pattern AS (
   SELECT EXTRACT(hour FROM ts) AS hour_of_day,
@@ -259,7 +254,6 @@ _PROFILE_DEFAULT = ("DEFAULT", 1.0)
 
 
 @register(
-    "q_camera_profile",
     oracle=f"""
 SELECT CAST(c_custkey AS VARCHAR) AS camera_id,
        c_name AS cam_name,
@@ -312,7 +306,6 @@ def asof_join(
     on: str,
     left_ts: str = "ts",
     right_ts: str = "ts",
-    how: str = "inner",
 ) -> DataFrame:
     """Generic point-in-time (as-of) join: attach to each left row the
     LATEST right row with ``right_ts <= left_ts`` for the same key.
@@ -325,8 +318,7 @@ def asof_join(
        BEFORE left rows at equal ts, so a right row effective exactly
        at a left row's ts applies (inclusive semantics, matching
        DuckDB's ``ASOF JOIN ... ON l.ts >= r.ts``),
-    3. keep left rows (inner: only those with a payload in effect;
-       left: all, null payload when none).
+    3. keep the left rows that have a payload in effect (inner).
 
     ONE shuffle on the key — never a per-row range probe; window state
     per key is a single payload struct. Returns the left columns plus
@@ -360,12 +352,8 @@ def asof_join(
     u = (
         lu.unionByName(ru)
         .withColumn("_eff", F.last("_pay", ignorenulls=True).over(w))
-        .filter(F.col("_is_l") == 1)
+        .filter((F.col("_is_l") == 1) & F.col("_eff").isNotNull())
     )
-    if how == "inner":
-        u = u.filter(F.col("_eff").isNotNull())
-    elif how != "left":
-        raise ValueError(f"asof_join: unsupported how={how!r}")
     return u.select(
         *[F.col(f"_lrow.{c}").alias(c) for c in left.columns],
         *[F.col(f"_eff.{c}").alias(c) for c in payload],
@@ -394,7 +382,6 @@ def config_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_asof_config_join",
     oracle=with_traffic(f"""
 , config_versions AS (
   SELECT c_custkey AS cam_key,
@@ -465,7 +452,6 @@ config_versions AS (
 
 
 @register(
-    "q_scd2_config_intervals",
     oracle=f"""
 WITH {_CONFIG_CTE}
 SELECT cam_key, version, speed_limit,
@@ -503,7 +489,6 @@ ALERT_LOOKBACK_MIN = 15
 
 
 @register(
-    "q_interval_join_alerts",
     oracle=with_traffic(f"""
 SELECT o.camera_id, a.id AS alert_id, a.ts AS alert_ts,
        a.new_count AS alert_count, o.id, o.ts, o.new_count
@@ -561,7 +546,6 @@ _BIN_S = ALERT_LOOKBACK_MIN * 60
 
 
 @register(
-    "q_interval_join_binned",
     oracle=with_traffic(f"""
 SELECT o.camera_id, a.id AS alert_id, a.ts AS alert_ts,
        a.new_count AS alert_count, o.id, o.ts, o.new_count
@@ -635,7 +619,6 @@ def q_interval_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_camera_reconcile_full",
     oracle=with_traffic(
         """
 , tot AS (
@@ -739,7 +722,6 @@ def cdc_post_state(tgt: DataFrame, feed: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_cdc_merge",
     oracle=with_traffic(f"""
 , tgt AS (
   SELECT camera_id, event_type,

@@ -65,7 +65,6 @@ QUALITY_SCORE_SQL = """0.4 * LEAST(1.0, CAST(n_words AS DOUBLE) / 100.0)
 
 
 @register(
-    "q_corpus_select",
     oracle=f"""
 WITH m AS (
   {QUALITY_M_SQL}
@@ -188,7 +187,6 @@ def _kmv_sql(col: str) -> str:
 
 
 @register(
-    "q_approx_distinct",
     oracle=f"""
 SELECT {_kmv_sql("user_id")} AS user_id_kmv,
        CAST(COUNT(DISTINCT user_id) AS BIGINT) AS exact_users,
@@ -350,7 +348,6 @@ _HLL_H_SQL = md5_hash_sql("'hll#' || CAST(user_id AS VARCHAR)", 10)
 
 
 @register(
-    "q_hll_distinct",
     oracle=f"""
 WITH base AS (
   SELECT event_type, user_id, {_HLL_H_SQL} AS h
@@ -454,7 +451,6 @@ SAMPLE_THRESHOLDS = {
 
 
 @register(
-    "q_stratified_sample",
     oracle=f"""
 WITH th(lang, threshold) AS (VALUES {", ".join(
         f"('{lang}', {t})" for lang, t in sorted(SAMPLE_THRESHOLDS.items())
@@ -515,7 +511,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_lang_mixture",
     oracle=f"""
 WITH t AS (
   SELECT lang, CAST(len(string_split({NORM_SQL}, ' ')) AS BIGINT) AS n_tokens
@@ -661,7 +656,6 @@ def funnel_counts(e: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_funnel_sequence",
     oracle="""
 WITH v AS (
   SELECT user_id, MIN(ts) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id
@@ -739,7 +733,7 @@ ORDER BY source, doc_id
 """
 
 
-@register("q_training_manifest", oracle=_MANIFEST_ORACLE)
+@register(oracle=_MANIFEST_ORACLE)
 def q_training_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full pre-training data pipeline as ONE declarative plan:
     exact-dedup keep-rule → language + quality filter → temperature
@@ -815,7 +809,6 @@ WITH m AS (
 
 
 @register(
-    "q_quality_percentile_filter",
     oracle=_QUALITY_CTES
     + """
 SELECT s.doc_id, s.source, s.n_tokens,
@@ -894,7 +887,6 @@ RESERVOIR_K = 100
 
 
 @register(
-    "q_reservoir_sample",
     oracle=f"""
 WITH h AS (
   SELECT doc_id, source, n_chars,
@@ -977,7 +969,6 @@ def _priority_top(spark: SparkSession, sf_dir: str):
 
 
 @register(
-    "q_weighted_sample",
     oracle=f"""
 WITH keyed AS (
   SELECT doc_id, n_chars AS weight,
@@ -1099,7 +1090,6 @@ def _kmv_sketch(e: DataFrame, etype: str) -> DataFrame:
 
 
 @register(
-    "q_set_overlap_sketch",
     oracle=f"""
 WITH ha AS (
   SELECT DISTINCT {_mul_hash_sql("user_id", HASH_C)} AS h
@@ -1250,7 +1240,6 @@ HLL_ROLL_DAYS = 7  # trailing window width for the sketch rollup
 
 
 @register(
-    "q_hll_rolling_distinct",
     oracle=f"""
 WITH base AS (
   SELECT CAST(ts AS DATE) AS d, user_id, {_HLL_H_SQL} AS h
@@ -1424,7 +1413,7 @@ def dds_upper(bucket):
     return F.when(bucket <= 3, bucket).otherwise(lo + (s + 1) * width - 1).cast("long")
 
 
-@register("q_ddsketch_quantiles", oracle=_dds_oracle())
+@register(oracle=_dds_oracle())
 def q_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE quantiles — the DDSketch idea (Masson et al., VLDB
     2019) in its integer-exact form: values land in log2 octaves split
@@ -1612,7 +1601,7 @@ def analyze_hash_col() -> Column:
     return md5_hash(F.concat(F.lit("ant#"), F.col("val")), 10).alias("h")
 
 
-@register("q_analyze_table", oracle=_analyze_oracle())
+@register(oracle=_analyze_oracle())
 def q_analyze_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANALYZE TABLE — the cost-based-optimizer statistics pass every
     warehouse runs before planning: per column, the row count, null
@@ -1710,7 +1699,6 @@ def q_analyze_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_constraint_profile",
     oracle=f"""
 WITH ek AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
@@ -1847,7 +1835,6 @@ _SMP_H_SQL = md5_hash_sql("'smp#' || CAST(event_id AS VARCHAR)", 15) + f" % {SMP
 
 
 @register(
-    "q_analyze_sample",
     oracle=f"""
 WITH pu AS (
   SELECT user_id, COUNT(*) AS cnt,

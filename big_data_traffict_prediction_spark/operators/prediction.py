@@ -64,7 +64,6 @@ def predict_dow_hour(spark: SparkSession, sf_dir: str, dow: int, hour: int) -> D
 
 
 @register(
-    "q_predict_dow_hour",
     oracle=with_traffic(f"""
 , daily AS (
   SELECT camera_id, CAST(ts AS DATE) AS d,
@@ -88,7 +87,6 @@ def q_predict_dow_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_pattern_matrix",
     oracle=with_traffic("""
 , daily AS (
   SELECT camera_id,
@@ -149,16 +147,14 @@ def hourly_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def camera_thresholds(spark: SparkSession, sf_dir: str, subset: bool = False) -> DataFrame:
+def camera_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """p50/p75/p90/max of each camera's hourly sums (reference
     scripts/analyze_thresholds.py:50-60; numpy linear interpolation ==
     Spark `percentile` == DuckDB `quantile_cont`)."""
-    hourly = hourly_sums(spark, sf_dir)
-    if subset:
-        hourly = hourly.filter(F.expr(_THRESHOLD_SUBSET_PRED))
     pct = F.percentile("hourly_total", F.array(F.lit(0.5), F.lit(0.75), F.lit(0.9)))
     return (
-        hourly.groupBy("camera_id")
+        hourly_sums(spark, sf_dir)
+        .groupBy("camera_id")
         .agg(
             F.round(pct[0], 6).alias("p50"),
             F.round(pct[1], 6).alias("p75"),
@@ -191,7 +187,6 @@ thresholds AS (
 
 
 @register(
-    "q_camera_thresholds",
     oracle=with_traffic(
         "SELECT camera_id, p50, p75, p90, max_hourly FROM thresholds ORDER BY camera_id",
         extra_ctes=_THRESHOLDS_CTE.replace("{SUBSET}", ""),
@@ -203,7 +198,6 @@ def q_camera_thresholds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_predict_decision",
     oracle=with_traffic(
         f"""
 SELECT p.camera_id,
@@ -297,7 +291,6 @@ def q_predict_decision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_predict_all_cameras",
     oracle=with_traffic(f"""
 , camera_dim AS (
   SELECT c_custkey AS cam_key, c_name AS cam_name
@@ -364,7 +357,6 @@ _SCENARIOS = ["baseline", "high_traffic", "low_traffic"]
 
 
 @register(
-    "q_predict_scenario",
     oracle=with_traffic(f"""
 , camera_dim AS (
   SELECT c_custkey AS cam_key, c_name AS cam_name

@@ -21,7 +21,6 @@ from ..tables import load_table
 
 
 @register(
-    "q_props_json_extract",
     oracle="""
 SELECT event_type,
        CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
@@ -58,7 +57,6 @@ _MEASURES = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 
 @register(
-    "q_unpivot_measures",
     oracle=" UNION ALL ".join(
         f"SELECT l_orderkey, l_linenumber, '{m}' AS measure, {m} AS value FROM lineitem"
         for m in _MEASURES
@@ -85,7 +83,6 @@ def q_unpivot_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_props_variant_extract",
     oracle="""
 SELECT event_type,
        CAST(MIN(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_min,
@@ -180,7 +177,7 @@ LIMIT {ZORDER_LIMIT}
 """)
 
 
-@register("q_zorder_key", oracle=_zorder_oracle())
+@register(oracle=_zorder_oracle())
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) clustering key over (camera, hour): the two
     16-bit coordinates bit-interleave into one sort key, so a table
@@ -213,7 +210,6 @@ COMPACT_TARGET_BYTES = 4096
 
 
 @register(
-    "q_compaction_plan",
     oracle="""
 WITH chunks AS (
   SELECT strftime(ts, '%Y-%m-%d') AS d,
@@ -402,7 +398,7 @@ ORDER BY layout
 """)
 
 
-@register("q_clustering_depth", oracle=_clustering_oracle())
+@register(oracle=_clustering_oracle())
 def q_clustering_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-layout clustering quality — the metric behind OPTIMIZE
     ZORDER's before/after report: cut the fact into CLUSTER_FILES
@@ -536,7 +532,7 @@ ORDER BY s.layout, s.idx
 """)
 
 
-@register("q_bloom_skipping_eval", oracle=_bloom_skip_oracle())
+@register(oracle=_bloom_skip_oracle())
 def q_bloom_skipping_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-skipping INDEX × LAYOUT evaluation — the decision matrix a
     lakehouse table optimizer works from: q_clustering_depth showed

@@ -51,7 +51,6 @@ def camera_history(
 
 
 @register(
-    "q_camera_history_scan",
     oracle=with_traffic(f"""
 SELECT id, camera_id, ts, new_count, new_cars, new_motors
 FROM traffic
@@ -70,7 +69,6 @@ def q_camera_history_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_history_range_scan",
     oracle=with_traffic(f"""
 SELECT id, camera_id, ts, new_count, new_cars, new_motors
 FROM traffic
@@ -87,7 +85,6 @@ def q_history_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_gdpr_delete",
     oracle=with_traffic("""
 , tombstones AS (
   SELECT DISTINCT camera_id FROM traffic
@@ -135,7 +132,6 @@ K_ANON_TOP = 50  # risky groups reported (smallest-first)
 
 
 @register(
-    "q_k_anonymity",
     oracle=f"""
 WITH qi AS (
   SELECT event_type,
@@ -243,7 +239,6 @@ _ZM_PROBE_SQL = md5_hash_sql(f"'zm#{ZM_PROBE_CAMERA}'", 15)
 
 
 @register(
-    "q_zone_map_stats",
     oracle=with_traffic(f"""
 , zm AS (
   SELECT strftime(ts, '%Y-%m-%d') AS d,
@@ -387,7 +382,6 @@ def merge_zone_stats(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_zone_map_merge",
     oracle=with_traffic(f"""
 , b AS (
   SELECT strftime(ts, '%Y-%m-%d') AS d,
@@ -459,7 +453,6 @@ L_DIV_TOP = 50
 
 
 @register(
-    "q_l_diversity",
     oracle=f"""
 WITH grps AS (
   SELECT event_type,
@@ -624,7 +617,6 @@ def sel_est_zone():
 
 
 @register(
-    "q_selectivity_estimate",
     oracle=with_traffic(f"""
 , {_SEL_ZM_SQL},
 {_SEL_RNG_SQL}
@@ -833,7 +825,6 @@ def hist_buckets_from_vf(spark: SparkSession, vf: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_histogram_stats",
     oracle=with_traffic(f"""
 , {_HIST_CTES}
 SELECT bucket, lo, hi, n_rows, ndv FROM hist ORDER BY bucket
@@ -875,7 +866,6 @@ HG_DELTA_SLOT = 5
 
 
 @register(
-    "q_histogram_merge",
     oracle=with_traffic(f"""
 , {_HIST_CTES}
 SELECT bucket, lo, hi, n_rows, ndv FROM hist ORDER BY bucket
@@ -912,7 +902,6 @@ def q_histogram_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_selectivity_histogram",
     oracle=with_traffic(f"""
 , {_SEL_ZM_SQL},
 {_SEL_RNG_SQL},
@@ -1048,7 +1037,6 @@ _SH_PRED_SQL = f" AND {_SH_H_SQL} % {SH_MOD} < {SH_PERMILLE}"
 
 
 @register(
-    "q_sample_histogram",
     oracle=with_traffic(f"""
 , {_SEL_ZM_SQL},
 {_SEL_RNG_SQL},
@@ -1290,7 +1278,7 @@ FROM zs, sk
 """)
 
 
-@register("q_selectivity_zone_sketch", oracle=_zone_sketch_oracle())
+@register(oracle=_zone_sketch_oracle())
 def q_selectivity_zone_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ZONE-GRAIN SKETCH selectivity — the last rung of this repo's
     estimator ladder, and exactly the upgrade q_selectivity_estimate's
@@ -1541,7 +1529,6 @@ def conj_sel_estimates(spark: SparkSession, h: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_selectivity_conjunction",
     oracle=with_traffic(f"""
 , base AS (
   SELECT CAST(COUNT(*) AS BIGINT) AS n_total,
@@ -1635,7 +1622,7 @@ def q_selectivity_conjunction(spark: SparkSession, sf_dir: str) -> DataFrame:
 EQ_MCV_K = 16
 
 
-def equality_selectivity_profile(per_key: DataFrame, k: int = EQ_MCV_K) -> DataFrame:
+def equality_selectivity_profile(per_key: DataFrame) -> DataFrame:
     """One-row WORKLOAD-level error profile of two equality-predicate
     estimators over a per-key count frame (camera_id, c): for EVERY
     key, estimate |camera_id = key| with (a) the uniform rule n/ndv
@@ -1651,7 +1638,7 @@ def equality_selectivity_profile(per_key: DataFrame, k: int = EQ_MCV_K) -> DataF
         F.sum("c").cast("long").alias("n"),
         F.count(F.lit(1)).cast("long").alias("ndv"),
     )
-    mcv = pk.orderBy(F.desc("c"), "camera_id").limit(k)
+    mcv = pk.orderBy(F.desc("c"), "camera_id").limit(EQ_MCV_K)
     ms = mcv.agg(
         F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("mass"),
         F.count(F.lit(1)).cast("long").alias("k"),
@@ -1735,7 +1722,7 @@ FROM est
 """)
 
 
-@register("q_selectivity_equality", oracle=_EQ_SEL_ORACLE)
+@register(oracle=_EQ_SEL_ORACLE)
 def q_selectivity_equality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EQUALITY-predicate selectivity — the rung the range-predicate
     ladder (zone uniform → histogram → zone sketch) cannot cover:
@@ -1775,7 +1762,6 @@ T_CLOSE_TOP = 20
 
 
 @register(
-    "q_t_closeness",
     oracle=f"""
 WITH qi AS (
   SELECT event_type,
@@ -1945,7 +1931,7 @@ EQ_DELTA_MOD = 20
 EQ_DELTA_SLOT = 7
 
 
-@register("q_mcv_merge", oracle=_EQ_SEL_ORACLE)
+@register(oracle=_EQ_SEL_ORACLE)
 def q_mcv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental EQUALITY-stats refresh — the maintenance leg that
     completes the q_selectivity_equality family the way

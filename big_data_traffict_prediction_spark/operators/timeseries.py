@@ -99,10 +99,7 @@ ORDER BY bucket_epoch
 """)
 
 
-@register(
-    "q_bucket_series",
-    oracle=_series_oracle(*PERIODS[SERIES_PERIOD], "%H:%M"),
-)
+@register(oracle=_series_oracle(*PERIODS[SERIES_PERIOD], "%H:%M"))
 def q_bucket_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9: trailing-24h hourly buckets with HH:mm labels
     (reference app/routes.py:74-137)."""
@@ -110,7 +107,6 @@ def q_bucket_series(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_bucket_series_dense",
     oracle=with_traffic(f"""
 , spine AS (
   SELECT CAST(g AS BIGINT) AS bucket_epoch
@@ -169,20 +165,14 @@ def q_bucket_series_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_bucket_series_30m",
-    oracle=_series_oracle(*ROUTES_PERIODS["30m"], "%H:%M"),
-)
+@register(oracle=_series_oracle(*ROUTES_PERIODS["30m"], "%H:%M"))
 def q_bucket_series_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference /api/history period=30m: trailing 30 min, 60 s buckets,
     %H:%M labels (app/routes.py:84-86, sparse dict form)."""
     return bucket_series(spark, sf_dir, *ROUTES_PERIODS["30m"])
 
 
-@register(
-    "q_bucket_series_12h",
-    oracle=_series_oracle(*ROUTES_PERIODS["12h"], "%H:%M"),
-)
+@register(oracle=_series_oracle(*ROUTES_PERIODS["12h"], "%H:%M"))
 def q_bucket_series_12h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference /api/history period=12h: trailing 12 h, 15 min buckets
     (app/routes.py:90-92)."""
@@ -264,10 +254,7 @@ ORDER BY s.bucket_epoch
 DAY_ALIGNED_START = NOW_EPOCH - (NOW_EPOCH % 86400) - 86400
 
 
-@register(
-    "q_bucket_series_day_aligned",
-    oracle=_dense_oracle(DAY_ALIGNED_START, DAY_ALIGNED_START + 86400, 3600, "%H:%M"),
-)
+@register(oracle=_dense_oracle(DAY_ALIGNED_START, DAY_ALIGNED_START + 86400, 3600, "%H:%M"))
 def q_bucket_series_day_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom-day chart (reference app/utils.py:571-612): start_ts
     aligned to 00:00 of its day, 24 one-hour buckets, zero-filled,
@@ -280,7 +267,6 @@ def q_bucket_series_day_aligned(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_bucket_series_7d_labeled",
     oracle=_dense_oracle(
         NOW_EPOCH - DENSE_PERIODS["7d"][0], NOW_EPOCH, DENSE_PERIODS["7d"][1], "%A, %d %b"
     ),
@@ -294,7 +280,6 @@ def q_bucket_series_7d_labeled(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_bucket_series_30d_labeled",
     oracle=_dense_oracle(
         NOW_EPOCH - DENSE_PERIODS["30d"][0], NOW_EPOCH, DENSE_PERIODS["30d"][1], "%a, %d %b"
     ),
@@ -311,7 +296,6 @@ SESSION_GAP_S = 1800
 
 
 @register(
-    "q_session_windows",
     oracle=with_traffic(f"""
 , seq AS (
   SELECT camera_id, ts, id, new_count,
@@ -378,7 +362,6 @@ SES_ALPHA = 0.3
 
 
 @register(
-    "q_ses_forecast",
     oracle=with_traffic(f"""
 , daily AS (
   SELECT camera_id, CAST(ts AS DATE) AS d, CAST(SUM(new_count) AS DOUBLE) AS y
@@ -433,7 +416,6 @@ HOLT_BETA = 0.1
 
 
 @register(
-    "q_holt_forecast",
     oracle=f"""
 WITH RECURSIVE {TRAFFIC_CTE},
 daily AS (
@@ -515,7 +497,6 @@ def q_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_day_over_day",
     oracle=with_traffic("""
 , hourly AS (
   SELECT camera_id, CAST(ts AS DATE) AS d,
@@ -575,7 +556,6 @@ def q_day_over_day(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_cusum_changepoints",
     oracle=with_traffic("""
 , daily AS (
   SELECT camera_id, CAST(ts AS DATE) AS d, CAST(SUM(new_count) AS BIGINT) AS y
@@ -686,7 +666,6 @@ def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_seasonal_decompose",
     oracle=with_traffic("""
 , daily AS (
   SELECT CAST(ts AS DATE) AS d, CAST(SUM(new_count) AS BIGINT) AS y,
@@ -785,7 +764,6 @@ TREND_TOP = 25
 
 
 @register(
-    "q_trending_decay",
     oracle=with_traffic(f"""
 , rows_w AS (
   SELECT camera_id, new_count,

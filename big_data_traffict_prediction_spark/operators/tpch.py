@@ -45,7 +45,6 @@ Q1_CUTOFF = "1998-09-02"
 
 
 @register(
-    "q_tpch_q1",
     oracle=f"""
 SELECT l_returnflag, l_linestatus,
        CAST(SUM(CAST(FLOOR(l_quantity * {SCALE}) AS BIGINT)) AS BIGINT) AS sum_qty_fp,
@@ -92,7 +91,6 @@ Q3_DATE = "1997-06-01"
 
 
 @register(
-    "q_tpch_q3",
     oracle=f"""
 SELECT l_orderkey,
        CAST(SUM({REV_SQL}) AS BIGINT) AS revenue_fp,
@@ -138,7 +136,6 @@ Q5_REGION = "ASIA"
 
 
 @register(
-    "q_tpch_q5",
     oracle=f"""
 SELECT n_name,
        CAST(SUM({REV_SQL}) AS BIGINT) AS revenue_fp
@@ -182,7 +179,6 @@ TOP_PARTS_K = 3
 
 
 @register(
-    "q_top_parts_per_brand",
     oracle=f"""
 SELECT p_brand, p_name, revenue_fp, CAST(rn AS BIGINT) AS brand_rank
 FROM (
@@ -224,7 +220,6 @@ Q6_QTY = 24
 
 
 @register(
-    "q_tpch_q6",
     oracle=f"""
 SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * l_discount * {SCALE}) AS BIGINT)) AS BIGINT) AS revenue_fp,
        COUNT(*) AS n_items
@@ -264,7 +259,6 @@ Q10_TOPK = 20
 
 
 @register(
-    "q_tpch_q10",
     oracle=f"""
 SELECT c_custkey, c_name, revenue_fp, c_acctbal, n_name, c_mktsegment
 FROM (
@@ -312,7 +306,6 @@ Q14_DATE_HI = "1996-10-01"
 
 
 @register(
-    "q_tpch_q14",
     oracle=f"""
 SELECT CAST(100.0 * SUM(CASE WHEN p_type LIKE 'PROMO%' THEN {REV_SQL} ELSE 0 END) AS DOUBLE)
        / CAST(SUM({REV_SQL}) AS DOUBLE) AS promo_revenue_pct,
@@ -352,7 +345,6 @@ Q18_TOPK = 20
 
 
 @register(
-    "q_tpch_q18",
     oracle=f"""
 SELECT c_custkey, c_name, o_orderkey, o_orderdate,
        CAST(FLOOR(o_totalprice * {SCALE}) AS BIGINT) AS totalprice_fp,
@@ -402,7 +394,6 @@ Q4_DATE_HI = "1996-10-01"
 
 
 @register(
-    "q_tpch_q4",
     oracle=f"""
 SELECT o_orderpriority, COUNT(*) AS order_count
 FROM orders
@@ -444,7 +435,6 @@ Q7_YEARS = (1996, 1997)
 
 
 @register(
-    "q_tpch_q7",
     oracle=f"""
 SELECT supp_nation, cust_nation, l_year,
        CAST(SUM({REV_SQL}) AS BIGINT) AS revenue_fp
@@ -504,7 +494,6 @@ Q8_TYPE = "ECONOMY"
 
 
 @register(
-    "q_tpch_q8",
     oracle=f"""
 SELECT o_year,
        CAST(SUM(CASE WHEN nation = '{Q8_NATION}' THEN volume_fp ELSE 0 END) AS DOUBLE)
@@ -567,7 +556,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_tpch_q13",
     oracle="""
 SELECT c_count, COUNT(*) AS custdist
 FROM (
@@ -604,7 +592,6 @@ Q15_DATE_HI = "1996-04-01"
 
 
 @register(
-    "q_tpch_q15",
     oracle=f"""
 WITH revenue AS (
   SELECT l_suppkey AS supplier_no,
@@ -656,7 +643,6 @@ Q17_FRACTION = 0.5
 
 
 @register(
-    "q_tpch_q17",
     oracle=f"""
 SELECT CAST(SUM(CAST(FLOOR(l_extendedprice * {SCALE}) AS BIGINT)) AS BIGINT) AS price_fp,
        COUNT(*) AS n_items
@@ -706,7 +692,6 @@ Q12_HIGH = ("1-URGENT", "2-HIGH")
 
 
 @register(
-    "q_tpch_q12",
     oracle=f"""
 SELECT l_returnflag,
        CAST(SUM(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
@@ -759,7 +744,6 @@ def _q19_pred_sql() -> str:
 
 
 @register(
-    "q_tpch_q19",
     oracle=f"""
 SELECT CAST(SUM({REV_SQL}) AS BIGINT) AS revenue_fp,
        COUNT(*) AS n_items
@@ -800,7 +784,6 @@ Q21_TOPK = 100
 
 
 @register(
-    "q_tpch_q21",
     oracle=f"""
 SELECT s_name, COUNT(*) AS numwait
 FROM lineitem l1
@@ -875,7 +858,6 @@ Q22_CUTOFF = "2000-01-01"
 
 
 @register(
-    "q_tpch_q22",
     oracle=f"""
 WITH sel AS (
   SELECT * FROM customer
@@ -937,7 +919,6 @@ Q16_SIZES = (1, 5, 9, 14, 19, 23, 36, 45)
 
 
 @register(
-    "q_tpch_q16",
     oracle=f"""
 WITH ps AS (
   SELECT DISTINCT l_partkey AS ps_partkey, l_suppkey AS ps_suppkey FROM lineitem
@@ -1000,7 +981,6 @@ Q9_COST_FACTOR = 0.6  # retail-price cost proxy (no partsupp/ps_supplycost)
 
 
 @register(
-    "q_tpch_q9",
     oracle=f"""
 SELECT n_name AS nation,
        CAST(EXTRACT(year FROM o_orderdate) AS BIGINT) AS o_year,
@@ -1061,7 +1041,6 @@ Q20_DATE_HI = "1997-01-01"
 
 
 @register(
-    "q_tpch_q20",
     oracle=f"""
 WITH li AS (
   SELECT l_suppkey, l_partkey, CAST(FLOOR(l_quantity * {SCALE}) AS BIGINT) AS qty_fp
@@ -1146,7 +1125,6 @@ Q2_TYPE = "ECONOMY"
 
 
 @register(
-    "q_tpch_q2",
     oracle=f"""
 WITH reg_supp AS (
   SELECT s_suppkey, s_name, s_acctbal, n_name
@@ -1254,7 +1232,6 @@ def _q11_pv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_tpch_q11",
     oracle=f"""
 WITH nat_supp AS (
   SELECT s_suppkey
@@ -1301,7 +1278,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_fulfillment_lag",
     oracle="""
 WITH j AS (
   SELECT o.o_orderpriority,
@@ -1424,7 +1400,6 @@ ORDER BY nation, rank
 
 
 @register(
-    "q_sql_supplier_scorecard",
     oracle=_SQL_SCORECARD.format(
         rev=REV_SQL, li="lineitem", s="supplier", n="nation"
     ),

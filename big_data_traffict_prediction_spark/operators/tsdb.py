@@ -32,7 +32,6 @@ DAY_START = NOW_EPOCH - (NOW_EPOCH % 86400) - 86400
 
 
 @register(
-    "q_time_weighted_avg",
     oracle=with_traffic(f"""
 , f AS (
   SELECT camera_id, id, ts,
@@ -104,7 +103,6 @@ OHLC_INTERVAL_S = 3600
 
 
 @register(
-    "q_ohlc_candles",
     oracle=with_traffic(f"""
 , f AS (
   SELECT camera_id, id, ts, value,
@@ -211,7 +209,6 @@ j AS (
 
 
 @register(
-    "q_gap_fill_locf",
     oracle=with_traffic(_GAP_FILL_ORACLE_BASE + """
 SELECT camera_id, bucket_epoch,
        COALESCE(last_value(total IGNORE NULLS) OVER (
@@ -248,7 +245,6 @@ def q_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_gap_fill_interp",
     oracle=with_traffic(_GAP_FILL_ORACLE_BASE + """
 , marked AS (
   SELECT camera_id, bucket_epoch, total,
@@ -338,7 +334,6 @@ DELTA_SPAN_S = 86400
 
 
 @register(
-    "q_delta_series",
     oracle=with_traffic(f"""
 , f AS (
   SELECT camera_id, id, ts, value,
@@ -413,7 +408,6 @@ ROLLUP_CUTOFF = NOW_EPOCH - (NOW_EPOCH % 86400) - 7 * 86400
 
 
 @register(
-    "q_hybrid_rollup",
     oracle=with_traffic(f"""
 , cold AS (
   SELECT camera_id, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS d,
@@ -473,7 +467,6 @@ def q_hybrid_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_heavy_hitters",
     oracle=with_traffic("""
 , per_cam AS (
   SELECT camera_id,
@@ -546,7 +539,6 @@ def _cm_bucket() -> Column:
 
 
 @register(
-    "q_heavy_hitters_sketch",
     oracle=with_traffic(f"""
 , ex AS (
   SELECT camera_id, new_count, d
@@ -750,7 +742,7 @@ def cm_sketch_vs_exact(h: DataFrame, est: DataFrame) -> DataFrame:
     )
 
 
-@register("q_join_size_sketch", oracle=_JOIN_SKETCH_ORACLE)
+@register(oracle=_JOIN_SKETCH_ORACLE)
 def q_join_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-cardinality estimation by count-min inner product (the
     AMS / Cormode-Muthukrishnan F2-style estimator every
@@ -776,13 +768,13 @@ def q_join_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 MCV_K = 16
 
 
-def join_size_estimates(per_key: DataFrame, mcv_k: int = MCV_K) -> DataFrame:
+def join_size_estimates(per_key: DataFrame) -> DataFrame:
     """One-row (exact_pairs, n_keys, tot_a, tot_b, est_uniform, est_mcv)
     join-size estimates from a per-key count frame (camera_id, na, npm).
 
     est_uniform is the zero-statistics System-R estimate tot_a·tot_b/ndv
     (attribute-value uniformity over the key); est_mcv is the END-BIASED
-    histogram estimate — the mcv_k most frequent keys kept as exact
+    histogram estimate — the MCV_K most frequent keys kept as exact
     singleton buckets (value, na, npm), the tail assumed uniform — i.e.
     PostgreSQL's eqjoinsel with an MCV list. Factored out of
     q_join_size_histogram so tests can feed a PLANTED skewed per-key
@@ -794,7 +786,7 @@ def join_size_estimates(per_key: DataFrame, mcv_k: int = MCV_K) -> DataFrame:
         F.sum("na").cast("long").alias("tot_a"),
         F.sum("npm").cast("long").alias("tot_b"),
     )
-    mcv = pk.orderBy(F.desc(F.col("na") + F.col("npm")), "camera_id").limit(mcv_k)
+    mcv = pk.orderBy(F.desc(F.col("na") + F.col("npm")), "camera_id").limit(MCV_K)
     ms = mcv.agg(
         F.coalesce(F.sum(F.col("na") * F.col("npm")), F.lit(0))
         .cast("long")
@@ -824,7 +816,6 @@ def join_size_estimates(per_key: DataFrame, mcv_k: int = MCV_K) -> DataFrame:
 
 
 @register(
-    "q_join_size_histogram",
     oracle=with_traffic(f"""
 , {_SIDES_CTE},
 pk AS (
@@ -1016,7 +1007,6 @@ def join_order_rank(lf: DataFrame, of: DataFrame, pf: DataFrame) -> DataFrame:
 
 
 @register(
-    "q_join_order_rank",
     oracle=f"""
 WITH lf AS (SELECT l_orderkey, l_partkey FROM lineitem),
 ofo AS (SELECT o_orderkey FROM orders

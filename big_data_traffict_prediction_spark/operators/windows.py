@@ -28,8 +28,8 @@ CASE WHEN new_count <= 10 THEN 'LANCAR'
 """.strip()
 
 
-def congestion_col(count_col: str = "new_count") -> F.Column:
-    c = F.col(count_col)
+def congestion_col() -> F.Column:
+    c = F.col("new_count")
     return (
         F.when(c <= 10, F.lit("LANCAR"))
         .when(c <= 25, F.lit("PADAT LANCAR"))
@@ -39,7 +39,6 @@ def congestion_col(count_col: str = "new_count") -> F.Column:
 
 
 @register(
-    "q_latest_per_camera",
     oracle=with_traffic(f"""
 SELECT camera_id, ts, new_count, new_cars, new_motors,
        {CONGESTION_SQL} AS congestion
@@ -73,7 +72,6 @@ def q_latest_per_camera(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_running_totals",
     oracle=with_traffic("""
 SELECT camera_id, ts, id, new_count,
        CAST(SUM(new_count) OVER (PARTITION BY camera_id ORDER BY ts, id
@@ -109,7 +107,6 @@ TOPK_PER_CAMERA = 3
 
 
 @register(
-    "q_topk_per_camera",
     oracle=with_traffic(f"""
 SELECT camera_id, ts, id, new_count, CAST(rn AS BIGINT) AS rank_in_camera
 FROM (
@@ -138,7 +135,6 @@ RETENTION_N = 100  # reference: HISTORY_MAX_LEN=50000 (app/config.py:25); small 
 
 
 @register(
-    "q_retention_prune",
     oracle=with_traffic(f"""
 SELECT camera_id, CAST(COUNT(*) AS BIGINT) AS kept_rows,
        MIN(ts) AS oldest_kept, MAX(ts) AS newest_kept
@@ -177,7 +173,6 @@ LIVENESS_STALE_S = 86400 * 2  # "offline" if silent for 2 days of event-time
 
 
 @register(
-    "q_camera_liveness",
     oracle=with_traffic(f"""
 SELECT camera_id,
        MAX(ts) AS last_update,
@@ -212,7 +207,6 @@ ROLLING_DAYS = 7
 
 
 @register(
-    "q_rolling_median",
     oracle=with_traffic(f"""
 , daily AS (
   SELECT camera_id, date_trunc('day', ts) AS day_ts,
@@ -266,7 +260,6 @@ GAP_MIN_S = 3600  # report silences longer than an hour
 
 
 @register(
-    "q_camera_gaps",
     oracle=with_traffic(f"""
 , seq AS (
   SELECT camera_id, ts, id,
@@ -316,7 +309,6 @@ RANGE_TRAIL_US = 3_600 * 1_000_000  # trailing 1 hour, in microseconds
 
 
 @register(
-    "q_trailing_range_sum",
     oracle=with_traffic(
         f"""
 SELECT camera_id, id, ts, new_count,
@@ -368,7 +360,6 @@ ATTRIB_WINDOW_US = 7 * 86400 * 1_000_000
 
 
 @register(
-    "q_first_touch_attribution",
     oracle=with_traffic(f"""
 , seq AS (
   SELECT camera_id, id, ts, event_type,
@@ -435,7 +426,6 @@ def q_first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_markov_transitions",
     oracle=with_traffic("""
 , seq AS (
   SELECT camera_id, event_type,
@@ -489,7 +479,6 @@ PATH_TOP_K = 15
 
 
 @register(
-    "q_top_paths",
     oracle=with_traffic(f"""
 , seq AS (
   SELECT camera_id,
@@ -536,7 +525,6 @@ SCD2_BAND = 100
 
 
 @register(
-    "q_scd2_build",
     oracle=with_traffic(f"""
 , states AS (
   SELECT camera_id, ts, id,
@@ -617,7 +605,6 @@ SCD2_APPLY_T2 = NOW_EPOCH - 2 * 86400
 
 
 @register(
-    "q_scd2_apply",
     oracle=with_traffic(f"""
 , states AS (
   SELECT camera_id, ts, id,

@@ -1,13 +1,18 @@
 """Query registry: name → (Spark callable, optional DuckDB oracle SQL).
 
 Every operator module registers its queries here; ``__spark_entry__``
-just re-exports. A query with ``oracle=None`` is deliberately
-non-SQL-expressible (streaming/state/ML) and gets the driver's weaker
-rows-only check.
+just re-exports. A query is named after its function. A query with
+``oracle=None`` is deliberately non-SQL-expressible
+(streaming/state/ML) and gets the driver's weaker rows-only check.
+
+Query order is fixed here, not by import side effects: queries follow
+the position of their module in ``_MODULES``, then registration order
+within the module.
 """
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -18,37 +23,70 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 @dataclass(frozen=True)
 class Query:
-    name: str
     fn: QueryFn
     oracle: str | None
-    doc: str
 
 
 _REGISTRY: dict[str, Query] = {}
 
+# Every module that registers queries, in query order.
+_MODULES = tuple(
+    f"{__package__}.{m}"
+    for m in (
+        "operators.aggregates",
+        "operators.analytics",
+        "operators.geo",
+        "operators.graph",
+        "operators.iou",
+        "operators.joins",
+        "operators.pipeline",
+        "operators.prediction",
+        "operators.reshape",
+        "operators.scans",
+        "operators.timeseries",
+        "operators.tpch",
+        "operators.tsdb",
+        "operators.windows",
+        "functions.bpe",
+        "functions.curation",
+        "functions.dedup",
+        "functions.multimodal",
+        "functions.pretrain",
+        "functions.scrub",
+        "functions.similarity",
+        "functions.text",
+        "ml.forecast",
+        "streaming.queries",
+    )
+)
 
-def register(name: str, oracle: str | None = None):
-    """Decorator: register a (spark, sf_dir) -> DataFrame query."""
+
+def register(*, oracle: str | None):
+    """Decorator: register a (spark, sf_dir) -> DataFrame query under
+    its function's name."""
 
     def deco(fn: QueryFn) -> QueryFn:
-        if name in _REGISTRY:
-            raise ValueError(f"duplicate query name {name!r}")
-        _REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        if fn.__name__ in _REGISTRY:
+            raise ValueError(f"duplicate query name {fn.__name__!r}")
+        _REGISTRY[fn.__name__] = Query(fn=fn, oracle=oracle)
         return fn
 
     return deco
 
 
-def all_queries() -> dict[str, QueryFn]:
-    """Every registered query, in registration order."""
+def _ordered() -> list[tuple[str, Query]]:
     _load_modules()
-    return {q.name: q.fn for q in _REGISTRY.values()}
+    return sorted(_REGISTRY.items(), key=lambda kv: _MODULES.index(kv[1].fn.__module__))
+
+
+def all_queries() -> dict[str, QueryFn]:
+    """Every registered query, in query order."""
+    return {name: q.fn for name, q in _ordered()}
 
 
 def all_oracles() -> dict[str, str]:
-    """Oracle SQL of every query that has one, in registration order."""
-    _load_modules()
-    return {q.name: q.oracle for q in _REGISTRY.values() if q.oracle is not None}
+    """Oracle SQL of every query that has one, in query order."""
+    return {name: q.oracle for name, q in _ordered() if q.oracle is not None}
 
 
 def get(name: str) -> Query:
@@ -64,33 +102,6 @@ def _load_modules() -> None:
     global _LOADED
     if _LOADED:
         return
-    from .operators import (  # noqa: F401
-        aggregates,
-        analytics,
-        geo,
-        graph,
-        iou,
-        joins,
-        pipeline,
-        prediction,
-        reshape,
-        scans,
-        timeseries,
-        tpch,
-        tsdb,
-        windows,
-    )
-    from .functions import (  # noqa: F401
-        bpe,
-        curation,
-        dedup,
-        multimodal,
-        pretrain,
-        scrub,
-        similarity,
-        text,
-    )
-    from .ml import forecast  # noqa: F401
-    from .streaming import queries  # noqa: F401
-
+    for m in _MODULES:
+        importlib.import_module(m)
     _LOADED = True

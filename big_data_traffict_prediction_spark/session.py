@@ -11,7 +11,7 @@ sees the same semantics:
 - AQE on: runtime shuffle-partition coalescing and skew-join splitting.
   Hot cameras are a real skew source in the reference's data model
   (SURVEY.md §7 watch-list 7).
-- shuffle partitions sized to the local core count, not the 200
+- shuffle partitions equal the local core count, not the 200
   default — on a real cluster this is set per-job from the input size.
 """
 
@@ -29,7 +29,6 @@ from pyspark.sql import SparkSession
 def get_spark(
     app_name: str = "big-data-traffict-prediction-spark",
     cpus: int | str | None = None,
-    shuffle_partitions: int | str | None = None,
     driver_memory: str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
@@ -38,13 +37,12 @@ def get_spark(
     ``SPARK_GRAFT_CPUS`` mirrors the driver harness's knob.
     """
     cpus = str(cpus or os.environ.get("SPARK_GRAFT_CPUS") or "32")
-    shuffle = str(shuffle_partitions or os.environ.get("SPARK_SHUFFLE_PARTITIONS") or cpus)
     mem = driver_memory or os.environ.get("SPARK_DRIVER_MEMORY", "16g")
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", shuffle)
+        .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def write_partitioned_lake(df: DataFrame, path: str, mode: str = "append") -> None:
+def write_partitioned_lake(df: DataFrame, path: str) -> None:
     """S5: event-level rows → parquet partitioned by (year, month, day).
 
     At 100 TB this layout is what makes every date-filtered query in
@@ -47,7 +47,7 @@ def write_partitioned_lake(df: DataFrame, path: str, mode: str = "append") -> No
         df.withColumn("year", F.year("ts"))
         .withColumn("month", F.month("ts"))
         .withColumn("day", F.dayofmonth("ts"))
-        .write.mode(mode)
+        .write.mode("append")
         .partitionBy("year", "month", "day")
         .parquet(path)
     )
@@ -201,7 +201,6 @@ def upsert_partitioned_lake(
     updates: DataFrame,
     path: str,
     key_cols: list[str],
-    order_col: str = "ts",
 ) -> None:
     """MERGE-style upsert onto a (year, month, day)-partitioned parquet
     lake without a table format: the engine-grade version of the
@@ -213,7 +212,7 @@ def upsert_partitioned_lake(
     2. read ONLY those partitions of the existing lake (partition
        pruning; the rest of the 100 TB table is never scanned),
     3. union existing + updates, keep the newest row per key
-       (row_number over ``order_col`` DESC, updates win ties),
+       (row_number over ``ts`` DESC, updates win ties),
     4. dynamic-partition-overwrite exactly the touched partitions. The
        commit deletes each touched day directory, then renames the
        staged one into its place, so a concurrent reader of that day
@@ -224,9 +223,9 @@ def upsert_partitioned_lake(
     from pyspark.sql import Window
 
     with_parts = (
-        updates.withColumn("year", F.year(order_col))
-        .withColumn("month", F.month(order_col))
-        .withColumn("day", F.dayofmonth(order_col))
+        updates.withColumn("year", F.year("ts"))
+        .withColumn("month", F.month("ts"))
+        .withColumn("day", F.dayofmonth("ts"))
         .withColumn("_is_update", F.lit(1))
     )
     try:
@@ -252,7 +251,7 @@ def upsert_partitioned_lake(
         part_pred = p if part_pred is None else (part_pred | p)
     old = existing.filter(part_pred).withColumn("_is_update", F.lit(0))
     w = Window.partitionBy(*key_cols).orderBy(
-        F.desc(order_col), F.desc("_is_update")
+        F.desc("ts"), F.desc("_is_update")
     )
     merged = (
         old.unionByName(with_parts)
@@ -268,19 +267,15 @@ def upsert_partitioned_lake(
     )
 
 
-def compact_lake_day(
-    spark: SparkSession,
-    path: str,
-    year: int,
-    month: int,
-    day: int,
-    target_bytes: int = 128 * 1024 * 1024,
-) -> int:
+COMPACT_TARGET_BYTES = 128 * 1024 * 1024  # compacted file size
+
+
+def compact_lake_day(spark: SparkSession, path: str, year: int, month: int, day: int) -> int:
     """Small-file compaction for one partition — the maintenance job
     every streaming-append lake needs (each micro-batch leaves a file;
     a 2 s trigger leaves 43k files/day/camera). Rewrites the partition
-    into ceil(bytes / target_bytes) files via a single repartition and
-    dynamic overwrite. Returns the new file count."""
+    into ceil(bytes / COMPACT_TARGET_BYTES) files via a single
+    repartition and dynamic overwrite. Returns the new file count."""
     import math
     import os
 
@@ -290,7 +285,7 @@ def compact_lake_day(
         for f in os.listdir(part_dir)
         if f.endswith(".parquet")
     )
-    n_files = max(1, math.ceil(size / target_bytes))
+    n_files = max(1, math.ceil(size / COMPACT_TARGET_BYTES))
     (
         read_lake_day(spark, path, year, month, day)
         .repartition(n_files)

@@ -52,27 +52,32 @@ from . import simulate, state, windows
 _WM_CTE = "wm AS (SELECT MAX(ts) - INTERVAL '30 minutes' AS w FROM traffic)"
 
 
-# Staged input is a pure function of the events files: the same
-# deterministic detection frame cut into the same time-ordered chunks
-# (count set below). Staging it once per (Spark application, events
-# stamp) and replaying the SAME files for all streaming queries saves a
-# count + global sort + the chunk parquet writes per query; an append
-# to events changes the stamp and restages (tables.memo_on_input). The
-# staged input is read-only; every drain still gets a FRESH checkpoint
-# scratch (see _drain), which is what must not be shared. Replay
-# order is modification-time order, fixed at staging.
+# Staged input is a pure function of the events files and the chunk
+# count: the same deterministic detection frame cut into STAGE_CHUNKS
+# time-ordered chunks. Staging it once per (chunk count, Spark
+# application, events stamp) and replaying the SAME files for all
+# streaming queries saves a count + global sort + the chunk parquet
+# writes per query; an append to events changes the stamp and restages
+# (tables.memo_on_input). The staged input is read-only; every drain
+# still gets a FRESH checkpoint scratch (see _drain), which is what
+# must not be shared. Replay order is modification-time order, fixed
+# at staging.
+#
+# 2 chunks = one real cross-batch state handoff per drain at the
+# minimum micro-batch count: each batch costs ~1.1-1.2 s FIXED
+# (measured r11: 4 chunks 5.1 s, 2 chunks 2.7-3.2 s, 1 chunk 1.6 s for
+# the same drained output) and the drained result is
+# chunking-invariant by construction (pinned by
+# tests/test_streaming.py::test_tumbling_counts_chunking_invariant and
+# the per-query invariance tests, which drain the registered queries
+# at other STAGE_CHUNKS values).
+STAGE_CHUNKS = 2
+
+
 def _stage(spark: SparkSession, sf_dir: str) -> str:
     root = tempfile.mkdtemp(prefix="traffic_stage_")
     atexit.register(shutil.rmtree, root, True)
-    # 2 chunks = one real cross-batch state handoff per drain at
-    # the minimum micro-batch count: each batch costs ~1.1-1.2 s
-    # FIXED (measured r11: 4 chunks 5.1 s, 2 chunks 2.7-3.2 s, 1
-    # chunk 1.6 s for the same drained output) and the drained
-    # result is chunking-invariant by construction (pinned by
-    # tests/test_streaming.py::test_tumbling_counts_chunking_invariant
-    # and per-query invariance tests, which stage their own chunk
-    # counts — multi-batch state transitions stay covered there).
-    simulate.stage_stream_dir(spark, sf_dir, f"{root}/stage", n_chunks=2)
+    simulate.stage_stream_dir(spark, sf_dir, f"{root}/stage", n_chunks=STAGE_CHUNKS)
     return f"{root}/stage"
 
 
@@ -81,7 +86,7 @@ def _drain(
     sf_dir: str,
     build: Callable[[Callable[[], DataFrame]], DataFrame],
     output_mode: str = "append",
-    state_scale: int | None = 1,
+    sized_state: bool = True,
     sink: Callable[[DataFrame, str, int | None], DataFrame] | None = None,
 ) -> DataFrame:
     """Drain one bounded replay of the staged detection stream — the
@@ -95,15 +100,19 @@ def _drain(
     when the drain returns or raises. The returned frame owns its rows,
     so an earlier result stays readable after later calls.
 
-    ``state_scale`` sizes the state-store partitions
-    (windows.stream_state_partitions) for staged rows × scale; None
-    keeps the constant cap — the per-row Python-state drains, whose
-    partition count is their Python parallelism, not state size."""
+    ``sized_state`` sizes the state-store partitions
+    (windows.stream_state_partitions) for the staged row count, which
+    bounds the distinct state keys of every drain; False keeps the
+    constant cap — the per-row Python-state drains, whose partition
+    count is their Python parallelism, not state size."""
     stage = memo_on_input(
-        "stream_stage", spark, sf_dir, ("events",), lambda: _stage(spark, sf_dir)
+        f"stream_stage_{STAGE_CHUNKS}",
+        spark,
+        sf_dir,
+        ("events",),
+        lambda: _stage(spark, sf_dir),
     )
-    staged = simulate.staged_rows(stage)
-    state_rows = None if state_scale is None or staged is None else staged * state_scale
+    state_rows = simulate.staged_rows(stage) if sized_state else None
     scratch = tempfile.mkdtemp(prefix="traffic_stream_")
     try:
         plan = build(lambda: simulate.read_stream(spark, stage))
@@ -121,7 +130,7 @@ def _drain(
         shutil.rmtree(scratch, ignore_errors=True)
 
 
-@register("q_stream_iou_dedup", oracle=None)
+@register(oracle=None)
 def q_stream_iou_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """St2-St3: per-camera stateful IoU dedup + accumulators over the
     simulated stream (applyInPandasWithState). Equals the batch
@@ -131,13 +140,12 @@ def q_stream_iou_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a state-sizing knob — the sized cap (2 at sf0.1) measured the
     # congestion twin ~3x slower than the constant (r14 A/B)
     out = _drain(
-        spark, sf_dir, lambda read: state.stateful_dedup(read()), state_scale=None
+        spark, sf_dir, lambda read: state.stateful_dedup(read()), sized_state=False
     )
     return out.orderBy("camera_id", "id")
 
 
 @register(
-    "q_stream_tumbling_counts",
     oracle=with_traffic(
         """
 SELECT window_start, window_start + INTERVAL '1 hour' AS window_end, camera_id,
@@ -163,7 +171,6 @@ def q_stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("window_start", "camera_id")
 
 @register(
-    "q_stream_sliding_counts",
     oracle=with_traffic(
         """
 SELECT window_start, window_start + INTERVAL '1 hour' AS window_end,
@@ -192,7 +199,6 @@ def q_stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_stream_session_windows",
     oracle=with_traffic(
         """
 SELECT MIN(ts) AS session_start, MAX(ts) + INTERVAL '30 minutes' AS session_end,
@@ -254,13 +260,13 @@ def _twice_delivered_counts(
             F.sum("new_count").alias("total_new_count"),
         )
 
-    # the stage is read TWICE and unioned: 2x sizes the drain for its
-    # input volume (distinct dedup keys stay 1x the staged rows)
-    out = _drain(spark, sf_dir, build, output_mode="complete", state_scale=2)
+    # the stage is read twice, but the distinct dedup keys (the state)
+    # stay bounded by the staged rows, which size the drain
+    out = _drain(spark, sf_dir, build, output_mode="complete")
     return out.orderBy("camera_id")
 
 
-@register("q_stream_dedup_delivery", oracle=_DELIVERY_ORACLE)
+@register(oracle=_DELIVERY_ORACLE)
 def q_stream_dedup_delivery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-once event delivery from an at-least-once transport:
     the staged stream is read TWICE and unioned (every record delivered
@@ -323,7 +329,7 @@ def _alert_join(read: Callable[[], DataFrame], how: str) -> DataFrame:
     )
 
 
-@register("q_stream_stream_join", oracle=_ALERT_JOIN_ORACLE)
+@register(oracle=_ALERT_JOIN_ORACLE)
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join (the one streaming operator class the
     other registered streams don't cover): raw detections joined to a
@@ -348,7 +354,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SJ_BIN_S = ALERT_LOOKBACK_MIN * 60
 
 
-@register("q_stream_interval_join_binned", oracle=_ALERT_JOIN_ORACLE)
+@register(oracle=_ALERT_JOIN_ORACLE)
 def q_stream_interval_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bin-blocked stream-stream interval join — the streaming twin of
     q_interval_join_binned (operators/joins.py): the alert side
@@ -438,7 +444,7 @@ def stream_stream_left_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _outer_join_rows(spark, sf_dir, "left_outer").drop("a_camera")
 
 
-@register("q_stream_stream_left_join", oracle=None)
+@register(oracle=None)
 def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join: every detection flows
     through; those with no congestion alert in the next 15 minutes
@@ -478,7 +484,6 @@ def q_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_stream_static_join",
     oracle=with_traffic(
         """
 SELECT t.camera_id, t.id, t.ts, t.new_count, th.p90
@@ -517,7 +522,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_stream_congestion_episodes",
     oracle=with_traffic(
         f"""
 , seq AS (
@@ -558,12 +562,12 @@ def q_stream_congestion_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     episode stays in state and is correctly absent from both sides."""
     # NO state sizing: per-row Python kernel — see q_stream_iou_dedup
     out = _drain(
-        spark, sf_dir, lambda read: state.congestion_episodes(read()), state_scale=None
+        spark, sf_dir, lambda read: state.congestion_episodes(read()), sized_state=False
     )
     return out.orderBy("camera_id", "episode_start")
 
 
-@register("q_stream_dedup_within_watermark", oracle=_DELIVERY_ORACLE)
+@register(oracle=_DELIVERY_ORACLE)
 def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     """`dropDuplicatesWithinWatermark` twin of q_stream_dedup_delivery —
     the recommended modern form: state for a key is dropped once the
@@ -578,7 +582,6 @@ def q_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 @register(
-    "q_stream_continuous_rollup",
     oracle=with_traffic(
         """
 SELECT camera_id, strftime(CAST(ts AS DATE), '%Y-%m-%d') AS d,
@@ -623,7 +626,7 @@ def stream_stream_full_outer_rows(spark: SparkSession, sf_dir: str) -> DataFrame
     return _outer_join_rows(spark, sf_dir, "full_outer")
 
 
-@register("q_stream_stream_full_outer", oracle=None)
+@register(oracle=None)
 def q_stream_stream_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream FULL OUTER interval join — the last member of the
     join-mode family (inner: hash-checked; left: rows-only; this side
@@ -673,7 +676,6 @@ _SHLL_H_SQL = md5_hash_sql("'shll#' || camera_id", 10)
 
 
 @register(
-    "q_stream_hll_cameras",
     oracle=with_traffic(
         f"""
 , hb AS (
@@ -735,7 +737,6 @@ STREAM_CDC_T2_EPOCH = STREAM_CDC_T1_EPOCH + 2 * 86400
 
 
 @register(
-    "q_stream_cdc_merge",
     oracle=with_traffic(f"""
 , tgt AS (
   SELECT camera_id, MAX({{'ts': ts, 'id': id, 'new_count': new_count}}) AS s
@@ -829,7 +830,6 @@ from ..operators.scans import _ZM_BLOOM_SQL, zm_bloom_bit  # noqa: E402
 
 
 @register(
-    "q_stream_zone_map",
     oracle=with_traffic(f"""
 SELECT strftime(ts, '%Y-%m-%d') AS d,
        CAST(EXTRACT(hour FROM ts) AS BIGINT) AS hr,
@@ -892,7 +892,6 @@ from ..operators.pipeline import _dds_oracle as _dds_oracle_shared  # noqa: E402
 @register(
     # the streaming sketch must equal the batch rebuild bit for bit —
     # one oracle text serves both registrations
-    "q_stream_ddsketch",
     oracle=_dds_oracle_shared(),
 )
 def q_stream_ddsketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -960,7 +959,6 @@ from ..operators.scans import _HIST_CTES as _HIST_CTES_SHARED  # noqa: E402
 
 
 @register(
-    "q_stream_histogram",
     oracle=with_traffic(f"""
 , {_HIST_CTES_SHARED}
 SELECT bucket, lo, hi, n_rows, ndv FROM hist ORDER BY bucket
@@ -996,7 +994,7 @@ def q_stream_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..operators.tsdb import _JOIN_SKETCH_ORACLE  # noqa: E402  (shared text)
 
 
-@register("q_stream_join_size_sketch", oracle=_JOIN_SKETCH_ORACLE)
+@register(oracle=_JOIN_SKETCH_ORACLE)
 def q_stream_join_size_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING join-cardinality sketch: the CM_DEPTH×CM_WIDTH dual
     grid of q_join_size_sketch maintained as complete-mode aggregation
@@ -1054,7 +1052,6 @@ _ST_ANALYZE_COLS_SQL = {
 
 
 @register(
-    "q_stream_analyze",
     oracle=with_traffic(f""", base AS (
 {_analyze_stack_sql(_ST_ANALYZE_COLS_SQL, "traffic")}
 ){ANALYZE_TAIL_SQL}"""),
@@ -1163,7 +1160,7 @@ def q_stream_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
 from ..operators.scans import _EQ_SEL_ORACLE  # noqa: E402  (shared text)
 
 
-@register("q_stream_mcv", oracle=_EQ_SEL_ORACLE)
+@register(oracle=_EQ_SEL_ORACLE)
 def q_stream_mcv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING equality-stats maintenance — the third leg of the
     MCV family (build q_selectivity_equality, incremental q_mcv_merge,

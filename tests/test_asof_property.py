@@ -66,9 +66,7 @@ def test_asof_join_matches_duckdb_native(spark, left, right):
 
     got = sorted(
         (r.k, r.ts, r.val, r.payload)
-        for r in asof_join(
-            ldf, rdf, on="k", left_ts="ts", right_ts="rts", how="inner"
-        ).collect()
+        for r in asof_join(ldf, rdf, on="k", left_ts="ts", right_ts="rts").collect()
     )
 
     con = duckdb.connect()
@@ -84,21 +82,3 @@ def test_asof_join_matches_duckdb_native(spark, left, right):
         ).fetchall()
     )
     assert got == want
-
-    # left variant: every left row survives; matched payloads agree
-    got_left = sorted(
-        (r.k, r.ts, r.val, r.payload)
-        for r in asof_join(
-            ldf, rdf, on="k", left_ts="ts", right_ts="rts", how="left"
-        ).collect()
-    )
-    want_left = sorted(
-        tuple(t)
-        for t in con.execute(
-            """
-            SELECT l.k, l.ts, l.val, r.payload
-            FROM l ASOF LEFT JOIN r ON l.k = r.k AND l.ts >= r.rts
-            """
-        ).fetchall()
-    )
-    assert got_left == want_left

@@ -123,7 +123,7 @@ def test_global_prefix_min_matches_single_window(spark):
     df = spark.createDataFrame(rows).repartition(8)
     got = {
         r.k: r._pre
-        for r in compat.global_prefix_min(df, [F.desc("k")], "v", partitions=4)
+        for r in compat.global_prefix_min(df, [F.desc("k")], "v")
         .select("k", "_pre")
         .collect()
     }

@@ -3,18 +3,21 @@
 COVERAGE.md and README.md both state the query / oracle counts; r6's
 judge caught them drifting (181/170 vs the real 182/172). Derive the
 expected numbers from the registry itself so the docs can't silently
-rot again. Also two source checks over the engine's files: no public
-function only tests reach, and one module that writes session conf.
-Pure-Python: no SparkSession.
+rot again. Also source checks over the engine's files: no public
+function only tests reach, no defaulted parameter only tests set, and
+one module that writes session conf. Pure-Python: no SparkSession.
 """
 
 from __future__ import annotations
 
 import ast
+import inspect
 import json
 import os
 import re
-from collections import Counter
+import subprocess
+import sys
+from collections import Counter, defaultdict
 
 from big_data_traffict_prediction_spark import registry
 
@@ -53,18 +56,47 @@ def test_readme_totals_match_registry():
 
 
 def test_query_order_is_registration_order(tmp_path, monkeypatch):
-    """Query and oracle order is plain registration order: a driver
-    artifact in the working directory must not reorder it."""
+    """Query and oracle order is the position of the query's module in
+    registry._MODULES, then its place in that module's source: a
+    driver artifact in the working directory must not reorder it."""
     registry._load_modules()
     first = next(iter(registry._REGISTRY))
     (tmp_path / "CORRECTNESS_r999.json").write_text(
         json.dumps({first: {"hash_match": True, "spark_rows": 1}})
     )
     monkeypatch.chdir(tmp_path)
-    assert list(registry.all_queries()) == list(registry._REGISTRY)
+    rank = {m: i for i, m in enumerate(registry._MODULES)}
+
+    def position(name):
+        fn = registry._REGISTRY[name].fn
+        return rank[fn.__module__], inspect.unwrap(fn).__code__.co_firstlineno
+
+    want = sorted(registry._REGISTRY, key=position)
+    assert list(registry.all_queries()) == want
     assert list(registry.all_oracles()) == [
-        n for n, q in registry._REGISTRY.items() if q.oracle is not None
+        n for n in want if registry._REGISTRY[n].oracle is not None
     ]
+
+
+def test_query_order_does_not_depend_on_import_order():
+    """A module imported before the registry loads its list (here
+    functions.dedup, which also imports functions.text) must not move
+    its queries: the registry orders them, not import side effects."""
+
+    def order(prelude: str) -> list[str]:
+        code = (
+            f"{prelude}; import json; "
+            "from big_data_traffict_prediction_spark import registry; "
+            "print(json.dumps(list(registry.all_queries())))"
+        )
+        out = subprocess.run(
+            [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+        )
+        return json.loads(out.stdout.splitlines()[-1])
+
+    plain = order("pass")
+    assert len(plain) == len(set(plain)) > 0
+    assert order("import big_data_traffict_prediction_spark.functions.dedup") == plain
 
 
 PKG = os.path.join(REPO, "big_data_traffict_prediction_spark")
@@ -98,6 +130,16 @@ def _py_files(root: str):
         yield from (os.path.join(d, f) for f in files if f.endswith(".py"))
 
 
+def _non_test_sources() -> list[str]:
+    return [
+        *_py_files(PKG),
+        *_py_files(os.path.join(REPO, "perfbench")),
+        *_py_files(os.path.join(REPO, "scripts")),
+        os.path.join(REPO, "bench.py"),
+        os.path.join(REPO, "__spark_entry__.py"),
+    ]
+
+
 def _references(tree) -> Counter:
     """Names a module's code refers to: loads and stores of bare names,
     attribute accesses (``mod.fn``) and ``from m import fn``. Prose in
@@ -117,15 +159,8 @@ def test_no_public_engine_function_is_reached_only_by_tests():
     """Every public top-level engine function is @register-ed, referred
     to by non-test code outside its own body, or kept on purpose
     (TEST_ONLY_KEEP). Code only tests reach is a twin or dead surface."""
-    sources = [
-        *_py_files(PKG),
-        *_py_files(os.path.join(REPO, "perfbench")),
-        *_py_files(os.path.join(REPO, "scripts")),
-        os.path.join(REPO, "bench.py"),
-        os.path.join(REPO, "__spark_entry__.py"),
-    ]
     refs = Counter()
-    for p in sources:
+    for p in _non_test_sources():
         refs += _references(ast.parse(_read(p)))
     unreferenced = set()
     for path in _py_files(PKG):
@@ -146,6 +181,88 @@ def test_no_public_engine_function_is_reached_only_by_tests():
     assert not TEST_ONLY_KEEP.keys() - unreferenced, sorted(
         TEST_ONLY_KEEP.keys() - unreferenced
     )
+
+
+_JPEG_STREAMS = (
+    "the encoder generates the decoder's test streams: quality tables, "
+    "chroma subsampling and restart markers are what the decoder must parse"
+)
+
+# Defaulted engine parameters that no non-test caller sets, each with
+# why it stays. Keys are "module.function(parameter)".
+PARAM_KEEP = {
+    "functions.jpeg.encode_gray(quality)": _JPEG_STREAMS,
+    "functions.jpeg.encode_gray(restart_interval)": _JPEG_STREAMS,
+    "functions.jpeg.encode_color(quality)": _JPEG_STREAMS,
+    "functions.jpeg.encode_color(subsampling)": _JPEG_STREAMS,
+    "functions.jpeg.encode_color(restart_interval)": _JPEG_STREAMS,
+    "functions.jpeg.encode_progressive(quality)": _JPEG_STREAMS,
+    "functions.jpeg.encode_progressive(subsampling)": _JPEG_STREAMS,
+    "functions.jpeg.encode_progressive(restart_interval)": _JPEG_STREAMS,
+    "functions.multimodal.decode_features(on_error)": (
+        "'mark' is the crawl-scale mode of the only decoder of stored "
+        "media payloads (TEST_ONLY_KEEP)"
+    ),
+}
+
+
+def _set_params(call: ast.Call, params: list[str], defaulted: list[str], tuples) -> set[str]:
+    """The parameters one call sets. ``*name`` of a module-level tuple
+    counts its length; any other ``*args`` or ``**kwargs`` sets all."""
+    n_pos = 0
+    for a in call.args:
+        if not isinstance(a, ast.Starred):
+            n_pos += 1
+        elif isinstance(a.value, ast.Name) and a.value.id in tuples:
+            n_pos += tuples[a.value.id]
+        else:
+            return set(defaulted)
+    if any(k.arg is None for k in call.keywords):
+        return set(defaulted)
+    if params[:1] in (["self"], ["cls"]) and isinstance(call.func, ast.Attribute):
+        params = params[1:]
+    return set(params[:n_pos]) | {k.arg for k in call.keywords}
+
+
+def test_no_defaulted_engine_parameter_is_set_only_by_tests():
+    """A defaulted engine parameter that no caller outside tests/ sets
+    is a setting with one value: make it a constant (PARAM_KEEP lists
+    the exceptions). Calls are matched to functions by name, so a
+    same-named function's caller counts too — the check errs towards
+    keeping a parameter."""
+    calls = defaultdict(list)
+    for p in _non_test_sources():
+        tree = ast.parse(_read(p))
+        tuples = {
+            t.id: len(node.value.elts)
+            for node in tree.body
+            if isinstance(node, ast.Assign) and isinstance(node.value, (ast.Tuple, ast.List))
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                calls[name].append((node, tuples))
+    unset = set()
+    for path in _py_files(PKG):
+        module = os.path.splitext(os.path.relpath(path, PKG))[0].replace(os.sep, ".")
+        for node in ast.walk(ast.parse(_read(path))):
+            if not isinstance(node, ast.FunctionDef):
+                continue
+            a = node.args
+            params = [x.arg for x in a.posonlyargs + a.args]
+            defaulted = params[len(params) - len(a.defaults):] + [
+                k.arg for k, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None
+            ]
+            set_ = set()
+            for call, tuples in calls[node.name]:
+                set_ |= _set_params(call, params, defaulted, tuples)
+            unset |= {f"{module}.{node.name}({d})" for d in defaulted if d not in set_}
+    assert not unset - PARAM_KEEP.keys(), sorted(unset - PARAM_KEEP.keys())
+    # a keep entry whose parameter is gone or now set elsewhere is stale
+    assert not PARAM_KEEP.keys() - unset, sorted(PARAM_KEEP.keys() - unset)
 
 
 def test_only_session_py_writes_session_conf():

@@ -19,6 +19,16 @@ def stage_dir(spark, sf_dir, tmp_path_factory):
     return simulate.stage_stream_dir(spark, sf_dir, str(d), n_chunks=5)
 
 
+def _registered_at_chunks(spark, sf_dir, monkeypatch, name, n_chunks):
+    """Rows of the registered streaming query ``name`` drained from a
+    replay staged in ``n_chunks`` micro-batches."""
+    from big_data_traffict_prediction_spark import registry
+    from big_data_traffict_prediction_spark.streaming import queries
+
+    monkeypatch.setattr(queries, "STAGE_CHUNKS", n_chunks)
+    return {tuple(r) for r in registry.get(name).fn(spark, sf_dir).collect()}
+
+
 def test_stateful_dedup_matches_batch_operator(spark, sf_dir, stage_dir, tmp_path):
     from big_data_traffict_prediction_spark.operators.iou import q_iou_dedup
 
@@ -93,7 +103,7 @@ def test_session_window_runs(spark, stage_dir, tmp_path):
     stream = simulate.read_stream(spark, stage_dir)
     got = windows.run_to_memory(
         spark,
-        windows.session_counts(stream, "30 minutes"),
+        windows.session_counts(stream),
         "session_out",
         str(tmp_path / "ckpt_session"),
     )
@@ -991,57 +1001,14 @@ def test_streaming_restart_recovers_exactly_once(spark, sf_dir, tmp_path):
     assert 0 < n_first < len(recovered)
 
 
-def test_stream_zone_map_chunking_invariant(spark, sf_dir, tmp_path):
+def test_stream_zone_map_chunking_invariant(spark, sf_dir, monkeypatch):
     """Zone stats are commutative+associative folds, so the drained
     streaming index must be identical at any micro-batch chunking —
     the property that licenses its batch-SQL oracle."""
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    from big_data_traffict_prediction_spark.streaming import simulate, windows
-
-    def drained(n_chunks):
-        base = tmp_path / f"zminv_{n_chunks}"
-        stage = simulate.stage_stream_dir(
-            spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
-        )
-        from big_data_traffict_prediction_spark.operators.scans import zm_bloom_bit
-
-        rows = simulate.read_stream(spark, stage)
-        bit = zm_bloom_bit(F.col("camera_id"))
-        zm = (
-            rows.select(
-                F.date_format("ts", "yyyy-MM-dd").alias("d"),
-                F.hour("ts").cast("long").alias("hr"),
-                "new_count",
-                bit.alias("bit"),
-            )
-            .groupBy("d", "hr")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_rows"),
-                F.min("new_count").cast("long").alias("min_count"),
-                F.max("new_count").cast("long").alias("max_count"),
-                F.bit_or(
-                    F.call_function(
-                        "shiftleft", F.lit(1).cast("long"), F.col("bit")
-                    )
-                )
-                .cast("long")
-                .alias("bloom_fp"),
-            )
-        )
-        out = windows.run_to_memory(
-            spark, zm, f"zminv_{uuid.uuid4().hex[:8]}", f"{base}/ckpt",
-            output_mode="complete",
-        )
-        got = {
-            (r.d, r.hr, r.n_rows, r.min_count, r.max_count, r.bloom_fp)
-            for r in out.collect()
-        }
-        return got
-
-    a, b = drained(2), drained(5)
+    a, b = (
+        _registered_at_chunks(spark, sf_dir, monkeypatch, "q_stream_zone_map", n)
+        for n in (1, 3)
+    )
     assert a and a == b
 
 
@@ -1083,39 +1050,15 @@ def test_stream_interval_join_binned_matches_batch(spark, sf_dir):
     assert got and got == batch
 
 
-def test_stream_histogram_chunking_invariant(spark, sf_dir, tmp_path):
+def test_stream_histogram_chunking_invariant(spark, sf_dir, monkeypatch):
     """Value-frequency counts are additive, so the drained streaming
     vf — and hence the histogram derived from it — must be identical
     at any micro-batch chunking (the property licensing the batch-SQL
     oracle of q_stream_histogram)."""
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    from big_data_traffict_prediction_spark.streaming import simulate, windows
-
-    def drained(n_chunks):
-        base = tmp_path / f"hginv_{n_chunks}"
-        stage = simulate.stage_stream_dir(
-            spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
-        )
-        rows = simulate.read_stream(spark, stage)
-        vf = (
-            rows.filter(F.col("new_count").isNotNull())
-            .groupBy(F.col("new_count").alias("v"))
-            .agg(F.count(F.lit(1)).cast("long").alias("f"))
-        )
-        out = windows.run_to_memory(
-            spark,
-            vf,
-            f"hginv_{n_chunks}_{uuid.uuid4().hex[:8]}",
-            f"{base}/ckpt",
-            output_mode="complete",
-        )
-        got = {(r.v, r.f) for r in out.collect()}
-        return got
-
-    one, three = drained(1), drained(3)
+    one, three = (
+        _registered_at_chunks(spark, sf_dir, monkeypatch, "q_stream_histogram", n)
+        for n in (1, 3)
+    )
     assert one and one == three
 
 
@@ -1157,61 +1100,14 @@ def test_stream_join_size_grid_chunking_invariant_and_matches_batch(spark, sf_di
     assert batch and one == batch and three == batch
 
 
-def test_stream_analyze_state_chunking_invariant(spark, sf_dir, tmp_path):
+def test_stream_analyze_state_chunking_invariant(spark, sf_dir, monkeypatch):
     """Every statistic in the (col, bucket)-grain ANALYZE state is a
     commutative fold (counts add, canonical min/max fold, register
     ranks max), so the drained state must be identical at any
     micro-batch chunking — the property licensing q_stream_analyze's
     reuse of the batch oracle tail."""
-    import uuid
-
-    import pyspark.sql.functions as F
-
-    from big_data_traffict_prediction_spark.operators.pipeline import (
-        analyze_hash_col,
-        analyze_stack,
-        canon_int_col,
-        hll_bucket_col,
-        hll_rank_col,
+    one, three = (
+        _registered_at_chunks(spark, sf_dir, monkeypatch, "q_stream_analyze", n)
+        for n in (1, 3)
     )
-    from big_data_traffict_prediction_spark.streaming import simulate, windows
-
-    def state_of(rows):
-        canon = {
-            "camera_id": rows["camera_id"],
-            "new_count": canon_int_col(rows["new_count"]),
-        }
-        stack = analyze_stack(rows, canon).select("col", "val", analyze_hash_col())
-        return (
-            stack.select(
-                "col",
-                "val",
-                F.coalesce(hll_bucket_col(F.col("h")), F.lit(-1)).alias("bucket"),
-                hll_rank_col(F.col("h")).alias("rank"),
-            )
-            .groupBy("col", "bucket")
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("cnt"),
-                F.min("val").alias("mn"),
-                F.max("val").alias("mx"),
-                F.max("rank").alias("reg"),
-            )
-        )
-
-    def drained(n_chunks):
-        base = tmp_path / f"aninv_{n_chunks}"
-        stage = simulate.stage_stream_dir(
-            spark, sf_dir, f"{base}/stage", n_chunks=n_chunks
-        )
-        out = windows.run_to_memory(
-            spark,
-            state_of(simulate.read_stream(spark, stage)),
-            f"aninv_{n_chunks}_{uuid.uuid4().hex[:8]}",
-            f"{base}/ckpt",
-            output_mode="complete",
-        )
-        got = {(r.col, r.bucket, r.cnt, r.mn, r.mx, r.reg) for r in out.collect()}
-        return got
-
-    one, three = drained(1), drained(3)
     assert one and one == three
