@@ -15,12 +15,19 @@
 - **MLlib MinHashLSH**: library twin of functions/dedup's hand-rolled
   LSH; Spark-only.
 - **Product quantization + exact re-rank**: the 100 TB storage answer
-  (8-byte codes, ADC shortlist, faiss-style refine); recall-bounded
-  against the brute force.
+  (8-byte codes, ADC shortlist, faiss-style refine). Both PQ queries
+  run one fixed-point kernel (exact int64 codes, LUTs and ADC sums)
+  and differ only in the codebook: `q_ann_pq_fixed` samples it and is
+  hash-checked; `q_ann_pq` trains it by numpy Lloyd k-means, which no
+  SQL engine mirrors, so it stays rows-only and recall-bounded against
+  the brute force.
 
-At scale the brute-force variant is a broadcast of the (small) query
-set against a partitioned candidate table — no shuffle of candidates;
-the per-query top-k is a ranking window partitioned by query id.
+The ANN queries share one kernel stack: one strided seed
+(`_seed_centers`), one broadcast-array assignment (`_assign`), one PQ
+scoring path (`_pqf_score` + `_pqf_shortlist_rerank`) and one per-query
+top-k tail (`_top_k`, a ranking window partitioned by query id). At
+scale the brute-force variant is a broadcast of the (small) query set
+against a partitioned candidate table — no shuffle of candidates.
 """
 
 from __future__ import annotations
@@ -28,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..compat import exact_ppm, let
+from ..compat import exact_ppm, idiv, let
 from ..registry import register
 from ..tables import load_table
 
@@ -87,6 +94,25 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cosine(dot_fp: Column, na_fp: Column, nb_fp: Column) -> Column:
     return dot_fp.cast("double") / (
         F.sqrt(na_fp.cast("double")) * F.sqrt(nb_fp.cast("double"))
+    )
+
+
+def _top_k(pairs: DataFrame) -> DataFrame:
+    """Per-query top TOP_K of (query_id, neighbor_id, neighbor_label,
+    cosine) by cosine DESC, neighbor_id ASC — the ranking window every
+    ANN query ends with, cosine rounded to 6 dp."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= TOP_K)
+        .select(
+            "query_id",
+            "neighbor_id",
+            "neighbor_label",
+            F.round("cosine", 6).alias("cosine"),
+            "rank",
+        )
+        .orderBy("query_id", "rank")
     )
 
 
@@ -215,7 +241,7 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return v.withColumn("blk", (F.col("vec_id") % B).cast("int"))
 
-    topk_per_block = (
+    return _top_k(
         side(True)
         .groupby("blk")
         .cogroup(side(False).groupby("blk"))
@@ -223,19 +249,6 @@ def q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
             _bruteforce_block_kernel,
             "query_id long, neighbor_id long, neighbor_label int, cosine double",
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        topk_per_block.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-        .orderBy("query_id", "rank")
     )
 
 
@@ -425,55 +438,69 @@ IVF_CELLS = 8
 IVF_PROBES = 2
 
 
-def _ivf_centers_row(vecs: DataFrame) -> DataFrame:
-    """ONE row holding the deterministic coarse quantizer: IVF_CELLS
-    centers seeded from evenly-strided data points (k-means++ step-0,
-    faiss's init). Broadcast so per-vector assignment is a
-    shuffle-free HOF. Shared by q_ann_ivf and the IVF-PQ composition."""
-    params = vecs.agg(
-        F.greatest(F.floor((F.max("vec_id") + 1) / IVF_CELLS), F.lit(1))
-        .cast("long")
-        .alias("stride")
+def _seed_centers(vecs: DataFrame, col: str, bound: Column) -> DataFrame:
+    """ONE row (bound, cs) holding the deterministic coarse quantizer:
+    `bound` is an aggregate over `vecs` giving the id bound —
+    max(vec_id)+1 for a full build, the delta split for maintenance —
+    and the IVF_CELLS centers (cell, center = `col`) are the evenly
+    strided data points below it (stride = bound // IVF_CELLS;
+    k-means++ step-0, faiss's init). No row when no id seeds, like the
+    oracles' empty `centers`. Broadcast by `_assign`, so assignment is
+    a shuffle-free HOF."""
+    params = vecs.agg(bound.alias("bound")).withColumn(
+        "stride", F.greatest(idiv(F.col("bound"), F.lit(IVF_CELLS)), F.lit(1))
     )
-    centers = (
+    vid, stride = F.col("vec_id"), F.col("stride")
+    return (
         vecs.crossJoin(F.broadcast(params))
         .filter(
-            (F.col("vec_id") % F.col("stride") == 0)
-            & (F.col("vec_id") < F.col("stride") * IVF_CELLS)
+            (vid % stride == 0)
+            & (vid < stride * IVF_CELLS)
+            & (vid < F.col("bound"))
         )
-        .select(
-            F.floor(F.col("vec_id") / F.col("stride")).cast("int").alias("cell"),
-            F.col("embedding").alias("center"),
+        .groupBy("bound")
+        .agg(
+            F.array_sort(
+                F.collect_list(
+                    F.struct(
+                        idiv(vid, stride).cast("int").alias("cell"),
+                        F.col(col).alias("center"),
+                    )
+                )
+            ).alias("cs")
         )
     )
-    return centers.agg(
-        F.array_sort(F.collect_list(F.struct("cell", "center"))).alias("cs")
+
+
+def _assign(frame: DataFrame, quantizer: DataFrame, key) -> DataFrame:
+    """`frame` joined to the broadcast one-row `quantizer`, plus `cells`:
+    the row's (d, cell) structs over the centers `cs`, d =
+    key(center), sorted ascending so ties go to the lower cell; `cell`
+    and `d` are its argmin. IVF keys on -dot (nearest = max dot),
+    k-means on d². A per-row HOF over ≤ IVF_CELLS structs: the corpus
+    never shuffles."""
+    cells = F.array_sort(
+        F.transform(
+            F.col("cs"),
+            lambda c: F.struct(key(c["center"]).alias("d"), c["cell"].alias("cell")),
+        )
+    )
+    return (
+        frame.crossJoin(F.broadcast(quantizer))
+        .withColumn("cells", cells)
+        .withColumn("cell", F.col("cells")[0]["cell"])
+        .withColumn("d", F.col("cells")[0]["d"])
     )
 
 
-def _ivf_scores() -> Column:
-    """Per-row center scores over the broadcast `cs` column; struct
-    (d, negcell) so lexicographic max/sort = dot DESC, cell ASC."""
-    return F.transform(
-        F.col("cs"),
-        lambda c: F.struct(
-            _dot_fp(F.col("embedding"), c["center"]).alias("d"),
-            (-c["cell"]).alias("negcell"),
-        ),
-    )
+def _neg_dot(center: Column) -> Column:
+    """IVF assignment key: the negated fixed-point dot of `embedding`."""
+    return -_dot_fp(F.col("embedding"), center)
 
 
-def _ivf_cell() -> Column:
-    """Assigned cell = argmax-dot center (expects the `scores` column)."""
-    return (-F.array_max("scores")["negcell"]).cast("int")
-
-
-def _ivf_probe_cells() -> Column:
-    """The IVF_PROBES nearest cells of a query row (expects `scores`)."""
-    return F.transform(
-        F.slice(F.reverse(F.array_sort("scores")), 1, IVF_PROBES),
-        lambda s: (-s["negcell"]).cast("int"),
-    )
+def _probe_cells() -> Column:
+    """The IVF_PROBES nearest cells of an `_assign`ed row."""
+    return F.transform(F.slice("cells", 1, IVF_PROBES), lambda s: s["cell"])
 
 
 @register(
@@ -543,25 +570,16 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixed-point dots make assignment, probing, and ranking
     bit-identical in DuckDB — hash-checked against the oracle."""
     vecs = _vecs(spark, sf_dir)
-    # one row holding all centers, broadcast: per-vector scoring is a
-    # HOF over ≤ IVF_CELLS structs — executor-local, shuffle-free
-    scored = vecs.crossJoin(F.broadcast(_ivf_centers_row(vecs))).withColumn(
-        "scores", _ivf_scores()
-    )
-    assigned = scored.select(
-        "vec_id",
-        "label",
-        "embedding",
-        "norm_fp",
-        _ivf_cell().alias("cell"),
+    scored = _assign(
+        vecs, _seed_centers(vecs, "embedding", F.max("vec_id") + 1), _neg_dot
     )
     probes = scored.filter(F.col("vec_id") < QUERY_LIMIT).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("norm_fp").alias("qn"),
-        F.explode(_ivf_probe_cells()).alias("cell"),
+        F.explode(_probe_cells()).alias("cell"),
     )
-    cand = assigned.select(
+    cand = scored.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("label").alias("neighbor_label"),
         F.col("embedding").alias("c_emb"),
@@ -572,19 +590,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("neighbor_id") != F.col("query_id")
     )
     cos = _cosine(_dot_fp(F.col("q_emb"), F.col("c_emb")), F.col("qn"), F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
+    return _top_k(
         pairs.select("query_id", "neighbor_id", "neighbor_label", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-        .orderBy("query_id", "rank")
     )
 
 
@@ -658,55 +665,15 @@ def q_ann_ivf_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     occupancy share joins a one-row broadcast total. Zero
     non-broadcast joins, so the plan survives any corpus size."""
     vecs = _vecs(spark, sf_dir)
-    # one row, referenced by the seed filter AND the delta flag —
-    # checkpoint so the id-bound aggregation runs once, not per branch
-    params = (
-        vecs.agg(
-            F.call_function(
-                "div", (F.max("vec_id") + 1) * 4, F.lit(5)
-            ).alias("split")
-        )
-        .select(
-            "split",
-            F.greatest(
-                F.call_function("div", F.col("split"), F.lit(IVF_CELLS)),
-                F.lit(1),
-            ).alias("stride"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    centers = (
-        vecs.crossJoin(F.broadcast(params))
-        .filter(
-            (F.col("vec_id") % F.col("stride") == 0)
-            & (F.col("vec_id") < F.col("stride") * IVF_CELLS)
-            & (F.col("vec_id") < F.col("split"))
-        )
-        .select(
-            F.floor(F.col("vec_id") / F.col("stride")).cast("int").alias("cell"),
-            F.col("embedding").alias("center"),
-        )
-    )
-    centers_row = centers.agg(
-        F.array_sort(F.collect_list(F.struct("cell", "center"))).alias("cs")
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                _dot_fp(F.col("embedding"), c["center"]).alias("d"),
-                (-c["cell"]).alias("negcell"),
-            ),
-        )
-    )
-    assigned = (
-        vecs.crossJoin(F.broadcast(centers_row))
-        .crossJoin(F.broadcast(params.select("split")))
-        .select(
-            (-best["negcell"]).cast("int").alias("cell"),
-            best["d"].alias("d"),
-            (F.col("vec_id") >= F.col("split")).alias("is_delta"),
-        )
+    # the quantizer row carries its seed bound, the split: ids at or
+    # above it are the delta batch
+    split = idiv((F.max("vec_id") + 1) * 4, F.lit(5))
+    assigned = _assign(
+        vecs, _seed_centers(vecs, "embedding", split), _neg_dot
+    ).select(
+        "cell",
+        (-F.col("d")).alias("d"),
+        (F.col("vec_id") >= F.col("bound")).alias("is_delta"),
     )
     is_d = F.col("is_delta").cast("long")
     # |cells| rows, read by the total AND the final select — eager
@@ -836,209 +803,66 @@ PQ_TRAIN_ITERS = 10
 PQ_SEED = 7
 
 
-def _pq_codebooks(vecs_np):
-    """Per-subspace Lloyd k-means codebooks trained driver-side on the
-    (sampled) vector matrix — the faiss shape: codebooks are model
-    state learned on a sample, then broadcast. Deterministic: seeded
-    init, fixed iteration count, ties to the lowest centroid id."""
+def _pq_codebooks(fp: DataFrame) -> list:
+    """Trained codebook: per-subspace Lloyd k-means on the fixed-point
+    images (`fpv`) of the PQ_TRAIN_CAP lowest vec_ids — model state
+    learned on a bounded sample (the collect never grows with the
+    corpus; faiss trains the same way). Deterministic: seeded init,
+    fixed iteration count, ties to the lowest centroid id. Centroid k
+    of subspace m becomes row k's m-th slice, floored to int64, so the
+    trained codebook has the sample codebook's layout
+    (`_pqf_codebook_np`) and scores through the same exact kernel."""
     import numpy as np
 
-    n, d = vecs_np.shape
-    sub_d = d // PQ_SUBSPACES
+    # bounded collect: at most PQ_TRAIN_CAP rows at any corpus size
+    X = np.array(
+        [
+            r.fpv
+            for r in fp.select("vec_id", "fpv")
+            .orderBy("vec_id")
+            .limit(PQ_TRAIN_CAP)
+            .collect()
+        ],
+        dtype=np.float64,
+    )
+    n = X.shape[0]
     k_eff = min(PQ_CODES, n)  # degrade gracefully on tiny corpora
     rng = np.random.RandomState(PQ_SEED)
-    books = []
+    book = np.empty((k_eff, X.shape[1]), dtype=np.int64)
     for m in range(PQ_SUBSPACES):
-        X = vecs_np[:, m * sub_d : (m + 1) * sub_d]
-        C = X[rng.choice(n, size=k_eff, replace=False)].copy()
+        lo, hi = m * _PQF_SUB_D, (m + 1) * _PQF_SUB_D
+        Xm = X[:, lo:hi]
+        C = Xm[rng.choice(n, size=k_eff, replace=False)].copy()
         for _ in range(PQ_TRAIN_ITERS):
-            d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+            d2 = ((Xm[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = d2.argmin(axis=1)
             for k in range(k_eff):
                 mask = assign == k
                 if mask.any():
-                    C[k] = X[mask].mean(axis=0)
-        books.append(C)
-    return books
+                    C[k] = Xm[mask].mean(axis=0)
+        book[:, lo:hi] = np.floor(C)
+    return book.tolist()
 
 
 @register(oracle=None)
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN — the 100 TB STORAGE answer for vector
-    search (faiss's PQ): each 64-d float vector compresses to 8
-    6-bit codes (PQ_CODES=64 centroids per subspace; packed storage is
-    6 bytes/vector vs 256 bytes of floats, a ~42x reduction — this
-    demo keeps the codes as array<int> for plan readability and packs
-    nothing) and queries score candidates through an
-    asymmetric-distance lookup table (exact query subvector vs the
-    candidate's centroid).
+    """Product-quantization ANN with a TRAINED codebook — the 100 TB
+    STORAGE answer for vector search (faiss's PQ): each 64-d vector
+    compresses to 8 6-bit codes (PQ_CODES=64 centroids per subspace;
+    packed storage is 6 bytes/vector vs 256 bytes of floats, a ~42x
+    reduction — this demo packs nothing), queries score candidates
+    through an asymmetric-distance lookup table (exact query subvector
+    vs the candidate's centroid), and a PQ_SHORTLIST-deep ADC
+    shortlist re-ranks by exact fixed-point cosine.
 
-    Spark shape: codebooks are MODEL STATE trained driver-side on a
-    bounded sample (PQ_TRAIN_CAP) and broadcast; candidate ENCODING is
-    one Arrow-batched kernel over the candidate scan (runs once, never
-    per query); SCORING is pure JVM — per-query LUTs (queries are a
-    small set by construction) broadcast-join the codes and the ADC
-    distance is a static 8-term element_at sum inside codegen. The
-    candidate universe is every vector except the query itself — the
-    SAME universe as q_ann_bruteforce, so recall compares like for
-    like. Candidates never shuffle; per-query top-k is the same
-    ranking window as q_ann_bruteforce. Model-based -> rows-only
-    driver check; tests/test_llm_ops.py bounds recall vs the exact
-    brute force."""
-    import numpy as np
-    import pandas as pd
-
-    vecs = _vecs(spark, sf_dir)
-    # L2-normalize everything: on the unit sphere ||a-b||^2 = 2-2cos,
-    # so ADC's L2 ranking matches the brute-force cosine ranking.
-    # Codebooks train on a BOUNDED deterministic sample (the PQ_TRAIN_CAP
-    # lowest vec_ids) — at corpus scale the training collect must not
-    # grow with the data; faiss trains the same way.
-    sample = np.stack(
-        [
-            np.asarray(r.embedding, dtype=np.float64)
-            for r in vecs.select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(PQ_TRAIN_CAP)
-            .collect()
-        ]
-    )
-    sample = sample / np.linalg.norm(sample, axis=1, keepdims=True)
-    books = _pq_codebooks(sample)
-    bbooks = spark.sparkContext.broadcast([b.tolist() for b in books])
-    sub_d = sample.shape[1] // PQ_SUBSPACES
-
-    cands = vecs.select("vec_id", "label", "embedding")
-
-    def encode(batches):
-        C = [np.asarray(b) for b in bbooks.value]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            X = X / np.linalg.norm(X, axis=1, keepdims=True)
-            codes = np.empty((len(pdf), PQ_SUBSPACES), dtype=np.int32)
-            for m in range(PQ_SUBSPACES):
-                Xm = X[:, m * sub_d : (m + 1) * sub_d]
-                d2 = ((Xm[:, None, :] - C[m][None, :, :]) ** 2).sum(axis=2)
-                codes[:, m] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "codes": list(codes),
-                }
-            )
-
-    coded = cands.mapInPandas(
-        encode, schema="vec_id long, label int, codes array<int>"
-    )
-
-    # Per-query ADC lookup tables: built EXECUTOR-SIDE by the same
-    # Arrow-batched pattern as encoding — the query batch is a bounded
-    # DataFrame (QUERY_LIMIT rows), the codebooks ride the existing
-    # broadcast, and nothing funnels through the driver (the result is
-    # a QUERY_LIMIT × (PQ_SUBSPACES·PQ_CODES doubles) table, broadcast
-    # to the scoring join below).
-    def build_luts(batches):
-        C = [np.asarray(b) for b in bbooks.value]
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids, tables = [], []
-            for vid, emb in zip(pdf["vec_id"], pdf["embedding"]):
-                q = np.asarray(emb, dtype=np.float64)
-                q = q / np.linalg.norm(q)
-                # Every subspace block is PQ_CODES wide even when the
-                # codebook degraded to k_eff < PQ_CODES centroids (tiny
-                # corpora): the unused tail pads with +inf, codes never
-                # reference it, and the fixed m*PQ_CODES stride in the
-                # scoring expression stays valid.
-                blocks = []
-                for m in range(PQ_SUBSPACES):
-                    d2 = (
-                        (q[m * sub_d : (m + 1) * sub_d][None, :] - C[m]) ** 2
-                    ).sum(axis=1)
-                    block = np.full(PQ_CODES, np.inf)
-                    block[: d2.size] = d2
-                    blocks.append(block)
-                ids.append(vid)
-                tables.append(np.concatenate(blocks).tolist())
-            yield pd.DataFrame({"query_id": ids, "lut": tables})
-
-    luts = (
-        vecs.filter(F.col("vec_id") < QUERY_LIMIT)
-        .select("vec_id", "embedding")
-        .mapInPandas(build_luts, schema="query_id long, lut array<double>")
-    )
-
-    # ADC distance = sum over subspaces of lut[m*PQ_CODES + code_m]:
-    # a static 8-term element_at sum, evaluated inside codegen.
-    dist = None
-    for m in range(PQ_SUBSPACES):
-        term = F.element_at(
-            "lut", F.col("codes")[m] + F.lit(m * PQ_CODES) + F.lit(1)
-        )
-        dist = term if dist is None else dist + term
-    scored = (
-        coded.crossJoin(F.broadcast(luts))
-        .filter(F.col("vec_id") != F.col("query_id"))  # self is not a neighbor
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.col("label").alias("neighbor_label"),
-            dist.alias("adc_dist"),
-        )
-    )
-    # Stage 2 — exact re-rank (faiss's "refine"): ADC keeps only a
-    # PQ_SHORTLIST-deep shortlist per query (the lossy-but-cheap scan
-    # over 8-byte codes), then the shortlist — queries × 50 rows,
-    # independent of corpus size — re-scores with the exact
-    # fixed-point cosine and the final top-k ranks on that.
-    w_adc = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    shortlist = (
-        scored.withColumn("srk", F.row_number().over(w_adc))
-        .filter(F.col("srk") <= PQ_SHORTLIST)
-        .select("query_id", "neighbor_id", "neighbor_label", "adc_dist")
-    )
-    n_emb = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("norm_fp").alias("n_norm_fp"),
-    )
-    q_emb = vecs.filter(F.col("vec_id") < QUERY_LIMIT).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm_fp").alias("q_norm_fp"),
-    )
-    exact = (
-        shortlist.join(n_emb, "neighbor_id")
-        .join(F.broadcast(q_emb), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            "adc_dist",
-            _cosine(
-                _dot_fp(F.col("q_emb"), F.col("n_emb")),
-                F.col("q_norm_fp"),
-                F.col("n_norm_fp"),
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-        .orderBy("query_id", "rank")
-    )
+    This is q_ann_pq_fixed with the codebook trained instead of
+    sampled (`_pq_codebooks`: numpy Lloyd k-means on the fixed-point
+    sample); encoding, LUTs, ADC and re-rank are the shared exact
+    kernel (`_pq_topk`). Training buys recall — above the sample
+    codebook's, pinned with the floor against the brute force in
+    tests/test_llm_ops.py. The Lloyd training has no SQL twin, so the
+    driver checks rows only."""
+    return _pq_topk(spark, sf_dir, _pq_codebooks)
 
 
 # ---------------------------------------- fixed-point PQ (oracleable)
@@ -1211,13 +1035,15 @@ def _pqf_score_op(bC, bQ, has_cell: bool):
 
 
 def _pqf_score(
-    spark: SparkSession, fp: DataFrame, cand: DataFrame, qrows: list
+    spark: SparkSession, codebook: list, cand: DataFrame, qrows: list
 ) -> DataFrame:
-    """ADC-score `cand` (vec_id, label[, cell], fpv) against the
-    bounded codebook from `fp` for the bounded query list `qrows`
-    ([(query_id, fpv, probe_cells_or_None)], ≤ QUERY_LIMIT entries —
-    the same bounded-model-state collect discipline as the codebook)."""
-    bC = spark.sparkContext.broadcast(_pqf_codebook_np(fp))
+    """ADC-score `cand` (vec_id, label[, cell], fpv) against the bounded
+    fixed-point `codebook` (PQ_CODES rows of 64 int64 components,
+    position = code ordinal; sampled or trained) for the bounded query
+    list `qrows` ([(query_id, fpv, probe_cells_or_None)], ≤ QUERY_LIMIT
+    entries — the same bounded-model-state collect discipline as the
+    codebook)."""
+    bC = spark.sparkContext.broadcast(codebook)
     bQ = spark.sparkContext.broadcast(qrows)
     return cand.mapInPandas(
         _pqf_score_op(bC, bQ, has_cell="cell" in cand.columns),
@@ -1339,69 +1165,73 @@ ORDER BY query_id, rank
 """,
 )
 def q_ann_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product quantization with a DETERMINISTIC FIXED-POINT codebook —
-    the oracleable twin of q_ann_pq: same two-stage plan (ADC shortlist
-    over compressed codes → exact fixed-point cosine re-rank), but the
-    codebook is the PQ_CODES lowest-vec_id vectors' subvectors (a
-    sample codebook — k-means iteration zero, faiss's own init) held in
-    fixed-point (floor(x·1e6) per component), so code assignment and
-    ADC distances are exact INTEGER arithmetic both engines replicate
-    bit-for-bit and the driver hash check covers the full PQ pipeline
-    end to end (q_ann_pq stays registered as the trained-float-kmeans
-    variant whose model step no SQL engine can mirror — that pair is
-    the documented trade: training quality vs provable reproducibility).
+    """Product quantization with a DETERMINISTIC SAMPLE codebook — the
+    oracle-checked variant of the shared PQ kernel: the codebook is the
+    PQ_CODES lowest-vec_id vectors' subvectors (k-means iteration
+    zero, faiss's own init) in fixed point (floor(x·1e6) per
+    component), so code assignment and ADC distances are exact INTEGER
+    arithmetic both engines replicate bit-for-bit, and the driver hash
+    check covers the full PQ pipeline end to end. q_ann_pq runs the
+    same kernel with a Lloyd-trained codebook: better recall, but its
+    training step has no SQL twin — the documented trade of training
+    quality vs provable reproducibility.
 
     Codes are codebook ORDINALS (position in vec_id order, not raw
     ids), so nothing assumes dense vec_ids; ties in code assignment
     break to the lowest ordinal in both engines (lexicographic
     struct-min — Spark array_min == DuckDB MIN({{'d',...,'p'...}})).
 
-    Spark shape: the codebook is bounded MODEL STATE (≤ PQ_CODES = 64
-    rows) collected once and broadcast — the same discipline as
-    q_ann_pq's PQ_TRAIN_CAP training sample; candidate ENCODING is one
-    Arrow-batched exact-int64 kernel over the candidate scan (zero
-    shuffle — candidates never move; the r13 optimization round
-    replaced the per-candidate HOF argmin, whose interpreted lambda
-    evaluation cost ~1 ms/row outside whole-stage codegen, with the
-    vectorized kernel at identical bits — see _pqf_codes_np);
-    per-query ADC lookup tables stay in-row JVM HOFs over the bounded
-    query batch; SCORING is the same static 8-term element_at sum as
-    q_ann_pq; the shortlist and exact re-rank reuse the brute-force
-    cosine machinery. At 100 TB the candidate side is a scan of stored
-    codes (6 bits × 8 per vector), queries broadcast, and the only
-    shuffle is the per-query top-k window over queries × PQ_SHORTLIST
-    survivor rows."""
-    fp = (
+    Spark shape (`_pq_topk`): the codebook is bounded MODEL STATE
+    (≤ PQ_CODES = 64 rows) collected once and broadcast; encoding and
+    ADC scoring are one Arrow-batched exact-int64 kernel over the
+    candidate scan (zero shuffle — candidates never move); the
+    shortlist and exact re-rank reuse the brute-force cosine
+    machinery. At 100 TB the candidate side is a scan of stored codes
+    (6 bits × 8 per vector), queries broadcast, and the only shuffle
+    is the per-query top-k window over queries × PQ_SHORTLIST survivor
+    rows."""
+    return _pq_topk(spark, sf_dir, _pqf_codebook_np)
+
+
+def _fp_vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """`_vecs` plus the fixed-point image `fpv`, materialized once: the
+    codebook and query collects, the encode scan and the exact re-rank
+    all read it."""
+    return (
         _vecs(spark, sf_dir)
         .select(
             "vec_id", "label", "embedding", "norm_fp",
             _pqf_fpv(F.col("embedding")).alias("fpv"),
         )
-        # four consumers (codebook collect, encode, LUTs, exact
-        # re-rank) — materialize the scan + fixed-point image once
         .localCheckpoint(eager=True)
     )
-    # Fused encode + ADC kernel over the candidate scan (r13 opt round,
-    # stage 2): the previous shape — encode kernel, then a broadcast
-    # LUT crossJoin whose _pqf_lut column is 512 nested aggregate
-    # lambdas, then the static _pqf_adc sum — was ~90% per-execution
-    # Catalyst/codegen FIXED cost (measured flat 3.3-3.6 s from sf0.01
-    # to sf0.1). Queries are a bounded collect (vec_id < QUERY_LIMIT,
-    # same discipline as the codebook); the HOF twin is kept below as
-    # the executable spec, bit-identity pinned by test.
+
+
+def _pq_topk(spark: SparkSession, sf_dir: str, codebook) -> DataFrame:
+    """The PQ pipeline of q_ann_pq and q_ann_pq_fixed, which differ only
+    in `codebook(fp)`: every query scores every other vector through
+    the fused encode + ADC kernel, then `_pqf_shortlist_rerank`. The
+    kernel replaced an encode pass plus a broadcast LUT join whose
+    `_pqf_lut` column (512 nested aggregate lambdas) was ~90%
+    per-execution Catalyst/codegen fixed cost; that HOF form stays as
+    the executable spec, bit-identity pinned by test. Queries are a
+    bounded collect (vec_id < QUERY_LIMIT), like the codebook."""
+    fp = _fp_vecs(spark, sf_dir)
     qrows = [
         (r.vec_id, list(r.fpv), None)
         for r in fp.filter(F.col("vec_id") < QUERY_LIMIT)
         .select("vec_id", "fpv")
         .collect()
     ]
-    scored = _pqf_score(spark, fp, fp.select("vec_id", "label", "fpv"), qrows)
+    scored = _pqf_score(
+        spark, codebook(fp), fp.select("vec_id", "label", "fpv"), qrows
+    )
     return _pqf_shortlist_rerank(scored, fp)
 
 
 def _pqf_shortlist_rerank(scored: DataFrame, fp: DataFrame) -> DataFrame:
     """ADC shortlist (top PQ_SHORTLIST by compressed distance) → exact
-    fixed-point cosine re-rank → top TOP_K. Shared by q_ann_pq_fixed
+    fixed-point cosine re-rank → top TOP_K. Shared by the PQ queries
     and the IVF-PQ composition; `scored` carries (query_id,
     neighbor_id, neighbor_label, adc_dist)."""
     w_adc = Window.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
@@ -1420,7 +1250,7 @@ def _pqf_shortlist_rerank(scored: DataFrame, fp: DataFrame) -> DataFrame:
         F.col("embedding").alias("q_emb"),
         F.col("norm_fp").alias("q_norm_fp"),
     )
-    exact = (
+    return _top_k(
         shortlist.join(n_emb, "neighbor_id")
         .join(F.broadcast(q_emb), "query_id")
         .select(
@@ -1433,19 +1263,6 @@ def _pqf_shortlist_rerank(scored: DataFrame, fp: DataFrame) -> DataFrame:
                 F.col("n_norm_fp"),
             ).alias("cosine"),
         )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "neighbor_id")
-    return (
-        exact.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-        .orderBy("query_id", "rank")
     )
 
 
@@ -1556,44 +1373,30 @@ def q_ann_ivf_pq_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     repairs ADC quantization error inside the probed universe.
 
     Spark shape: the coarse quantizer rides a broadcast one-row frame
-    (centers) and assignment is a per-row HOF; the PQ codebook is the
-    bounded broadcast model state of q_ann_pq_fixed, and encoding is
-    the same Arrow-batched exact-int64 kernel (candidates never
-    shuffle; the r13 optimization round swapped the interpreted HOF
-    argmin for the kernel at identical bits and checkpointed the
-    twice-referenced scored frame); the probe is a cell-id equi-join
-    of the broadcast query batch against the coded posting lists; the
-    only data-sized shuffle is the per-query shortlist window over
+    (`_seed_centers`) and assignment is a per-row HOF (`_assign`); the
+    PQ codebook is the bounded broadcast model state of
+    q_ann_pq_fixed, and encoding plus probe-filtered ADC scoring is the
+    same Arrow-batched exact-int64 kernel (candidates never shuffle);
+    the only data-sized shuffle is the per-query shortlist window over
     probed survivors."""
-    vecs = _vecs(spark, sf_dir)
-    fp = (
-        vecs.select(
-            "vec_id", "label", "embedding", "norm_fp",
-            _pqf_fpv(F.col("embedding")).alias("fpv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    # two consumers (coded, probe_luts) of the center-scored frame —
+    fp = _fp_vecs(spark, sf_dir)
+    # two consumers (candidates, query collect) of the assignment —
     # materialize so the per-row center scoring runs once
     scored = (
-        fp.crossJoin(F.broadcast(_ivf_centers_row(fp)))
-        .withColumn("scores", _ivf_scores())
+        _assign(fp, _seed_centers(fp, "embedding", F.max("vec_id") + 1), _neg_dot)
+        .select("vec_id", "label", "fpv", "cell", _probe_cells().alias("probes"))
         .localCheckpoint(eager=True)
     )
-    # Fused encode + probe-filtered ADC kernel (r13 opt round, stage
-    # 2 — same rationale as q_ann_pq_fixed): per-query probe cells ride
-    # the bounded query collect instead of a broadcast LUT join whose
-    # _pqf_lut column dominated the run as Catalyst/codegen fixed cost.
-    # Cell assignment stays a JVM HOF over the checkpointed
-    # center-scored frame (it runs once and its tree is small).
+    # per-query probe cells ride the bounded query collect, and the
+    # kernel keeps only candidates in the query's probed cells
     qrows = [
         (r.vec_id, list(r.fpv), list(r.probes))
         for r in scored.filter(F.col("vec_id") < QUERY_LIMIT)
-        .select("vec_id", "fpv", _ivf_probe_cells().alias("probes"))
+        .select("vec_id", "fpv", "probes")
         .collect()
     ]
-    cand = scored.select("vec_id", "label", _ivf_cell().alias("cell"), "fpv")
-    pairs = _pqf_score(spark, fp, cand, qrows)
+    cand = scored.select("vec_id", "label", "cell", "fpv")
+    pairs = _pqf_score(spark, _pqf_codebook_np(fp), cand, qrows)
     return _pqf_shortlist_rerank(pairs, fp)
 
 
@@ -1994,19 +1797,8 @@ def q_ann_srp_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = cand.join(F.broadcast(q_side), "query_id").join(c_side, "neighbor_id")
     cos = _cosine(_dot_fp(F.col("q_emb"), F.col("c_emb")), F.col("qn"), F.col("cn"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
+    return _top_k(
         pairs.select("query_id", "neighbor_id", "neighbor_label", cos.alias("cosine"))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neighbor_label",
-            F.round("cosine", 6).alias("cosine"),
-            "rank",
-        )
-        .orderBy("query_id", "rank")
     )
 
 
@@ -2181,7 +1973,7 @@ ORDER BY b.query_id
 """
 
 
-@register(oracle=None)  # oracle bound after both deps
+@register(oracle=_ann_recall_oracle())
 def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN QUALITY EVAL — the third leg of the ANN family (build:
     q_ann_ivf, maintain: q_ann_ivf_delta, evaluate: this): per query,
@@ -2233,20 +2025,7 @@ def q_ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# bind after both dependency oracles exist in the registry
-from dataclasses import replace as _dc_replace  # noqa: E402
-
-from ..registry import _REGISTRY as _SIM_REG  # noqa: E402
-
-_SIM_REG["q_ann_recall_eval"] = _dc_replace(
-    _SIM_REG["q_ann_recall_eval"], oracle=_ann_recall_oracle()
-)
-
-
 # ------------------------------------------------ fixed-point k-means
-
-KM_K = 8  # clusters (strided seeds, same bootstrap as the IVF cells)
-
 
 def _km_d2_sql(a: str, b: str) -> str:
     t = f"({a}[i] - {b}[i])"
@@ -2256,43 +2035,9 @@ def _km_d2_sql(a: str, b: str) -> str:
     )
 
 
-def _km_seed_centers(fp: DataFrame) -> DataFrame:
-    """ONE row holding the KM_K strided-seed centers of a (vec_id, fpv)
-    frame — k-means++ step-0, same bootstrap as the IVF cells."""
-    params = fp.agg(
-        F.greatest(F.floor((F.max("vec_id") + 1) / KM_K), F.lit(1))
-        .cast("long")
-        .alias("stride")
-    )
-    return (
-        fp.crossJoin(F.broadcast(params))
-        .filter(
-            (F.col("vec_id") % F.col("stride") == 0)
-            & (F.col("vec_id") < F.col("stride") * KM_K)
-        )
-        .select(
-            F.floor(F.col("vec_id") / F.col("stride")).cast("int").alias("cell"),
-            "fpv",
-        )
-        .agg(F.array_sort(F.collect_list(F.struct("cell", "fpv"))).alias("cs"))
-    )
-
-
-def _km_assign(fp: DataFrame, centers_row: DataFrame) -> DataFrame:
-    """(vec_id, fpv, cell, d2): each vector assigned to its min-d²
-    center by a per-row HOF argmin over the broadcast center array —
-    zero shuffle, the corpus never moves."""
-    scores = F.transform(
-        F.col("cs"),
-        lambda c: F.struct(
-            _pqf_d2(F.col("fpv"), c["fpv"]).alias("d"),
-            c["cell"].alias("p"),
-        ),
-    )
-    best = F.array_min(scores)
-    return fp.crossJoin(F.broadcast(centers_row)).select(
-        "vec_id", "fpv", best["p"].alias("cell"), best["d"].alias("d2")
-    )
+def _fpv_d2(center: Column) -> Column:
+    """k-means assignment key: exact int64 d² of `fpv` to a center."""
+    return _pqf_d2(F.col("fpv"), center)
 
 
 def _km_update_centers(assigned: DataFrame) -> DataFrame:
@@ -2310,9 +2055,9 @@ def _km_update_centers(assigned: DataFrame) -> DataFrame:
             F.transform(
                 F.array_sort(F.collect_list(F.struct("pos", "m"))),
                 lambda t: t["m"],
-            ).alias("fpv")
+            ).alias("center")
         )
-        .agg(F.array_sort(F.collect_list(F.struct("cell", "fpv"))).alias("cs"))
+        .agg(F.array_sort(F.collect_list(F.struct("cell", "center"))).alias("cs"))
     )
 
 
@@ -2326,12 +2071,12 @@ fp AS (
   FROM vecs
 ),
 params AS (
-  SELECT GREATEST((MAX(vec_id) + 1) // {KM_K}, 1) AS stride FROM fp
+  SELECT GREATEST((MAX(vec_id) + 1) // {IVF_CELLS}, 1) AS stride FROM fp
 ),
 c0 AS (
   SELECT CAST(v.vec_id // p.stride AS INT) AS cell, v.fpv
   FROM fp v, params p
-  WHERE v.vec_id % p.stride = 0 AND v.vec_id < p.stride * {KM_K}
+  WHERE v.vec_id % p.stride = 0 AND v.vec_id < p.stride * {IVF_CELLS}
 ),
 a0 AS (
   SELECT f.vec_id,
@@ -2395,14 +2140,14 @@ def q_embedding_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = _vecs(spark, sf_dir).select(
         "vec_id", _pqf_fpv(F.col("embedding")).alias("fpv")
     )
-    a0 = _km_assign(fp, _km_seed_centers(fp))
-    a1 = _km_assign(fp, _km_update_centers(a0))
+    a0 = _assign(fp, _seed_centers(fp, "fpv", F.max("vec_id") + 1), _fpv_d2)
+    a1 = _assign(fp, _km_update_centers(a0), _fpv_d2)
     n0 = a0.groupBy(F.col("cell").alias("cluster")).agg(
         F.count(F.lit(1)).cast("long").alias("n_seed")
     )
     n1 = a1.groupBy(F.col("cell").alias("cluster")).agg(
         F.count(F.lit(1)).cast("long").alias("n_refined"),
-        F.sum("d2").cast("long").alias("sd"),
+        F.sum("d").cast("long").alias("sd"),
     )
     return (
         n1.join(F.broadcast(n0), "cluster", "left")

@@ -17,7 +17,9 @@ sees the same semantics:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import threading
 import zipfile
@@ -64,14 +66,15 @@ _SHIPPED_APPS: set[str] = set()
 
 
 def _package_zip() -> str:
-    """Zip this package once per process (sources only, no pycache)."""
+    """Zip this package once per process (sources only, no pycache) into
+    a temp dir removed at interpreter exit."""
     global _PKG_ZIP
     if _PKG_ZIP is None:
         pkg_dir = os.path.dirname(os.path.abspath(__file__))
         pkg_name = os.path.basename(pkg_dir)
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="spark_pkg_"), f"{pkg_name}.zip"
-        )
+        tmp = tempfile.mkdtemp(prefix="spark_pkg_")
+        atexit.register(shutil.rmtree, tmp, True)
+        path = os.path.join(tmp, f"{pkg_name}.zip")
         with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
             for root, _dirs, files in os.walk(pkg_dir):
                 if "__pycache__" in root:

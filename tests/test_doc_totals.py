@@ -274,3 +274,18 @@ def test_only_session_py_writes_session_conf():
         if re.search(r"\bconf\.set\(", _read(p))
     ]
     assert hits == ["big_data_traffict_prediction_spark/session.py"], hits
+
+
+def test_package_zip_dir_is_removed_at_exit():
+    """The package zip shipped to Python workers lives in a temp dir
+    that the process removes when it exits."""
+    code = (
+        "from big_data_traffict_prediction_spark.session import _package_zip; "
+        "print(_package_zip())"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True, text=True, check=True
+    )
+    path = out.stdout.splitlines()[-1]
+    assert path.endswith(".zip"), path
+    assert not os.path.exists(os.path.dirname(path)), path

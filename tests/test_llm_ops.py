@@ -328,17 +328,25 @@ def test_pq_rerank_recall_vs_bruteforce(spark, sf_dir):
     from big_data_traffict_prediction_spark.functions.similarity import (
         q_ann_bruteforce,
         q_ann_pq,
+        q_ann_pq_fixed,
     )
 
     bf: dict = {}
     for r in q_ann_bruteforce(spark, sf_dir).collect():
         bf.setdefault(r.query_id, set()).add(r.neighbor_id)
-    pq: dict = {}
-    for r in q_ann_pq(spark, sf_dir).collect():
-        pq.setdefault(r.query_id, set()).add(r.neighbor_id)
-    assert bf.keys() == pq.keys()
-    recall = sum(len(bf[q] & pq[q]) / len(bf[q]) for q in bf) / len(bf)
+    def recall_of(query):
+        out: dict = {}
+        for r in query(spark, sf_dir).collect():
+            out.setdefault(r.query_id, set()).add(r.neighbor_id)
+        assert bf.keys() == out.keys()
+        return sum(len(bf[q] & out[q]) / len(bf[q]) for q in bf) / len(bf)
+
+    recall = recall_of(q_ann_pq)
     assert recall >= 0.8, f"PQ+rerank recall {recall:.3f} below bound"
+    # the trained codebook is the one reason q_ann_pq stays beside the
+    # oracle-checked sample codebook on the same kernel
+    fixed = recall_of(q_ann_pq_fixed)
+    assert recall > fixed, f"trained {recall:.3f} <= sampled {fixed:.3f}"
 
 
 def test_pq_fixed_recall_vs_bruteforce(spark, sf_dir):
@@ -739,10 +747,10 @@ def test_ann_ivf_pq_composition_restricts_and_recalls(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from big_data_traffict_prediction_spark.functions.similarity import (
-        _ivf_cell,
-        _ivf_centers_row,
-        _ivf_probe_cells,
-        _ivf_scores,
+        _assign,
+        _neg_dot,
+        _probe_cells,
+        _seed_centers,
         _vecs,
         q_ann_bruteforce,
         q_ann_ivf,
@@ -750,17 +758,17 @@ def test_ann_ivf_pq_composition_restricts_and_recalls(spark, sf_dir):
     )
 
     vecs = _vecs(spark, sf_dir)
-    scored = vecs.crossJoin(F.broadcast(_ivf_centers_row(vecs))).withColumn(
-        "scores", _ivf_scores()
+    scored = _assign(
+        vecs, _seed_centers(vecs, "embedding", F.max("vec_id") + 1), _neg_dot
     )
     cell_of = {
         r.vec_id: r.cell
-        for r in scored.select("vec_id", _ivf_cell().alias("cell")).collect()
+        for r in scored.select("vec_id", "cell").collect()
     }
     probes_of = {
         r.vec_id: set(r.cells)
         for r in scored.select(
-            "vec_id", _ivf_probe_cells().alias("cells")
+            "vec_id", _probe_cells().alias("cells")
         ).collect()
     }
     out: dict = {}
@@ -785,6 +793,43 @@ def test_ann_ivf_pq_composition_restricts_and_recalls(spark, sf_dir):
     )
 
 
+def test_seed_centers_on_tiny_id_space(spark):
+    """The one strided seed below a bound. With n < IVF_CELLS the
+    stride clamps to 1, so stride*IVF_CELLS exceeds a delta split and
+    only the `vec_id < bound` guard keeps the delta ids out of the
+    seeds; with the full bound every id seeds its own cell. An id space
+    with no id below IVF_CELLS yields no quantizer row."""
+    from pyspark.sql import functions as F
+
+    from big_data_traffict_prediction_spark.compat import idiv
+    from big_data_traffict_prediction_spark.functions.similarity import (
+        IVF_CELLS,
+        _seed_centers,
+    )
+
+    def frame(ids):
+        return spark.createDataFrame(
+            [(i, [float(i), 1.0]) for i in ids], "vec_id long, embedding array<float>"
+        )
+
+    def seeds(vecs, bound):
+        rows = _seed_centers(vecs, "embedding", bound).collect()
+        assert len(rows) == 1
+        return rows[0].bound, [(c.cell, list(c.center)) for c in rows[0].cs]
+
+    vecs = frame(range(5))
+    assert 5 < IVF_CELLS
+    bound, cs = seeds(vecs, F.max("vec_id") + 1)
+    assert bound == 5
+    assert cs == [(i, [float(i), 1.0]) for i in range(5)]
+    # delta split (5*4)//5 = 4 < stride*IVF_CELLS = 8: id 4 is delta
+    bound, cs = seeds(vecs, idiv((F.max("vec_id") + 1) * 4, F.lit(5)))
+    assert bound == 4
+    assert cs == [(i, [float(i), 1.0]) for i in range(4)]
+    sparse = frame([IVF_CELLS + 1, IVF_CELLS + 2])
+    assert _seed_centers(sparse, "embedding", F.max("vec_id") + 1).count() == 0
+
+
 def test_kmeans_lloyd_update_reduces_inertia(spark, sf_dir):
     """The definitional k-means guarantee, pinned on the exact integer
     trajectory: J(assign0, seeds) >= J(assign0, updated) >= J(assign1,
@@ -793,10 +838,11 @@ def test_kmeans_lloyd_update_reduces_inertia(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from big_data_traffict_prediction_spark.functions.similarity import (
-        _km_assign,
-        _km_seed_centers,
+        _assign,
+        _fpv_d2,
         _km_update_centers,
         _pqf_fpv,
+        _seed_centers,
         _vecs,
         q_embedding_kmeans,
     )
@@ -805,9 +851,11 @@ def test_kmeans_lloyd_update_reduces_inertia(spark, sf_dir):
         "vec_id", _pqf_fpv(F.col("embedding")).alias("fpv")
     )
     n = fp.count()
-    a0 = _km_assign(fp, _km_seed_centers(fp)).localCheckpoint(eager=True)
+    a0 = _assign(
+        fp, _seed_centers(fp, "fpv", F.max("vec_id") + 1), _fpv_d2
+    ).localCheckpoint(eager=True)
     c1 = _km_update_centers(a0)
-    j0 = a0.agg(F.sum("d2")).first()[0]
+    j0 = a0.agg(F.sum("d")).first()[0]
     # J(assign0, c1): same assignment, updated centers
     mid = (
         a0.select("vec_id", "fpv", "cell")
@@ -817,7 +865,7 @@ def test_kmeans_lloyd_update_reduces_inertia(spark, sf_dir):
                 F.zip_with(
                     F.col("fpv"),
                     F.filter(F.col("cs"), lambda c: c["cell"] == F.col("cell"))[0][
-                        "fpv"
+                        "center"
                     ],
                     lambda x, y: (x - y) * (x - y),
                 ),
@@ -827,8 +875,8 @@ def test_kmeans_lloyd_update_reduces_inertia(spark, sf_dir):
         )
     )
     j_mid = mid.agg(F.sum("d2")).first()[0]
-    a1 = _km_assign(fp, c1)
-    j1 = a1.agg(F.sum("d2")).first()[0]
+    a1 = _assign(fp, c1, _fpv_d2)
+    j1 = a1.agg(F.sum("d")).first()[0]
     # fixed-point centroid truncation can cost at most 64·n per cluster
     # term vs the real mean — negligible against these magnitudes, and
     # the inequality chain holds outright on this data
@@ -850,16 +898,17 @@ def test_pqf_score_kernel_matches_hof_twin(spark, sf_dir):
 
     from big_data_traffict_prediction_spark.functions.similarity import (
         QUERY_LIMIT,
-        _ivf_cell,
-        _ivf_centers_row,
-        _ivf_probe_cells,
-        _ivf_scores,
+        _assign,
+        _neg_dot,
         _pqf_adc,
+        _pqf_codebook_np,
         _pqf_codebook_row,
         _pqf_codes,
         _pqf_fpv,
         _pqf_lut,
         _pqf_score,
+        _probe_cells,
+        _seed_centers,
         _vecs,
     )
 
@@ -904,19 +953,20 @@ def test_pqf_score_kernel_matches_hof_twin(spark, sf_dir):
         .select("vec_id", "fpv")
         .collect()
     ]
-    kernel = _pqf_score(spark, fp, fp.select("vec_id", "label", "fpv"), qrows)
+    codebook = _pqf_codebook_np(fp)
+    kernel = _pqf_score(
+        spark, codebook, fp.select("vec_id", "label", "fpv"), qrows
+    )
     a, b = canon(hof), canon(kernel)
     assert len(a) > 0
     assert a.equals(b), "plain ADC kernel diverged from HOF spec"
 
     # --- probe-filtered (q_ann_ivf_pq_fixed shape) -------------------
-    scored = (
-        fp.crossJoin(F.broadcast(_ivf_centers_row(fp)))
-        .withColumn("scores", _ivf_scores())
-        .localCheckpoint(eager=True)
-    )
+    scored = _assign(
+        fp, _seed_centers(fp, "embedding", F.max("vec_id") + 1), _neg_dot
+    ).localCheckpoint(eager=True)
     hof_coded_c = (
-        scored.select("vec_id", "label", _ivf_cell().alias("cell"), "fpv")
+        scored.select("vec_id", "label", "cell", "fpv")
         .crossJoin(F.broadcast(_pqf_codebook_row(fp)))
         .select("vec_id", "label", "cell", _pqf_codes().alias("codes"))
     )
@@ -925,7 +975,7 @@ def test_pqf_score_kernel_matches_hof_twin(spark, sf_dir):
         .crossJoin(F.broadcast(_pqf_codebook_row(fp)))
         .select(
             F.col("vec_id").alias("query_id"),
-            F.explode(_ivf_probe_cells()).alias("cell"),
+            F.explode(_probe_cells()).alias("cell"),
             _pqf_lut().alias("lut"),
         )
     )
@@ -943,13 +993,13 @@ def test_pqf_score_kernel_matches_hof_twin(spark, sf_dir):
     qrows_p = [
         (r.vec_id, list(r.fpv), list(r.probes))
         for r in scored.filter(F.col("vec_id") < QUERY_LIMIT)
-        .select("vec_id", "fpv", _ivf_probe_cells().alias("probes"))
+        .select("vec_id", "fpv", _probe_cells().alias("probes"))
         .collect()
     ]
     kernel_ivf = _pqf_score(
         spark,
-        fp,
-        scored.select("vec_id", "label", _ivf_cell().alias("cell"), "fpv"),
+        codebook,
+        scored.select("vec_id", "label", "cell", "fpv"),
         qrows_p,
     )
     a, b = canon(hof_ivf), canon(kernel_ivf)
